@@ -24,6 +24,7 @@ overlapped jobs keep their labels and group-cancellation scope
 
 from __future__ import annotations
 
+import warnings
 from collections.abc import Callable, Sequence
 from concurrent.futures import ThreadPoolExecutor
 
@@ -32,20 +33,31 @@ def _inherit_spark_locals(thunk: Callable[[], object]) -> Callable[[], object]:
     """Wrap ``thunk`` so the worker thread sees the submitter's Spark
     thread-local properties (setJobDescription/setJobGroup are
     thread-local — a plain pool thread would run unlabeled and escape
-    group cancellation). No live SparkContext (pure-Python callers,
-    unit tests) passes the thunk through unchanged."""
-    try:
-        from pyspark import inheritable_thread_target
-        from pyspark.sql import SparkSession
+    group cancellation). No live SparkSession (pure-Python callers,
+    unit tests) passes the thunk through unchanged. Outside pinned-thread
+    mode (a plain py4j gateway) ``inheritable_thread_target(session)``
+    hands back the session itself instead of a decorator — calling it
+    would raise TypeError — so the thunk runs as is, with a warning that
+    worker jobs lose their labels (issued from one location, so the
+    default warning filter shows it once per process)."""
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
 
-        sess = SparkSession.getActiveSession()
-        if sess is None:
-            return thunk
-        # session form: inherits local properties AND session tags
-        # (the bare-callable form warns that tags are dropped)
-        return inheritable_thread_target(sess)(thunk)
-    except Exception:
+    sess = SparkSession.getActiveSession()
+    if sess is None:
         return thunk
+    # session form: inherits local properties AND session tags
+    # (the bare-callable form warns that tags are dropped)
+    wrap = inheritable_thread_target(sess)
+    if wrap is sess:
+        warnings.warn(
+            "run_jobs: the Spark gateway is not in pinned-thread mode, so "
+            "worker threads cannot inherit the job group/description; their "
+            "jobs run unlabeled",
+            RuntimeWarning,
+        )
+        return thunk
+    return wrap(thunk)
 
 
 def run_jobs(thunks: Sequence[Callable[[], object]]) -> list:

@@ -18,8 +18,9 @@ keeps directory fan-out constant while still pruning ~(1 - k/n_buckets)
 of the bytes per query. Reference parity: no text/search surface in the
 reference at all (SURVEY §0, §2.2).
 
-Durability model (the pq_store discipline applied to the lexical
-index; the shared machinery lives in operators/genstore.py):
+Durability model (operators/genstore.py's ``GenStore`` core, shared
+with pq_store; this store's two legs are the postings, partitioned by
+``bucket``, and the doclen sidecar, partitioned by ``dbucket``):
 
 - GENERATIONS: maintenance verbs (``compact``/``upsert``/``delete``)
   never mutate live directories. They build generation ``N+1`` (postings
@@ -59,59 +60,43 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import threading
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.functions.text import hex_hash60, py_hex_hash60
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators import genstore
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.concurrency import run_jobs
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.genstore import GenStore, Leg
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.postings import build_postings, phrase_match
 
-_PARAMS_FILE = "_postings_params.json"
-_DATA_DIR = "data"
-_DOCLEN_DIR = "doclen"
-_STORE_PTR = "_store_ptr"  # names the live generation (crash-safe publish)
-_EPOCH_ROOT = genstore.EPOCH_ROOT
-
-
-def _with_stamp(df: DataFrame) -> DataFrame:
-    """Back-compat shim for legs written before the mutation stamp
-    existed (round 8): stamp-less rows read as stamp 0 — the build/
-    append default — so unions and rewrites over a legacy store stay
-    well-typed. NULL stamps (a mixed-schema generation read under the
-    pinned recorded schema, where legacy files lack the column — round-8
-    ADVICE) coalesce to the same build-default 0, so a doc present on
-    both sides of a paired deployment never misreads as one-sided."""
-    if "mstamp" in df.columns:
-        return df.withColumn(
-            "mstamp",
-            F.coalesce(F.col("mstamp").cast("long"), F.lit(0).cast("long")),
-        )
-    return df.withColumn("mstamp", F.lit(0).cast("long"))
-
-
-class PostingsStore:
+class PostingsStore(GenStore):
     """A bucket-partitioned positional inverted index on disk."""
 
-    #: superseded generations kept on disk for pinned reads (vacuum() sweeps)
-    keep_gens: int = 2
+    LEGS = (
+        Leg("data", "postings", "bucket", stamped=False),
+        Leg("doclen", "doclen", "dbucket", stamped=True),
+    )
+    _PTR_FILE = "_store_ptr"
+    _PARAMS_FILE = "_postings_params.json"
+
+    # the shared verbs, bound in this class's own namespace so per-class
+    # method wrappers (perfbench/spans.py) see every verb of the store
+    append = GenStore.append
+    compact = GenStore.compact
+    vacuum = GenStore.vacuum
+    reset_lineage = GenStore.reset_lineage
+    streaming_append = GenStore.streaming_append
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        with open(os.path.join(path, _PARAMS_FILE)) as f:
+        with open(os.path.join(path, self._PARAMS_FILE)) as f:
             p = json.load(f)
         self.n_buckets: int = p["n_buckets"]
         self.id_col: str = p["id_col"]
         self.text_col: str = p["text_col"]
         # leg schemas (round 7): lets an emptied-out generation read as an
         # empty, correctly-typed frame instead of a schema-inference error
-        self._postings_schema: str | None = p.get("postings_schema")
-        self._doclen_schema: str | None = p.get("doclen_schema")
+        self._schemas = (p.get("postings_schema"), p.get("doclen_schema"))
 
     @classmethod
     def build(
@@ -127,251 +112,18 @@ class PostingsStore:
         probe = cls.__new__(cls)
         probe.spark, probe.path = spark, path
         probe.n_buckets, probe.id_col, probe.text_col = n_buckets, id_col, text_col
-        enc, dl = probe._encode(docs), probe._doclen(docs)
-        tmp = os.path.join(path, _PARAMS_FILE + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "n_buckets": n_buckets,
-                    "id_col": id_col,
-                    "text_col": text_col,
-                    "postings_schema": enc.schema.json(),
-                    "doclen_schema": dl.schema.json(),
-                },
-                f,
-            )
-        os.replace(tmp, os.path.join(path, _PARAMS_FILE))
-        store = cls(spark, path)
-        # the two legs are independent scans of ``docs`` — overlap them
-        # (run_jobs) so the build pays one write tail, not two
-        run_jobs([
-            lambda: enc.write.mode("overwrite").partitionBy("bucket").parquet(
-                store._data_path()
-            ),
-            lambda: dl.write.mode("overwrite").partitionBy("dbucket").parquet(
-                store._doclen_path()
-            ),
-        ])
-        return store
-
-    # -- generations ----------------------------------------------------------
-
-    def _ptr_path(self) -> str:
-        return os.path.join(self.path, _STORE_PTR)
-
-    def _ptr(self) -> dict:
-        """The live-generation pointer (operators/genstore.py):
-        ``{"gen": N, "folded": [epoch names], "watermark": max folded
-        epoch id, "lineage": checkpoint query id | None, "retained":
-        [pinned old gens], "version": CAS version}``. Generation 0 is
-        the original ``data``/``doclen`` pair; no pointer file means
-        generation 0 with nothing folded."""
-        return genstore.read_ptr(self._ptr_path(), 0)
-
-    def current_gen(self) -> int:
-        """The live generation number — capture it before a mutation to
-        pin a pre-mutation read (``reader(gen=...)``)."""
-        return int(self._ptr()["gen"])
-
-    def generations(self) -> list[dict]:
-        """Inspection rows for the live + retained (pinned-readable)
-        generations — versioned.versions() for the index store."""
-        return genstore.describe(self._ptr())
-
-    def _gen_dirs(self, gen: int) -> tuple[str, str]:
-        if gen == 0:
-            return (
-                os.path.join(self.path, _DATA_DIR),
-                os.path.join(self.path, _DOCLEN_DIR),
-            )
-        return (
-            os.path.join(self.path, f"{_DATA_DIR}-{gen:08d}"),
-            os.path.join(self.path, f"{_DOCLEN_DIR}-{gen:08d}"),
-        )
-
-    def _data_path(self) -> str:
-        return self._gen_dirs(self._ptr()["gen"])[0]
+        enc, dl = probe._leg_frames(docs)
+        params = {
+            "n_buckets": n_buckets,
+            "id_col": id_col,
+            "text_col": text_col,
+            "postings_schema": enc.schema.json(),
+            "doclen_schema": dl.schema.json(),
+        }
+        return cls._create(spark, path, params, [enc, dl])
 
     def _doclen_path(self) -> str:
-        return self._gen_dirs(self._ptr()["gen"])[1]
-
-    def _resolve_gen(self, gen: int) -> int:
-        """Validate a pinned-read generation: it must be live, retained,
-        or still on disk under an ACTIVE read lease (``pinned()``); a
-        vacuumed (or never-published) generation fails loudly instead of
-        reading a swept directory."""
-        ptr = self._ptr()
-        g = int(gen)
-        if g == int(ptr["gen"]) or g in {int(x) for x in ptr["retained"]}:
-            return g
-        d, dl = self._gen_dirs(g)
-        leased = genstore.leased_dirnames(self.path)
-        if (
-            os.path.isdir(d)
-            and os.path.isdir(dl)
-            and os.path.basename(d) in leased
-            and os.path.basename(dl) in leased
-        ):
-            return g
-        raise LookupError(
-            f"generation {g} is neither live (gen {ptr['gen']}) nor "
-            f"retained {sorted(int(x) for x in ptr['retained'])} nor leased "
-            "— it was vacuumed, superseded past keep_gens, or never "
-            "published (hold reader leases with `with store.pinned(g):`)"
-        )
-
-    def pinned(self, gen: int):
-        """Context manager holding a READ LEASE on generation ``gen``
-        (round 8): inside the block, ``reader(gen=)`` /
-        ``ranked_bm25(as_of_gen=)`` / the batch siblings keep serving
-        that generation even if maintenance verbs or ``vacuum()`` trim
-        it from the retention window meanwhile — sweeps skip leased
-        directories, so lazy pinned DataFrames never hit a mid-job
-        file-not-found. On exit the lease releases and the next publish
-        sweeps the directory if it fell out of retention. Without a
-        lease, materialize pinned reads before the next maintenance
-        verb (SCALE.md).
-
-        Lease-vs-vacuum race (round-8 ADVICE): the generation is
-        re-validated AFTER the lease files land — a sweep whose
-        leased-dir listing ran before the lease hit disk can still
-        remove the directories, and without the re-check the pin would
-        hand out a swept generation; instead it raises the loud
-        LookupError up front. Sweeps symmetrically re-read the lease
-        set immediately before each rmtree (``_sweep_gens``), shrinking
-        the remaining window to the listdir→rmtree instant."""
-        from contextlib import ExitStack, contextmanager
-
-        @contextmanager
-        def _ctx():
-            g = self._resolve_gen(gen)
-            d, dl = self._gen_dirs(g)
-            with ExitStack() as stack:
-                stack.enter_context(
-                    genstore.gen_lease(self.path, os.path.basename(d))
-                )
-                stack.enter_context(
-                    genstore.gen_lease(self.path, os.path.basename(dl))
-                )
-                # re-check under the lease: a concurrent vacuum/publish
-                # that listed leases before ours landed may have swept
-                # the generation between _resolve_gen and the lease
-                if not (os.path.isdir(d) and os.path.isdir(dl)):
-                    raise LookupError(
-                        f"generation {g} was swept by concurrent "
-                        "maintenance between pin and lease — it is gone; "
-                        "re-pin a retained generation"
-                    )
-                yield g
-
-        return _ctx()
-
-    def _keep_dirnames(self, state: dict) -> set[str]:
-        keep = set()
-        for g in [state["gen"], *state.get("retained", [])]:
-            d, dl = self._gen_dirs(int(g))
-            keep.add(os.path.basename(d))
-            keep.add(os.path.basename(dl))
-        return keep
-
-    def _sweep_gens(self, state: dict) -> None:
-        """Remove every data*/doclen* sibling that is neither live nor
-        retained under ``state`` — superseded generations past the
-        retention window, crashed verbs' tmp dirs, and generations
-        orphaned by an earlier crash. Directories under an ACTIVE read
-        lease (``pinned()``) are skipped — they become orphans the next
-        publish sweeps once the lease releases. The lease set is
-        re-read immediately before EACH rmtree (round-8 ADVICE): a
-        lease landing between the initial listing and the removal
-        would otherwise have its directory swept out from under the
-        pinned reader (``pinned()`` symmetrically re-checks the dirs
-        after its lease lands, so the residual window is the
-        lease-read→rmtree instant, not the whole sweep)."""
-        keep = self._keep_dirnames(state)
-        for name in os.listdir(self.path):
-            if (
-                name.startswith((_DATA_DIR, _DOCLEN_DIR))
-                and name not in keep
-                and name not in genstore.leased_dirnames(self.path)
-            ):
-                shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
-
-    def _publish(
-        self,
-        base: dict,
-        newly_folded: list[str],
-        place: Callable[[str, str], None],
-    ) -> None:
-        """Commit the next generation with ONE CAS-guarded atomic
-        pointer replace: under the pointer lock the CAS check verifies
-        no other maintainer published since ``base`` was read
-        (ConcurrentWriteError otherwise — versioned.py's contract),
-        ``place(new_data, new_doclen)`` renames the staged directories
-        into their generation names (fast, local fs ops), and the
-        pointer flips with folded epochs, the advanced watermark, and
-        the superseded generation joining the RETAINED set, all in the
-        same write. Post-flip: sweep generations outside the retention
-        window and folded epoch directories; folded entries whose dirs
-        are gone are pruned with a best-effort second CAS (a crash or a
-        racing lineage-adopt between the two just leaves harmless
-        tombstones — the watermark keeps refusing their replays)."""
-        gen = int(base["gen"]) + 1
-
-        def mutate(cur: dict) -> dict:
-            new_data, new_doclen = self._gen_dirs(gen)
-            # a crashed prior attempt from the same base left a half-built
-            # dir of the same name: safe to clear (CAS passed, so ``gen``
-            # is not live, not retained, and owned by this base version)
-            shutil.rmtree(new_data, ignore_errors=True)
-            shutil.rmtree(new_doclen, ignore_errors=True)
-            place(new_data, new_doclen)
-            folded_all, wm = genstore.fold_bookkeeping(cur, newly_folded)
-            cur["retained"] = genstore.retention_bookkeeping(
-                cur, self.keep_gens
-            )
-            cur["gen"] = gen
-            cur["folded"] = folded_all
-            cur["watermark"] = wm
-            return cur
-
-        new = genstore.cas_update(
-            self._ptr_path(), 0, mutate, expected_version=base["version"]
-        )
-        self._sweep_gens(new)
-        remaining = genstore.sweep_folded(self.path, new["folded"])
-        if remaining != new["folded"]:
-            try:
-                genstore.cas_update(
-                    self._ptr_path(), 0,
-                    lambda cur: {**cur, "folded": remaining},
-                    expected_version=new["version"],
-                )
-            except genstore.ConcurrentWriteError:
-                pass  # cosmetic prune only — tombstones stay skipped
-
-    def vacuum(self) -> None:
-        """Sweep the retained (pinned-read) generations; subsequent
-        ``reader(gen=N)`` calls on them raise instead of reading swept
-        directories. CAS-guarded like every maintenance verb."""
-        base = self._ptr()
-        new = genstore.cas_update(
-            self._ptr_path(), 0,
-            lambda cur: {**cur, "retained": []},
-            expected_version=base["version"],
-        )
-        self._sweep_gens(new)
-
-    def reset_lineage(self) -> None:
-        """Deliberately adopt a NEW streaming lineage (wiped checkpoint,
-        migrated stream): clears the recorded lineage and the epoch
-        watermark and hard-sweeps folded tombstones (their names would
-        mask the new lineage's epochs). Requires all committed epochs
-        folded first — run ``compact()``."""
-        genstore.reset_lineage(self.path, self._ptr_path(), 0)
-
-    def _epochs(self) -> list[str]:
-        """Committed, unfolded epoch directory names (sorted)."""
-        return genstore.list_epochs(self.path, self._ptr()["folded"])
+        return self._live_dirs()[1]
 
     # -- encode / ingest ------------------------------------------------------
 
@@ -403,115 +155,10 @@ class PostingsStore:
             (hex_hash60(F.col("token")) % self.n_buckets).cast("int"),
         )
 
-    def append(self, docs: DataFrame) -> None:
-        """Synchronous batch append into the live generation (no retry
-        semantics — streaming ingest goes through the epoch-commit path
-        instead). The two legs append OVERLAPPED, which adds one partial
-        state the sequential order never produced: the doclen leg can
-        land while the postings leg fails (previously a postings failure
-        meant no doclen write at all). Either way a failed append leaves
-        the live generation partially written — callers needing
-        atomicity use ``_commit_epoch``/``upsert`` (staged + atomic
-        flip), the documented contract."""
-        run_jobs([
-            lambda: self._encode(docs).write.mode("append")
-            .partitionBy("bucket").parquet(self._data_path()),
-            lambda: self._doclen(docs).write.mode("append")
-            .partitionBy("dbucket").parquet(self._doclen_path()),
-        ])
-
-    def _commit_epoch(
-        self, docs: DataFrame, epoch_id: int, lineage: str | None = None
-    ) -> None:
-        """Exactly-once micro-batch ingest (genstore.commit_epoch): a
-        retried epoch finds its commit directory — or an id at-or-below
-        the folded watermark (folded and swept before the streaming
-        checkpoint recorded it) — and skips, so at-least-once
-        foreachBatch delivery never double-counts a posting or a doclen
-        row. A DIFFERENT lineage raises ``LineageMismatchError`` instead
-        of being dropped as a replay."""
-
-        def write_legs(tmp: str) -> None:
-            # independent scans of the micro-batch — overlap their jobs
-            run_jobs([
-                lambda: self._encode(docs).write.mode("overwrite").partitionBy(
-                    "bucket"
-                ).parquet(os.path.join(tmp, "postings")),
-                lambda: self._doclen(docs).write.mode("overwrite").partitionBy(
-                    "dbucket"
-                ).parquet(os.path.join(tmp, "doclen")),
-            ])
-
-        genstore.commit_epoch(
-            self.path, self._ptr_path(), 0, epoch_id, write_legs, lineage
-        )
-
-    def streaming_append(self, stream: DataFrame, checkpoint_dir: str):
-        """Index new documents as they arrive. Exactly-once per epoch:
-        each micro-batch publishes through ``_commit_epoch``'s atomic
-        rename, so a crash-and-replay of an epoch cannot double-append
-        (and cannot skew ranked_bm25's n_docs/avg_len via duplicated
-        doclen rows). The checkpoint's query id is the LINEAGE: replays
-        from the SAME checkpoint are no-ops, while a wiped-checkpoint
-        restart (epoch ids reset to 0) raises ``LineageMismatchError``
-        instead of silently dropping data — ``reset_lineage()`` is the
-        deliberate re-point verb. Returns the started StreamingQuery."""
-        return (
-            stream.writeStream.foreachBatch(
-                lambda b, eid: self._commit_epoch(
-                    b, eid, lineage=genstore.checkpoint_lineage(checkpoint_dir)
-                )
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
+    def _leg_frames(self, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+        return self._encode(docs), self._doclen(docs)
 
     # -- maintenance ----------------------------------------------------------
-
-    def compact(self) -> None:
-        """Fold every committed epoch into a fresh generation and rewrite
-        each bucket into one file (the small-files maintenance verb:
-        streaming ingest leaves one file set per epoch per touched
-        bucket). The base pointer and the epoch list are SNAPSHOT once —
-        the rewrite reads exactly that base generation + snapshot, and
-        the CAS publish refuses if any other maintainer advanced the
-        pointer meanwhile; an epoch a racing stream commits mid-compact
-        stays a live union leg, never half-folded. Folded epochs are
-        recorded (and the watermark advanced) BEFORE their directories
-        are swept, so a crash mid-sweep never double-counts them and a
-        replay of a swept epoch is refused."""
-        base = self._ptr()
-        eps = genstore.list_epochs(self.path, base["folded"])
-        base_data, base_doclen = self._gen_dirs(int(base["gen"]))
-        suffix = f".compact-{os.getpid()}-{threading.get_ident()}"
-        tmp_data = os.path.join(self.path, _DATA_DIR + suffix)
-        tmp_doclen = os.path.join(self.path, _DOCLEN_DIR + suffix)
-        shutil.rmtree(tmp_data, ignore_errors=True)
-        shutil.rmtree(tmp_doclen, ignore_errors=True)
-        # the two leg rewrites are independent — overlap their jobs
-        run_jobs([
-            lambda: (
-                self._union_legs(base_data, "postings", "bucket=", eps)
-                .repartition("bucket")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(tmp_data)
-            ),
-            lambda: (
-                self._union_legs(base_doclen, "doclen", "dbucket=", eps)
-                .repartition("dbucket")
-                .write.mode("overwrite")
-                .partitionBy("dbucket")
-                .parquet(tmp_doclen)
-            ),
-        ])
-
-        def place(new_data: str, new_doclen: str) -> None:
-            os.rename(tmp_data, new_data)
-            os.rename(tmp_doclen, new_doclen)
-
-        self._publish(base, eps, place)
 
     def _swap_partitions(
         self,
@@ -521,38 +168,13 @@ class PostingsStore:
         tmp_doclen: str,
         touched_dbuckets: list[int],
     ) -> None:
-        """Publish a partition-selective rewrite: generation N+1 takes
-        the rewritten bucket/dbucket directories from the temp writes
-        and HARDLINKS every untouched directory's files from the BASE
-        generation (no bytes copied), then the pointer flips atomically
-        under the CAS check. The live directories are never mutated — a
-        crash at any step leaves the store readable under the old
-        pointer; half-built generations are swept by the next publish."""
-        base_data, base_doclen = self._gen_dirs(int(base["gen"]))
-
-        def place(new_data: str, new_doclen: str) -> None:
-            for new, old, tmp, touched in (
-                (new_data, base_data, tmp_data,
-                 {f"bucket={b}" for b in touched_buckets}),
-                (new_doclen, base_doclen, tmp_doclen,
-                 {f"dbucket={b}" for b in touched_dbuckets}),
-            ):
-                os.makedirs(new)
-                for name in os.listdir(old):
-                    src = os.path.join(old, name)
-                    if name in touched or not os.path.isdir(src):
-                        continue
-                    os.makedirs(os.path.join(new, name))
-                    for f in os.listdir(src):
-                        os.link(os.path.join(src, f), os.path.join(new, name, f))
-                for name in sorted(touched):
-                    src = os.path.join(tmp, name)
-                    if os.path.exists(src):
-                        os.rename(src, os.path.join(new, name))
-
-        self._publish(base, [], place)
-        shutil.rmtree(tmp_data, ignore_errors=True)
-        shutil.rmtree(tmp_doclen, ignore_errors=True)
+        """Publish a partition-selective rewrite: the rewritten bucket/
+        dbucket directories come from the temp writes, every untouched
+        directory is hardlinked from the base generation
+        (``GenStore._swap``)."""
+        self._swap(
+            base, (tmp_data, tmp_doclen), (touched_buckets, touched_dbuckets)
+        )
 
     def upsert(self, docs: DataFrame, stamp: int = 0) -> None:
         """Replace-or-insert documents by id, rewriting ONLY the touched
@@ -570,14 +192,9 @@ class PostingsStore:
         (paired maintenance passes its sequence number so
         ``reconcile_stores`` can see a half-landed paired upsert);
         untouched docs keep theirs."""
-        if self._epochs():
-            self.compact()
-        base = self._ptr()
-        base_data, base_doclen = self._gen_dirs(int(base["gen"]))
-        live = self._read_leg(base_data, self._postings_schema, "bucket=")
-        live_dl = _with_stamp(
-            self._read_leg(base_doclen, self._doclen_schema, "dbucket=")
-        )
+        base = self._base()
+        base_data, base_doclen = self._gen_dirs(base["gen"])
+        live, live_dl = self._base_legs(base)
         enc = self._encode(docs).persist()
         ids = docs.select(F.col(self.id_col).alias("doc_id")).distinct()
         new_dl = self._doclen(docs, stamp=stamp)
@@ -621,28 +238,18 @@ class PostingsStore:
             .select("doc_id", "dlen", "mstamp", "dbucket")
         )
         tmp_doclen = base_doclen + ".upsert"
-        # the two leg rewrites are independent — overlap their jobs
-        run_jobs([
-            lambda: rewritten.write.mode("overwrite")
-            .partitionBy("bucket").parquet(tmp_data),
-            lambda: dl_rewritten.write.mode("overwrite")
-            .partitionBy("dbucket").parquet(tmp_doclen),
-        ])
+        self._write_legs([rewritten, dl_rewritten], [tmp_data, tmp_doclen])
         enc.unpersist()
         self._swap_partitions(base, tmp_data, buckets, tmp_doclen, dbuckets)
 
     def delete(self, ids: DataFrame) -> None:
         """Remove documents by id (a one-column frame), rewriting only
         the token buckets that hold their postings and the dbucket
-        directories that hold their doclen rows."""
-        if self._epochs():
-            self.compact()
-        base = self._ptr()
-        base_data, base_doclen = self._gen_dirs(int(base["gen"]))
-        live = self._read_leg(base_data, self._postings_schema, "bucket=")
-        live_dl = _with_stamp(
-            self._read_leg(base_doclen, self._doclen_schema, "dbucket=")
-        )
+        directories that hold their doclen rows (epochs fold first, as in
+        ``upsert``)."""
+        base = self._base()
+        base_data, base_doclen = self._gen_dirs(base["gen"])
+        live, live_dl = self._base_legs(base)
         vids = ids.toDF("doc_id").distinct()
         # touched partitions of BOTH legs in ONE job: the buckets holding
         # the ids' postings and the dbucket dirs holding their doclen rows
@@ -679,149 +286,29 @@ class PostingsStore:
             .select("doc_id", "dlen", "mstamp", "dbucket")
         )
         tmp_doclen = base_doclen + ".delete"
-        # the two leg rewrites are independent — overlap their jobs
-        run_jobs([
-            lambda: kept.write.mode("overwrite")
-            .partitionBy("bucket").parquet(tmp_data),
-            lambda: dl_kept.write.mode("overwrite")
-            .partitionBy("dbucket").parquet(tmp_doclen),
-        ])
+        self._write_legs([kept, dl_kept], [tmp_data, tmp_doclen])
         self._swap_partitions(base, tmp_data, buckets, tmp_doclen, dbuckets)
 
     # -- read -----------------------------------------------------------------
-
-    def _leg_schema(self, schema_json: str | None, part_prefix: str):
-        """The pinned read schema for one leg: the RECORDED schema, with
-        ``mstamp`` forced NULLABLE on doclen legs (grafted when a legacy
-        recorded schema lacks it). The recorded schema captures the
-        build encoder's ``lit(stamp)`` as non-nullable, but files
-        written before the stamp existed read the column as NULL — a
-        non-nullable declaration would let the optimizer elide
-        ``_with_stamp``'s NULL→0 coalesce and leak NULL stamps into the
-        reconcile audit (round-9 ADVICE). Returns None when no schema
-        was recorded (oldest stores — mergeSchema fallback)."""
-        if schema_json is None:
-            return None
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        schema = StructType.fromJson(json.loads(schema_json))
-        if part_prefix == "dbucket=":
-            schema = StructType(
-                [
-                    StructField(
-                        f.name,
-                        f.dataType,
-                        True if f.name == "mstamp" else f.nullable,
-                        f.metadata,
-                    )
-                    for f in schema.fields
-                ]
-            )
-            if "mstamp" not in schema.fieldNames():
-                schema = schema.add("mstamp", LongType(), True)
-        return schema
-
-    def _read_leg(
-        self, path: str, schema_json: str | None, part_prefix: str
-    ) -> DataFrame:
-        """Read one generation directory, falling back to an empty,
-        correctly-typed frame when a delete/upsert emptied EVERY
-        partition of the leg (a partitioned write of zero rows leaves no
-        partition dirs, which a plain ``spark.read.parquet`` rejects
-        with a schema-inference error).
-
-        The read PINS the recorded schema (round-8 ADVICE, via
-        ``_leg_schema``): a partition-selective rewrite on a legacy
-        (pre-``mstamp``) store hardlinks untouched doclen partitions
-        WITHOUT the stamp column while touched ones carry it, and a
-        plain read over such a mixed generation infers the schema from
-        one footer — either dropping ``mstamp`` entirely (silently
-        disabling the reconcile stamp audit) or surfacing it only for
-        some rows. With an explicit schema every file reads the same
-        columns (absent ones as NULL, which ``_with_stamp`` coalesces to
-        the build-default 0) and schema inference is skipped — cheaper,
-        not just safer. Stores without any recorded schema (older
-        still) fall back to ``mergeSchema`` so no footer's columns are
-        dropped."""
-        schema = self._leg_schema(schema_json, part_prefix)
-        if schema is not None:
-            if not os.path.isdir(path) or not any(
-                name.startswith(part_prefix) or name.endswith(".parquet")
-                for name in os.listdir(path)
-            ):
-                return self.spark.createDataFrame([], schema)
-            return self.spark.read.schema(schema).parquet(path)
-        return self.spark.read.option("mergeSchema", "true").parquet(path)
-
-    def _union_legs(
-        self, base: str, sub: str, part_prefix: str,
-        epochs: list[str] | None = None,
-    ) -> DataFrame:
-        """The live generation plus every committed epoch's ``sub``
-        directory, unioned by name (``epochs`` pins an explicit snapshot
-        — compact/maintenance pass one so a racing stream commit can't
-        slip between listing and reading). Empty epoch writes (a 0-row
-        micro-batch) leave no partition directories and are skipped."""
-        schema = (
-            self._postings_schema if sub == "postings" else self._doclen_schema
-        )
-        # epoch legs pin the same NULLABLE-mstamp leg schema as the base
-        # read (round-9 ADVICE: pinning the post-_with_stamp df.schema
-        # declared mstamp non-nullable, letting the optimizer elide the
-        # per-leg NULL→0 coalesce on legacy epoch files)
-        leg_schema = self._leg_schema(schema, part_prefix)
-        df = self._read_leg(base, schema, part_prefix)
-        if sub == "doclen":
-            df = _with_stamp(df)
-        eroot = os.path.join(self.path, _EPOCH_ROOT)
-        for ep in self._epochs() if epochs is None else epochs:
-            leg = os.path.join(eroot, ep, sub)
-            if not os.path.isdir(leg) or not any(
-                name.startswith(part_prefix) for name in os.listdir(leg)
-            ):
-                continue
-            # epoch legs are written by _commit_epoch under the SAME
-            # recorded schema as the generation — pin it so each union
-            # leg skips footer schema inference (one driver-side job per
-            # epoch otherwise)
-            leg_df = (
-                self.spark.read.schema(leg_schema).parquet(leg)
-                if leg_schema is not None
-                else self.spark.read.parquet(leg)
-            )
-            if sub == "doclen":
-                leg_df = _with_stamp(leg_df)
-            df = df.unionByName(leg_df)
-        return df
 
     def reader(self, gen: int | None = None) -> DataFrame:
         """The live index (generation + committed epochs), or — with
         ``gen`` — a PINNED read of exactly that retained generation (no
         epoch legs: a pinned generation is the folded state at its
         publish). Pinned reads of vacuumed generations raise."""
-        if gen is None:
-            return self._union_legs(self._data_path(), "postings", "bucket=")
-        g = self._resolve_gen(gen)
-        return self._read_leg(
-            self._gen_dirs(g)[0], self._postings_schema, "bucket="
-        )
+        return self._leg_reader(0, gen)
 
     def doclen_reader(self, gen: int | None = None) -> DataFrame:
         """The (doc_id, dlen, dbucket) sidecar (``gen`` pins a retained
         generation, as in ``reader``); raises a descriptive error for
         stores built before the sidecar existed (rebuild to enable
         ranked retrieval)."""
-        if gen is not None:
-            g = self._resolve_gen(gen)
-            return self._read_leg(
-                self._gen_dirs(g)[1], self._doclen_schema, "dbucket="
-            )
-        if not os.path.isdir(self._doclen_path()):
+        if gen is None and not os.path.isdir(self._doclen_path()):
             raise FileNotFoundError(
                 "this postings store has no doclen sidecar (built by an "
                 "older version?) — rebuild the store to enable ranked_bm25"
             )
-        return self._union_legs(self._doclen_path(), "doclen", "dbucket=")
+        return self._leg_reader(1, gen)
 
     # -- query ----------------------------------------------------------------
 

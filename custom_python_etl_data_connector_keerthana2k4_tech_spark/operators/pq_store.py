@@ -16,15 +16,16 @@ one built in a single shot — tested in tests/test_pq_store.py. This is
 the standard production contract (FAISS-style: train on a sample,
 add() forever); re-training is an explicit rebuild, never implicit.
 
-Durability (operators/genstore.py — shared with the postings store):
-maintenance verbs publish new generations behind a CAS-guarded atomic
-pointer flip (concurrent maintainers raise ``ConcurrentWriteError``
-instead of last-write-winning); superseded generations are RETAINED
-(hardlinked) for ``reader(gen=N)`` / ``query(as_of_gen=N)`` pinned reads
-until ``vacuum()``; streaming epochs commit exactly-once per checkpoint
-LINEAGE, and a foreign lineage raises ``LineageMismatchError`` instead
-of silently dropping its batches (``reset_lineage()`` re-points
-deliberately).
+Durability (operators/genstore.py's ``GenStore`` core, shared with the
+postings store; this store's one leg is the codes, partitioned by
+``cluster``): maintenance verbs publish new generations behind a
+CAS-guarded atomic pointer flip (concurrent maintainers raise
+``ConcurrentWriteError`` instead of last-write-winning); superseded
+generations are RETAINED (hardlinked) for ``reader(gen=N)`` /
+``query(as_of_gen=N)`` pinned reads until ``vacuum()``; streaming epochs
+commit exactly-once per checkpoint LINEAGE, and a foreign lineage raises
+``LineageMismatchError`` instead of silently dropping its batches
+(``reset_lineage()`` re-points deliberately).
 
 Scale (100 TB): encoding is one narrow projection per batch (codes are
 literal-array argmins — JVM codegen, no join, no UDF); the store holds
@@ -37,14 +38,11 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import threading
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators import genstore
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.genstore import GenStore, Leg
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.kmeans import kmeans
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import (
     _adc_tables,
@@ -56,28 +54,6 @@ from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq impor
 )
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.functions.vectors import quantize
 
-_PARAMS_FILE = "_ivfpq_params.json"
-_DATA_DIR = "data"
-_DATA_PTR = "_data_ptr"  # names the live data generation (crash-safe publish)
-_EPOCH_ROOT = genstore.EPOCH_ROOT  # streaming epoch commits (exactly-once)
-
-
-def _with_stamp(df: DataFrame) -> DataFrame:
-    """Back-compat shim for code legs written before the mutation stamp
-    existed (round 8): stamp-less rows read as stamp 0 — the build/
-    append default — so unions and rewrites over a legacy store stay
-    well-typed. NULL stamps (a mixed-schema generation read under the
-    pinned recorded schema, where legacy files lack the column — round-8
-    ADVICE) coalesce to the same build-default 0, so a vector present on
-    both sides of a paired deployment never misreads as one-sided."""
-    if "mstamp" in df.columns:
-        return df.withColumn(
-            "mstamp",
-            F.coalesce(F.col("mstamp").cast("long"), F.lit(0).cast("long")),
-        )
-    return df.withColumn("mstamp", F.lit(0).cast("long"))
-
-
 def _select_probes(qrows, centroids, nprobe: int) -> list[list[int]]:
     """Driver probe selection (literal mode): delegates to the shared
     NumPy-vectorized left-fold (operators/pq.select_probes — bit-identical
@@ -87,16 +63,28 @@ def _select_probes(qrows, centroids, nprobe: int) -> list[list[int]]:
     return select_probes(qrows, centroids, nprobe)
 
 
-class IVFPQStore:
+class IVFPQStore(GenStore):
     """A directory-backed IVF-PQ index with frozen parameters."""
 
-    #: superseded generations kept on disk for pinned reads (vacuum() sweeps)
-    keep_gens: int = 2
+    LEGS = (Leg("data", "codes", "cluster", stamped=True),)
+    _PTR_FILE = "_data_ptr"
+    _PARAMS_FILE = "_ivfpq_params.json"
+    # the pointer names the live generation by its dirname
+    # (``data-0000000N``), as stores written before the shared core did
+    _PTR_GEN_DIRNAME = True
+
+    # the shared verbs, bound in this class's own namespace so per-class
+    # method wrappers (perfbench/spans.py) see every verb of the store
+    append = GenStore.append
+    compact = GenStore.compact
+    vacuum = GenStore.vacuum
+    reset_lineage = GenStore.reset_lineage
+    streaming_append = GenStore.streaming_append
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        with open(os.path.join(path, _PARAMS_FILE)) as f:
+        with open(os.path.join(path, self._PARAMS_FILE)) as f:
             p = json.load(f)
         self.centroids: list[list[float]] = p["centroids"]
         self.codebook: list[list[list[int]]] = p["codebook"]
@@ -105,7 +93,7 @@ class IVFPQStore:
         self.vec_col: str = p["vec_col"]
         self.attr_cols: list[str] = p.get("attr_cols", [])
         self.sub: int = len(self.codebook[0][0])
-        self._codes_schema: str | None = p.get("codes_schema")
+        self._schemas = (p.get("codes_schema"),)
 
     # -- lifecycle ----------------------------------------------------------
 
@@ -159,200 +147,7 @@ class IVFPQStore:
             "attr_cols": list(attr_cols or []),
             "codes_schema": enc.schema.json(),
         }
-        tmp = os.path.join(path, _PARAMS_FILE + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(params, f)
-        os.replace(tmp, os.path.join(path, _PARAMS_FILE))
-        store = cls(spark, path)
-        enc.write.mode("overwrite").partitionBy("cluster").parquet(
-            store._data_path()
-        )
-        return store
-
-    def _ptr_path(self) -> str:
-        return os.path.join(self.path, _DATA_PTR)
-
-    def _ptr(self) -> dict:
-        """The live-generation pointer (operators/genstore.py):
-        ``{"gen": <dirname>, "folded": [epoch names], "watermark": max
-        folded epoch id, "lineage": checkpoint query id | None,
-        "retained": [pinned old gen dirnames], "version": CAS version}``.
-        Legacy plain-string pointers parse as the dirname with nothing
-        folded; no pointer file means the original ``data``."""
-        return genstore.read_ptr(self._ptr_path(), _DATA_DIR)
-
-    @staticmethod
-    def _gen_name(gen) -> str:
-        """Normalize a generation handle: an int N maps to the dirname
-        (0 = the original ``data``); a string passes through."""
-        if isinstance(gen, str):
-            return gen
-        n = int(gen)
-        return _DATA_DIR if n == 0 else f"{_DATA_DIR}-{n:08d}"
-
-    @staticmethod
-    def _gen_num(name: str) -> int:
-        return int(name.rsplit("-", 1)[1]) if "-" in name else 0
-
-    def current_gen(self) -> int:
-        """The live generation number — capture it before a mutation to
-        pin a pre-mutation read (``reader(gen=...)``)."""
-        return self._gen_num(self._ptr()["gen"])
-
-    def generations(self) -> list[dict]:
-        """Inspection rows for the live + retained (pinned-readable)
-        generations — versioned.versions() for the index store."""
-        return genstore.describe(self._ptr())
-
-    def _data_path(self) -> str:
-        """The LIVE data generation, resolved through the pointer file.
-
-        Maintenance verbs (compact/upsert/delete) never mutate the live
-        directory: they build a new generation (``data-0000000N``) and
-        flip the pointer atomically (_publish), versioned.py-style — so a
-        crash at any step leaves the pointer naming a complete directory
-        and the store readable. No pointer file (a freshly built store)
-        means the original ``data`` directory."""
-        return os.path.join(self.path, self._ptr()["gen"])
-
-    def _resolve_gen(self, gen) -> str:
-        """Validate a pinned-read generation (int or dirname): it must
-        be live, retained, or still on disk under an ACTIVE read lease
-        (``pinned()``); a vacuumed generation fails loudly."""
-        ptr = self._ptr()
-        name = self._gen_name(gen)
-        if name == ptr["gen"] or name in set(ptr["retained"]):
-            return name
-        if name in genstore.leased_dirnames(self.path) and os.path.isdir(
-            os.path.join(self.path, name)
-        ):
-            return name
-        raise LookupError(
-            f"generation {gen!r} is neither live ({ptr['gen']!r}) nor "
-            f"retained {sorted(ptr['retained'])} nor leased — it was "
-            "vacuumed, superseded past keep_gens, or never published "
-            "(hold reader leases with `with store.pinned(g):`)"
-        )
-
-    def pinned(self, gen):
-        """Context manager holding a READ LEASE on generation ``gen``
-        (round 8): inside the block, ``reader(gen=)`` /
-        ``query(as_of_gen=)`` keep serving that generation even if
-        maintenance verbs or ``vacuum()`` trim it from the retention
-        window meanwhile — sweeps skip leased directories, so lazy
-        pinned DataFrames never hit a mid-job file-not-found. On exit
-        the lease releases and the next publish sweeps the directory if
-        it fell out of retention. Without a lease, materialize pinned
-        reads before the next maintenance verb (SCALE.md).
-
-        Lease-vs-vacuum race (round-8 ADVICE): the generation directory
-        is re-checked AFTER the lease file lands — a sweep whose
-        leased-dir listing ran before the lease hit disk can still
-        remove it, and the re-check raises the loud LookupError instead
-        of handing out a swept generation; ``_sweep_gens``
-        symmetrically re-reads the lease set immediately before each
-        rmtree."""
-        from contextlib import contextmanager
-
-        @contextmanager
-        def _ctx():
-            name = self._resolve_gen(gen)
-            with genstore.gen_lease(self.path, name):
-                if not os.path.isdir(os.path.join(self.path, name)):
-                    raise LookupError(
-                        f"generation {gen!r} was swept by concurrent "
-                        "maintenance between pin and lease — it is gone; "
-                        "re-pin a retained generation"
-                    )
-                yield self._gen_num(name)
-
-        return _ctx()
-
-    def _epochs(self) -> list[str]:
-        """Committed, unfolded streaming-epoch directory names (sorted)."""
-        return genstore.list_epochs(self.path, self._ptr()["folded"])
-
-    def _keep_dirnames(self, state: dict) -> set[str]:
-        return {state["gen"], *state.get("retained", [])}
-
-    def _sweep_gens(self, state: dict) -> None:
-        # directories under an ACTIVE read lease (pinned()) are skipped;
-        # they become orphans the next publish sweeps once released.
-        # the lease set is re-read immediately before EACH rmtree
-        # (round-8 ADVICE): a lease landing between the initial listing
-        # and the removal would otherwise lose its directory mid-pin
-        keep = self._keep_dirnames(state)
-        for name in os.listdir(self.path):
-            if (
-                name.startswith(_DATA_DIR)
-                and name not in keep
-                and name not in genstore.leased_dirnames(self.path)
-            ):
-                shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
-
-    def _publish(
-        self,
-        base: dict,
-        newly_folded: list[str],
-        place: Callable[[str], None],
-    ) -> None:
-        """Commit the next data generation with ONE CAS-guarded atomic
-        pointer replace: under the pointer lock the CAS check verifies no
-        other maintainer published since ``base`` was read
-        (ConcurrentWriteError otherwise), ``place(new_data)`` renames the
-        staged directory into its generation name, and the pointer flips
-        with folded epochs, the advanced watermark, and the superseded
-        generation joining the RETAINED set, all in one write. Post-flip:
-        sweep generations outside the retention window (crashed verbs'
-        tmp dirs included) and folded epoch directories; folded entries
-        whose dirs are gone are pruned with a best-effort second CAS."""
-        gen_name = self._gen_name(self._gen_num(base["gen"]) + 1)
-
-        def mutate(cur: dict) -> dict:
-            new_data = os.path.join(self.path, gen_name)
-            shutil.rmtree(new_data, ignore_errors=True)
-            place(new_data)
-            folded_all, wm = genstore.fold_bookkeeping(cur, newly_folded)
-            cur["retained"] = genstore.retention_bookkeeping(
-                cur, self.keep_gens
-            )
-            cur["gen"] = gen_name
-            cur["folded"] = folded_all
-            cur["watermark"] = wm
-            return cur
-
-        new = genstore.cas_update(
-            self._ptr_path(), _DATA_DIR, mutate, expected_version=base["version"]
-        )
-        self._sweep_gens(new)
-        remaining = genstore.sweep_folded(self.path, new["folded"])
-        if remaining != new["folded"]:
-            try:
-                genstore.cas_update(
-                    self._ptr_path(), _DATA_DIR,
-                    lambda cur: {**cur, "folded": remaining},
-                    expected_version=new["version"],
-                )
-            except genstore.ConcurrentWriteError:
-                pass  # cosmetic prune only — tombstones stay skipped
-
-    def vacuum(self) -> None:
-        """Sweep the retained (pinned-read) generations; subsequent
-        ``reader(gen=N)`` / ``query(as_of_gen=N)`` calls on them raise
-        instead of reading swept directories."""
-        base = self._ptr()
-        new = genstore.cas_update(
-            self._ptr_path(), _DATA_DIR,
-            lambda cur: {**cur, "retained": []},
-            expected_version=base["version"],
-        )
-        self._sweep_gens(new)
-
-    def reset_lineage(self) -> None:
-        """Deliberately adopt a NEW streaming lineage (wiped checkpoint,
-        migrated stream); requires all committed epochs folded first —
-        run ``compact()``. See genstore.reset_lineage."""
-        genstore.reset_lineage(self.path, self._ptr_path(), _DATA_DIR)
+        return cls._create(spark, path, params, [enc])
 
     # -- encode / ingest ----------------------------------------------------
 
@@ -396,89 +191,17 @@ class IVFPQStore:
             "cluster",
         )
 
-    def append(self, batch: DataFrame) -> None:
-        """Encode with the frozen parameters and append to the store."""
-        self._encode(batch).write.mode("append").partitionBy("cluster").parquet(
-            self._data_path()
-        )
+    def _leg_frames(self, batch: DataFrame) -> tuple[DataFrame]:
+        return (self._encode(batch),)
 
-    def _commit_epoch(
-        self, batch: DataFrame, epoch_id: int, lineage: str | None = None
-    ) -> None:
-        """Exactly-once micro-batch ingest: encode the epoch's vectors
-        with the frozen parameters into a temp directory and publish it
-        with ONE atomic directory rename keyed by the epoch id. A
-        retried epoch finds its commit directory and skips — so
-        foreachBatch's at-least-once delivery can never land a vector
-        twice (a blind append would duplicate (vid, codes) rows, and a
-        duplicated vector shows up TWICE in every top-k that reaches
-        it); an id at-or-below the folded watermark (folded and swept
-        before the streaming checkpoint recorded it) is refused — and a
-        FOREIGN lineage raises ``LineageMismatchError`` instead of being
-        dropped as a replay (genstore.commit_epoch)."""
-
-        def write_legs(tmp: str) -> None:
-            self._encode(batch).write.mode("overwrite").partitionBy(
-                "cluster"
-            ).parquet(os.path.join(tmp, "codes"))
-
-        genstore.commit_epoch(
-            self.path, self._ptr_path(), _DATA_DIR, epoch_id, write_legs,
-            lineage,
-        )
-
-    def streaming_append(self, stream: DataFrame, checkpoint_dir: str):
-        """Keep the index fresh under a stream of new vectors: each
-        micro-batch publishes through ``_commit_epoch``'s atomic rename,
-        so a crash-and-replay of an epoch cannot double-insert. The
-        checkpoint's query id is the LINEAGE: same-checkpoint replays
-        are no-ops, a wiped-checkpoint restart raises
-        ``LineageMismatchError`` instead of silently dropping data
-        (``reset_lineage()`` re-points deliberately). Returns the
-        started StreamingQuery (caller picks the trigger by convention:
-        availableNow in tests, continuous in production)."""
-        return (
-            stream.writeStream.foreachBatch(
-                lambda b, eid: self._commit_epoch(
-                    b, eid, lineage=genstore.checkpoint_lineage(checkpoint_dir)
-                )
-            )
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
+    # -- maintenance --------------------------------------------------------
 
     def _swap_lists(self, base: dict, tmp: str, clusters: list[int]) -> None:
         """Publish a partition-selective rewrite (an upsert of 100 vectors
-        rewrites the handful of lists it touches, never the corpus): a NEW
-        data generation takes the rewritten lists from ``tmp`` and
-        HARDLINKS every untouched list's files from the BASE generation
-        (no bytes copied), then the pointer flips atomically under the
-        CAS check (_publish). The live directory is never mutated, so a
-        crash at any step leaves the store fully readable under the old
-        pointer, and no transient ``cluster=N.old`` dirs ever appear
-        under a live path for hive partition discovery to misparse.
-        Concurrent maintenance now FAILS LOUDLY (ConcurrentWriteError)
-        instead of last-write-winning."""
-        data = os.path.join(self.path, base["gen"])
-        touched = {f"cluster={c}" for c in clusters}
-
-        def place(new: str) -> None:
-            os.makedirs(new)
-            for name in os.listdir(data):
-                src = os.path.join(data, name)
-                if name in touched or not os.path.isdir(src):
-                    continue
-                os.makedirs(os.path.join(new, name))
-                for f in os.listdir(src):
-                    os.link(os.path.join(src, f), os.path.join(new, name, f))
-            for name in sorted(touched):
-                src = os.path.join(tmp, name)
-                if os.path.exists(src):
-                    os.rename(src, os.path.join(new, name))
-
-        self._publish(base, [], place)
-        shutil.rmtree(tmp, ignore_errors=True)
+        rewrites the handful of lists it touches, never the corpus): the
+        rewritten lists come from ``tmp``, every untouched list is
+        hardlinked from the base generation (``GenStore._swap``)."""
+        self._swap(base, (tmp,), (clusters,))
 
     def upsert(self, batch: DataFrame, stamp: int = 0) -> None:
         """Replace-or-insert vectors by id, rewriting ONLY the touched
@@ -490,10 +213,8 @@ class IVFPQStore:
         stamp (paired maintenance passes its sequence number so
         ``reconcile_stores`` can see a half-landed paired upsert);
         untouched rows keep theirs."""
-        if self._epochs():
-            self.compact()
-        base = self._ptr()
-        live = _with_stamp(self._read_gen(base["gen"]))  # base generation only
+        base = self._base()
+        (live,) = self._base_legs(base)
         enc = self._encode(batch, stamp=stamp).persist()
         # ONE job finds every touched list: the lists the new encodings
         # land in plus the lists holding older versions of the same ids
@@ -515,7 +236,7 @@ class IVFPQStore:
             .join(enc.select("vid"), "vid", "left_anti")
             .unionByName(enc.filter(F.col("cluster").isin(clusters)))
         )
-        tmp = os.path.join(self.path, base["gen"]) + ".upsert"
+        tmp = self._gen_dirs(base["gen"])[0] + ".upsert"
         rewritten.write.mode("overwrite").partitionBy("cluster").parquet(tmp)
         enc.unpersist()
         self._swap_lists(base, tmp, clusters)
@@ -524,10 +245,8 @@ class IVFPQStore:
         """Remove vectors by id (a one-column frame of ids), rewriting
         only the lists that hold them (epochs fold first, as in
         ``upsert``)."""
-        if self._epochs():
-            self.compact()
-        base = self._ptr()
-        live = _with_stamp(self._read_gen(base["gen"]))  # base generation only
+        base = self._base()
+        (live,) = self._base_legs(base)
         vids = ids.toDF("vid")
         homes = (
             live
@@ -543,130 +262,11 @@ class IVFPQStore:
             .filter(F.col("cluster").isin(clusters))
             .join(vids, "vid", "left_anti")
         )
-        tmp = os.path.join(self.path, base["gen"]) + ".delete"
+        tmp = self._gen_dirs(base["gen"])[0] + ".delete"
         kept.write.mode("overwrite").partitionBy("cluster").parquet(tmp)
         self._swap_lists(base, tmp, clusters)
 
-    def compact(self) -> None:
-        """Rewrite each inverted list into one file.
-
-        Streaming ingest appends one file batch per micro-batch per
-        touched list — the classic small-file problem: at 100 TB a probe
-        that should read a handful of large row groups instead opens
-        thousands of tiny footers. Compaction reads the store once,
-        repartitions by cluster (each list lands whole in one task, so
-        each list directory rewrites to one file; tasks run list-
-        parallel), and republishes as a new data generation behind the
-        CAS-guarded atomic pointer flip (_publish) — a crash at ANY point
-        leaves the pointer naming a complete directory, never a store
-        with no data dir. The maintenance verb every append-only store
-        needs (the versioned table's OPTIMIZE, applied to the index).
-        Also FOLDS committed streaming epochs into the new generation —
-        the folded epoch ids are recorded in the pointer before their
-        directories are swept, so a crash mid-sweep never double-counts
-        them."""
-        base = self._ptr()
-        eps = genstore.list_epochs(self.path, base["folded"])
-        tmp = os.path.join(
-            self.path,
-            f"{_DATA_DIR}.compact-{os.getpid()}-{threading.get_ident()}",
-        )
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            self._reader_of(base["gen"], eps)
-            .repartition("cluster")
-            .write.mode("overwrite")
-            .partitionBy("cluster")
-            .parquet(tmp)
-        )
-
-        def place(new: str) -> None:
-            os.rename(tmp, new)
-
-        self._publish(base, eps, place)
-
     # -- query --------------------------------------------------------------
-
-    def _read_gen(self, gen_name: str) -> DataFrame:
-        """Read one generation directory, falling back to an empty,
-        correctly-typed frame when a delete emptied EVERY list (a
-        partitioned write of zero rows leaves no partition dirs, which a
-        plain read rejects with a schema-inference error).
-
-        The read PINS the recorded codes schema (round-8 ADVICE): a
-        partition-selective rewrite on a legacy (pre-``mstamp``) store
-        hardlinks untouched cluster partitions WITHOUT the stamp column
-        while touched ones carry it, and a plain read over such a mixed
-        generation infers from one footer — dropping ``mstamp`` or
-        surfacing it only for some rows. With an explicit schema every
-        file reads the same columns (absent ones as NULL, which
-        ``_with_stamp`` coalesces to the build-default 0) and schema
-        inference is skipped. Legacy recorded schemas have ``mstamp``
-        grafted on for the mixed case; stores without any recorded
-        schema fall back to ``mergeSchema``."""
-        path = os.path.join(self.path, gen_name)
-        schema = self._leg_schema()
-        if schema is not None:
-            if not os.path.isdir(path) or not any(
-                name.startswith("cluster=") or name.endswith(".parquet")
-                for name in os.listdir(path)
-            ):
-                return self.spark.createDataFrame([], schema)
-            return self.spark.read.schema(schema).parquet(path)
-        return self.spark.read.option("mergeSchema", "true").parquet(path)
-
-    def _leg_schema(self):
-        """The pinned read schema for a codes leg: the RECORDED schema
-        with ``mstamp`` forced NULLABLE (grafted when a legacy recorded
-        schema lacks it). The recorded schema captures the encoder's
-        ``lit(stamp)`` as non-nullable, but files written before the
-        stamp existed read the column as NULL — a non-nullable
-        declaration would let the optimizer elide ``_with_stamp``'s
-        NULL→0 coalesce and leak NULL stamps into the reconcile audit
-        (round-9 ADVICE). None when no schema was recorded."""
-        if self._codes_schema is None:
-            return None
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        schema = StructType(
-            [
-                StructField(
-                    f.name,
-                    f.dataType,
-                    True if f.name == "mstamp" else f.nullable,
-                    f.metadata,
-                )
-                for f in StructType.fromJson(json.loads(self._codes_schema))
-            ]
-        )
-        if "mstamp" not in schema.fieldNames():
-            schema = schema.add("mstamp", LongType(), True)
-        return schema
-
-    def _reader_of(self, gen_name: str, epochs: list[str]) -> DataFrame:
-        df = _with_stamp(self._read_gen(gen_name))
-        # epoch legs pin the same NULLABLE-mstamp leg schema as the base
-        # read (round-9 ADVICE: pinning the post-_with_stamp df.schema
-        # declared mstamp non-nullable, letting the optimizer elide the
-        # per-leg NULL→0 coalesce on legacy epoch files)
-        leg_schema = self._leg_schema()
-        eroot = os.path.join(self.path, _EPOCH_ROOT)
-        for ep in epochs:
-            leg = os.path.join(eroot, ep, "codes")
-            if not os.path.isdir(leg) or not any(
-                name.startswith("cluster=") for name in os.listdir(leg)
-            ):
-                continue
-            # epoch legs carry the SAME recorded codes schema as the
-            # generation — pin it so each union leg skips footer schema
-            # inference (one driver-side job per epoch otherwise)
-            leg_df = (
-                self.spark.read.schema(leg_schema).parquet(leg)
-                if leg_schema is not None
-                else self.spark.read.parquet(leg)
-            )
-            df = df.unionByName(_with_stamp(leg_df))
-        return df
 
     def reader(
         self, epochs: list[str] | None = None, gen=None
@@ -680,11 +280,7 @@ class IVFPQStore:
         epoch commits (a 0-row micro-batch) leave no cluster directories
         and are skipped; the ``cluster IN probes`` predicate prunes
         every union leg."""
-        if gen is not None:
-            return self._read_gen(self._resolve_gen(gen))
-        return self._reader_of(
-            self._ptr()["gen"], self._epochs() if epochs is None else epochs
-        )
+        return self._leg_reader(0, gen, epochs)
 
     def query(
         self, queries: DataFrame, nprobe: int = 2, topk: int = 10,

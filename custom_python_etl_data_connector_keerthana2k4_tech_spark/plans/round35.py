@@ -254,51 +254,19 @@ _AUD_PDEL = 17  # doc_id % 17 == 3 -> deleted from the POSTINGS store only
 _AUD_VDEL = 19  # doc_id % 19 == 4 -> deleted from the VECTOR store only
 
 
-@query(
-    "q402_reconcile_drift_audit",
-    oracle=f"""
-    WITH base AS (SELECT vec_id AS doc_id FROM embeddings),
-    p AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % {_AUD_UPS} = 2 THEN CAST({_AUD_STAMP} AS BIGINT)
-                  ELSE CAST(0 AS BIGINT) END AS p_stamp
-      FROM base WHERE doc_id % {_AUD_PDEL} <> 3
-    ),
-    v AS (
-      SELECT doc_id, CAST(0 AS BIGINT) AS v_stamp
-      FROM base WHERE doc_id % {_AUD_VDEL} <> 4
-    )
-    SELECT CAST(COALESCE(p.doc_id, v.doc_id) AS VARCHAR) AS doc_id,
-           CASE WHEN v.doc_id IS NULL THEN 'postings_only'
-                WHEN p.doc_id IS NULL THEN 'vectors_only'
-                WHEN p_stamp <> v_stamp THEN 'stamp_mismatch' END AS side
-    FROM p FULL JOIN v ON p.doc_id = v.doc_id
-    WHERE v.doc_id IS NULL OR p.doc_id IS NULL OR p_stamp <> v_stamp
-    """,
-)
-def q402_reconcile_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cross-store drift AUDIT under the oracle gate: build a
-    consistent postings+IVF-PQ pair over the shared id space (the
-    embeddings ids — a subset of the documents ids on every fixture),
-    then plant all three drift classes DELIBERATELY with single-store
-    verbs — a postings-only stamped upsert (ids unchanged: the
-    half-landed paired mutation reconcile exists to catch), a
-    postings-only delete, and a vector-only delete — and return
-    ``reconcile_stores``. The oracle derives the expected audit rows
-    from the mutation arithmetic alone (id set algebra + stamp CASE),
-    so a reconcile false-negative (drift it fails to surface) or
-    false-positive (consistent docs it flags) is a value mismatch.
-    Overlaps are exercised by construction: an id deleted from both
-    stores yields NO row; an upserted id later deleted from the
-    postings side reports vectors_only, not stamp_mismatch. Scale: the
-    audit reads the doclen sidecar (id+stamp) and the codes' id+stamp
-    columns only — column-pruned, one full-outer join of two narrow
-    frames."""
+def _drifted_pair(spark: SparkSession, sf_dir: str, tag: str):
+    """q402's setup, shared with q404: a consistent postings + IVF-PQ
+    pair built over the shared id space (the embeddings ids — a subset
+    of the documents ids on every fixture) under temp roots prefixed
+    ``tag``, then all three drift classes planted DELIBERATELY with
+    single-store verbs — a postings-only stamped upsert (ids unchanged:
+    the half-landed paired mutation reconcile exists to catch), a
+    postings-only delete, and a vector-only delete. Returns
+    ``(ps, vs, base_docs, embeddings)``."""
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.postings_store import (
         PostingsStore,
     )
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq_store import IVFPQStore
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.reconcile import reconcile_stores
 
     docs = load(spark, sf_dir, "documents")
     e = load(spark, sf_dir, "embeddings")
@@ -307,8 +275,8 @@ def q402_reconcile_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.concurrency import run_jobs
 
-    proot = tempfile.mkdtemp(prefix="q402_audit_p_") + "/ix"
-    vroot = tempfile.mkdtemp(prefix="q402_audit_v_") + "/ix"
+    proot = tempfile.mkdtemp(prefix=f"{tag}_p_") + "/ix"
+    vroot = tempfile.mkdtemp(prefix=f"{tag}_v_") + "/ix"
     # independent stores — build concurrently (guide §2.6)
     ps, vs = run_jobs([
         lambda: PostingsStore.build(
@@ -343,4 +311,45 @@ def q402_reconcile_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.filter(F.col("vec_id") % _AUD_VDEL == 4).select("vec_id")
         ),
     ])
+    return ps, vs, base_docs, e
+
+
+@query(
+    "q402_reconcile_drift_audit",
+    oracle=f"""
+    WITH base AS (SELECT vec_id AS doc_id FROM embeddings),
+    p AS (
+      SELECT doc_id,
+             CASE WHEN doc_id % {_AUD_UPS} = 2 THEN CAST({_AUD_STAMP} AS BIGINT)
+                  ELSE CAST(0 AS BIGINT) END AS p_stamp
+      FROM base WHERE doc_id % {_AUD_PDEL} <> 3
+    ),
+    v AS (
+      SELECT doc_id, CAST(0 AS BIGINT) AS v_stamp
+      FROM base WHERE doc_id % {_AUD_VDEL} <> 4
+    )
+    SELECT CAST(COALESCE(p.doc_id, v.doc_id) AS VARCHAR) AS doc_id,
+           CASE WHEN v.doc_id IS NULL THEN 'postings_only'
+                WHEN p.doc_id IS NULL THEN 'vectors_only'
+                WHEN p_stamp <> v_stamp THEN 'stamp_mismatch' END AS side
+    FROM p FULL JOIN v ON p.doc_id = v.doc_id
+    WHERE v.doc_id IS NULL OR p.doc_id IS NULL OR p_stamp <> v_stamp
+    """,
+)
+def q402_reconcile_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cross-store drift AUDIT under the oracle gate: the pair
+    ``_drifted_pair`` builds and deliberately drifts, returned as
+    ``reconcile_stores``. The oracle derives the expected audit rows
+    from the mutation arithmetic alone (id set algebra + stamp CASE),
+    so a reconcile false-negative (drift it fails to surface) or
+    false-positive (consistent docs it flags) is a value mismatch.
+    Overlaps are exercised by construction: an id deleted from both
+    stores yields NO row; an upserted id later deleted from the
+    postings side reports vectors_only, not stamp_mismatch. Scale: the
+    audit reads the doclen sidecar (id+stamp) and the codes' id+stamp
+    columns only — column-pruned, one full-outer join of two narrow
+    frames."""
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.reconcile import reconcile_stores
+
+    ps, vs, _, _ = _drifted_pair(spark, sf_dir, "q402_audit")
     return reconcile_stores(ps, vs)

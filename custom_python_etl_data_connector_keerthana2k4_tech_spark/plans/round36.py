@@ -160,9 +160,9 @@ def q403_paired_streaming_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # drift classes (operators-level constants live in plans/round35.py)
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.round35 import (  # noqa: E402
     _AUD_PDEL,
-    _AUD_STAMP,
     _AUD_UPS,
     _AUD_VDEL,
+    _drifted_pair,
 )
 
 _REPAIR_STAMP = 1  # first paired verb on a fresh pair: sequence -> 1
@@ -212,56 +212,11 @@ def q404_drift_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     repair batch is audit-sized (drifted ids semi-join the truth — never
     a corpus rewrite)."""
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.paired import repair_drift
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.postings_store import (
-        PostingsStore,
-    )
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq_store import IVFPQStore
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.reconcile import (
         reconcile_stores,
         store_stamps,
     )
 
-    docs = load(spark, sf_dir, "documents")
-    e = load(spark, sf_dir, "embeddings")
-    base_docs = docs.join(
-        e.select(F.col("vec_id").alias("doc_id")), "doc_id", "left_semi"
-    )
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.concurrency import run_jobs
-
-    proot = tempfile.mkdtemp(prefix="q404_repair_p_") + "/ix"
-    vroot = tempfile.mkdtemp(prefix="q404_repair_v_") + "/ix"
-    # independent stores — build concurrently (guide §2.6)
-    ps, vs = run_jobs([
-        lambda: PostingsStore.build(
-            spark, base_docs, "doc_id", "text", proot, n_buckets=16
-        ),
-        lambda: IVFPQStore.build(
-            spark, e, "vec_id", "embedding", vroot,
-            n_lists=_IVF_LISTS, km_iters=_IVF_ITERS, m=_PQ_M,
-            k_centroids=_PQ_K,
-            centroids=_coarse_centroids(spark, sf_dir),
-            codebook=_pq_codebook(spark, sf_dir),
-        ),
-    ])
-
-    # plant the drift: the two postings verbs are order-dependent (same
-    # store), the vector delete is independent — overlap it (§2.6)
-    def _plant_postings():
-        ps.upsert(
-            base_docs.filter(F.col("doc_id") % _AUD_UPS == 2).withColumn(
-                "text", F.concat(F.lit("stale edit "), F.col("text"))
-            ),
-            stamp=_AUD_STAMP,
-        )
-        ps.delete(
-            base_docs.filter(F.col("doc_id") % _AUD_PDEL == 3).select("doc_id")
-        )
-
-    run_jobs([
-        _plant_postings,
-        lambda: vs.delete(
-            e.filter(F.col("vec_id") % _AUD_VDEL == 4).select("vec_id")
-        ),
-    ])
+    ps, vs, base_docs, e = _drifted_pair(spark, sf_dir, "q404_repair")
     repair_drift(ps, vs, reconcile_stores(ps, vs), base_docs, e)
     return store_stamps(ps, vs).select("doc_id", "p_stamp", "v_stamp")

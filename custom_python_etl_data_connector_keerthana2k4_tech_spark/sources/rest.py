@@ -416,13 +416,21 @@ def pulses_df(
     **options,
 ) -> DataFrame:
     """Read the REST source and project the raw JSON into a ``raw`` struct
-    column — the input shape of pipeline.transform_pulses. Unparseable items
-    become NULL ``raw`` (they then fail R7 validation, reproducing the
-    reference's log-and-skip semantics)."""
+    column — the input shape of pipeline.transform_pulses. Items that are
+    not a JSON object (unparseable text, or a scalar/array such as
+    ``"not-a-pulse"``, ``7`` or ``[1, 2]``) become NULL ``raw`` and then
+    fail R7 validation, reproducing the reference's log-and-skip
+    semantics. ``from_json`` alone would turn a non-object into a struct
+    of NULLs that lands as a keyless row, so ``raw`` is gated on
+    ``json_object_keys``, which is NULL for anything but an object."""
     register_rest_source(spark)
     reader = spark.read.format("paginated_rest").option("base_url", base_url)
     if api_key:
         reader = reader.option("api_key", api_key)
     for k, v in options.items():
         reader = reader.option(k, v)
-    return reader.load().select(F.from_json("item", schema).alias("raw"))
+    return reader.load().select(
+        F.when(
+            F.json_object_keys("item").isNotNull(), F.from_json("item", schema)
+        ).alias("raw")
+    )

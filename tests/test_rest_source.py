@@ -233,6 +233,34 @@ def test_rest_to_pipeline_end_to_end(spark, stub_server, tmp_path):
     assert keyed.count() == keyed.select("pulse_id").distinct().count()
 
 
+def test_non_object_items_are_skipped_invalid(spark, stub_server, tmp_path):
+    """Items that are not JSON objects (a string, a number, an array) read
+    as NULL ``raw``: R7 validation skips them instead of the pipeline
+    upserting a struct of NULLs as a keyless row."""
+    import datetime as dt
+
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.config import PipelineConfig
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.pipeline import run_batch
+
+    base, state = stub_server
+    pulse = {"id": "p-1", "name": "one", "pulse_info": {"id": "p-1"}}
+    state.pages = {1: {"results": [pulse, "not-a-pulse", 7, [1, 2]]}}
+    raw_df = pulses_df(spark, base, RAW_PULSE_SCHEMA, per_page="50", **FAST)
+    assert raw_df.filter(F.col("raw").isNull()).count() == 3
+    cfg = PipelineConfig(api_key="k", base_url=base, connector_name="t", city="")
+    target = str(tmp_path / "pulses")
+    metrics = run_batch(
+        spark, raw_df, cfg, target, run_ts=dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    )
+    assert metrics == {
+        "records_seen": 4,
+        "records_upserted": 1,
+        "records_skipped_invalid": 3,
+    }
+    out = spark.read.parquet(target)
+    assert [r["pulse_id"] for r in out.select("pulse_id").collect()] == ["p-1"]
+
+
 # ---------------------------------------------------------------------------
 # Streaming mode: SimpleDataSourceStreamReader over the same stub
 # ---------------------------------------------------------------------------

@@ -1,7 +1,7 @@
 """Time a handful of declared queries with the bench methodology
 (noop sink, min over N runs) without running the whole suite.
 
-Usage: SPARK_GRAFT_BENCH_RUNS=5 python tools_r09/quick_time.py q401_pinned_pair_rrf [...]
+Usage: SPARK_GRAFT_BENCH_RUNS=5 python tools_r10/quick_time.py q401_pinned_pair_rrf [...]
 Prints one JSON line {name: min_seconds}.
 """
 
