@@ -8,10 +8,10 @@ engine pins a deterministic ordering via explicit ``order_by`` columns
 (SURVEY §7 hard part (a)).
 
 Spark-first design:
-- ``upsert_dataframe``: pure DataFrame -> DataFrame merge (window dedup
-  ``row_number() == 1`` over the key, ordered by ``order_by`` desc then a
-  batch-wins-over-existing priority). NULL-key rows bypass dedup and are
-  appended (the reference's insert fallback, :185-187).
+- ``upsert_dataframe``: pure DataFrame -> DataFrame merge (one ``max_by``
+  aggregate per key over ``order_by`` then a batch-wins-over-existing
+  priority). NULL-key rows are each their own group, so all are kept (the
+  reference's insert fallback, :185-187).
 - ``upsert_parquet``: materialized table on any Hadoop-compatible FS;
   read-merge-overwrite with a temp-dir swap (no Delta in this image — with
   Delta this is a one-statement ``MERGE INTO``; see ``upsert_delta``).
@@ -24,11 +24,13 @@ from __future__ import annotations
 
 import uuid
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _PRIORITY = "__upsert_priority"
 _ROWNUM = "__upsert_rn"
+_KEYLESS = "__upsert_keyless"
 
 
 def dedup_last_write_wins(
@@ -50,6 +52,10 @@ def dedup_last_write_wins(
     breaks existing-vs-batch (tests pin equivalence including null order
     keys). At 100 TB this is the difference between shuffling the table
     and shuffling its keys.
+
+    Rows with a NULL key are all kept (the reference's insert fallback,
+    etl_connector.py:185-187): each gets its own group through a per-row
+    tag grouped next to the key, so the plan reads its input once.
     """
     keys = [key] if isinstance(key, str) else list(key)
     ordering = [F.col(c) for c in order_by]
@@ -62,11 +68,10 @@ def dedup_last_write_wins(
     for k in keys:
         null_key = null_key | F.col(k).isNull()
 
-    keyed = df.filter(~null_key)
-    keyless = df.filter(null_key)  # insert fallback, etl_connector.py:185-187
     cols = df.columns
-    deduped = (
-        keyed.groupBy(*keys)
+    keyless_tag = F.when(null_key, F.monotonically_increasing_id()).alias(_KEYLESS)
+    return (
+        df.groupBy(*keys, keyless_tag)
         .agg(
             F.max_by(
                 F.struct(*[F.col(c) for c in cols]), F.struct(*ordering)
@@ -74,7 +79,6 @@ def dedup_last_write_wins(
         )
         .select(*[F.col(f"{_ROWNUM}.{c}").alias(c) for c in cols])
     )
-    return deduped.unionByName(keyless)
 
 
 def upsert_dataframe(
@@ -174,8 +178,11 @@ def upsert_parquet(
         target_schema = spark.read.parquet(path).schema
         batch, bad = sink_quarantine(batch, target_schema)
         bad = bad.persist()
-        if not bad.isEmpty():
-            bad.write.mode("append").json(dead_letter_dir)
+        try:
+            if not bad.isEmpty():
+                bad.write.mode("append").json(dead_letter_dir)
+        finally:
+            bad.unpersist()
 
     if not partition_by:
         existing = spark.read.parquet(path) if exists else None
@@ -284,10 +291,11 @@ def upsert_mongo(
     mongo-spark-connector (operationType=replace + idFieldList = the key,
     batched per partition — versus the reference's one round-trip per doc).
 
-    The connector jar is not in this image, so the call is gated: it
-    verifies the Spark package is loadable and raises NotImplementedError
-    with setup guidance otherwise. Semantics (last-write-wins dedup before
-    the write) are identical to upsert_parquet and fully tested there.
+    The connector jar is not in this image, so the call is gated: when
+    Spark finds no ``mongodb`` data source it raises NotImplementedError
+    with setup guidance; every other write error propagates. Semantics
+    (last-write-wins dedup before the write) are identical to
+    upsert_parquet and fully tested there.
     """
     deduped = dedup_last_write_wins(batch, key, order_by)
     try:
@@ -301,7 +309,13 @@ def upsert_mongo(
             .option("idFieldList", key)
             .save()
         )
-    except Exception as exc:  # pragma: no cover - connector absent in image
+    except Py4JJavaError as exc:
+        cause = exc.java_exception
+        if not (
+            cause.getClass().getName() == "org.apache.spark.SparkClassNotFoundException"
+            and cause.getCondition() == "DATA_SOURCE_NOT_FOUND"
+        ):
+            raise
         raise NotImplementedError(
             "mongo-spark-connector not available in this environment; add "
             "--packages org.mongodb.spark:mongo-spark-connector_2.13:10.x "
@@ -334,12 +348,7 @@ def apply_cdc(
     changes = changes.withColumn(
         op_col, F.upper(F.substring(F.col(op_col), 1, 1))
     )
-    tagged = changes.withColumn(_PRIORITY, F.lit(1))
     if existing is not None:
-        tagged = (
-            existing.withColumn(op_col, F.lit("I"))
-            .withColumn(_PRIORITY, F.lit(0))
-            .unionByName(tagged)
-        )
-    merged = dedup_last_write_wins(tagged, key, order_by, priority_col=_PRIORITY)
-    return merged.filter(F.col(op_col) != "D").drop(op_col, _PRIORITY)
+        existing = existing.withColumn(op_col, F.lit("I"))
+    merged = upsert_dataframe(existing, changes, key, order_by)
+    return merged.filter(F.col(op_col) != "D").drop(op_col)

@@ -9,7 +9,8 @@ Reference behavior reproduced (citations into /root/reference/etl_connector.py):
 - ``run_batch``         = ``main`` (:206-239): read -> transform -> validate ->
   keyed upsert, as a single lazy DataFrame chain. Batching (:229-232) is
   implicit in Spark's per-partition writers; the run counter (:210,226) is the
-  returned metrics dict.
+  returned metrics dict. It is the only such chain: the streaming connectors
+  (streaming.run_pulse_stream, run_pulse_stream_rest) run it per micro-batch.
 
 Semantic divergences (documented per SURVEY §2.1a / §7 hard parts):
 - The reference coalesces ``pulse_id`` with Python ``or`` (falsy: "" and 0
@@ -24,11 +25,14 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.config import PipelineConfig
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.upsert import upsert_parquet
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.upsert import (
+    dedup_last_write_wins,
+    upsert_parquet,
+)
 
 #: Output columns of the transformed document, exactly the dict shape built at
 #: etl_connector.py:137-164 (FIXTURES.md §1.2).
@@ -145,8 +149,6 @@ def run_batch(
     pays its counter per record in the same loop that writes,
     etl_connector.py:226 — observe is the distributed equivalent.)
     """
-    from pyspark.sql import Observation
-
     transformed = transform_pulses(raw_df, cfg, run_ts=run_ts)
     obs = Observation("run_accounting")
     observed = transformed.observe(
@@ -165,8 +167,6 @@ def run_batch(
     # = (partitionId << 33) + offset — source order for page-range REST
     # partitions and file splits). Collapsing before the upsert keeps the
     # position column out of the table schema.
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.upsert import dedup_last_write_wins
-
     pos = "_src_pos"
     valid = (
         observed.filter(valid_predicate())

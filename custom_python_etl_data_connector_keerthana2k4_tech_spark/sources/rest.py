@@ -7,11 +7,12 @@ Reference behaviors reproduced (citations into /root/reference/etl_connector.py)
   one record per item (:88-127) -> ``RestReader.read`` over page-range
   partitions.
 - R2 authenticated session: ``X-OTX-API-KEY`` + ``User-Agent`` headers on
-  every request (:49-50) -> headers built from reader options.
+  every request (:49-50) -> ``RestClient.request``, which every reader and
+  the sink (sources/rest_sink.py) call.
 - R3 retry/backoff/rate-limit: exponential backoff x2, honors ``429
   Retry-After``, retries 5xx and transport errors, raises on other 4xx, max
-  5 attempts (:53-85) -> ``safe_get`` runs *inside* the partition read and
-  composes with Spark task retries.
+  5 attempts (:53-85) -> ``retry_request``, one loop for GET and POST, runs
+  *inside* the partition read and composes with Spark task retries.
 - R4 response normalization: ``results`` -> ``pulses`` -> body; dict ->
   first list value; bail on non-list (:100-117) -> ``normalize_payload``.
 - R5 pagination termination: empty page, short page, ``max_pages`` cap
@@ -33,12 +34,14 @@ limit/page-paginated JSON API works (``endpoint`` option).
 from __future__ import annotations
 
 import json
+import sys
 import time
 import urllib.error
 import urllib.parse
 import urllib.request
 from collections.abc import Iterator, Sequence
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -54,9 +57,11 @@ class RestSourceError(RuntimeError):
     """Terminal REST failure (non-retryable status or retries exhausted)."""
 
 
-def safe_get(
+def retry_request(
+    method: str,
     url: str,
     params: dict | None = None,
+    body: bytes | None = None,
     headers: dict | None = None,
     timeout_s: float = 30.0,
     max_retries: int = 5,
@@ -64,7 +69,8 @@ def safe_get(
     backoff_multiplier: float = 2.0,
     sleep=time.sleep,
 ) -> bytes:
-    """GET with the reference's retry state machine (etl_connector.py:53-85).
+    """The reference's retry state machine (etl_connector.py:53-85), the one
+    loop behind every GET and POST of the REST source and sink.
 
     - transport errors: sleep backoff, retry (:59-63)
     - 200: return body (:65-66)
@@ -76,11 +82,12 @@ def safe_get(
     Backoff multiplies by ``backoff_multiplier`` after every failed attempt.
     stdlib-only (urllib) so executors need no extra deps.
     """
-    full_url = url + ("?" + urllib.parse.urlencode(params) if params else "")
+    if params:
+        url += "?" + urllib.parse.urlencode(params)
     backoff = backoff_initial_s
     last_err: Exception | None = None
     for _attempt in range(max_retries):
-        req = urllib.request.Request(full_url, headers=headers or {})
+        req = urllib.request.Request(url, data=body, headers=headers or {}, method=method)
         try:
             with urllib.request.urlopen(req, timeout=timeout_s) as resp:
                 return resp.read()
@@ -95,15 +102,69 @@ def safe_get(
             elif 500 <= e.code < 600:
                 sleep(backoff)
             else:
-                raise RestSourceError(f"GET {full_url} failed with HTTP {e.code}") from e
+                raise RestSourceError(f"{method} {url} failed with HTTP {e.code}") from e
             last_err = e
         except urllib.error.URLError as e:
             sleep(backoff)
             last_err = e
         backoff *= backoff_multiplier
-    raise RestSourceError(
-        f"GET {full_url} failed after {max_retries} attempts"
-    ) from last_err
+    raise RestSourceError(f"{method} {url} failed after {max_retries} attempts") from last_err
+
+
+def safe_get(
+    url: str,
+    params: dict | None = None,
+    headers: dict | None = None,
+    timeout_s: float = 30.0,
+    max_retries: int = 5,
+    backoff_initial_s: float = 1.0,
+    backoff_multiplier: float = 2.0,
+    sleep=time.sleep,
+) -> bytes:
+    """GET through :func:`retry_request`."""
+    return retry_request(
+        "GET", url, params, None, headers, timeout_s, max_retries,
+        backoff_initial_s, backoff_multiplier, sleep,
+    )
+
+
+class RestClient:
+    """Connection settings, parsed once from the data source options
+    (base_url, api_key, user_agent, timeout_s, max_retries,
+    backoff_initial_s, backoff_multiplier, min_interval_s), and the one
+    method every reader and the sink send requests through. Plain
+    attributes only, so it pickles to executors inside a reader/writer."""
+
+    def __init__(self, options: dict):
+        self.base_url = options.get("base_url", "").rstrip("/")
+        if not self.base_url:
+            raise RestSourceError("base_url option is required")
+        self.api_key = options.get("api_key", "")
+        self.user_agent = options.get("user_agent", "spark-rest-connector/1.0")
+        self.timeout_s = float(options.get("timeout_s", 30.0))
+        self.max_retries = int(options.get("max_retries", 5))
+        self.backoff_initial_s = float(options.get("backoff_initial_s", 1.0))
+        self.backoff_multiplier = float(options.get("backoff_multiplier", 2.0))
+        self.min_interval_s = float(options.get("min_interval_s", 0.0))
+
+    def request(self, path: str, params: dict | None = None, body: bytes | None = None,
+                headers: dict | None = None, max_retries: int | None = None) -> bytes:
+        """GET ``base_url + path`` (POST when ``body`` is given) with the R2
+        auth headers (etl_connector.py:49-50) through the R3 loop."""
+        hdrs = {"User-Agent": self.user_agent, **(headers or {})}
+        if self.api_key:
+            hdrs["X-OTX-API-KEY"] = self.api_key
+        return retry_request(
+            "GET" if body is None else "POST", self.base_url + path, params, body,
+            hdrs, self.timeout_s,
+            self.max_retries if max_retries is None else max_retries,
+            self.backoff_initial_s, self.backoff_multiplier,
+        )
+
+    def pause(self) -> None:
+        """Politeness gap between consecutive requests (``min_interval_s``)."""
+        if self.min_interval_s > 0:
+            time.sleep(self.min_interval_s)
 
 
 def normalize_payload(body: bytes | str | dict) -> list:
@@ -142,21 +203,14 @@ REST_SCHEMA = T.StructType(
 
 
 class RestReader(DataSourceReader):
+    _index = "page"  # the offset field that numbers a page of the chain
+
     def __init__(self, options: dict):
-        self.base_url = options.get("base_url", "").rstrip("/")
-        if not self.base_url:
-            raise RestSourceError("base_url option is required")
+        self.client = RestClient(options)
         self.endpoint = options.get("endpoint", "/pulses/subscribed")
-        self.api_key = options.get("api_key", "")
-        self.user_agent = options.get("user_agent", "spark-rest-connector/1.0")
         self.per_page = int(options.get("per_page", 50))
         self.max_pages = int(options.get("max_pages", 100))
         self.pages_per_partition = int(options.get("pages_per_partition", 10))
-        self.timeout_s = float(options.get("timeout_s", 30.0))
-        self.max_retries = int(options.get("max_retries", 5))
-        self.backoff_initial_s = float(options.get("backoff_initial_s", 1.0))
-        self.backoff_multiplier = float(options.get("backoff_multiplier", 2.0))
-        self.min_interval_s = float(options.get("min_interval_s", 0.0))
 
     def partitions(self) -> Sequence[InputPartition]:
         """Page ranges (R5 planning): [1..max_pages] in coarse chunks."""
@@ -166,30 +220,104 @@ class RestReader(DataSourceReader):
             for start in range(1, self.max_pages + 1, step)
         ]
 
+    def _first(self) -> dict:
+        return {"page": 1, "pos": 0}
+
+    def _page(self, off: dict) -> tuple[list, dict | None]:
+        """The items of the page ``off`` points at, and the next page's
+        offset — None when this empty or short page ends the feed (R5,
+        etl_connector.py:103-105,123-126)."""
+        page = int(off["page"])
+        body = self.client.request(
+            self.endpoint, params={"limit": self.per_page, "page": page}
+        )
+        items = normalize_payload(body)
+        full = len(items) >= self.per_page
+        return items, ({"page": page + 1, "pos": 0} if full else None)
+
+    def _walk(self, start: dict, n_pages: int, stop_at: dict | None = None):
+        """Walk the page chain from offset ``start`` for at most ``n_pages``
+        pages; return the ``(page, position, item)`` rows and the end offset.
+        An offset ``{_index: i, "pos": k, ...}`` means the items before
+        ``k`` of page ``i`` are emitted. The chain's tail keeps the offset
+        ON its page at its current length, so items appended later are read
+        next time without re-emitting; ``stop_at`` replays [start, stop_at)
+        exactly."""
+        off, rows = dict(start), []
+        for _ in range(n_pages):
+            items, nxt = self._page(off)
+            i = int(off[self._index])
+            last = stop_at is not None and i == int(stop_at[self._index])
+            hi = min(len(items), int(stop_at["pos"])) if last else len(items)
+            rows += [
+                (i, p, json.dumps(items[p], sort_keys=True))
+                for p in range(int(off["pos"]), hi)
+            ]
+            if last:
+                return rows, dict(stop_at)
+            if nxt is None:
+                return rows, {**off, "pos": len(items)}
+            off = nxt
+            self.client.pause()
+        return rows, off
+
     def read(self, partition: _PageRange) -> Iterator[tuple]:
-        """Fetch this partition's page range; stop early on empty/short page
-        (R5, etl_connector.py:103-105,123-126). Runs on an executor."""
-        headers = {"User-Agent": self.user_agent}
-        if self.api_key:
-            headers["X-OTX-API-KEY"] = self.api_key
-        url = self.base_url + self.endpoint
-        for page in range(partition.start_page, partition.end_page + 1):
-            body = safe_get(
-                url,
-                params={"limit": self.per_page, "page": page},
-                headers=headers,
-                timeout_s=self.timeout_s,
-                max_retries=self.max_retries,
-                backoff_initial_s=self.backoff_initial_s,
-                backoff_multiplier=self.backoff_multiplier,
-            )
-            items = normalize_payload(body)
-            for pos, item in enumerate(items):
-                yield (page, pos, json.dumps(item, sort_keys=True))
-            if len(items) < self.per_page:  # empty or short page -> done
-                break
-            if self.min_interval_s > 0:
-                time.sleep(self.min_interval_s)
+        """Fetch this partition's page range. Runs on an executor."""
+        start = {"page": partition.start_page, "pos": 0}
+        rows, _ = self._walk(start, partition.end_page - partition.start_page + 1)
+        return iter(rows)
+
+
+class _CursorChain(InputPartition):
+    """The whole cursor chain — one partition by protocol (below)."""
+
+    def __init__(self):
+        super().__init__(0)
+
+
+class CursorRestReader(RestReader):
+    """Cursor/next-token pagination (``pagination=cursor``): each response
+    carries the opaque token for the NEXT page (``next_field`` option,
+    default ``next``), so the chain is sequential BY PROTOCOL — no page
+    number exists to range-partition on. The honest Spark shape is one
+    walker per feed: ``partitions()`` returns a single partition (matching
+    the reference's polite single-client loop, etl_connector.py:88-127),
+    parallelism comes from unioning many feeds/endpoints, and everything
+    downstream of the scan is distributed as usual. ``max_pages`` caps a
+    runaway chain; termination is ``next`` falsy (cursor APIs signal the
+    end explicitly, not via short pages).
+
+    Output rows are ``(page, position, item)`` where ``page`` is the
+    1-based index along the chain."""
+
+    _index = "seq"
+
+    def __init__(self, options: dict):
+        super().__init__(options)
+        self.next_field = options.get("next_field", "next")
+        self.cursor_param = options.get("cursor_param", "cursor")
+        self.start_cursor = options.get("start_cursor", "")
+
+    def partitions(self) -> Sequence[InputPartition]:
+        return [_CursorChain()]
+
+    def _first(self) -> dict:
+        return {"cursor": self.start_cursor, "seq": 1, "pos": 0}
+
+    def _page(self, off: dict) -> tuple[list, dict | None]:
+        params = {"limit": self.per_page}
+        if off["cursor"]:
+            params[self.cursor_param] = off["cursor"]
+        data = json.loads(self.client.request(self.endpoint, params=params))
+        nxt = data.get(self.next_field) if isinstance(data, dict) else None
+        items = normalize_payload(data)
+        if not (isinstance(nxt, str) and nxt):
+            return items, None
+        return items, {"cursor": nxt, "seq": int(off["seq"]) + 1, "pos": 0}
+
+    def read(self, partition: _CursorChain) -> Iterator[tuple]:
+        rows, _ = self._walk(self._first(), self.max_pages)
+        return iter(rows)
 
 
 class RestSimpleStreamReader(SimpleDataSourceStreamReader):
@@ -210,46 +338,17 @@ class RestSimpleStreamReader(SimpleDataSourceStreamReader):
     ``pages_per_batch`` bounds each micro-batch (R5's max_pages analog).
     """
 
+    _reader = RestReader
+
     def __init__(self, options: dict):
-        self._r = RestReader(options)  # reuse option parsing + auth headers
+        self._r = self._reader(options)  # option parsing + page chain walk
         self.pages_per_batch = int(options.get("pages_per_batch", 10))
 
     def initialOffset(self) -> dict:
-        return {"page": 1, "pos": 0}
-
-    def _fetch_page(self, page: int) -> list:
-        headers = {"User-Agent": self._r.user_agent}
-        if self._r.api_key:
-            headers["X-OTX-API-KEY"] = self._r.api_key
-        body = safe_get(
-            self._r.base_url + self._r.endpoint,
-            params={"limit": self._r.per_page, "page": page},
-            headers=headers,
-            timeout_s=self._r.timeout_s,
-            max_retries=self._r.max_retries,
-            backoff_initial_s=self._r.backoff_initial_s,
-            backoff_multiplier=self._r.backoff_multiplier,
-        )
-        return normalize_payload(body)
+        return self._r._first()
 
     def _poll(self, start: dict, stop_at: dict | None = None):
-        page, pos = int(start["page"]), int(start["pos"])
-        rows: list[tuple] = []
-        for _ in range(self.pages_per_batch):
-            items = self._fetch_page(page)
-            hi = len(items)
-            if stop_at is not None and page == int(stop_at["page"]):
-                hi = min(hi, int(stop_at["pos"]))
-            for p in range(pos, hi):
-                rows.append((page, p, json.dumps(items[p], sort_keys=True)))
-            if stop_at is not None and page == int(stop_at["page"]):
-                return rows, dict(stop_at)
-            if len(items) < self._r.per_page:  # short/empty: stay on this page
-                return rows, {"page": page, "pos": len(items)}
-            page, pos = page + 1, 0
-            if self._r.min_interval_s > 0:
-                time.sleep(self._r.min_interval_s)
-        return rows, {"page": page, "pos": pos}
+        return self._r._walk(start, self.pages_per_batch, stop_at)
 
     def read(self, start: dict):
         rows, end = self._poll(start)
@@ -260,72 +359,7 @@ class RestSimpleStreamReader(SimpleDataSourceStreamReader):
         return iter(rows)
 
 
-class _CursorChain(InputPartition):
-    """The whole cursor chain — one partition by protocol (below)."""
-
-    def __init__(self):
-        super().__init__(0)
-
-
-class CursorRestReader(DataSourceReader):
-    """Cursor/next-token pagination (``pagination=cursor``): each response
-    carries the opaque token for the NEXT page (``next_field`` option,
-    default ``next``), so the chain is sequential BY PROTOCOL — no page
-    number exists to range-partition on. The honest Spark shape is one
-    walker per feed: ``partitions()`` returns a single partition (matching
-    the reference's polite single-client loop, etl_connector.py:88-127),
-    parallelism comes from unioning many feeds/endpoints, and everything
-    downstream of the scan is distributed as usual. ``max_pages`` caps a
-    runaway chain; termination is ``next`` falsy (cursor APIs signal the
-    end explicitly, not via short pages).
-
-    Output rows are ``(page, position, item)`` where ``page`` is the
-    1-based index along the chain."""
-
-    def __init__(self, options: dict):
-        self._r = RestReader(options)  # shared option parsing + auth
-        self.next_field = options.get("next_field", "next")
-        self.cursor_param = options.get("cursor_param", "cursor")
-        self.start_cursor = options.get("start_cursor", "")
-
-    def partitions(self) -> Sequence[InputPartition]:
-        return [_CursorChain()]
-
-    def _fetch(self, cursor: str) -> tuple[list, str]:
-        headers = {"User-Agent": self._r.user_agent}
-        if self._r.api_key:
-            headers["X-OTX-API-KEY"] = self._r.api_key
-        params = {"limit": self._r.per_page}
-        if cursor:
-            params[self.cursor_param] = cursor
-        body = safe_get(
-            self._r.base_url + self._r.endpoint,
-            params=params,
-            headers=headers,
-            timeout_s=self._r.timeout_s,
-            max_retries=self._r.max_retries,
-            backoff_initial_s=self._r.backoff_initial_s,
-            backoff_multiplier=self._r.backoff_multiplier,
-        )
-        data = json.loads(body)
-        items = normalize_payload(data)
-        nxt = data.get(self.next_field) if isinstance(data, dict) else None
-        return items, (nxt if isinstance(nxt, str) and nxt else "")
-
-    def read(self, partition: _CursorChain) -> Iterator[tuple]:
-        cursor = self.start_cursor
-        for seq in range(1, self._r.max_pages + 1):
-            items, nxt = self._fetch(cursor)
-            for pos, item in enumerate(items):
-                yield (seq, pos, json.dumps(item, sort_keys=True))
-            if not nxt:
-                break
-            cursor = nxt
-            if self._r.min_interval_s > 0:
-                time.sleep(self._r.min_interval_s)
-
-
-class CursorRestStreamReader(SimpleDataSourceStreamReader):
+class CursorRestStreamReader(RestSimpleStreamReader):
     """Streaming mode of cursor pagination. Offset = ``{"cursor": c,
     "seq": s, "pos": k}``: the cursor that fetches chain page ``s``, of
     which the first ``k`` items are already emitted. A page with a next
@@ -336,39 +370,7 @@ class CursorRestStreamReader(SimpleDataSourceStreamReader):
     ``readBetweenOffsets`` replaying [start, end) for checkpoint
     recovery (valid while the feed keeps serving the stored tokens)."""
 
-    def __init__(self, options: dict):
-        self._c = CursorRestReader(options)
-        self.pages_per_batch = int(options.get("pages_per_batch", 10))
-
-    def initialOffset(self) -> dict:
-        return {"cursor": self._c.start_cursor, "seq": 1, "pos": 0}
-
-    def _poll(self, start: dict, stop_at: dict | None = None):
-        cursor, seq, pos = start["cursor"], int(start["seq"]), int(start["pos"])
-        rows: list[tuple] = []
-        for _ in range(self.pages_per_batch):
-            items, nxt = self._c._fetch(cursor)
-            hi = len(items)
-            if stop_at is not None and seq == int(stop_at["seq"]):
-                hi = min(hi, int(stop_at["pos"]))
-            for p in range(pos, hi):
-                rows.append((seq, p, json.dumps(items[p], sort_keys=True)))
-            if stop_at is not None and seq == int(stop_at["seq"]):
-                return rows, dict(stop_at)
-            if not nxt:  # chain tail: stay here, pick up appends next batch
-                return rows, {"cursor": cursor, "seq": seq, "pos": len(items)}
-            cursor, seq, pos = nxt, seq + 1, 0
-            if self._c._r.min_interval_s > 0:
-                time.sleep(self._c._r.min_interval_s)
-        return rows, {"cursor": cursor, "seq": seq, "pos": pos}
-
-    def read(self, start: dict):
-        rows, end = self._poll(start)
-        return iter(rows), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        rows, _ = self._poll(start, stop_at=end)
-        return iter(rows)
+    _reader = CursorRestReader
 
 
 class RestDataSource(DataSource):
@@ -401,11 +403,33 @@ class RestDataSource(DataSource):
 
 
 def register_rest_source(spark: SparkSession) -> None:
-    """Register the format (ships the package to Python workers first)."""
+    """Register the format (ships the package to Python workers first).
+
+    The module also pickles by value: the streaming source runner does not
+    see ``ship_package``'s zip, and this module's top-level imports are
+    stdlib and pyspark only, so its by-value pickle is self-contained."""
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import ship_package
 
     ship_package(spark)
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     spark.dataSource.register(RestDataSource)
+
+
+def project_raw(items: DataFrame, schema: T.StructType) -> DataFrame:
+    """Project the source's raw JSON ``item`` column into a ``raw`` struct
+    column — the input shape of pipeline.transform_pulses, for batch and
+    streaming frames alike. Items that are not a JSON object (unparseable
+    text, or a scalar/array such as ``"not-a-pulse"``, ``7`` or ``[1, 2]``)
+    become NULL ``raw`` and then fail R7 validation, reproducing the
+    reference's log-and-skip semantics. ``from_json`` alone would turn a
+    non-object into a struct of NULLs that lands as a keyless row, so
+    ``raw`` is gated on ``json_object_keys``, which is NULL for anything
+    but an object."""
+    return items.select(
+        F.when(
+            F.json_object_keys("item").isNotNull(), F.from_json("item", schema)
+        ).alias("raw")
+    )
 
 
 def pulses_df(
@@ -415,22 +439,9 @@ def pulses_df(
     api_key: str = "",
     **options,
 ) -> DataFrame:
-    """Read the REST source and project the raw JSON into a ``raw`` struct
-    column — the input shape of pipeline.transform_pulses. Items that are
-    not a JSON object (unparseable text, or a scalar/array such as
-    ``"not-a-pulse"``, ``7`` or ``[1, 2]``) become NULL ``raw`` and then
-    fail R7 validation, reproducing the reference's log-and-skip
-    semantics. ``from_json`` alone would turn a non-object into a struct
-    of NULLs that lands as a keyless row, so ``raw`` is gated on
-    ``json_object_keys``, which is NULL for anything but an object."""
+    """Read the REST source as a ``raw`` struct column (:func:`project_raw`)."""
     register_rest_source(spark)
-    reader = spark.read.format("paginated_rest").option("base_url", base_url)
-    if api_key:
-        reader = reader.option("api_key", api_key)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load().select(
-        F.when(
-            F.json_object_keys("item").isNotNull(), F.from_json("item", schema)
-        ).alias("raw")
+    reader = spark.read.format("paginated_rest").options(
+        base_url=base_url, api_key=api_key, **options
     )
+    return project_raw(reader.load(), schema)

@@ -14,9 +14,10 @@ Reference behaviors reproduced (citations into /root/reference/etl_connector.py)
   20, the reference's ``main(batch_size=20)`` :206) as one JSON-lines POST.
 - R10 connectivity probe: the writer pings ``{base_url}/ping`` once on the
   driver before launching tasks; abort-fast on failure (:212-217).
-- R3 retry machine: every POST goes through the same
-  backoff/429/5xx/transport retry state machine as the reader (safe_post
-  mirrors safe_get, :53-85).
+- R3 retry machine: every POST goes through the reader's
+  backoff/429/5xx/transport retry loop (:53-85): ``safe_post`` and
+  ``safe_get`` share ``sources.rest.retry_request``, and the writer sends
+  through the same ``RestClient`` (option parsing + auth headers).
 
 Scale design: one POST per ``batch_size`` records per partition (the
 reference pays one round-trip PER DOCUMENT, :181-187); ``min_interval_s``
@@ -28,16 +29,21 @@ as the parquet/Mongo upsert sinks (SURVEY §7 hard part e).
 
 from __future__ import annotations
 
+import hashlib
 import json
+import os
 import time
-import urllib.error
-import urllib.request
+import uuid
 from collections.abc import Iterator
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
 
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.sources.rest import RestSourceError
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.sources.rest import (
+    RestClient,
+    RestSourceError,
+    retry_request,
+)
 
 
 class UpsertCommit(WriterCommitMessage):
@@ -56,65 +62,24 @@ def safe_post(
     backoff_multiplier: float = 2.0,
     sleep=time.sleep,
 ) -> bytes:
-    """POST with the R3 retry state machine (etl_connector.py:53-85):
-    retry transport/429 (honoring Retry-After)/5xx, raise other 4xx,
-    exponential backoff ×2, max 5 attempts."""
-    backoff = backoff_initial_s
-    last_err: Exception | None = None
-    for _attempt in range(max_retries):
-        req = urllib.request.Request(
-            url, data=body, headers=headers or {}, method="POST"
-        )
-        try:
-            with urllib.request.urlopen(req, timeout=timeout_s) as resp:
-                return resp.read()
-        except urllib.error.HTTPError as e:
-            if e.code == 429:
-                retry_after = e.headers.get("Retry-After")
-                try:
-                    wait = float(retry_after) if retry_after is not None else backoff
-                except ValueError:
-                    wait = backoff
-                sleep(wait)
-            elif 500 <= e.code < 600:
-                sleep(backoff)
-            else:
-                raise RestSourceError(f"POST {url} failed with HTTP {e.code}") from e
-            last_err = e
-        except urllib.error.URLError as e:
-            sleep(backoff)
-            last_err = e
-        backoff *= backoff_multiplier
-    raise RestSourceError(f"POST {url} failed after {max_retries} attempts") from last_err
+    """POST through the shared R3 loop (sources.rest.retry_request)."""
+    return retry_request(
+        "POST", url, None, body, headers, timeout_s, max_retries,
+        backoff_initial_s, backoff_multiplier, sleep,
+    )
 
 
 class RestUpsertWriter(DataSourceWriter):
     def __init__(self, options: dict, schema: T.StructType):
-        self.base_url = options.get("base_url", "").rstrip("/")
-        if not self.base_url:
-            raise RestSourceError("base_url option is required")
+        self.client = RestClient(options)
         self.endpoint = options.get("endpoint", "/upsert")
         self.key_col = options.get("key", "pulse_id")
         if self.key_col not in schema.names:
             raise RestSourceError(
                 f"key column {self.key_col!r} not in schema {schema.names}"
             )
-        self.api_key = options.get("api_key", "")
-        self.user_agent = options.get("user_agent", "spark-rest-connector/1.0")
         self.batch_size = int(options.get("batch_size", 20))
-        self.timeout_s = float(options.get("timeout_s", 30.0))
-        self.max_retries = int(options.get("max_retries", 5))
-        self.backoff_initial_s = float(options.get("backoff_initial_s", 1.0))
-        self.backoff_multiplier = float(options.get("backoff_multiplier", 2.0))
-        self.min_interval_s = float(options.get("min_interval_s", 0.0))
         self.dead_letter_dir = options.get("dead_letter_dir", "")
-        self.fields = list(schema.names)
-
-    def _headers(self) -> dict:
-        h = {"User-Agent": self.user_agent, "Content-Type": "application/x-ndjson"}
-        if self.api_key:
-            h["X-OTX-API-KEY"] = self.api_key
-        return h
 
     def _flush(self, buf: list[dict]) -> int:
         """POST one JSON-lines batch; returns failures (per-record capture,
@@ -122,23 +87,20 @@ class RestUpsertWriter(DataSourceWriter):
         if not buf:
             return 0
         body = "\n".join(json.dumps(d, sort_keys=True, default=str) for d in buf)
-        # Deterministic Idempotency-Key per batch (content hash): safe_post
+        # Deterministic Idempotency-Key per batch (content hash): the R3 loop
         # retries after transport errors/5xx that the server may already have
         # applied; a server that dedups on the key turns the sink's
         # at-least-once POSTs into effectively-once — every retry of THIS
         # batch carries the same key, different batches never collide.
-        import hashlib
-
         idem_key = hashlib.md5(body.encode()).hexdigest()
         try:
-            safe_post(
-                self.base_url + self.endpoint,
-                body.encode(),
-                headers={**self._headers(), "Idempotency-Key": idem_key},
-                timeout_s=self.timeout_s,
-                max_retries=self.max_retries,
-                backoff_initial_s=self.backoff_initial_s,
-                backoff_multiplier=self.backoff_multiplier,
+            self.client.request(
+                self.endpoint,
+                body=body.encode(),
+                headers={
+                    "Content-Type": "application/x-ndjson",
+                    "Idempotency-Key": idem_key,
+                },
             )
             return 0
         except RestSourceError as e:
@@ -154,9 +116,6 @@ class RestUpsertWriter(DataSourceWriter):
         raises), so silent loss is impossible either way."""
         if not self.dead_letter_dir:
             return
-        import os
-        import uuid
-
         os.makedirs(self.dead_letter_dir, exist_ok=True)
         fn = os.path.join(self.dead_letter_dir, f"dead-{uuid.uuid4().hex}.jsonl")
         with open(fn, "w") as f:
@@ -169,22 +128,18 @@ class RestUpsertWriter(DataSourceWriter):
     def write(self, iterator: Iterator) -> UpsertCommit:
         """Executor-side: buffer ``batch_size`` docs, flush as one POST
         (R9, :206,229-237 — vs the reference's one round-trip per doc)."""
-        n_posted = n_failed = 0
+        n_rows = n_failed = 0
         buf: list[dict] = []
         for row in iterator:
+            n_rows += 1
             d = row.asDict(recursive=True)
             buf.append({"key": d.get(self.key_col), "doc": d})
             if len(buf) >= self.batch_size:
-                failed = self._flush(buf)
-                n_failed += failed
-                n_posted += len(buf) - failed
+                n_failed += self._flush(buf)
                 buf = []
-                if self.min_interval_s > 0:
-                    time.sleep(self.min_interval_s)
-        failed = self._flush(buf)
-        n_failed += failed
-        n_posted += len(buf) - failed
-        return UpsertCommit(n_posted, n_failed)
+                self.client.pause()
+        n_failed += self._flush(buf)
+        return UpsertCommit(n_rows - n_failed, n_failed)
 
     def commit(self, messages) -> None:
         total = sum(m.n_posted for m in messages if m)
@@ -213,19 +168,15 @@ class RestUpsertDataSource(DataSource):
         return "rest_upsert"
 
     def writer(self, schema: T.StructType, overwrite: bool) -> RestUpsertWriter:
+        writer = RestUpsertWriter(dict(self.options), schema)
         if self.options.get("skip_ping", "false").lower() != "true":
             # R10 pre-flight (etl_connector.py:212-217): abort before any
             # task launches if the sink is unreachable.
             try:
-                safe_post(
-                    self.options.get("base_url", "").rstrip("/") + "/ping",
-                    b"",
-                    timeout_s=float(self.options.get("timeout_s", 30.0)),
-                    max_retries=1,
-                )
+                writer.client.request("/ping", body=b"", max_retries=1)
             except RestSourceError as e:
                 raise RestSourceError(f"sink pre-flight ping failed: {e}") from e
-        return RestUpsertWriter(dict(self.options), schema)
+        return writer
 
 
 def register_rest_sink(spark) -> None:

@@ -2,7 +2,6 @@
 
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.streaming.ops import (
     enrich_scd2,
-    foreach_batch_upsert,
     run_pulse_stream,
     run_pulse_stream_rest,
     session_counts,
@@ -18,7 +17,6 @@ from custom_python_etl_data_connector_keerthana2k4_tech_spark.streaming.ops impo
 
 __all__ = [
     "enrich_scd2",
-    "foreach_batch_upsert",
     "run_pulse_stream",
     "run_pulse_stream_rest",
     "session_counts",

@@ -10,9 +10,9 @@ with bounded memory (generator + batch buffer, etl_connector.py:88-127,
 - watermarks for bounded state + late-data drop (``withWatermark``),
 - streaming dedup (watermarked ``dropDuplicates`` — R8's dedup-by-key as a
   stream),
-- ``foreachBatch`` + the keyed idempotent upsert sink (R8/R9: micro-batched
-  writes whose re-delivery converges — exactly-once-by-key into a
-  non-transactional store, SURVEY §7 hard part e).
+- ``foreachBatch`` running ``pipeline.run_batch`` per micro-batch (R8/R9:
+  micro-batched keyed upserts whose re-delivery converges — exactly-once-by-key
+  into a non-transactional store, SURVEY §7 hard part e).
 
 Every transformation here is identical for batch and streaming frames
 (tests assert stream-vs-batch parity on the events fixture replay), which
@@ -31,14 +31,19 @@ from collections.abc import Sequence
 
 import pandas as pd
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.config import PipelineConfig
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.upsert import upsert_parquet
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.pipeline import transform_pulses, validate
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.pipeline import run_batch
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.sources.rest import (
+    project_raw,
+    register_rest_source,
+)
 
 
 def windowed_counts(
@@ -108,28 +113,10 @@ def stream_dedup(
     return events.dropDuplicates(list(key_cols))
 
 
-def foreach_batch_upsert(
-    stream_df: DataFrame,
-    target_path: str,
-    key: str | list[str],
-    order_by: list[str],
-    checkpoint: str,
-) -> DataStreamWriter:
-    """Micro-batched keyed idempotent upsert sink (R8+R9 as a stream).
-
-    Each micro-batch merges into the target with last-write-wins on ``key``,
-    so replayed batches (failure recovery) converge instead of duplicating —
-    idempotent-by-key is the exactly-once mechanism over a non-transactional
-    store, exactly as in the reference (etl_connector.py:181).
-    """
-
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        upsert_parquet(
-            batch_df.sparkSession, batch_df, target_path, key=key, order_by=order_by
-        )
-
+def _foreach_batch(stream_df: DataFrame, sink, checkpoint: str) -> DataStreamWriter:
+    """``sink(batch_df, batch_id)`` per micro-batch, checkpointed."""
     return (
-        stream_df.writeStream.foreachBatch(_sink)
+        stream_df.writeStream.foreachBatch(sink)
         .outputMode("update")
         .option("checkpointLocation", checkpoint)
     )
@@ -182,11 +169,7 @@ def foreach_batch_versioned_upsert(
                 if attempt == max_commit_retries:
                     raise
 
-    return (
-        stream_df.writeStream.foreachBatch(_sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
+    return _foreach_batch(stream_df, _sink, checkpoint)
 
 
 def foreach_batch_near_dedup(
@@ -221,11 +204,7 @@ def foreach_batch_near_dedup(
         corpus_path, sig_path, id_col=id_col, text_col=text_col,
         threshold=threshold,
     )
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
+    return _foreach_batch(stream_df, sink, checkpoint)
 
 
 def near_dedup_sink(
@@ -246,13 +225,14 @@ def near_dedup_sink(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         try:
-            store = spark.read.parquet(sig_path).filter(
-                F.col("__batch") != batch_id
-            ).drop("__batch")
-            if store.isEmpty():
-                store = None
-        except Exception:  # first batch: no store yet
+            store = spark.read.parquet(sig_path)
+        except AnalysisException as e:  # first batch: no store yet
+            if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+                raise
             store = None
+        else:
+            store = store.filter(F.col("__batch") != batch_id).drop("__batch")
+            store = None if store.isEmpty() else store
         kept, _ = incremental_near_dedup_sigs(
             batch_df, store, id_col, text_col, threshold=threshold
         )
@@ -277,6 +257,23 @@ def near_dedup_sink(
     return _sink
 
 
+def _run_batch_per_micro_batch(
+    raw: DataFrame, cfg: PipelineConfig, target_path: str, checkpoint: str
+) -> None:
+    """One availableNow pass of ``raw`` (a ``raw`` struct column per pulse)
+    with ``pipeline.run_batch`` per micro-batch: the batch chain is the only
+    transform -> validate -> keyed-upsert chain. Each micro-batch is one
+    ingestion, so a later micro-batch wins; within one, the newest
+    ``pulse_modified`` wins, then the later source position. Replayed
+    micro-batches converge (keyed idempotence, etl_connector.py:181)."""
+
+    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
+        run_batch(batch_df.sparkSession, batch_df, cfg, target_path)
+
+    q = _foreach_batch(raw, _sink, checkpoint).trigger(availableNow=True).start()
+    q.awaitTermination()
+
+
 def run_pulse_stream(
     spark: SparkSession,
     source_dir: str,
@@ -286,28 +283,11 @@ def run_pulse_stream(
     checkpoint: str,
 ) -> None:
     """Continuous connector mode (SURVEY §2.3 'streaming sink' row): JSON
-    pulse files land in ``source_dir``; each micro-batch runs the same
-    transform -> validate -> keyed-upsert chain as the batch pipeline
-    (pipeline.run_batch). One availableNow pass (drain-then-stop); run
+    pulse files land in ``source_dir``; each micro-batch runs
+    ``pipeline.run_batch``. One availableNow pass (drain-then-stop); run
     again after more files arrive and the keyed table converges."""
-    raw = (
-        spark.readStream.schema(schema)
-        .json(source_dir)
-        .select(F.struct("*").alias("raw"))
-    )
-    transformed = validate(transform_pulses(raw, cfg))
-    q = (
-        foreach_batch_upsert(
-            transformed,
-            target_path,
-            key="pulse_id",
-            order_by=["pulse_modified"],
-            checkpoint=checkpoint,
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    raw = spark.readStream.schema(schema).json(source_dir)
+    _run_batch_per_micro_batch(raw, cfg, target_path, checkpoint)
 
 
 def run_pulse_stream_rest(
@@ -320,33 +300,21 @@ def run_pulse_stream_rest(
     **source_options,
 ) -> None:
     """Continuous connector mode OVER THE WIRE: the streaming REST source
-    (sources/rest.py RestSimpleStreamReader — (page, pos) offsets, replayable)
-    feeds the same transform -> validate -> keyed-upsert chain as the batch
-    pipeline. This is the reference's whole program (etl_connector.py:206-239)
-    as a restartable stream: the offset checkpoint replaces the implicit
-    "start from page 1 each run", and the idempotent upsert makes any
-    replayed micro-batch converge. One availableNow pass drains what the API
-    currently serves; re-running resumes from the checkpointed page cursor."""
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.sources.rest import register_rest_source
-
+    (sources/rest.py RestSimpleStreamReader — (page, pos) offsets, replayable),
+    projected by the same ``sources.rest.project_raw`` as the batch read,
+    runs ``pipeline.run_batch`` per micro-batch. This is the reference's
+    whole program (etl_connector.py:206-239) as a restartable stream: the
+    offset checkpoint replaces the implicit "start from page 1 each run", and
+    the idempotent upsert makes any replayed micro-batch converge. One
+    availableNow pass drains what the API currently serves; re-running
+    resumes from the checkpointed page cursor."""
     register_rest_source(spark)
-    reader = spark.readStream.format("paginated_rest").option("base_url", base_url)
-    for k, v in source_options.items():
-        reader = reader.option(k, str(v))
-    raw = reader.load().select(F.from_json("item", schema).alias("raw"))
-    transformed = validate(transform_pulses(raw, cfg))
-    q = (
-        foreach_batch_upsert(
-            transformed,
-            target_path,
-            key="pulse_id",
-            order_by=["pulse_modified"],
-            checkpoint=checkpoint,
-        )
-        .trigger(availableNow=True)
-        .start()
+    items = (
+        spark.readStream.format("paginated_rest")
+        .options(base_url=base_url, **source_options)
+        .load()
     )
-    q.awaitTermination()
+    _run_batch_per_micro_batch(project_raw(items, schema), cfg, target_path, checkpoint)
 
 
 def stateful_running_totals(
@@ -365,8 +333,6 @@ def stateful_running_totals(
     partitioned by the grouping key — the same shuffle contract as a
     groupBy — so it scales horizontally with shuffle partitions.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     def update(key, pdfs, state: GroupState):
         n, total = state.get if state.exists else (0, 0.0)
         for pdf in pdfs:
@@ -455,8 +421,6 @@ def streaming_ewma(
     trick keeps the hot loop vectorized: prepend the carried state to the
     batch, run pandas' C ewm recursion, drop the seed row.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     def update(key, pdfs, state: GroupState):
         pdf = pd.concat(list(pdfs), ignore_index=True)
         pdf = pdf.sort_values([ts_col, "event_id"])
@@ -506,8 +470,6 @@ def streaming_cusum(
     here is a reflected cumulative sum, kept in plain python per
     batch (rows per key per micro-batch are small; the numpy
     alternative needs no less state handoff)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     def update(key, pdfs, state: GroupState):
         pdf = pd.concat(list(pdfs), ignore_index=True)
         pdf = pdf.sort_values([ts_col, "event_id"])
@@ -598,8 +560,6 @@ def streaming_heavy_hitters(
     latest batch's rows are the live sketch. State per bucket is two
     parallel arrays (items, counts) — bounded forever.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     bucket = F.pmod(
         F.crc32(F.encode(F.col(item_col), "UTF-8")), F.lit(n_buckets)
     ).cast("int")
@@ -673,8 +633,6 @@ def sessionize_with_timeout(
     across records (/root/reference/etl_connector.py:219-226); sessions
     are north-star extension surface (SURVEY §2.3).
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     gap_us = gap_minutes * 60 * 1_000_000
 
     def update(key, pdfs, state: GroupState):
@@ -709,9 +667,7 @@ def sessionize_with_timeout(
             if n > 0:
                 state.update((s, e, n, tot))
                 state.setTimeoutTimestamp((e + gap_us) // 1000)
-        import pandas as _pd
-
-        yield _pd.DataFrame(
+        yield pd.DataFrame(
             out,
             columns=[key_col, "start_us", "end_us", "n_events", "total_value"],
         )

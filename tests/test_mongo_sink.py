@@ -25,6 +25,10 @@ from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMes
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.upsert import upsert_mongo
 
 
+#: connection.uri on which the stub writer fails every partition
+_FAILING_URI = "stub://fail"
+
+
 class _Commit(WriterCommitMessage):
     pass
 
@@ -37,6 +41,8 @@ class _MongoStubWriter(DataSourceWriter):
         self.capture_dir = self.options["connection.uri"]
 
     def write(self, iterator):
+        if self.capture_dir == _FAILING_URI:
+            raise RuntimeError("stub wire refused the batch")
         docs = [row.asDict(recursive=True) for row in iterator]
         os.makedirs(self.capture_dir, exist_ok=True)
         fn = os.path.join(self.capture_dir, f"batch-{uuid.uuid4().hex}.json")
@@ -167,3 +173,15 @@ def test_mongo_sink_batches_per_partition(mongo_stub, tmp_path):
     total = sum(len(b["docs"]) for b in batches)
     assert total == 40
     assert len(batches) < 40  # batched, not per-document round-trips
+
+
+def test_mongo_sink_surfaces_write_errors(mongo_stub):
+    """Only a missing connector reads as "not available": an error raised
+    by the connector's own write reaches the caller as itself."""
+    batch = _batch(mongo_stub, [("a", "v", 1)])
+    with pytest.raises(Exception, match="stub wire refused the batch") as err:
+        upsert_mongo(
+            batch, uri=_FAILING_URI, database="d", collection="c",
+            key="pulse_id", order_by=["ingestion_timestamp"],
+        )
+    assert not isinstance(err.value, NotImplementedError)

@@ -261,6 +261,69 @@ def test_non_object_items_are_skipped_invalid(spark, stub_server, tmp_path):
     assert [r["pulse_id"] for r in out.select("pulse_id").collect()] == ["p-1"]
 
 
+def test_run_batch_fetches_each_page_once(spark, stub_server, tmp_path):
+    """The pipeline's plan holds one copy of the REST scan: every page is
+    requested exactly once per run_batch (the politeness the reference's
+    serial loop had, SURVEY §7 hard part c)."""
+    import collections
+    import datetime as dt
+
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.config import PipelineConfig
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.pipeline import run_batch
+
+    base, state = stub_server
+    state.pages = {
+        1: {"results": RAW_PULSES[0:3]},
+        2: {"results": RAW_PULSES[3:6]},
+        3: {"results": RAW_PULSES[6:8]},  # short page: the scan stops here
+    }
+    raw_df = pulses_df(
+        spark, base, RAW_PULSE_SCHEMA, per_page="3", max_pages="5", **FAST
+    )
+    cfg = PipelineConfig(api_key="k", base_url=base, connector_name="t", city="")
+    metrics = run_batch(
+        spark, raw_df, cfg, str(tmp_path / "pulses"),
+        run_ts=dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc),
+    )
+    assert metrics["records_seen"] == 8
+    fetches = collections.Counter(r["page"] for r in state.requests)
+    assert fetches == {1: 1, 2: 1, 3: 1}
+
+
+def test_registered_source_unpickles_without_the_package(spark, tmp_path):
+    """Spark unpickles the registered source in processes that may not see
+    the package (the streaming source runner when the driver runs outside
+    the repo): after registration the source pickles by value, so a plain
+    interpreter without the package on its path can load it."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.sources.rest import (
+        RestDataSource,
+        register_rest_source,
+    )
+
+    register_rest_source(spark)
+    blob = cloudpickle.dumps(RestDataSource)
+    pkg = RestDataSource.__module__.split(".")[0]
+    script = (
+        "import importlib.util, pickle, sys\n"
+        f"assert importlib.util.find_spec({pkg!r}) is None\n"
+        "cls = pickle.loads(sys.stdin.buffer.read())\n"
+        "print(cls.name())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], input=blob, cwd=tmp_path, env=env,
+        capture_output=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr.decode()
+    assert out.stdout.decode().strip() == "paginated_rest"
+
+
 # ---------------------------------------------------------------------------
 # Streaming mode: SimpleDataSourceStreamReader over the same stub
 # ---------------------------------------------------------------------------

@@ -427,6 +427,54 @@ def test_pulse_stream_rest_over_the_wire(spark, tmp_path):
     assert len(v2) == 1 and v2[0].pulse_name == "Emotet wave v2"
 
 
+def test_pulse_stream_rest_skips_non_objects(spark, tmp_path):
+    """The REST stream follows the batch path: feed items that are not JSON
+    objects (a string, a number, an array) fail validation and are skipped,
+    never upserted as keyless rows; within one micro-batch the newest
+    ``pulse_modified`` of a key wins."""
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.config import PipelineConfig
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.otx_fixture import RAW_PULSE_SCHEMA
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.streaming.ops import run_pulse_stream_rest
+
+    def pulse(name, modified):
+        return {"id": "p-1", "pulse_info": {"id": "p-1", "name": name, "modified": modified}}
+
+    feed = [
+        pulse("newer", "2024-02-01T00:00:00"),
+        "not-a-pulse",
+        7,
+        [1, 2],
+        pulse("older", "2024-01-01T00:00:00"),
+    ]
+
+    class H(BaseHTTPRequestHandler):
+        def log_message(self, *a):
+            pass
+
+        def do_GET(self):
+            self.send_response(200)
+            self.end_headers()
+            self.wfile.write(json.dumps({"results": feed}).encode())
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), H)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+    target, ck = str(tmp_path / "tgt"), str(tmp_path / "ck")
+    cfg = PipelineConfig(api_key="k", base_url=base, connector_name="s", city="")
+    try:
+        run_pulse_stream_rest(
+            spark, base, RAW_PULSE_SCHEMA, cfg, target, ck, per_page=50
+        )
+    finally:
+        srv.shutdown()
+
+    rows = spark.read.parquet(target).collect()
+    assert [(r.pulse_id, r.pulse_name) for r in rows] == [("p-1", "newer")]
+
+
 @pytest.mark.slow
 def test_streaming_cusum_matches_serial_recursion(spark, tmp_path):
     """Per-key streaming CUSUM: two ordered micro-batches must carry the
@@ -883,6 +931,29 @@ def test_foreach_batch_near_dedup_stream(spark, tmp_path):
     assert sorted(
         r["id"] for r in spark.read.parquet(sigs).select("id").collect()
     ) == got
+
+
+def test_near_dedup_sink_raises_on_unreadable_store(spark, tmp_path):
+    """Only a missing or empty signature store reads as "no store yet"; a
+    store that cannot be read fails the batch instead of admitting every
+    document as new."""
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.streaming.ops import near_dedup_sink
+
+    corpus, sigs = str(tmp_path / "corpus"), tmp_path / "sigs"
+    batch = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"
+    )
+    sigs.mkdir()
+    sink = near_dedup_sink(corpus, str(sigs), "doc_id", "text", threshold=0.8)
+    sink(batch, 0)  # empty store directory: first batch
+    assert spark.read.parquet(corpus).count() == 1
+
+    garbage = tmp_path / "garbage"
+    garbage.mkdir()
+    (garbage / "part-0.parquet").write_bytes(b"not a parquet file")
+    bad = near_dedup_sink(corpus, str(garbage), "doc_id", "text", threshold=0.8)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        bad(batch, 1)
 
 
 def test_versioned_stream_sink_publishes_snapshots(spark, tmp_path):

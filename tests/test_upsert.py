@@ -16,12 +16,23 @@ def _df(spark, rows):
 def test_dedup_last_write_wins(spark):
     df = _df(
         spark,
-        [("a", "old", 1), ("a", "new", 2), ("b", "only", 1), (None, "x", 1), (None, "y", 2)],
+        [
+            ("a", "old", 1),
+            ("a", "new", 2),
+            ("b", "only", 1),
+            (None, "x", 1),
+            (None, "y", 2),
+            (None, "y", 2),  # identical keyless rows are distinct inserts
+        ],
     )
     out = dedup_last_write_wins(df, "k", ["ts"])
     rows = {r.k: r.v for r in out.filter("k is not null").collect()}
     assert rows == {"a": "new", "b": "only"}
-    assert out.filter("k is null").count() == 2  # keyless rows pass through
+    # keyless rows pass through, every one of them
+    assert sorted(r.v for r in out.filter("k is null").collect()) == ["x", "y", "y"]
+    assert out.columns == df.columns
+    # one aggregate over one copy of the input, no keyed/keyless fork
+    assert out._jdf.queryExecution().optimizedPlan().collectLeaves().size() == 1
 
 
 def test_dedup_null_order_keys_match_window_form(spark):
@@ -203,6 +214,23 @@ def test_sink_quarantine_per_record_dead_letter(spark, tmp_path):
     dead = spark.read.json(dl)
     assert dead.count() == 1
     assert dead.filter(F.col("k") == "b").count() == 1
+
+
+def test_sink_quarantine_leaves_no_cached_frame(spark, tmp_path):
+    """The quarantined rows are cached for the empty-check + dead-letter
+    write only; the session holds no more cached entries afterwards."""
+    path = str(tmp_path / "t3")
+    dl = str(tmp_path / "dead3")
+    upsert_parquet(spark, _df(spark, [("a", "v1", 1)]), path, "k", ["ts"])
+    raw = spark.createDataFrame(
+        [("a", "v2", "2"), ("b", "w", "not-a-number")],
+        "k string, v string, ts string",
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    upsert_parquet(spark, raw, path, "k", ["ts"], dead_letter_dir=dl)
+    assert spark.read.json(dl).count() == 1
+    assert cache.numCachedEntries() <= before
 
 
 def test_sink_quarantine_clean_batch_writes_everything(spark, tmp_path):
