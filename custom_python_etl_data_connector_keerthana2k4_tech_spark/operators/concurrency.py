@@ -33,18 +33,24 @@ def _inherit_spark_locals(thunk: Callable[[], object]) -> Callable[[], object]:
     """Wrap ``thunk`` so the worker thread sees the submitter's Spark
     thread-local properties (setJobDescription/setJobGroup are
     thread-local — a plain pool thread would run unlabeled and escape
-    group cancellation). No live SparkSession (pure-Python callers,
-    unit tests) passes the thunk through unchanged. Outside pinned-thread
+    group cancellation). The session is the thread's active one or else
+    the process default, as ``SparkSession.active()`` resolves it: a
+    ``run_jobs`` nested in another's worker thread has no thread-active
+    session but must still pass the labels on. No session at all
+    (pure-Python callers, unit tests) passes the thunk through
+    unchanged. Outside pinned-thread
     mode (a plain py4j gateway) ``inheritable_thread_target(session)``
     hands back the session itself instead of a decorator — calling it
     would raise TypeError — so the thunk runs as is, with a warning that
     worker jobs lose their labels (issued from one location, so the
     default warning filter shows it once per process)."""
     from pyspark import inheritable_thread_target
+    from pyspark.errors import PySparkRuntimeError
     from pyspark.sql import SparkSession
 
-    sess = SparkSession.getActiveSession()
-    if sess is None:
+    try:
+        sess = SparkSession.active()
+    except PySparkRuntimeError:  # NO_ACTIVE_OR_DEFAULT_SESSION
         return thunk
     # session form: inherits local properties AND session tags
     # (the bare-callable form warns that tags are dropped)

@@ -28,6 +28,8 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.write import swap_dir
+
 _PRIORITY = "__upsert_priority"
 _ROWNUM = "__upsert_rn"
 _KEYLESS = "__upsert_keyless"
@@ -190,9 +192,7 @@ def upsert_parquet(
         tmp = f"{path}__tmp_{uuid.uuid4().hex}"
         merged.write.mode("overwrite").parquet(tmp)
         _, jtmp = _hadoop_fs(spark, tmp)
-        if exists:
-            fs.delete(jpath, True)
-        fs.rename(jtmp, jpath)
+        swap_dir(fs, jtmp, jpath)
         return
 
     if not exists:
@@ -237,10 +237,8 @@ def _swap_partition_tree(jvm, fs, src_dir, target_root, rel: str) -> None:
                 )
         return
     dst = jvm.org.apache.hadoop.fs.Path(f"{target_root.toString()}/{rel}")
-    if fs.exists(dst):
-        fs.delete(dst, True)
     fs.mkdirs(dst.getParent())
-    fs.rename(src_dir, dst)
+    swap_dir(fs, src_dir, dst)
 
 
 def upsert_delta(

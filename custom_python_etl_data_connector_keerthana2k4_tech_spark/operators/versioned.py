@@ -65,6 +65,8 @@ from __future__ import annotations
 import json
 import uuid
 
+from py4j.java_gateway import is_instance_of
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -116,22 +118,61 @@ def _write_atomic(spark: SparkSession, path: str, content: str) -> None:
     fs.rename(tmp, dst)
 
 
+# what a create reports when another writer holds the path: the file
+# exists, or (HDFS) it is still open under the winner's lease
+_CLAIMED = (
+    "org.apache.hadoop.fs.FileAlreadyExistsException",
+    "org.apache.hadoop.hdfs.protocol.AlreadyBeingCreatedException",
+)
+
+
+def _claimed(spark: SparkSession, err: Py4JJavaError) -> bool:
+    """Whether ``err`` from a create means another writer holds the path.
+    HDFS clients get some NameNode exceptions wrapped in an
+    ``ipc.RemoteException`` that names the original class."""
+    gateway, jexc = spark.sparkContext._gateway, err.java_exception
+    if is_instance_of(gateway, jexc, "org.apache.hadoop.ipc.RemoteException"):
+        return jexc.getClassName() in _CLAIMED
+    return any(is_instance_of(gateway, jexc, c) for c in _CLAIMED)
+
+
+def _manifest_fs(spark: SparkSession, path: str):
+    """(FileSystem, jvm) that manifests are claimed on: the raw one under
+    a checksummed filesystem (the local one), whose create makes the file
+    and then its ``.crc`` sidecar — a failing sidecar would leave behind a
+    file that the claimer cannot tell from another writer's."""
+    fs, jvm = _fs(spark, path)
+    gateway = spark.sparkContext._gateway
+    if is_instance_of(gateway, fs, "org.apache.hadoop.fs.ChecksumFileSystem"):
+        fs = fs.getRawFileSystem()
+    return fs, jvm
+
+
 def _create_exclusive(spark: SparkSession, path: str, content: str) -> bool:
     """Create ``path`` with ``content`` iff it does not already exist —
     the commit primitive. Returns False (and writes nothing) if another
-    writer already claimed the path."""
-    fs, jvm = _fs(spark, path)
+    writer already claimed the path. Any other failure re-raises; one
+    after the create succeeded first deletes the file this call created,
+    since a partial manifest would break every later read of the table.
+    A failed create deletes nothing: the path may be another writer's."""
+    fs, jvm = _manifest_fs(spark, path)
     dst = jvm.org.apache.hadoop.fs.Path(path)
     if fs.exists(dst):
         return False
     try:
         stream = fs.create(dst, False)  # overwrite=False: fail if claimed
-    except Exception:
-        return False
+    except Py4JJavaError as e:
+        if _claimed(spark, e):
+            return False
+        raise
     try:
-        stream.write(bytearray(content.encode("utf-8")))
-    finally:
-        stream.close()
+        try:
+            stream.write(bytearray(content.encode("utf-8")))
+        finally:
+            stream.close()
+    except Py4JJavaError:
+        fs.delete(dst, False)
+        raise
     return True
 
 

@@ -11,6 +11,9 @@ is the single-node version of this decision, etl_connector.py:206).
 
 from __future__ import annotations
 
+import uuid
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 
@@ -67,6 +70,27 @@ def _list_parquet_files(spark, path: str):
     return fs, hpath, files
 
 
+def swap_dir(fs, new, live) -> None:
+    """Replace directory ``live`` with ``new`` (Hadoop paths on ``fs``):
+    move the current ``live`` aside to a unique sibling whose leading dot
+    hides it from readers and partition discovery, rename ``new`` in, then
+    delete the old copy. A rename that returns false rolls back and
+    raises, so the live directory is never lost silently. A crash between
+    the two renames leaves the old copy at ``.<name>__old_<id>``."""
+    aside = SparkContext._jvm.org.apache.hadoop.fs.Path(
+        live.getParent(), f".{live.getName()}__old_{uuid.uuid4().hex}"
+    )
+    moved = fs.exists(live)
+    if moved and not fs.rename(live, aside):
+        raise IOError(f"cannot move {live} aside to {aside}")
+    if not fs.rename(new, live):
+        if moved and not fs.rename(aside, live):
+            raise IOError(f"cannot rename {new} to {live}; the old copy is at {aside}")
+        raise IOError(f"cannot rename {new} to {live}")
+    if moved:
+        fs.delete(aside, True)
+
+
 def compact_parquet(
     spark,
     path: str,
@@ -110,14 +134,7 @@ def compact_parquet(
     tmp_path = jvm.org.apache.hadoop.fs.Path(tmp)
     fs.delete(tmp_path, True)
     df.coalesce(ideal).write.mode("overwrite").parquet(tmp)
-    old_path = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "._old")
-    fs.delete(old_path, True)
-    if not fs.rename(hpath, old_path):
-        raise IOError(f"compact_parquet: cannot move {path} aside")
-    if not fs.rename(tmp_path, hpath):
-        fs.rename(old_path, hpath)  # roll back
-        raise IOError(f"compact_parquet: cannot swap in compacted {tmp}")
-    fs.delete(old_path, True)
+    swap_dir(fs, tmp_path, hpath)
     _, _, after = _list_parquet_files(spark, path)
     stats["files_after"] = len(after)
     stats["compacted"] = True

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.joins import asof_join
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.registry import query
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.relational import DAVG, DSUM, davg, dsum
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import app_once
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
 
 
@@ -1527,42 +1528,16 @@ def copurchase_pairs(
     )
 
 
-# Session-scoped materialize-once registry: one persisted frame per
-# semantically-distinct plan, instead of a fresh .persist() per helper
-# invocation (which re-registered an identical plan with the CacheManager
-# on every call — "Asked to cache already cached data" warnings — and let
-# cached edge frames pile up across a 378-query bench session until LRU
-# eviction). Bounded: evicting the oldest entry also unpersists it.
-_MATERIALIZED: "OrderedDict[tuple[int, int], DataFrame]" = __import__(
-    "collections"
-).OrderedDict()
-_MATERIALIZED_CAP = 16
-
-
 def materialize_once(df: DataFrame) -> DataFrame:
-    """Persist `df` exactly once per (session, semantic plan): repeat calls
-    with a semantically-equal plan return the SAME persisted frame, so the
-    CacheManager holds one copy no matter how many query builders ask."""
-    key = (id(df.sparkSession), df.semanticHash())
-    hit = _MATERIALIZED.get(key)
-    if hit is not None:
-        try:
-            if df.sameSemantics(hit) and (
-                hit.storageLevel.useMemory or hit.storageLevel.useDisk
-            ):
-                _MATERIALIZED.move_to_end(key)
-                return hit
-        except Exception:
-            pass  # stale session / evicted entry: fall through and re-persist
-        _MATERIALIZED.pop(key, None)
-    while len(_MATERIALIZED) >= _MATERIALIZED_CAP:
-        _, old = _MATERIALIZED.popitem(last=False)
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # frame belonged to a stopped session
-    _MATERIALIZED[key] = df.persist()
-    return df
+    """Persist `df` exactly once per (application, semantic plan): repeat
+    calls with a semantically-equal plan return the SAME persisted frame,
+    so the CacheManager holds one copy no matter how many query builders
+    ask (a fresh .persist() per call re-registered an identical plan on
+    every call and let cached frames pile up across a bench session). On
+    a semanticHash collision with a different plan, ``df`` is persisted on
+    its own and left out of the memo: another plan's rows never come back."""
+    hit = app_once(df.sparkSession, ("persist", df.semanticHash()), df.persist)
+    return hit if hit is df or df.sameSemantics(hit) else df.persist()
 
 
 def copurchase_edges(li: DataFrame, min_orders: int = 1) -> DataFrame:

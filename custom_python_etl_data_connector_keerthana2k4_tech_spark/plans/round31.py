@@ -35,6 +35,7 @@ from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.round29 impo
     _pq_codebook,
     ivfpq_adc_ctes,
 )
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import scratch_dir
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
 
 _FILTER_LABEL = 3  # the attribute predicate under test (59/500 rows at sf0.01)
@@ -68,12 +69,10 @@ def q379_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_pq_store.py. The oracle replays the whole derivation plus
     the same candidate filter, so filtered results are hash-gated like
     every other approximate set."""
-    import tempfile
-
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq_store import IVFPQStore
 
     e = load(spark, sf_dir, "embeddings")
-    root = tempfile.mkdtemp(prefix="q379_filtered_") + "/ix"
+    root = scratch_dir("q379_filtered_") + "/ix"
     store = IVFPQStore.build(
         spark, e, "vec_id", "embedding", root,
         n_lists=_IVF_LISTS, km_iters=_IVF_ITERS, m=_PQ_M, k_centroids=_PQ_K,

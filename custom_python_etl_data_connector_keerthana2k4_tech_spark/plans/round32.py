@@ -36,6 +36,7 @@ from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.round29 impo
     _pq_codebook,
     ivfpq_adc_ctes,
 )
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import scratch_dir
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
 
 
@@ -502,8 +503,6 @@ def q387_versioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     source rows or matched keys (one key semi-join locates them) and
     references the rest — tests/test_versioned_merge.py pins the
     manifest reuse on sliver-sized batches."""
-    import tempfile
-
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.versioned import (
         read_versioned,
         versioned_merge,
@@ -515,7 +514,7 @@ def q387_versioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("pr"),
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    root = tempfile.mkdtemp(prefix="q387_merge_") + "/t"
+    root = scratch_dir("q387_merge_") + "/t"
     versioned_upsert(
         spark, base.filter(F.col("k") % 5 != 0), root, "k",
         order_by=["cents"], partition_by="pr",

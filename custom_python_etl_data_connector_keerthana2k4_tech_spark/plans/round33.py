@@ -45,6 +45,7 @@ from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.round29 impo
     _pq_codebook,
     ivfpq_adc_ctes,
 )
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import scratch_dir
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
 
 # The query TABLE all three batch-retrieval queries share: query ids are
@@ -451,15 +452,13 @@ def q392_postings_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenization, sidecar, scoring, and the cut — so a stale posting or
     doclen row anywhere in the store is a value mismatch, not a lucky
     pass."""
-    import tempfile
-
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.postings_store import (
         PostingsStore,
     )
 
     docs = load(spark, sf_dir, "documents")
     base = docs.filter(F.col("doc_id") % 5 != 0)
-    root = tempfile.mkdtemp(prefix="q392_lifecycle_") + "/ix"
+    root = scratch_dir("q392_lifecycle_") + "/ix"
     store = PostingsStore.build(
         spark, base.filter(F.col("doc_id") % 2 == 0),
         "doc_id", "text", root, n_buckets=16,

@@ -23,8 +23,6 @@ at all (evidence of absence, SURVEY §0) — north-star extension territory.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,6 +46,7 @@ from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.round33 impo
     _qt_bm25_ctes,
     _qt_frame,
 )
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import scratch_dir
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -91,7 +90,7 @@ def q395_batch_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq_store import IVFPQStore
 
     e = load(spark, sf_dir, "embeddings")
-    root = tempfile.mkdtemp(prefix="q395_batch_filtered_") + "/ix"
+    root = scratch_dir("q395_batch_filtered_") + "/ix"
     store = IVFPQStore.build(
         spark, e, "vec_id", "embedding", root,
         n_lists=_IVF_LISTS, km_iters=_IVF_ITERS, m=_PQ_M, k_centroids=_PQ_K,
@@ -203,8 +202,8 @@ def q396_paired_mutation_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     e = load(spark, sf_dir, "embeddings")
-    proot = tempfile.mkdtemp(prefix="q396_paired_p_") + "/ix"
-    vroot = tempfile.mkdtemp(prefix="q396_paired_v_") + "/ix"
+    proot = scratch_dir("q396_paired_p_") + "/ix"
+    vroot = scratch_dir("q396_paired_v_") + "/ix"
     # the two stores are INDEPENDENT (separate roots, separate inputs) —
     # build them concurrently (guide §2.6; round-9 VERDICT #1a): each
     # build is driver-coordinated (encode + two leg writes), so the
@@ -289,7 +288,7 @@ def q398_time_travel_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq_store import IVFPQStore
 
     e = load(spark, sf_dir, "embeddings")
-    root = tempfile.mkdtemp(prefix="q398_time_travel_") + "/ix"
+    root = scratch_dir("q398_time_travel_") + "/ix"
     store = IVFPQStore.build(
         spark, e, "vec_id", "embedding", root,
         n_lists=_IVF_LISTS, km_iters=_IVF_ITERS, m=_PQ_M, k_centroids=_PQ_K,
@@ -377,7 +376,7 @@ def q397_time_travel_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="q397_time_travel_") + "/ix"
+    root = scratch_dir("q397_time_travel_") + "/ix"
     store = PostingsStore.build(spark, docs, "doc_id", "text", root, n_buckets=16)
     g0 = store.current_gen()
     store.upsert(

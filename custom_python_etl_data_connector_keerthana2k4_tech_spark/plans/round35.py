@@ -19,8 +19,6 @@ at all (evidence of absence, SURVEY §0) — north-star extension territory.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,6 +41,7 @@ from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.round33 impo
     _qt_frame,
 )
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.round34 import _MUT_DEL, _MUT_UPS
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import scratch_dir
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -74,7 +73,7 @@ def q399_batch_time_travel_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="q399_batch_tt_") + "/ix"
+    root = scratch_dir("q399_batch_tt_") + "/ix"
     store = PostingsStore.build(spark, docs, "doc_id", "text", root, n_buckets=16)
     g0 = store.current_gen()
     store.upsert(
@@ -128,7 +127,7 @@ def q400_batch_range_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq_store import IVFPQStore
 
     e = load(spark, sf_dir, "embeddings")
-    root = tempfile.mkdtemp(prefix="q400_band_ann_") + "/ix"
+    root = scratch_dir("q400_band_ann_") + "/ix"
     store = IVFPQStore.build(
         spark, e, "vec_id", "embedding", root,
         n_lists=_IVF_LISTS, km_iters=_IVF_ITERS, m=_PQ_M, k_centroids=_PQ_K,
@@ -191,8 +190,8 @@ def q401_pinned_pair_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     e = load(spark, sf_dir, "embeddings")
-    proot = tempfile.mkdtemp(prefix="q401_pinned_p_") + "/ix"
-    vroot = tempfile.mkdtemp(prefix="q401_pinned_v_") + "/ix"
+    proot = scratch_dir("q401_pinned_p_") + "/ix"
+    vroot = scratch_dir("q401_pinned_v_") + "/ix"
     # independent stores, independent roots — build concurrently (guide
     # §2.6; round-9 VERDICT #1a)
     ps, vs = run_jobs([
@@ -275,8 +274,8 @@ def _drifted_pair(spark: SparkSession, sf_dir: str, tag: str):
     )
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.concurrency import run_jobs
 
-    proot = tempfile.mkdtemp(prefix=f"{tag}_p_") + "/ix"
-    vroot = tempfile.mkdtemp(prefix=f"{tag}_v_") + "/ix"
+    proot = scratch_dir(f"{tag}_p_") + "/ix"
+    vroot = scratch_dir(f"{tag}_v_") + "/ix"
     # independent stores — build concurrently (guide §2.6)
     ps, vs = run_jobs([
         lambda: PostingsStore.build(

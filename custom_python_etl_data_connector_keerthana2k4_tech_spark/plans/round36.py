@@ -23,8 +23,6 @@ at all (evidence of absence, SURVEY §0) — north-star extension territory.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,6 +41,7 @@ from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.round33 impo
     _QT_SHORTLIST,
     _qt_frame,
 )
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import scratch_dir
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -103,15 +102,15 @@ def q403_paired_streaming_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     held_ids = e.filter(held).select(F.col("vec_id").alias("doc_id"))
     init_docs = docs.join(held_ids, "doc_id", "left_anti")
     init_vecs = e.filter(~held)
-    proot = tempfile.mkdtemp(prefix="q403_stream_p_") + "/ix"
-    vroot = tempfile.mkdtemp(prefix="q403_stream_v_") + "/ix"
+    proot = scratch_dir("q403_stream_p_") + "/ix"
+    vroot = scratch_dir("q403_stream_v_") + "/ix"
     # one stream carries the union of both stores' columns; each leg's
     # encoder selects its own
     payload = docs.join(held_ids, "doc_id", "left_semi").join(
         e.filter(held).select("vec_id", "embedding"),
         F.col("doc_id") == F.col("vec_id"),
     )
-    src = tempfile.mkdtemp(prefix="q403_stream_src_")
+    src = scratch_dir("q403_stream_src_")
     # three INDEPENDENT driver-coordinated jobs open this fixture — the
     # two store builds (separate roots, separate inputs) and the stream
     # source's payload write — run them concurrently (guide §2.6;
@@ -129,7 +128,7 @@ def q403_paired_streaming_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         lambda: payload.write.mode("overwrite").parquet(src),
     ])
-    ckpt = tempfile.mkdtemp(prefix="q403_stream_ckpt_") + "/ckpt"
+    ckpt = scratch_dir("q403_stream_ckpt_") + "/ckpt"
     stream = spark.readStream.schema(payload.schema).parquet(src)
     paired_streaming_append(ps, vs, stream, ckpt).awaitTermination()
 

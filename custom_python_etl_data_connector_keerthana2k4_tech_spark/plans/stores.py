@@ -1,6 +1,8 @@
 """Build-once registries for the two persistent indexes the query
-surface READS (round29's ``_train_once`` pattern, applied to whole
-stores).
+surface READS: each store is built once per application through
+``session.app_once`` (the memo that also holds round29's trained
+vector-search parameters), in a ``session.scratch_dir`` root that is
+removed when the driver exits.
 
 Seven registered queries consume the same unmutated postings store over
 ``documents`` (q376 phrase, q384/q385/q388 single-query retrieval,
@@ -9,47 +11,23 @@ IVF-PQ store over ``embeddings`` that q377 builds. Rebuilding an
 identical index per query repeats the identical indexing pass many
 times per bench pass; a production deployment builds ONCE and serves
 many queries — the amortized shape the stores exist for. Keyed by
-(application, sf_dir) so a new session or a different corpus rebuilds.
+(application, sf_dir) so a new session or a different corpus rebuilds;
+concurrent callers wait for the one build.
 
 Value-invisible by construction: building is deterministic and every
 consumer's oracle replays the derivation from the raw parquet, so a
 cached store matches bit for bit. The stores handed out here are READ-
 ONLY by contract — mutation queries (q392's upsert/delete lifecycle)
-always build their own in a fresh tempdir. q377 also builds fresh: it
-is the registered proof that persistence itself changes nothing, so the
-build belongs inside its timed window.
+always build their own in a fresh scratch directory. q377 also builds
+fresh: it is the registered proof that persistence itself changes
+nothing, so the build belongs inside its timed window.
 """
 
 from __future__ import annotations
 
-import tempfile
-import threading
-
 from pyspark.sql import SparkSession
 
-_CACHE: dict = {}
-_LOCK = threading.Lock()
-
-
-def _once(key, build):
-    """Concurrency-safe build-once: per-key locks so two racing callers
-    get ONE build (the loser waits instead of leaking a duplicate
-    tempdir store), and entries keyed by superseded applicationIds are
-    EVICTED when a new application's key arrives (their Spark session is
-    gone, so the cached store handles are dead weight) — the cache holds
-    at most the live application's stores, no fixed cap to silently
-    overflow. Keys are ("kind", applicationId, sf_dir)."""
-    app_id = key[1]
-    with _LOCK:
-        for k in [k for k in _CACHE if k[1] != app_id]:
-            del _CACHE[k]
-        slot = _CACHE.get(key)
-        if slot is None:
-            slot = _CACHE[key] = {"lock": threading.Lock(), "val": None}
-    with slot["lock"]:
-        if slot["val"] is None:
-            slot["val"] = build()
-        return slot["val"]
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import app_once, scratch_dir
 
 
 def shared_postings_store(spark: SparkSession, sf_dir: str):
@@ -63,14 +41,12 @@ def shared_postings_store(spark: SparkSession, sf_dir: str):
 
     def build():
         docs = load(spark, sf_dir, "documents")
-        root = tempfile.mkdtemp(prefix="shared_postings_") + "/ix"
+        root = scratch_dir("shared_postings_") + "/ix"
         return PostingsStore.build(
             spark, docs, "doc_id", "text", root, n_buckets=16
         )
 
-    return _once(
-        ("postings", spark.sparkContext.applicationId, sf_dir), build
-    )
+    return app_once(spark, ("postings", sf_dir), build)
 
 
 def shared_ivfpq_store(spark: SparkSession, sf_dir: str):
@@ -90,7 +66,7 @@ def shared_ivfpq_store(spark: SparkSession, sf_dir: str):
 
     def build():
         e = load(spark, sf_dir, "embeddings")
-        root = tempfile.mkdtemp(prefix="shared_ivfpq_") + "/ix"
+        root = scratch_dir("shared_ivfpq_") + "/ix"
         return IVFPQStore.build(
             spark, e, "vec_id", "embedding", root,
             n_lists=_IVF_LISTS, km_iters=_IVF_ITERS, m=_PQ_M,
@@ -99,4 +75,4 @@ def shared_ivfpq_store(spark: SparkSession, sf_dir: str):
             codebook=_pq_codebook(spark, sf_dir),
         )
 
-    return _once(("ivfpq", spark.sparkContext.applicationId, sf_dir), build)
+    return app_once(spark, ("ivfpq", sf_dir), build)

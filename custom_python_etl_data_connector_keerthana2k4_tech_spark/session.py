@@ -1,4 +1,4 @@
-"""SparkSession factory (SURVEY §7 M0).
+"""SparkSession factory (SURVEY §7 M0) and the per-application scope.
 
 Replaces the reference's import-time side effects (etl_connector.py:23-50:
 client/session construction at module import) with an explicit factory.
@@ -7,19 +7,80 @@ Configs are chosen for determinism (UTC timestamps so results hash-match a
 DuckDB oracle) and for scale (AQE for runtime re-planning / skew joins,
 shuffle partitions sized to cores locally — on a real cluster this would be
 set to ~2-3x total executor cores or left to AQE coalescing).
+
+The scope is everything that lives as long as one Spark application or one
+driver process: ``app_once`` is the one build-once memo (the shipped
+package, trained vector-search parameters, the shared read-only index
+stores, persisted frames), and ``scratch_dir`` is the one source of scratch
+directories, all under one per-process root that is removed at exit.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
+import threading
 import zipfile
 
 from pyspark.sql import SparkSession
 
 _DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-_SHIPPED_SESSIONS: set[int] = set()
+_LOCK = threading.Lock()
+_MEMO: dict = {}  # (applicationId, key) -> [per-key lock, value]
+_UNBUILT = object()
+_ROOT_PREFIX = "spark-graft-"
+_root: str | None = None
+
+
+def app_once(spark: SparkSession, key, build):
+    """``build()``'s value, built once per (Spark application, ``key``).
+
+    A lock per key makes concurrent callers (``run_jobs`` threads) wait for
+    the one build instead of racing a duplicate; a build that raises leaves
+    the key unbuilt. The first call from a new application drops every
+    other application's entries: their session is gone, so their values
+    are dead weight."""
+    app = spark.sparkContext.applicationId
+    with _LOCK:
+        for k in [k for k in _MEMO if k[0] != app]:
+            del _MEMO[k]
+        slot = _MEMO.setdefault((app, key), [threading.Lock(), _UNBUILT])
+    with slot[0]:
+        if slot[1] is _UNBUILT:
+            slot[1] = build()
+        return slot[1]
+
+
+def scratch_dir(tag: str) -> str:
+    """A new directory named ``<tag>...`` under this process's scratch root
+    ``<tmp>/spark-graft-<pid>@<host>``. The root is made on first use, so
+    it follows ``TMPDIR`` as set then, and one exit handler removes it.
+    Making it also removes sibling roots whose process is provably dead
+    (a killed driver never ran its exit handler)."""
+    global _root
+    with _LOCK:
+        if _root is None:
+            _root = _make_root()
+    return tempfile.mkdtemp(prefix=tag, dir=_root)
+
+
+def _make_root() -> str:
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.genstore import (
+        _holder_stale,
+        _host,
+    )
+
+    tmp = tempfile.gettempdir()
+    for name in os.listdir(tmp):
+        if name.startswith(_ROOT_PREFIX) and _holder_stale(name[len(_ROOT_PREFIX):]):
+            shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
+    root = os.path.join(tmp, f"{_ROOT_PREFIX}{os.getpid()}@{_host()}")
+    os.makedirs(root, exist_ok=True)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -30,17 +91,13 @@ def ship_package(spark: SparkSession) -> None:
     stages) would fail with ModuleNotFoundError when the driver runs from a
     different cwd. Shipping a zip via addPyFile fixes local and cluster
     mode alike — the standard 'ship your package to executors' pattern.
-    Idempotent per session.
+    Once per application; the zip lives in the scratch root.
     """
-    key = id(spark)
-    if key in _SHIPPED_SESSIONS:
-        return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    pkg_name = os.path.basename(pkg_dir)
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"{pkg_name}-{os.getpid()}.zip"
-    )
-    if not os.path.exists(zip_path):
+
+    def ship() -> None:
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        pkg_name = os.path.basename(pkg_dir)
+        zip_path = os.path.join(scratch_dir(f"{pkg_name}_"), f"{pkg_name}.zip")
         with zipfile.ZipFile(zip_path, "w") as zf:
             for root, _dirs, files in os.walk(pkg_dir):
                 for fn in files:
@@ -49,8 +106,9 @@ def ship_package(spark: SparkSession) -> None:
                     full = os.path.join(root, fn)
                     rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
                     zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
-    _SHIPPED_SESSIONS.add(key)
+        spark.sparkContext.addPyFile(zip_path)
+
+    app_once(spark, "ship_package", ship)
 
 
 def get_spark(

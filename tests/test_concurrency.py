@@ -34,3 +34,22 @@ def test_unpinned_gateway_warns_once_and_still_runs(spark, monkeypatch):
         assert run_jobs([lambda: 3, lambda: 4]) == [3, 4]
     unpinned = [w for w in seen if "pinned-thread" in str(w.message)]
     assert len(unpinned) == 1 and unpinned[0].category is RuntimeWarning
+
+
+def test_nested_run_jobs_thunks_see_the_outer_job_description(spark):
+    # a run_jobs inside another's worker thread (a store verb's leg writes
+    # inside an overlapped lifecycle step) has no thread-active session
+    sc = spark.sparkContext
+    sc.setJobDescription("store.mutate: nested legs")
+
+    def inner():
+        return run_jobs([
+            lambda: sc.getLocalProperty("spark.job.description"),
+            lambda: sc.getLocalProperty("spark.job.description"),
+        ])
+
+    try:
+        seen = run_jobs([inner, inner])
+    finally:
+        sc.setJobDescription(None)
+    assert seen == [["store.mutate: nested legs"] * 2] * 2

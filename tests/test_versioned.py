@@ -218,6 +218,124 @@ def test_concurrent_writer_loser_aborts_cleanly(spark, tmp_path):
     assert [m["parent"] for m in hist] == [None, 1]
 
 
+def test_checksum_sidecar_failure_does_not_poison_the_table(spark, tmp_path):
+    """A directory where the local filesystem would write the manifest's
+    ``.crc`` sidecar used to fail the claim after the manifest file was
+    made: the writer reported a lost race and left an empty manifest that
+    broke every later read. Claims go through the raw filesystem, so the
+    commit succeeds, the table stays readable, and later upserts commit."""
+    import shutil
+
+    root = str(tmp_path / "t")
+    versioned_upsert(spark, _df(spark, [("a", "v1", 1)]), root, "k", ["ts"])
+    blocker = tmp_path / "t" / "_versions" / ".v00000002.json.crc"
+    blocker.mkdir()
+    assert versioned_upsert(spark, _df(spark, [("a", "v2", 2)]), root, "k", ["ts"]) == 2
+    assert _state(spark, root) == {"a": "v2"}
+    shutil.rmtree(blocker)
+    assert versioned_upsert(spark, _df(spark, [("b", "w1", 1)]), root, "k", ["ts"]) == 3
+    assert _state(spark, root) == {"a": "v2", "b": "w1"}
+
+
+class _ClaimFS:
+    """A FileSystem stand-in for the manifest claim over {path: content}.
+    ``exists`` answers False, staging a writer that claims the path right
+    after the check; ``create`` raises ``create_error`` when set; a
+    stream's ``write`` raises ``write_error`` when set."""
+
+    def __init__(self, files: dict, create_error=None, write_error=None):
+        self.files, self.create_error, self.write_error = dict(files), create_error, write_error
+
+    def exists(self, p):
+        return False
+
+    def create(self, p, overwrite):
+        if self.create_error is not None:
+            raise self.create_error
+        self.files[p.toString()] = ""
+        fs = self
+
+        class _Stream:
+            def write(self, data):
+                if fs.write_error is not None:
+                    raise fs.write_error
+                fs.files[p.toString()] += data.decode("utf-8")
+
+            def close(self):
+                pass
+
+        return _Stream()
+
+    def delete(self, p, recursive):
+        return self.files.pop(p.toString(), None) is not None
+
+
+def _java_error(spark, exc_class: str, *args):
+    from py4j.protocol import Py4JJavaError
+
+    cls = spark._jvm
+    for part in exc_class.split("."):
+        cls = getattr(cls, part)
+    return Py4JJavaError("An error occurred while calling o1.create.\n", cls(*args))
+
+
+def _stub_manifest_fs(spark, monkeypatch, fs):
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators import versioned as v
+
+    monkeypatch.setattr(v, "_manifest_fs", lambda _spark, _path: (fs, spark._jvm))
+    return v
+
+
+def test_failed_create_keeps_another_writers_manifest(spark, monkeypatch):
+    """A create that fails for a reason other than a claimed path raises
+    its own error and deletes nothing: the manifest at the path may be a
+    writer's that committed between the existence check and the create."""
+    from py4j.protocol import Py4JJavaError
+
+    fs = _ClaimFS(
+        {"/t/_versions/v00000002.json": "winner"},
+        create_error=_java_error(spark, "java.io.IOException", "disk full"),
+    )
+    v = _stub_manifest_fs(spark, monkeypatch, fs)
+    with pytest.raises(Py4JJavaError, match="disk full"):
+        v._create_exclusive(spark, "/t/_versions/v00000002.json", "loser")
+    assert fs.files == {"/t/_versions/v00000002.json": "winner"}
+
+
+@pytest.mark.parametrize(
+    "exc_class, args",
+    [
+        ("org.apache.hadoop.fs.FileAlreadyExistsException", ("exists",)),
+        ("org.apache.hadoop.hdfs.protocol.AlreadyBeingCreatedException", ("leased",)),
+        # HDFS clients receive the NameNode's lease error in this wrapper
+        (
+            "org.apache.hadoop.ipc.RemoteException",
+            ("org.apache.hadoop.hdfs.protocol.AlreadyBeingCreatedException", "leased"),
+        ),
+    ],
+)
+def test_create_on_a_claimed_path_is_a_lost_race(spark, monkeypatch, exc_class, args):
+    fs = _ClaimFS(
+        {"/t/_versions/v00000002.json": "winner"},
+        create_error=_java_error(spark, exc_class, *args),
+    )
+    v = _stub_manifest_fs(spark, monkeypatch, fs)
+    assert not v._create_exclusive(spark, "/t/_versions/v00000002.json", "loser")
+    assert fs.files == {"/t/_versions/v00000002.json": "winner"}
+
+
+def test_failed_write_removes_the_manifest_this_call_created(spark, monkeypatch):
+    """Once the create succeeded the file is this call's own: a failed
+    write deletes it and raises its real error, not a lost race."""
+    from py4j.protocol import Py4JJavaError
+
+    fs = _ClaimFS({}, write_error=_java_error(spark, "java.io.IOException", "disk full"))
+    v = _stub_manifest_fs(spark, monkeypatch, fs)
+    with pytest.raises(Py4JJavaError, match="disk full"):
+        v._create_exclusive(spark, "/t/_versions/v00000002.json", "mine")
+    assert fs.files == {}
+
+
 def test_manifest_claim_serializes_even_without_cas_handle(spark, tmp_path):
     """A writer that crashed between manifest commit and pointer update
     must not be overwritten: the manifest directory is authoritative, the

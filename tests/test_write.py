@@ -3,9 +3,13 @@
 from __future__ import annotations
 
 import glob
+import re
+
+import pytest
 
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.write import (
     estimated_bytes,
+    swap_dir,
     write_sized_parquet,
 )
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
@@ -80,3 +84,44 @@ def test_compact_parquet_noop_when_already_compact(spark, sf_dir, tmp_path):
     load(spark, sf_dir, "nation").repartition(8).write.parquet(frag)
     assert compact_parquet(spark, frag, target_file_bytes=1 << 30)["compacted"]
     assert not compact_parquet(spark, frag, target_file_bytes=1 << 30)["compacted"]
+
+
+class _RenameFailsFS:
+    """A FileSystem stand-in over {directory: contents}, keyed by path
+    string, whose ``fail_on``-th rename returns false, as Hadoop renames
+    may. ``moves`` records every rename as (src, dst)."""
+
+    def __init__(self, dirs: dict, fail_on: int):
+        self.dirs, self.fail_on, self.moves = dict(dirs), fail_on, []
+
+    def exists(self, p):
+        return p.toString() in self.dirs
+
+    def rename(self, src, dst):
+        src, dst = src.toString(), dst.toString()
+        self.moves.append((src, dst))
+        if len(self.moves) == self.fail_on or src not in self.dirs or dst in self.dirs:
+            return False
+        self.dirs[dst] = self.dirs.pop(src)
+        return True
+
+    def delete(self, p, recursive):
+        return self.dirs.pop(p.toString(), None) is not None
+
+
+def test_swap_dir_replaces_the_live_directory(spark):
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = _RenameFailsFS({"/w/t": "old rows", "/w/t.new": "new rows"}, fail_on=0)
+    swap_dir(fs, path("/w/t.new"), path("/w/t"))
+    assert fs.dirs == {"/w/t": "new rows"}
+    # the old copy went to a unique sibling hidden by a leading dot
+    (_, aside), _ = fs.moves
+    assert re.fullmatch(r"/w/\.t__old_[0-9a-f]{32}", aside)
+
+
+def test_swap_dir_keeps_the_old_directory_when_the_new_one_cannot_move_in(spark):
+    path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = _RenameFailsFS({"/w/t": "old rows", "/w/t.new": "new rows"}, fail_on=2)
+    with pytest.raises(IOError, match="cannot rename /w/t.new to /w/t"):
+        swap_dir(fs, path("/w/t.new"), path("/w/t"))
+    assert fs.dirs == {"/w/t": "old rows", "/w/t.new": "new rows"}
