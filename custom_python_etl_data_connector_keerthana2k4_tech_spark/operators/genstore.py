@@ -46,10 +46,13 @@ store's declared tuple of ``Leg``s (postings + doclen for the postings
 store, codes for the IVF-PQ store) and owns the pointer, generation
 directory naming, pinned-read leases, sweeps, the CAS publish with its
 hardlink partition swap, the epoch commit, ``streaming_append``,
-``vacuum``, ``reset_lineage``, ``compact`` and the leg + epoch union
-readers read through. A store subclass keeps only its params sidecar,
-its encoders, the touched-partition probe of ``upsert``/``delete`` and
-its serving verbs.
+``vacuum``, ``reset_lineage``, ``compact``, the leg + epoch union
+readers read through, store creation (the params sidecar with each
+leg's recorded schema, then the first generation) and the keyed
+mutation verbs ``upsert``/``delete``: one partition-selective rewrite
+that probes every leg's touched partitions in one job, rewrites only
+those and hardlinks the rest. A store subclass keeps only its params,
+its encoders and its serving verbs.
 """
 
 from __future__ import annotations
@@ -62,6 +65,7 @@ import threading
 import time
 from collections.abc import Callable
 from contextlib import ExitStack, contextmanager
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import functions as F
@@ -585,19 +589,38 @@ class Leg(NamedTuple):
 class GenStore:
     """The generation protocol over a declared tuple of ``LEGS``.
 
-    A subclass declares ``LEGS``, ``_PTR_FILE`` and ``_PARAMS_FILE``, sets
-    ``spark``, ``path`` and ``_schemas`` (each leg's recorded schema JSON,
-    or None for stores older than schema recording) when it opens, and
-    implements ``_leg_frames(batch)``: the batch encoded once per leg.
-    Generation handles are ints; the pointer records generation N either
-    as N or, with ``_PTR_GEN_DIRNAME``, as its first leg's dirname."""
+    A subclass declares ``LEGS``, ``KEY`` (the key column every leg
+    carries), ``_PTR_FILE`` and ``_PARAMS_FILE``, and implements
+    ``_parse(params)`` (set its fields from the params sidecar, which
+    names the batch key column ``id_col``) and ``_leg_frames(batch,
+    stamp)``: the batch encoded once per leg, ``stamp`` riding the
+    stamped legs. Generation handles are ints; the pointer records
+    generation N either as N or, with ``_PTR_GEN_DIRNAME``, as its first
+    leg's dirname."""
 
     LEGS: tuple[Leg, ...]
+    KEY: str
     _PTR_FILE: str
     _PARAMS_FILE: str
     _PTR_GEN_DIRNAME = False
     #: superseded generations kept on disk for pinned reads (vacuum() sweeps)
     keep_gens: int = 2
+
+    def __init__(self, spark, path: str):
+        with open(os.path.join(path, self._PARAMS_FILE)) as f:
+            self._open(spark, path, json.load(f))
+
+    def _open(self, spark, path: str, params: dict) -> None:
+        """Bind the store to ``path`` under its frozen ``params``: the
+        subclass's fields (``_parse``) and each leg's recorded schema
+        JSON (None for stores older than schema recording), which lets
+        an emptied-out generation read as an empty, correctly-typed
+        frame instead of a schema-inference error."""
+        self.spark, self.path = spark, path
+        self._parse(params)
+        self._schemas = tuple(
+            params.get(f"{leg.epoch_sub}_schema") for leg in self.LEGS
+        )
 
     # -- pointer and generation naming ----------------------------------------
 
@@ -912,14 +935,27 @@ class GenStore:
         ])
 
     @classmethod
-    def _create(cls, spark, path: str, params: dict, frames):
-        """Freeze ``params`` as the store's sidecar (atomic replace), open
-        the store, and write its live generation from ``frames``."""
+    def _create(cls, spark, path: str, params: dict, batch):
+        """Make a store at ``path``: encode ``batch`` through
+        ``_leg_frames`` under ``params``, freeze ``params`` plus each
+        leg's schema (``<epoch_sub>_schema``) as the sidecar (atomic
+        replace), then write the live generation."""
+        os.makedirs(path, exist_ok=True)
+        store = cls.__new__(cls)
+        store._open(spark, path, params)
+        frames = store._leg_frames(batch)
+        params = {
+            **params,
+            **{
+                f"{leg.epoch_sub}_schema": df.schema.json()
+                for leg, df in zip(cls.LEGS, frames)
+            },
+        }
         tmp = os.path.join(path, cls._PARAMS_FILE + ".tmp")
         with open(tmp, "w") as f:
             json.dump(params, f)
         os.replace(tmp, os.path.join(path, cls._PARAMS_FILE))
-        store = cls(spark, path)
+        store._open(spark, path, params)
         store._write_legs(frames, store._live_dirs())
         return store
 
@@ -985,6 +1021,70 @@ class GenStore:
         if self._epochs():
             self.compact()
         return self._ptr()
+
+    def upsert(self, batch, stamp: int = 0) -> None:
+        """Replace-or-insert rows by key (``batch``'s ``id_col``),
+        rewriting ONLY the touched partitions of each leg: the ones the
+        new rows land in plus the ones holding older rows of the same
+        keys. ``stamp`` rides the upserted rows of the stamped legs as
+        their mutation stamp (paired maintenance passes its sequence
+        number so ``reconcile_stores`` can see a half-landed paired
+        upsert); untouched rows keep theirs."""
+        self._rewrite(
+            "upsert",
+            batch.select(F.col(self.id_col).alias(self.KEY)),
+            self._leg_frames(batch, stamp),
+        )
+
+    def delete(self, ids) -> None:
+        """Remove rows by key (a one-column frame of keys), rewriting
+        only the partitions that hold them; deleting absent keys
+        publishes nothing."""
+        self._rewrite("delete", ids.toDF(self.KEY), ())
+
+    def _rewrite(self, verb: str, keys, new) -> None:
+        """The partition-selective rewrite behind ``upsert``/``delete``:
+        from the ``_base`` generation, ONE collected job finds each leg's
+        touched partitions (those of live rows whose key is in ``keys``,
+        found with a semi-join so absent keys touch nothing, plus those
+        the leg's ``new`` rows land in); each leg's touched partitions
+        are rewritten as their live rows minus ``keys`` plus the new
+        rows, staged in ``<gen dir>.<verb>`` and published by ``_swap``,
+        which hardlinks every untouched partition. Nothing touched
+        publishes nothing. The new frames are cached for the probe and
+        the rewrite only."""
+        base = self._base()
+        live = self._base_legs(base)
+        new = [df.persist() for df in new]
+        try:
+            probe = []
+            for i, (leg, df) in enumerate(zip(self.LEGS, live)):
+                tagged = (F.col(leg.part).alias("part"), F.lit(i).alias("leg"))
+                parts = df.join(keys, self.KEY, "left_semi").select(*tagged)
+                if new:
+                    parts = parts.unionByName(new[i].select(*tagged))
+                probe.append(parts)
+            rows = reduce(lambda a, b: a.unionByName(b), probe).distinct().collect()
+            touched = [
+                sorted({r["part"] for r in rows if r["leg"] == i})
+                for i in range(len(live))
+            ]
+            if not any(touched):
+                return
+            frames = []
+            for i, (leg, df, parts) in enumerate(zip(self.LEGS, live, touched)):
+                df = df.filter(F.col(leg.part).isin(parts)).join(
+                    keys, self.KEY, "left_anti"
+                )
+                frames.append(
+                    df.unionByName(new[i]).select(*new[i].columns) if new else df
+                )
+            tmps = [d + "." + verb for d in self._gen_dirs(base["gen"])]
+            self._write_legs(frames, tmps)
+        finally:
+            for df in new:
+                df.unpersist()
+        self._swap(base, tmps, touched)
 
     def _base_legs(self, base: dict) -> tuple:
         """Every leg of ``base``'s generation alone (no epoch legs)."""

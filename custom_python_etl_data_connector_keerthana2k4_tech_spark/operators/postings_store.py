@@ -58,7 +58,6 @@ with pq_store; this store's two legs are the postings, partitioned by
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,28 +74,24 @@ class PostingsStore(GenStore):
         Leg("data", "postings", "bucket", stamped=False),
         Leg("doclen", "doclen", "dbucket", stamped=True),
     )
+    KEY = "doc_id"
     _PTR_FILE = "_store_ptr"
     _PARAMS_FILE = "_postings_params.json"
 
     # the shared verbs, bound in this class's own namespace so per-class
     # method wrappers (perfbench/spans.py) see every verb of the store
     append = GenStore.append
+    upsert = GenStore.upsert
+    delete = GenStore.delete
     compact = GenStore.compact
     vacuum = GenStore.vacuum
     reset_lineage = GenStore.reset_lineage
     streaming_append = GenStore.streaming_append
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        with open(os.path.join(path, self._PARAMS_FILE)) as f:
-            p = json.load(f)
+    def _parse(self, p: dict) -> None:
         self.n_buckets: int = p["n_buckets"]
         self.id_col: str = p["id_col"]
         self.text_col: str = p["text_col"]
-        # leg schemas (round 7): lets an emptied-out generation read as an
-        # empty, correctly-typed frame instead of a schema-inference error
-        self._schemas = (p.get("postings_schema"), p.get("doclen_schema"))
 
     @classmethod
     def build(
@@ -108,19 +103,8 @@ class PostingsStore(GenStore):
         path: str,
         n_buckets: int = 64,
     ) -> "PostingsStore":
-        os.makedirs(path, exist_ok=True)
-        probe = cls.__new__(cls)
-        probe.spark, probe.path = spark, path
-        probe.n_buckets, probe.id_col, probe.text_col = n_buckets, id_col, text_col
-        enc, dl = probe._leg_frames(docs)
-        params = {
-            "n_buckets": n_buckets,
-            "id_col": id_col,
-            "text_col": text_col,
-            "postings_schema": enc.schema.json(),
-            "doclen_schema": dl.schema.json(),
-        }
-        return cls._create(spark, path, params, [enc, dl])
+        params = {"n_buckets": n_buckets, "id_col": id_col, "text_col": text_col}
+        return cls._create(spark, path, params, docs)
 
     def _doclen_path(self) -> str:
         return self._live_dirs()[1]
@@ -155,139 +139,10 @@ class PostingsStore(GenStore):
             (hex_hash60(F.col("token")) % self.n_buckets).cast("int"),
         )
 
-    def _leg_frames(self, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-        return self._encode(docs), self._doclen(docs)
-
-    # -- maintenance ----------------------------------------------------------
-
-    def _swap_partitions(
-        self,
-        base: dict,
-        tmp_data: str,
-        touched_buckets: list[int],
-        tmp_doclen: str,
-        touched_dbuckets: list[int],
-    ) -> None:
-        """Publish a partition-selective rewrite: the rewritten bucket/
-        dbucket directories come from the temp writes, every untouched
-        directory is hardlinked from the base generation
-        (``GenStore._swap``)."""
-        self._swap(
-            base, (tmp_data, tmp_doclen), (touched_buckets, touched_dbuckets)
-        )
-
-    def upsert(self, docs: DataFrame, stamp: int = 0) -> None:
-        """Replace-or-insert documents by id, rewriting ONLY the touched
-        partitions: the token buckets the new postings land in, plus the
-        buckets currently holding older versions of the same doc ids
-        (found with one semi-join scan — the pq_store contract), plus
-        the doc ids' dbucket directories in the doclen sidecar (dbucket
-        is a pure function of doc_id, so old and new rows share it).
-        Committed epochs are folded first (``compact``) so the rewrite
-        has a single base generation to link from, and the rewrite reads
-        THAT generation only — an epoch a racing stream commits after
-        the fold stays a separate live leg; a racing MAINTAINER is
-        refused by the CAS publish (ConcurrentWriteError). ``stamp``
-        rides each upserted doc's sidecar row as its mutation stamp
-        (paired maintenance passes its sequence number so
-        ``reconcile_stores`` can see a half-landed paired upsert);
-        untouched docs keep theirs."""
-        base = self._base()
-        base_data, base_doclen = self._gen_dirs(base["gen"])
-        live, live_dl = self._base_legs(base)
-        enc = self._encode(docs).persist()
-        ids = docs.select(F.col(self.id_col).alias("doc_id")).distinct()
-        new_dl = self._doclen(docs, stamp=stamp)
-        # ONE job finds every touched partition of both legs — the buckets
-        # the new postings land in, the buckets holding older versions of
-        # the same ids, and the ids' dbucket dirs. Three narrow distinct
-        # scans union under one action so the verb pays one scheduling
-        # round trip instead of three (the first leg also materializes
-        # enc's cache for the rewrite below).
-        probe = (
-            enc.select(F.col("bucket").alias("part"), F.lit("t").alias("leg"))
-            .unionByName(
-                live.join(ids, "doc_id", "left_semi").select(
-                    F.col("bucket").alias("part"), F.lit("t").alias("leg")
-                )
-            )
-            .unionByName(
-                new_dl.select(
-                    F.col("dbucket").alias("part"), F.lit("d").alias("leg")
-                )
-            )
-            .distinct()
-            .collect()
-        )
-        buckets = sorted({int(r["part"]) for r in probe if r["leg"] == "t"})
-        dbuckets = sorted({int(r["part"]) for r in probe if r["leg"] == "d"})
-
-        rewritten = (
-            live
-            .filter(F.col("bucket").isin(buckets))
-            .join(ids, "doc_id", "left_anti")
-            .unionByName(enc)
-            .select("token", "doc_id", "pos", "bucket")
-        )
-        tmp_data = base_data + ".upsert"
-        dl_rewritten = (
-            live_dl
-            .filter(F.col("dbucket").isin(dbuckets))
-            .join(ids, "doc_id", "left_anti")
-            .unionByName(new_dl)
-            .select("doc_id", "dlen", "mstamp", "dbucket")
-        )
-        tmp_doclen = base_doclen + ".upsert"
-        self._write_legs([rewritten, dl_rewritten], [tmp_data, tmp_doclen])
-        enc.unpersist()
-        self._swap_partitions(base, tmp_data, buckets, tmp_doclen, dbuckets)
-
-    def delete(self, ids: DataFrame) -> None:
-        """Remove documents by id (a one-column frame), rewriting only
-        the token buckets that hold their postings and the dbucket
-        directories that hold their doclen rows (epochs fold first, as in
-        ``upsert``)."""
-        base = self._base()
-        base_data, base_doclen = self._gen_dirs(base["gen"])
-        live, live_dl = self._base_legs(base)
-        vids = ids.toDF("doc_id").distinct()
-        # touched partitions of BOTH legs in ONE job: the buckets holding
-        # the ids' postings and the dbucket dirs holding their doclen rows
-        # (both from EXISTING rows — the semi-join device — so deleting
-        # already-absent ids is a true no-op: hashing the requested ids
-        # would rewrite (and de-hardlink) dirs that hold nothing)
-        probe = (
-            live.join(vids, "doc_id", "left_semi")
-            .select(F.col("bucket").alias("part"), F.lit("t").alias("leg"))
-            .unionByName(
-                live_dl.join(vids, "doc_id", "left_semi").select(
-                    F.col("dbucket").alias("part"), F.lit("d").alias("leg")
-                )
-            )
-            .distinct()
-            .collect()
-        )
-        buckets = sorted({int(r["part"]) for r in probe if r["leg"] == "t"})
-        dbuckets = sorted({int(r["part"]) for r in probe if r["leg"] == "d"})
-        if not buckets and not dbuckets:
-            return
-
-        kept = (
-            live
-            .filter(F.col("bucket").isin(buckets))
-            .join(vids, "doc_id", "left_anti")
-            .select("token", "doc_id", "pos", "bucket")
-        )
-        tmp_data = base_data + ".delete"
-        dl_kept = (
-            live_dl
-            .filter(F.col("dbucket").isin(dbuckets))
-            .join(vids, "doc_id", "left_anti")
-            .select("doc_id", "dlen", "mstamp", "dbucket")
-        )
-        tmp_doclen = base_doclen + ".delete"
-        self._write_legs([kept, dl_kept], [tmp_data, tmp_doclen])
-        self._swap_partitions(base, tmp_data, buckets, tmp_doclen, dbuckets)
+    def _leg_frames(
+        self, docs: DataFrame, stamp: int = 0
+    ) -> tuple[DataFrame, DataFrame]:
+        return self._encode(docs), self._doclen(docs, stamp)
 
     # -- read -----------------------------------------------------------------
 

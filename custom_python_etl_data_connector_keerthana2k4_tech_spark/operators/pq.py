@@ -142,24 +142,21 @@ def select_probes(qrows, centroids, nprobe: int) -> list[list[int]]:
     op order. The NumPy fast path vectorizes over (Q, n_lists) while
     keeping the fold order by accumulating one dimension at a time —
     ``acc += t*t`` elementwise is the same IEEE add sequence per cell as
-    the scalar loop — so it is bit-identical to the pure-Python fallback
-    (pinned in tests) while driver time stays flat as n_lists grows."""
+    the scalar loop — so it is bit-identical to the pure-Python reference
+    ``_select_probes_python`` (pinned in tests) while driver time stays
+    flat as n_lists grows."""
+    import numpy as np
+
     if not qrows or nprobe <= 0:
         return [[] for _ in qrows]
-    try:
-        import numpy as np
-    except ImportError:  # pragma: no cover - numpy is baked into the image
-        np = None
-    if np is not None:
-        q = np.array([[float(x) for x in qr["ev"]] for qr in qrows], dtype=np.float64)
-        c = np.array([[float(x) for x in cc] for cc in centroids], dtype=np.float64)
-        acc = np.zeros((q.shape[0], c.shape[0]), dtype=np.float64)
-        for d in range(c.shape[1]):
-            t = q[:, d, None] - c[None, :, d]
-            acc += t * t
-        order = np.argsort(acc, axis=1, kind="stable")  # stable = lower index wins ties
-        return [[int(j) for j in row[:nprobe]] for row in order]
-    return _select_probes_python(qrows, centroids, nprobe)
+    q = np.array([[float(x) for x in qr["ev"]] for qr in qrows], dtype=np.float64)
+    c = np.array([[float(x) for x in cc] for cc in centroids], dtype=np.float64)
+    acc = np.zeros((q.shape[0], c.shape[0]), dtype=np.float64)
+    for d in range(c.shape[1]):
+        t = q[:, d, None] - c[None, :, d]
+        acc += t * t
+    order = np.argsort(acc, axis=1, kind="stable")  # stable = lower index wins ties
+    return [[int(j) for j in row[:nprobe]] for row in order]
 
 
 def _select_probes_python(qrows, centroids, nprobe: int) -> list[list[int]]:
@@ -368,13 +365,8 @@ def _cheap_rowcount(df: DataFrame) -> int | None:
     """Catalyst's optimized-plan row estimate — FREE (no Spark job).
     None when the plan carries no row count (typical without CBO
     statistics); callers must treat absence as unknown, not zero."""
-    try:
-        rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
-        if rc.isDefined():
-            return int(rc.get().longValue())
-    except Exception:  # py4j / API drift — an estimate is best-effort
-        return None
-    return None
+    rc = df._jdf.queryExecution().optimizedPlan().stats().rowCount()
+    return int(rc.get().longValue()) if rc.isDefined() else None
 
 
 def _default_n_salts(df: DataFrame, id_col: str) -> int:

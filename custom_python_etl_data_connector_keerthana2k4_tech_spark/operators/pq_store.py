@@ -36,9 +36,6 @@ surface at all (/root/reference/etl_connector.py, SURVEY §0).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -50,23 +47,17 @@ from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq impor
     _collect_queries,
     _sql_long_array,
     pq_fit_codebook,
+    select_probes,
     with_code_cols,
 )
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.functions.vectors import quantize
-
-def _select_probes(qrows, centroids, nprobe: int) -> list[list[int]]:
-    """Driver probe selection (literal mode): delegates to the shared
-    NumPy-vectorized left-fold (operators/pq.select_probes — bit-identical
-    to the scalar chain, ties toward the lower list index)."""
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import select_probes
-
-    return select_probes(qrows, centroids, nprobe)
 
 
 class IVFPQStore(GenStore):
     """A directory-backed IVF-PQ index with frozen parameters."""
 
     LEGS = (Leg("data", "codes", "cluster", stamped=True),)
+    KEY = "vid"
     _PTR_FILE = "_data_ptr"
     _PARAMS_FILE = "_ivfpq_params.json"
     # the pointer names the live generation by its dirname
@@ -76,16 +67,14 @@ class IVFPQStore(GenStore):
     # the shared verbs, bound in this class's own namespace so per-class
     # method wrappers (perfbench/spans.py) see every verb of the store
     append = GenStore.append
+    upsert = GenStore.upsert
+    delete = GenStore.delete
     compact = GenStore.compact
     vacuum = GenStore.vacuum
     reset_lineage = GenStore.reset_lineage
     streaming_append = GenStore.streaming_append
 
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-        with open(os.path.join(path, self._PARAMS_FILE)) as f:
-            p = json.load(f)
+    def _parse(self, p: dict) -> None:
         self.centroids: list[list[float]] = p["centroids"]
         self.codebook: list[list[list[int]]] = p["codebook"]
         self.m: int = p["m"]
@@ -93,7 +82,6 @@ class IVFPQStore(GenStore):
         self.vec_col: str = p["vec_col"]
         self.attr_cols: list[str] = p.get("attr_cols", [])
         self.sub: int = len(self.codebook[0][0])
-        self._schemas = (p.get("codes_schema"),)
 
     # -- lifecycle ----------------------------------------------------------
 
@@ -130,14 +118,6 @@ class IVFPQStore(GenStore):
             _, centroids = kmeans(df, vec_col, id_col, k=n_lists, iters=km_iters)
         if codebook is None:
             codebook = pq_fit_codebook(df, id_col, vec_col, m, k_centroids)
-        os.makedirs(path, exist_ok=True)
-        probe = cls.__new__(cls)
-        probe.spark, probe.path = spark, path
-        probe.centroids, probe.codebook, probe.m = centroids, codebook, m
-        probe.id_col, probe.vec_col = id_col, vec_col
-        probe.attr_cols = list(attr_cols or [])
-        probe.sub = len(codebook[0][0])
-        enc = probe._encode(df)
         params = {
             "centroids": centroids,
             "codebook": codebook,
@@ -145,9 +125,8 @@ class IVFPQStore(GenStore):
             "id_col": id_col,
             "vec_col": vec_col,
             "attr_cols": list(attr_cols or []),
-            "codes_schema": enc.schema.json(),
         }
-        return cls._create(spark, path, params, [enc])
+        return cls._create(spark, path, params, df)
 
     # -- encode / ingest ----------------------------------------------------
 
@@ -191,80 +170,8 @@ class IVFPQStore(GenStore):
             "cluster",
         )
 
-    def _leg_frames(self, batch: DataFrame) -> tuple[DataFrame]:
-        return (self._encode(batch),)
-
-    # -- maintenance --------------------------------------------------------
-
-    def _swap_lists(self, base: dict, tmp: str, clusters: list[int]) -> None:
-        """Publish a partition-selective rewrite (an upsert of 100 vectors
-        rewrites the handful of lists it touches, never the corpus): the
-        rewritten lists come from ``tmp``, every untouched list is
-        hardlinked from the base generation (``GenStore._swap``)."""
-        self._swap(base, (tmp,), (clusters,))
-
-    def upsert(self, batch: DataFrame, stamp: int = 0) -> None:
-        """Replace-or-insert vectors by id, rewriting ONLY the touched
-        lists: the lists the new encodings land in plus the lists that
-        currently hold older versions of the same ids. Committed
-        streaming epochs are folded first (``compact``) so the
-        partition-selective rewrite has a single base generation to
-        hardlink from. ``stamp`` rides each upserted row as its mutation
-        stamp (paired maintenance passes its sequence number so
-        ``reconcile_stores`` can see a half-landed paired upsert);
-        untouched rows keep theirs."""
-        base = self._base()
-        (live,) = self._base_legs(base)
-        enc = self._encode(batch, stamp=stamp).persist()
-        # ONE job finds every touched list: the lists the new encodings
-        # land in plus the lists holding older versions of the same ids
-        # (two narrow distinct scans unioned under one action — one
-        # scheduling round trip, and the first leg materializes enc's
-        # cache for the rewrite below)
-        clusters = sorted(
-            int(r["cluster"])
-            for r in enc.select("cluster")
-            .unionByName(
-                live.join(enc.select("vid"), "vid", "left_semi").select("cluster")
-            )
-            .distinct()
-            .collect()
-        )
-        rewritten = (
-            live
-            .filter(F.col("cluster").isin(clusters))
-            .join(enc.select("vid"), "vid", "left_anti")
-            .unionByName(enc.filter(F.col("cluster").isin(clusters)))
-        )
-        tmp = self._gen_dirs(base["gen"])[0] + ".upsert"
-        rewritten.write.mode("overwrite").partitionBy("cluster").parquet(tmp)
-        enc.unpersist()
-        self._swap_lists(base, tmp, clusters)
-
-    def delete(self, ids: DataFrame) -> None:
-        """Remove vectors by id (a one-column frame of ids), rewriting
-        only the lists that hold them (epochs fold first, as in
-        ``upsert``)."""
-        base = self._base()
-        (live,) = self._base_legs(base)
-        vids = ids.toDF("vid")
-        homes = (
-            live
-            .join(vids, "vid", "left_semi")
-            .select("cluster")
-            .distinct()
-        )
-        clusters = sorted(int(r["cluster"]) for r in homes.collect())
-        if not clusters:
-            return
-        kept = (
-            live
-            .filter(F.col("cluster").isin(clusters))
-            .join(vids, "vid", "left_anti")
-        )
-        tmp = self._gen_dirs(base["gen"])[0] + ".delete"
-        kept.write.mode("overwrite").partitionBy("cluster").parquet(tmp)
-        self._swap_lists(base, tmp, clusters)
+    def _leg_frames(self, batch: DataFrame, stamp: int = 0) -> tuple[DataFrame]:
+        return (self._encode(batch, stamp),)
 
     # -- query --------------------------------------------------------------
 
@@ -429,7 +336,7 @@ class IVFPQStore(GenStore):
 
         qrows = _collect_queries(queries, self.id_col, self.vec_col)
         adc_tables = _adc_tables(qrows, self.codebook, self.m, self.sub)
-        probes = _select_probes(qrows, self.centroids, nprobe)
+        probes = select_probes(qrows, self.centroids, nprobe)
 
         parts = [
             self._query_batch(qb, tb, pb, topk, where, read_pruned)

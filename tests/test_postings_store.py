@@ -323,7 +323,9 @@ def test_delete_equals_fresh_build_and_is_idempotent(spark, sf_dir, tmp_path):
     assert _rows(store.doclen_reader()) == _rows(fresh.doclen_reader())
     assert _bm25_rows(store) == _bm25_rows(fresh)
     # deleting already-absent ids is a no-op
+    gen = store.current_gen()
     store.delete(victims)
+    assert store.current_gen() == gen
     assert _bm25_rows(store) == _bm25_rows(fresh)
 
 

@@ -251,7 +251,9 @@ def test_delete_removes_ids_rewriting_touched_lists_only(spark, parts, tmp_path)
     expected_src = e.join(victims, "vec_id", "left_anti")
     assert _rows(store.reader()) == _rows(store._encode(expected_src))
     # deleting already-absent ids is a no-op
+    gen = store.current_gen()
     store.delete(victims)
+    assert store.current_gen() == gen
     assert _rows(store.reader()) == _rows(store._encode(expected_src))
 
 

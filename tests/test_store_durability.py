@@ -227,13 +227,13 @@ def test_postings_concurrent_maintainers_raise_not_clobber(
         "text", F.concat(F.lit("table sort "), F.col("text"))
     )
     racer = PostingsStore(spark, store.path)
-    orig = store._swap_partitions
+    orig = store._swap
 
     def interposed(*a, **k):
         racer.compact()  # the other maintainer publishes first
         return orig(*a, **k)
 
-    store._swap_partitions = interposed
+    store._swap = interposed
     with pytest.raises(ConcurrentWriteError):
         store.upsert(edits)
     # the winner's generation is live and fully readable
@@ -249,17 +249,47 @@ def test_pq_concurrent_maintainers_raise_not_clobber(spark, sf_dir, tmp_path):
         "embedding", F.transform("embedding", lambda x: -x)
     )
     racer = IVFPQStore(spark, store.path)
-    orig = store._swap_lists
+    orig = store._swap
 
     def interposed(*a, **k):
         racer.compact()
         return orig(*a, **k)
 
-    store._swap_lists = interposed
+    store._swap = interposed
     with pytest.raises(ConcurrentWriteError):
         store.upsert(moved)
     fresh = IVFPQStore(spark, store.path)
     assert _rows(fresh.reader()) == _rows(fresh._encode(e))
+
+
+@pytest.mark.parametrize("kind", ["postings", "pq"])
+def test_failed_upsert_write_raises_and_releases_cache(
+    spark, sf_dir, tmp_path, kind
+):
+    """A leg write that fails mid-upsert propagates, leaves the live
+    generation as it was, and releases the new leg frames the rewrite
+    cached (they would otherwise stay cached for the application)."""
+    if kind == "postings":
+        docs, store = _pstore(spark, sf_dir, tmp_path)
+        batch = docs.filter(F.col("doc_id") % 10 == 1)
+    else:
+        e = load(spark, sf_dir, "embeddings")
+        store = IVFPQStore.build(
+            spark, e, "vec_id", "embedding", str(tmp_path / "idx")
+        )
+        batch = e.filter(F.col("vec_id") < 5)
+    g0 = store.current_gen()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+
+    def failing_write(*a, **k):
+        raise RuntimeError("leg write failed")
+
+    store._write_legs = failing_write
+    with pytest.raises(RuntimeError, match="leg write failed"):
+        store.upsert(batch)
+    assert cache.numCachedEntries() <= before
+    assert store.current_gen() == g0
 
 
 # -- retained generations (time travel) -------------------------------------------

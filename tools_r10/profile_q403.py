@@ -12,14 +12,13 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import get_spark
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import get_spark, scratch_dir
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
 
 
@@ -65,13 +64,13 @@ def main() -> None:
         held_ids = e.filter(held).select(F.col("vec_id").alias("doc_id"))
         init_docs = docs.join(held_ids, "doc_id", "left_anti")
         init_vecs = e.filter(~held)
-        proot = tempfile.mkdtemp(prefix="prof403_p_") + "/ix"
-        vroot = tempfile.mkdtemp(prefix="prof403_v_") + "/ix"
+        proot = scratch_dir("prof403_p_") + "/ix"
+        vroot = scratch_dir("prof403_v_") + "/ix"
         payload = docs.join(held_ids, "doc_id", "left_semi").join(
             e.filter(held).select("vec_id", "embedding"),
             F.col("doc_id") == F.col("vec_id"),
         )
-        src = tempfile.mkdtemp(prefix="prof403_src_")
+        src = scratch_dir("prof403_src_")
 
         def build_ps():
             return PostingsStore.build(
@@ -100,7 +99,7 @@ def main() -> None:
             mark("vs.build")
             write_payload()
             mark("payload.write")
-        ckpt = tempfile.mkdtemp(prefix="prof403_ckpt_") + "/ckpt"
+        ckpt = scratch_dir("prof403_ckpt_") + "/ckpt"
         stream = spark.readStream.schema(payload.schema).parquet(src)
         paired_streaming_append(ps, vs, stream, ckpt).awaitTermination()
         mark("stream")

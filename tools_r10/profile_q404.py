@@ -11,14 +11,13 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import get_spark
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import get_spark, scratch_dir
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
 
 
@@ -64,8 +63,8 @@ def main() -> None:
         base_docs = docs.join(
             e.select(F.col("vec_id").alias("doc_id")), "doc_id", "left_semi"
         )
-        proot = tempfile.mkdtemp(prefix="prof404_p_") + "/ix"
-        vroot = tempfile.mkdtemp(prefix="prof404_v_") + "/ix"
+        proot = scratch_dir("prof404_p_") + "/ix"
+        vroot = scratch_dir("prof404_v_") + "/ix"
 
         def build_ps():
             return PostingsStore.build(

@@ -13,7 +13,7 @@ Normalization strips everything that legitimately varies run to run —
 expression ids (#123), plan ids, subquery ids, temp directory paths,
 createDataFrame RDD ids, AQE result-id counters — so a non-empty diff
 means the PLAN changed (new Exchange, join strategy flip, lost
-PushedFilters), not that tempfile.mkdtemp returned a new name.
+PushedFilters), not that a scratch directory got a new name.
 
 The summary counts, per query: Exchange, BroadcastExchange,
 SortMergeJoin, ShuffledHashJoin, BroadcastHashJoin, BroadcastNestedLoop,
@@ -118,9 +118,9 @@ def main() -> None:
         return
     if mode != "diff":
         raise SystemExit(f"unknown mode {mode!r} (snapshot|diff)")
-    import tempfile
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import scratch_dir
 
-    tmp = tempfile.mkdtemp(prefix="plan_sweep_diff_")
+    tmp = scratch_dir("plan_sweep_diff_")
     summary = dump_all(tmp)
     with open(SUMMARY) as f:
         old = json.load(f)
