@@ -48,18 +48,6 @@ def cosine_from_int(dot: Column, norm_sq_a: Column, norm_sq_b: Column) -> Column
     )
 
 
-def cosine_double(a: Column | str, b: Column | str) -> Column:
-    """Plain double cosine (engine-internal use; NOT cross-engine stable)."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    da = F.transform(ca, lambda x: x.cast("double"))
-    db = F.transform(cb, lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(da, db, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
-    na = F.aggregate(da, F.lit(0.0), lambda s, v: s + v * v)
-    nb = F.aggregate(db, F.lit(0.0), lambda s, v: s + v * v)
-    return dot / (F.sqrt(na) * F.sqrt(nb))
-
-
 # --- DuckDB SQL mirrors -----------------------------------------------------
 
 

@@ -17,7 +17,6 @@ __all__ = [
     "extract_features",
     "sample_frames",
 ]
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.multimodal.ops import resize_assets  # noqa: E402,F401
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.multimodal.ops import (  # noqa: E402,F401
     ahash_assets,
     phash_neardup_pairs,

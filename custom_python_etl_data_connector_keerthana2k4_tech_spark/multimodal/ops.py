@@ -148,40 +148,6 @@ def _wav_mean_abs(raw: bytes) -> tuple[int, int, int]:
     return rate, n, mean
 
 
-def _bmp_rgb_rows(raw: bytes) -> tuple[int, int, list[list[tuple[int, int, int]]]]:
-    """(width, height, RGB rows in visual order) for the formats
-    ``_bmp_gray_pixels`` accepts — the full-color sibling the resize
-    stage needs."""
-    if len(raw) < 54 or raw[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    data_off = struct.unpack_from("<I", raw, 10)[0]
-    w, h_raw = struct.unpack_from("<ii", raw, 18)
-    bpp = struct.unpack_from("<H", raw, 28)[0]
-    compression = struct.unpack_from("<I", raw, 30)[0]
-    if compression != 0 or bpp not in (24, 32) or w <= 0 or h_raw == 0:
-        raise ValueError(
-            f"unsupported BMP variant (bpp={bpp}, compression={compression})"
-        )
-    top_down = h_raw < 0
-    h = abs(h_raw)
-    bytes_pp = bpp // 8
-    stride = (w * bytes_pp + 3) // 4 * 4
-    if data_off + stride * h > len(raw):
-        raise ValueError("truncated BMP payload")
-    rows = []
-    for r in range(h):
-        src_row = r if top_down else h - 1 - r
-        base = data_off + src_row * stride
-        rows.append(
-            [
-                (raw[base + c * bytes_pp + 2], raw[base + c * bytes_pp + 1],
-                 raw[base + c * bytes_pp])
-                for c in range(w)
-            ]
-        )
-    return w, h, rows
-
-
 def _bmp_encode(rows: list[list[tuple[int, int, int]]]) -> bytes:
     """Minimal 24-bpp bottom-up BMP from visual-order RGB rows."""
     h, w = len(rows), len(rows[0])
@@ -196,18 +162,6 @@ def _bmp_encode(rows: list[list[tuple[int, int, int]]]) -> bytes:
         "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0
     )
     return header + dib + bytes(body)
-
-
-def _bmp_resize(raw: bytes, width: int, height: int) -> bytes:
-    """Nearest-neighbor BMP resample, stdlib only: source pixel for
-    target (x, y) is (x * w_src // width, y * h_src // height) — the
-    deterministic integer mapping, re-encoded as 24-bpp BMP."""
-    w, h, rows = _bmp_rgb_rows(raw)
-    out = [
-        [rows[y * h // height][x * w // width] for x in range(width)]
-        for y in range(height)
-    ]
-    return _bmp_encode(out)
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -282,9 +236,9 @@ def _png_rgb_rows(raw: bytes) -> tuple[int, int, list[list[tuple[int, int, int]]
     (round 7 — each of the seven passes unfilters independently and
     scatters onto the (x0 + i*dx, y0 + j*dy) grid). Returns (width,
     height, RGB rows in visual order); gray samples replicate to
-    (g, g, g); alpha is ignored (hash/resize operate on color). All five
-    scanline filters (None/Sub/Up/Average/Paeth) per RFC 2083. Raises
-    ValueError on anything that is not such a PNG."""
+    (g, g, g); alpha is ignored. All five scanline filters
+    (None/Sub/Up/Average/Paeth) per RFC 2083. Raises ValueError on
+    anything that is not such a PNG."""
     import zlib
 
     if not raw.startswith(_PNG_SIG):
@@ -391,18 +345,6 @@ def _png_encode(
         + chunk(b"IDAT", zlib.compress(bytes(body)))
         + chunk(b"IEND", b"")
     )
-
-
-def _png_resize(raw: bytes, width: int, height: int) -> bytes:
-    """Nearest-neighbor PNG resample, stdlib only — the same
-    deterministic integer mapping as ``_bmp_resize``, re-encoded as
-    8-bit RGB PNG."""
-    w, h, rows = _png_rgb_rows(raw)
-    out = [
-        [rows[y * h // height][x * w // width] for x in range(width)]
-        for y in range(height)
-    ]
-    return _png_encode(out)
 
 
 _GIF_SIGS = (b"GIF87a", b"GIF89a")
@@ -607,17 +549,6 @@ def _gif_encode(
         out += chunk
     out += b"\x00\x3b"
     return bytes(out)
-
-
-def _gif_resize(raw: bytes, width: int, height: int) -> bytes:
-    """Nearest-neighbor GIF resample, stdlib only — the deterministic
-    integer mapping of ``_bmp_resize``, re-encoded as GIF89a."""
-    w, h, rows = _gif_rgb_rows(raw)
-    out = [
-        [rows[y * h // height][x * w // width] for x in range(width)]
-        for y in range(height)
-    ]
-    return _gif_encode(out)
 
 
 def _decode_payload(payload: bytes | None) -> tuple[int, int, int] | None:
@@ -886,66 +817,3 @@ def sample_frames(assets: DataFrame, every_n: int = 10) -> DataFrame:
             "meta",
         )
     )
-
-
-def resize_assets(assets: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize stage: re-encode each image/video payload to ``width x height``
-    and update the metadata struct to match.
-
-    Real path: PIL ``Image.resize`` (gated — not in this container). Fake
-    path: rewrite the SGMM header dimensions deterministically, leaving the
-    content bytes intact. Unknown formats surface per-record in
-    ``resize_error`` (dead-letter semantics) rather than failing the job.
-    Audio assets pass through untouched (resize is meaningless for them).
-    """
-    out_schema = T.StructType(
-        list(ASSET_SCHEMA.fields) + [T.StructField("resize_error", T.StringType(), True)]
-    )
-    header = _MAGIC + f"{width:05d}|{height:05d}|".encode()
-
-    def _resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, metas, errs = [], [], []
-            for payload, modality, meta in zip(
-                pdf["payload"], pdf["modality"], pdf["meta"]
-            ):
-                if payload is None or modality == "audio":
-                    payloads.append(payload), metas.append(meta), errs.append(None)
-                    continue
-                raw = bytes(payload)
-                if (
-                    raw[:2] == b"BM"
-                    or raw.startswith(_PNG_SIG)
-                    or raw[:6] in _GIF_SIGS
-                ):
-                    # REAL resize (stdlib nearest-neighbor resample), no
-                    # optional dependency; the output stays in the input's
-                    # container format
-                    resizer = (
-                        _bmp_resize
-                        if raw[:2] == b"BM"
-                        else _png_resize if raw.startswith(_PNG_SIG) else _gif_resize
-                    )
-                    try:
-                        new_meta = dict(meta)
-                        new_meta["width"], new_meta["height"] = width, height
-                        payloads.append(resizer(raw, width, height))
-                        metas.append(new_meta), errs.append(None)
-                    except ValueError as exc:
-                        payloads.append(payload), metas.append(meta)
-                        errs.append(str(exc)[:120])
-                    continue
-                if not raw.startswith(_MAGIC):
-                    payloads.append(payload), metas.append(meta)
-                    errs.append(
-                        "real media resizing requires PIL/ffmpeg (not in this "
-                        "container) for formats beyond BMP/PNG/GIF/SGMM"
-                    )
-                    continue
-                body = raw[len(_MAGIC) + 12 :]  # strip old header, keep content
-                new_meta = dict(meta)
-                new_meta["width"], new_meta["height"] = width, height
-                payloads.append(header + body), metas.append(new_meta), errs.append(None)
-            yield pdf.assign(payload=payloads, meta=metas, resize_error=errs)
-
-    return assets.mapInPandas(_resize_batches, schema=out_schema)

@@ -12,9 +12,6 @@ whole training loop — the way production BPE actually scales:
    apply the merge to each word's symbol sequence with a left-to-right
    fold (``F.aggregate`` — JVM-side, no UDF). ``localCheckpoint`` after
    each iteration truncates the growing expression lineage.
-3. Encoding joins words against the learned per-word segmentation
-   (broadcast dictionary probe); out-of-vocabulary words fall back to
-   character symbols — the honest cold-dictionary behavior.
 
 The merge sequence is bit-deterministic (exact integer pair counts,
 total tie order), pinned against a pure-Python reference implementation
@@ -115,39 +112,3 @@ def train_bpe(
             "seg", _apply_merge(F.col("seg"), a, b)
         ).localCheckpoint()
     return merges, dictionary
-
-
-def encode_with_bpe(
-    docs: DataFrame,
-    text_col: str,
-    dictionary: DataFrame,
-    id_cols: list[str] | None = None,
-    out: str = "bpe_tokens",
-) -> DataFrame:
-    """Tokenize documents with a trained dictionary: per-word broadcast
-    probe into the learned segmentation, character fallback for OOV words,
-    order restored by in-word position — never a global sort."""
-    ids = id_cols or []
-    toks = docs.select(
-        *ids, F.posexplode(words(text_col)).alias("__pos", "word")
-    )
-    seg_dict = F.broadcast(dictionary.select("word", "seg"))
-    enc = (
-        toks.join(seg_dict, "word", "left")
-        .withColumn(
-            "__seg",
-            F.coalesce(F.col("seg"), _char_split(F.col("word"))),
-        )
-        .groupBy(*ids)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("__pos", "__seg"))
-                    ),
-                    lambda s: s["__seg"],
-                )
-            ).alias(out)
-        )
-    )
-    return enc

@@ -1,6 +1,5 @@
 """Count-Min sketch (Cormode & Muthukrishnan 2005) as a reusable
-operator family: cell construction, probe estimation, cross-shard merge,
-and a replay-safe streaming accumulation sink.
+operator family: cell construction and probe estimation.
 
 The sketch is a fixed d x w grid of counters; every view of it here is a
 ``(rid, bucket, cell)`` DataFrame, which makes the two properties that
@@ -12,13 +11,6 @@ matter at 100 TB first-class:
 - **one-sided**: estimates only over-count (min over d rows of colliding
   mass), so screening decisions made on the sketch are conservative.
 
-Streaming accumulation reuses the engine's exactly-once-without-
-transactions mechanism (streaming/ops.near_dedup_sink, operators/
-versioned.py): per-micro-batch cells land in a ``__batch``-partitioned
-store with dynamic partition overwrite, so a replayed batch overwrites
-its own partition byte-for-byte instead of double-counting — summing
-reads stay correct under crash-replay.
-
 Token hash = the engine's polynomial rolling fingerprint (functions/
 text.py) with affine row permutations mod 1e9+7 — identical in DuckDB,
 which is how q356 keeps the whole construction oracle-paired.
@@ -29,7 +21,7 @@ inventory: /root/reference/etl_connector.py:53-242, SURVEY §2.1-2.2).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.functions.text import rolling_fingerprint
@@ -66,14 +58,6 @@ def cm_cells(occurrences: DataFrame, token_col: str = "token") -> DataFrame:
     )
 
 
-def cm_merge(*cells: DataFrame) -> DataFrame:
-    """Merge sketches by cell-wise sum (associative, commutative)."""
-    out = cells[0]
-    for c in cells[1:]:
-        out = out.unionAll(c)
-    return out.groupBy("rid", "bucket").agg(F.sum("cell").cast("long").alias("cell"))
-
-
 def cm_estimate(
     cells: DataFrame, probes: DataFrame, token_col: str = "token"
 ) -> DataFrame:
@@ -84,46 +68,4 @@ def cm_estimate(
         lf.join(F.broadcast(cells), ["rid", "bucket"], "left")
         .groupBy(token_col)
         .agg(F.min(F.coalesce(F.col("cell"), F.lit(0))).cast("long").alias("est_cnt"))
-    )
-
-
-def countmin_sink(sketch_path: str, token_col: str = "token"):
-    """foreachBatch callable: accumulate the stream's sketch replay-safely.
-
-    Per micro-batch: compute the batch's cells and overwrite its own
-    ``__batch`` partition (dynamic partition overwrite). A re-delivered
-    batch recomputes identical cells and overwrites byte-for-byte, so
-    ``read_cm_sketch``'s sum never double-counts."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            cm_cells(batch_df, token_col)
-            .withColumn("__batch", F.lit(batch_id))
-            .write.partitionBy("__batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(sketch_path)
-        )
-
-    return _sink
-
-
-def foreach_batch_countmin(
-    stream_df: DataFrame, sketch_path: str, checkpoint: str, token_col: str = "token"
-):
-    """Streaming sketch accumulation: writeStream wrapper over
-    ``countmin_sink`` (same shape as foreach_batch_near_dedup)."""
-    return (
-        stream_df.writeStream.foreachBatch(countmin_sink(sketch_path, token_col))
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
-
-
-def read_cm_sketch(spark: SparkSession, sketch_path: str) -> DataFrame:
-    """The accumulated sketch: cell-wise sum over all batch partitions."""
-    return (
-        spark.read.parquet(sketch_path)
-        .groupBy("rid", "bucket")
-        .agg(F.sum("cell").cast("long").alias("cell"))
     )

@@ -1,6 +1,6 @@
 """Deduplication operator family (north-star ops, SURVEY §2.3):
 
-- exact dedup by key / by content fingerprint (hash-groupBy)
+- exact dedup by content fingerprint (hash-groupBy)
 - exact n-gram Jaccard near-dup pairs (canonical-set reduction + adaptive
   candidate generation: bitmap kernel or prefix filtering — scale path)
 - MinHash LSH near-dup pairs (native, seeded, exact-verified)
@@ -43,12 +43,6 @@ from custom_python_etl_data_connector_keerthana2k4_tech_spark.functions.text imp
 #: size-banded join quadratic-in-reps affordable.
 _BITMAP_MAX_VOCAB = 4096
 _BITMAP_MAX_REPS = 200_000
-
-
-def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """Exact dedup by columns (hash-groupBy keep-any; deterministic variant
-    is dedup_last_write_wins in operators/upsert.py)."""
-    return df.dropDuplicates(subset)
 
 
 def content_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -834,95 +828,6 @@ def near_dedup(
     )
 
 
-def incremental_near_dedup(
-    batch: DataFrame,
-    store: DataFrame | None,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.9,
-) -> tuple[DataFrame, DataFrame]:
-    """Append-only incremental near-dedup: admit from ``batch`` only the
-    documents whose near-dup cluster touches NOTHING already in ``store``,
-    then return (kept_batch, updated_store = store ∪ kept_batch).
-
-    This is the production shape of corpus dedup: the corpus grows batch by
-    batch, the store is immutable (already-admitted documents are never
-    revisited), and each batch pays similarity mining against store ∪ batch
-    — not a full-corpus re-clustering. Semantics: a batch cluster that is
-    connected (at ``threshold``, transitively within the batch) to any
-    store document is dropped entirely; surviving clusters admit their
-    min-id representative, exactly like ``near_dedup``. Documented
-    divergences from full-corpus re-clustering (both inherent to ANY
-    append-only store that keeps representatives only): (a) bridges — a
-    batch document near-dup to two store representatives links them in a
-    full re-clustering but cannot retroactively merge the store; (b)
-    dropped-member links — a later document whose only near-dup was a
-    non-representative member of an earlier cluster is admitted, because
-    that member is no longer in the store (measured: 157 vs 150 kept on
-    the sf0.01 fixture at threshold 0.8). What IS guaranteed: no two
-    admitted documents are within threshold of each other, and every
-    dropped document was connected to an admitted-or-seen one — tests
-    pin full equivalence on chain-free data and these invariants in
-    general. Systems needing full recall persist member signatures too
-    (a store-side switch, same plan shape).
-
-    Scale shape: one ``minhash_pairs`` run over store ∪ batch (banding is
-    sub-quadratic). This variant re-shingles the store each batch; the
-    production path is ``incremental_near_dedup_sigs`` below, which reads
-    the store side from a persisted ``minhash_signatures`` table (same
-    admit/reject output, pinned by tests) and shingles only the batch. One
-    connected-components pass over the PAIR graph restricted to edges
-    touching the batch, and set algebra on id frames.
-    """
-    store_ids = (
-        store.select(F.col(id_col).alias("sid")).distinct()
-        if store is not None
-        else None
-    )
-    if store_ids is None:
-        kept = near_dedup(batch, id_col, text_col, threshold=threshold)
-        return kept, kept
-    union = store.select(id_col, text_col).unionByName(
-        batch.select(id_col, text_col)
-    )
-    pairs = minhash_pairs(union, id_col, text_col, threshold=threshold)
-    batch_ids = batch.select(F.col(id_col).alias("bid")).distinct()
-    # edges touching at least one batch doc (store-store edges are frozen)
-    be = (
-        pairs.join(batch_ids, pairs.id_a == F.col("bid"), "left_semi")
-        .unionByName(pairs.join(batch_ids, pairs.id_b == F.col("bid"), "left_semi"))
-        .distinct()
-    )
-    if be.isEmpty():
-        kept = batch
-    else:
-        comp = connected_components(be.select("id_a", "id_b"))
-        # clusters containing any store doc are contaminated
-        bad = (
-            comp.join(store_ids, comp.node == F.col("sid"), "left_semi")
-            .select("component")
-            .distinct()
-        )
-        labeled = comp.join(F.broadcast(bad), "component", "left_anti")
-        # survivors: batch docs not in the pair graph at all, plus min-id
-        # reps of clean all-batch clusters
-        clean_reps = labeled.groupBy("component").agg(
-            F.min("node").alias("keep_id")
-        )
-        in_graph = comp.select(F.col("node").alias("gid")).distinct()
-        isolated = batch_ids.join(
-            in_graph, F.col("bid") == F.col("gid"), "left_anti"
-        ).select(F.col("bid").alias("keep_id"))
-        keep_ids = clean_reps.select("keep_id").unionByName(isolated).distinct()
-        kept = batch.join(
-            keep_ids, batch[id_col] == F.col("keep_id"), "left_semi"
-        )
-    updated = store.select(id_col, text_col).unionByName(
-        kept.select(id_col, text_col)
-    )
-    return kept, updated
-
-
 # ---------------------------------------------------------------------------
 # Persisted-signature incremental near-dedup
 # ---------------------------------------------------------------------------
@@ -977,11 +882,16 @@ def incremental_near_dedup_sigs(
     rows_per_band: int = 2,
     seed: int = 42,
 ) -> tuple[DataFrame, DataFrame]:
-    """``incremental_near_dedup`` against a PERSISTED signature store:
-    same admit/reject output (tests pin equality), but the store side is
-    the ``minhash_signatures`` table — only the batch is shingled/hashed;
-    stored documents contribute their precomputed band keys to the
-    candidate join and their stored shingle sets to exact verification.
+    """Append-only incremental near-dedup against a PERSISTED signature
+    store: admit from ``batch`` only the documents whose near-dup cluster
+    (at ``threshold``, transitively within the batch) touches NOTHING
+    already in the store; surviving clusters admit their min-id
+    representative, exactly like ``near_dedup`` (tests pin equality with
+    a full-corpus ``near_dedup`` on a bridge-free fixture). The store
+    side is the ``minhash_signatures`` table — only the batch is
+    shingled/hashed; stored documents contribute their precomputed band
+    keys to the candidate join and their stored shingle sets to exact
+    verification.
 
     Returns (kept_batch, updated_sig_store = sig_store ∪ signatures of
     kept batch docs). The signature table is append-only, mirroring the
@@ -1006,7 +916,7 @@ def incremental_near_dedup_sigs(
     batch_fps = sig_batch.select("fp").distinct()
 
     # candidates restricted to pairs touching >= 1 batch set — store-store
-    # edges are frozen by construction, exactly like incremental_near_dedup
+    # edges are frozen by construction (admitted documents are never revisited)
     raw_cand = (
         bands.alias("a")
         .join(bands.alias("b"), ["bd", "bkey"])
@@ -1103,39 +1013,6 @@ def source_minhash_signatures(
         lf.select("source", "p", ((a_p * F.col("rh") + b_p) % _SRC_MH_P).alias("h"))
         .groupBy("source", "p")
         .agg(F.min("h").alias("mh"))
-    )
-
-
-def source_signature_sink(
-    sig_path: str, source_col: str = "source", text_col: str = "text"
-):
-    """foreachBatch callable accumulating per-source signatures
-    replay-safely: each micro-batch's signatures land in their own
-    ``__batch`` partition with dynamic overwrite (a re-delivered batch
-    overwrites byte-for-byte — the countmin_sink mechanism), and
-    ``read_source_signatures`` min-merges across partitions, so crash
-    replay never perturbs the accumulated sketch."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            source_minhash_signatures(batch_df, source_col, text_col)
-            .withColumn("__batch", F.lit(batch_id))
-            .write.partitionBy("__batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(sig_path)
-        )
-
-    return _sink
-
-
-def read_source_signatures(spark, sig_path: str) -> DataFrame:
-    """The accumulated per-source signature: elementwise (min) merge of
-    every batch partition's signatures."""
-    return (
-        spark.read.parquet(sig_path)
-        .groupBy("source", "p")
-        .agg(F.min("mh").alias("mh"))
     )
 
 

@@ -10,8 +10,8 @@ OLD), ``update`` (key in both, any non-key column differing null-safely).
 Plan shape: ONE full outer join on the key columns — both sides shuffle by
 key once, comparisons are null-safe struct equality inside codegen, no
 per-column joins. At 100 TB this is the minimal-movement diff; if both
-snapshots are written bucketed by key (operators/bucketing.py), the
-Exchange disappears entirely.
+snapshots are written bucketed by key (``bucketBy`` on the key columns),
+the Exchange disappears entirely.
 """
 
 from __future__ import annotations

@@ -7,12 +7,12 @@ from constant-size state instead of exact distinct shuffles.
 
 This is deliberately NOT Spark's built-in approx_count_distinct (q16/q103
 cover that): the registers here are plain rows ``(groups..., bucket,
-reg)``, so the merge, the streaming accumulation, and the estimate are
-all inspectable DataFrame ops — and, because the hash is an affine map
-mod 1e9+7 and the rank is a fixed CASE ladder on integer bits, the whole
-construction is reproducible in DuckDB, making the q359 estimate
-oracle-paired (the scaled power sum is an exact integer before the one
-final division, so both engines see identical doubles).
+reg)``, so the registers and the estimate are inspectable DataFrame ops —
+and, because the hash is an affine map mod 1e9+7 and the rank is a fixed
+CASE ladder on integer bits, the whole construction is reproducible in
+DuckDB, making the q359 estimate oracle-paired (the scaled power sum is
+an exact integer before the one final division, so both engines see
+identical doubles).
 
 m = 128 registers (7 bucket bits), 24-bit rank domain; standard error
 1.04/sqrt(128) ~ 9%. The small-range linear-counting correction
@@ -25,7 +25,7 @@ inventory: /root/reference/etl_connector.py:53-242, SURVEY §2.1-2.2).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 HLL_BUCKET_BITS = 7
@@ -80,16 +80,6 @@ def hll_registers(
     )
 
 
-def hll_merge(*registers: DataFrame) -> DataFrame:
-    """Merge register tables by elementwise max (associative,
-    commutative, idempotent — safe under replay and re-merge)."""
-    out = registers[0]
-    for r in registers[1:]:
-        out = out.unionByName(r)
-    groups = [c for c in out.columns if c not in ("bucket", "reg")]
-    return out.groupBy(*groups, "bucket").agg(F.max("reg").cast("int").alias("reg"))
-
-
 def hll_estimate(registers: DataFrame, group_cols: list[str]) -> DataFrame:
     """Distinct-count estimate per group from the register table.
 
@@ -119,31 +109,3 @@ def hll_estimate(registers: DataFrame, group_cols: list[str]) -> DataFrame:
         F.lit(float(HLL_M)) * F.log(F.lit(float(HLL_M)) / F.col("n_zero").cast("double")),
     ).otherwise(raw)
     return total.select(*group_cols, est.alias("n_est"))
-
-
-def hll_sink(store_path: str, key_col: str, group_cols: list[str]):
-    """foreachBatch callable accumulating registers replay-safely: each
-    micro-batch's registers land in their own ``__batch`` partition with
-    dynamic overwrite; ``read_hll_store`` max-merges across partitions.
-    Max-merge is idempotent, so even double-counted deliveries could not
-    inflate the estimate — the partition overwrite makes replays exact
-    anyway (same mechanism as countmin_sink / source_signature_sink)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            hll_registers(batch_df, key_col, group_cols)
-            .withColumn("__batch", F.lit(batch_id))
-            .write.partitionBy("__batch")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(store_path)
-        )
-
-    return _sink
-
-
-def read_hll_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """The accumulated register table: elementwise max over batches."""
-    df = spark.read.parquet(store_path).drop("__batch")
-    groups = [c for c in df.columns if c not in ("bucket", "reg")]
-    return df.groupBy(*groups, "bucket").agg(F.max("reg").cast("int").alias("reg"))

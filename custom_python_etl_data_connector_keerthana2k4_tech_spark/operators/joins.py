@@ -1,54 +1,13 @@
-"""Skew-aware join utilities (SURVEY §4.2; the 100 TB checklist).
-
-AQE's skew-join handling (on by default in session.py) splits oversized
-shuffle partitions at runtime and is the first line of defense. This module
-covers the case AQE cannot fix: a *logical* hot key (one key = 30% of the
-table) joined against a non-broadcastable right side. ``salted_join``
-spreads each hot key over ``n_salts`` shuffle partitions by appending a
-deterministic salt to the left side and replicating the right side once per
-salt value — trading ``n_salts``x replication of the right side for an even
-shuffle. Use it when metrics show a straggler task on a known-skewed join
-key; results are exactly those of the plain join (pytest-asserted).
+"""Join utilities beyond equi-joins: ``asof_join`` (nearest earlier or
+later match per key) and ``bucketed_range_join`` (time-range joins as an
+equi-join on buckets). Skewed equi-joins are left to AQE's skew-join
+handling, on by default in session.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-_SALT = "__salt"
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str] | str,
-    how: str = "inner",
-    n_salts: int = 8,
-) -> DataFrame:
-    """Equi-join with key salting for skewed left-side keys.
-
-    The salt is ``xxhash64`` of the left row's full column set (mod
-    ``n_salts``) — deterministic (no rand()), so retried tasks and re-runs
-    produce identical partitioning. The right side is replicated
-    ``n_salts`` times via an exploded literal range; the join key becomes
-    ``on + [salt]``, so each hot key's rows land on ``n_salts`` different
-    reducers instead of one.
-
-    Supports inner/left joins (the replicate-right trick is not sound for
-    right/full outer: an unmatched right row would appear n_salts times).
-    """
-    if how not in ("inner", "left", "leftouter", "left_outer"):
-        raise ValueError(f"salted_join supports inner/left joins, got {how!r}")
-    keys = [on] if isinstance(on, str) else list(on)
-
-    salted_left = left.withColumn(
-        _SALT, F.pmod(F.xxhash64(F.struct(*left.columns)), F.lit(n_salts)).cast("int")
-    )
-    salted_right = right.withColumn(
-        _SALT, F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return salted_left.join(salted_right, keys + [_SALT], how).drop(_SALT)
 
 
 def asof_join(

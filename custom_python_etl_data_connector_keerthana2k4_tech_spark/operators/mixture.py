@@ -121,12 +121,3 @@ def gaussian_mixture_1d(
         "n": n,
         "loglik": loglik,
     }
-
-
-def mixture_posteriors(df: DataFrame, col: str, fit: dict) -> DataFrame:
-    """df + ``p_component2`` (posterior of the higher-mean component) —
-    the soft label a downstream filter thresholds on."""
-    x = F.col(col).cast("double")
-    d1 = F.lit(fit["weight"][0]) * _dnorm(x, fit["mean"][0], fit["var"][0])
-    d2 = F.lit(fit["weight"][1]) * _dnorm(x, fit["mean"][1], fit["var"][1])
-    return df.withColumn("p_component2", d2 / (d1 + d2))

@@ -52,10 +52,6 @@ from custom_python_etl_data_connector_keerthana2k4_tech_spark.functions.text imp
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.functions.vectors import quantize
 
 
-def _lit_long_array(vals: list[int]):
-    return F.array(*[F.lit(int(v)).cast("long") for v in vals])
-
-
 def _bq(name: str) -> str:
     """Backtick-quote an identifier for selectExpr (reserved words,
     spaces, dots — anything a user-supplied column name may carry)."""
@@ -560,7 +556,8 @@ def ivfpq_topk(
     corpus (codes, cluster, per-query gated ADC lookups — no join), one
     stack, one per-query top-k. At 100 TB the index DataFrame is written
     ``partitionBy("cluster")`` and the ``cluster IN probes`` gate becomes
-    directory pruning (the ivf_build contract, operators/ivf.py).
+    directory pruning: the probe set is a literal list, so the scan's
+    ``PartitionFilters`` skip every unprobed list's directory.
 
     ``centroids`` / ``codebook`` take pre-trained parameters (the exact
     shapes ``kmeans`` / ``pq_fit_codebook`` return) so callers sharing a

@@ -4,10 +4,6 @@
 - ``lsh_topk``         : sign-random-projection LSH bucketed top-k (scale path)
 - ``embedding_neardup``: near-duplicate pairs above a cosine threshold,
                          blocked by a partition column (IVF-style)
-- ``semantic_dedup``   : SemDeDup retention — k-means clusters, then an
-                         in-cluster pairwise-cosine prune keeping
-                         centroid outliers first (q354 = oracle-paired
-                         hash-cluster variant of the same prune)
 
 Cross-engine determinism: quantized-integer dot products
 (functions/vectors.py) — exact, order-independent, identical in DuckDB.
@@ -272,79 +268,6 @@ def embedding_neardup(
     # computes, ~100x faster than interpreting the fold per pair. Block
     # size is the IVF cell size, so the n^2 term stays bounded per task.
     return q.groupBy("block").applyInPandas(_block_pairs, schema=out_schema)
-
-
-def semantic_dedup(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 8,
-    iters: int = 3,
-    threshold: float = 0.3,
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023) as a first-class operator: k-means
-    coarse clusters (operators/kmeans — deterministic Lloyd, JVM-side
-    assignment), then inside each cluster drop every point whose cosine
-    to an earlier-ranked point reaches ``threshold``, where rank =
-    ascending cosine-to-centroid (outliers survive, the redundant core
-    is pruned; q354 runs the same prune over hash clusters with a DuckDB
-    oracle).
-
-    Returns one row per input point: ``(id, cluster, centroid_cos,
-    kept)`` — callers semi-join ``kept`` against the corpus to
-    materialize the retained set, and the ``kept = false`` rows are the
-    drop audit.
-
-    Scale: k grows with the corpus to cap cluster size (the paper runs
-    50k clusters), so the pairwise step is quadratic only inside a
-    bounded cluster; per cluster the prune is a chunked lower-triangular
-    matmul — memory O(chunk x cluster), no pair-grain shuffle. Dots and
-    norms are exact int64 on the quantized grid, so the decision is
-    reproducible run-to-run and machine-to-machine.
-    """
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.kmeans import kmeans
-
-    assigned, _ = kmeans(df, vec_col, id_col, k=k, iters=iters)
-    q = _with_quantized(assigned, vec_col).select(
-        F.col(id_col).alias("id"), "cluster", F.col("__q").alias("vec")
-    )
-
-    def _prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        x = np.stack(pdf["vec"].to_numpy()).astype(np.int64)
-        n = len(ids)
-        clus = int(pdf["cluster"].iloc[0])
-        sx = x.sum(axis=0)
-        nsq = (x * x).sum(axis=1)
-        dot_s = x @ sx
-        snsq = float((sx * sx).sum())
-        ccos = dot_s.astype(np.float64) / (
-            np.sqrt(nsq.astype(np.float64)) * np.sqrt(snsq)
-        )
-        order = np.lexsort((ids, ccos))
-        xo = x[order].astype(np.float64)
-        no = np.sqrt(nsq[order].astype(np.float64))
-        dropped = np.zeros(n, dtype=bool)
-        chunk = 1024
-        for lo in range(1, n, chunk):
-            hi = min(lo + chunk, n)
-            cos = (xo[lo:hi] @ xo[: hi - 1].T) / (
-                no[lo:hi, None] * no[None, : hi - 1]
-            )
-            earlier = np.arange(hi - 1)[None, :] < np.arange(lo, hi)[:, None]
-            dropped[lo:hi] = ((cos >= threshold) & earlier).any(axis=1)
-        return pd.DataFrame(
-            {
-                "id": ids[order],
-                "cluster": clus,
-                "centroid_cos": ccos[order],
-                "kept": ~dropped,
-            }
-        )
-
-    return q.groupBy("cluster").applyInPandas(
-        _prune, schema="id long, cluster int, centroid_cos double, kept boolean"
-    )
 
 
 def matryoshka_topk(

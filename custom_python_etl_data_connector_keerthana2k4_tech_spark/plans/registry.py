@@ -118,33 +118,3 @@ def _ensure_loaded() -> None:
     import custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.round36  # noqa: F401
 
     _LOADED = True
-
-
-def table_lineage(
-    spark,
-    sf_dir: str,
-    names: list[str] | None = None,
-) -> dict[str, list[str]]:
-    """Which fixture tables each declared query actually reads, derived
-    from the resolved plan's input files (not from documentation) —
-    the metadata surface that selective re-validation, cache warming,
-    and incremental rebuild planning key off. Note: queries that run
-    driver-side work during construction (iterative fits) execute it
-    here; pass ``names`` to scope the walk.
-
-    The reference has no metadata surface at all (its one data dependency
-    is hard-coded, /root/reference/etl_connector.py:94)."""
-    qs = queries()
-    out: dict[str, list[str]] = {}
-    for name in names if names is not None else sorted(qs):
-        df = qs[name](spark, sf_dir)
-        tables = set()
-        for f in df.inputFiles():
-            # fixture tables are single files <table>.parquet; directory
-            # layouts surface as <table>.parquet/part-*.parquet
-            for part in reversed(f.split("/")):
-                if part.endswith(".parquet") and not part.startswith("part-"):
-                    tables.add(part[: -len(".parquet")])
-                    break
-        out[name] = sorted(tables)
-    return out

@@ -6,10 +6,8 @@ iteration).
 
 q292's oracle uses the minimax characterization of isotonic regression:
 fit_i = max_{j<=i} min_{k>=i} wavg(y[j..k]) — pure window/join SQL over
-the (group x bin) cell frame, so the PAV operator
-(operators/isotonic.py, the O(bins) scale path) has an exact relational
-twin; tests/test_isotonic.py pins the two against each other and against
-a NumPy reference.
+the (group x bin) cell frame, so the calibration is exact on both
+engines without a pool-adjacent-violators pass.
 
 The reference has no ML, text, or statistics surface
 (/root/reference/etl_connector.py:53-242, SURVEY §2.1-2.2).
@@ -73,9 +71,8 @@ def q292_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic pair enumeration runs over that constant-bounded frame
     (<=300 pairs/group, an intentional broadcast nested loop), never over
     raw events. All intermediate sums are integers, so the final ratios
-    are bit-identical on both engines. operators/isotonic.py is the O(n)
-    PAV twin used when bins are numerous; tests pin the equivalence.
-    Reference has no statistics (SURVEY §2.2)."""
+    are bit-identical on both engines. Reference has no statistics
+    (SURVEY §2.2)."""
     ev = load(spark, sf_dir, "events")
     cells = (
         ev.groupBy(

@@ -145,9 +145,8 @@ def q345_rle_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (l_linenumber within l_orderkey) — rows/runs is exactly the average
     RLE run length a columnar encoder would achieve without re-sorting.
     Columns whose ratio is ~1 are encoding-hostile in this layout and
-    are the candidates for Z-order / sort-before-write
-    (operators/zorder.py, write_sized_parquet); a ratio near the
-    group size means the layout is already optimal. Scale: ONE shuffle
+    are the candidates for sort-before-write (write_sized_parquet); a
+    ratio near the group size means the layout is already optimal. Scale: ONE shuffle
     (the l_orderkey window — co-partitioned lag for all three columns in
     the same pass), then a global conditional count; the three-row
     unpivot happens on the one-row aggregate, not the fact table. All

@@ -662,8 +662,7 @@ def q359_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     by necessity), every step here is reproducible in DuckDB — the
     power sum is an exact scaled integer until one final division — so
     this HLL is oracle-paired bitwise. Registers merge by elementwise
-    max across shards/batches (operators/hll.hll_merge, replay-safe
-    streaming store in hll_sink), which is what makes the sketch the
+    max across shards/batches, which is what makes the sketch the
     scale answer to distinct counting at 100 TB: constant state per
     group, no distinct shuffle. Linear-counting small-range correction
     exercised at sf0.001; raw estimator above."""

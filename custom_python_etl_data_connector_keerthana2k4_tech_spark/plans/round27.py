@@ -276,9 +276,8 @@ def q368_hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables — the merge HLL exists for), and of their INTERSECTION by
     inclusion-exclusion, with the exact intersection as audit. This is
     how cross-corpus overlap is sized at 100 TB: per-source registers are
-    constant-size state accumulated shard by shard (operators/hll.
-    hll_sink), and every pairwise question afterwards is algebra on
-    128-row tables — no word-grain join ever runs (the exact audit here
+    constant-size state accumulated shard by shard, and every pairwise
+    question afterwards is algebra on 128-row tables — no word-grain join ever runs (the exact audit here
     does run one, at fixture scale, precisely to measure the estimator).
     Every register/merge/power-sum step is integer-exact, so the whole
     construction is oracle-paired bitwise like q359. Reference has no

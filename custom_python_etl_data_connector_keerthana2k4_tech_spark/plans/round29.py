@@ -394,8 +394,8 @@ def q374_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate neighbor AND which list it came from. Plan shape: the
     kmeans scans plus ONE narrow coded projection (no join, unprobed
     rows gated to NULL pre-stack) and one per-query top-k; at 100 TB the
-    index is written partitionBy(cluster) and the probe gate becomes
-    directory pruning (operators/ivf.py contract)."""
+    index is written partitionBy(cluster) and the probe gate, a literal
+    list, becomes directory pruning in the scan's PartitionFilters."""
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import ivfpq_topk
 
     e = load(spark, sf_dir, "embeddings")

@@ -1067,9 +1067,9 @@ def q166_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew profile of the fact table's shuffle key: key
     cardinality, max and p99 per-key frequency, and the heaviest key's
     row share — the diagnostic that decides between a plain shuffle
-    join, AQE skew splitting, and explicit salting
-    (operators/joins.salted_join). Two aggregation levels (per-key
-    counts, then one global reduction of the key frame) — the profile
+    join, AQE skew splitting, and explicit salting. Two aggregation
+    levels (per-key counts, then one global reduction of the key frame)
+    — the profile
     itself can never be the bottleneck of the join it is sizing. Exact
     integer state everywhere; the two shares are single double
     divisions. On real pipelines this runs on a sample partition first;

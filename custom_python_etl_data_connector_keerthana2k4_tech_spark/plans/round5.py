@@ -621,9 +621,8 @@ def q241_join_cardinality_forecast(
     aggregations (each engine-cheap even at 100 TB); the key-count
     join moves only key-grain state, orders of magnitude below the
     join it forecasts. A predicted_rows in the trillions or a
-    top_key_share near 1 is the signal to salt (operators/joins.
-    salted_join) or rethink — for the cost of two GROUP BYs instead
-    of a job that dies at 3 a.m. Ties on the hottest key are broken
+    top_key_share near 1 is the signal to salt or rethink — for the
+    cost of two GROUP BYs instead of a job that dies at 3 a.m. Ties on the hottest key are broken
     by max_by's key ordering on exact BIGINTs. The reference has no
     joins (SURVEY §2.2)."""
     a = (

@@ -62,13 +62,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if dt == "timestamp_ntz":
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql queries."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,6 +1,6 @@
 """Stdlib GIF87a/89a codec (multimodal/ops.py, round 7): full LZW
 decode (variable code width, CLEAR/END, compound codes, KwKwK),
-interlaced frames, color tables; encode/resize round-trips; exact
+interlaced frames, color tables; encode round-trips; exact
 cross-container aHash parity with the BMP/PNG decoders; dead-letter
 contract for corrupt streams — the third real image container behind
 the media near-dup path (q383)."""
@@ -16,12 +16,10 @@ from custom_python_etl_data_connector_keerthana2k4_tech_spark.multimodal.ops imp
     _decode_payload,
     _gif_encode,
     _gif_gray_pixels,
-    _gif_resize,
     _gif_rgb_rows,
     _lzw_decode,
     _png_encode,
     ahash_assets,
-    resize_assets,
 )
 
 
@@ -77,17 +75,6 @@ def test_gif_cross_container_hash_parity():
     assert _decode_payload(bmp) == _decode_payload(png) == _decode_payload(gif)
     # interlacing is a storage order, not content: same fingerprint
     assert _ahash_payload(_gif_encode(rows, interlace=True)) == _ahash_payload(gif)
-
-
-def test_gif_resize_deterministic_and_stays_gif():
-    rows = _pixels(24, 18)
-    rz = _gif_resize(_gif_encode(rows), 8, 6)
-    assert rz[:6] == b"GIF89a"
-    w, h, got = _gif_rgb_rows(rz)
-    assert (w, h) == (8, 6)
-    assert got == [
-        [rows[y * 18 // 6][x * 24 // 8] for x in range(8)] for y in range(6)
-    ]
 
 
 def test_png_adam7_interlace_roundtrip_and_filters():
@@ -171,7 +158,7 @@ def test_gif_corrupt_payloads_raise_value_error():
 
 
 def test_gif_through_spark_stages(spark):
-    """decode / ahash / resize stages accept GIF payloads end to end;
+    """decode / ahash stages accept GIF payloads end to end;
     corrupt GIFs dead-letter per record, never fail the job."""
     rows = _pixels(20, 10)
     gif = _gif_encode(rows)
@@ -193,7 +180,3 @@ def test_gif_through_spark_stages(spark):
     hashes = {r.asset_id: r for r in ahash_assets(assets).collect()}
     assert hashes[1].ahash == hashes[2].ahash  # container-independent
     assert hashes[3].ahash is None and hashes[3].ahash_error is not None
-    rz = {r.asset_id: r for r in resize_assets(assets, 8, 4).collect()}
-    assert rz[1].resize_error is None and bytes(rz[1].payload)[:6] == b"GIF89a"
-    assert rz[1].meta.width == 8 and rz[1].meta.height == 4
-    assert rz[3].resize_error is not None  # corrupt: payload passes through

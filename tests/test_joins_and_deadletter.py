@@ -1,15 +1,13 @@
-"""Salted-join equivalence, dead-letter quarantine, and multi-format scan
-coverage (SURVEY §2.3 source row: parquet/JSON/CSV)."""
+"""Dead-letter quarantine and multi-format scan coverage (SURVEY §2.3
+source row: parquet/JSON/CSV)."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.joins import salted_join
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
 
 
@@ -18,29 +16,6 @@ def _canon(df):
         (tuple(r) for r in df.collect()),
         key=lambda t: tuple((x is None, str(x)) for x in t),
     )
-
-
-@pytest.mark.parametrize("how", ["inner", "left"])
-def test_salted_join_equals_plain_join(spark, sf_dir, how):
-    """Salting redistributes the shuffle but must not change results —
-    including left rows with no match (left join) and skewed keys."""
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_name").withColumnRenamed(
-        "c_custkey", "o_custkey"
-    )
-    # make the key space skewed: collapse half the keys onto one hot key
-    o_skew = o.withColumn(
-        "o_custkey", F.when(F.col("o_orderkey") % 2 == 0, F.lit(1)).otherwise(F.col("o_custkey"))
-    )
-    plain = o_skew.join(c, "o_custkey", how)
-    salted = salted_join(o_skew, c, "o_custkey", how=how, n_salts=8)
-    assert _canon(salted) == _canon(plain)
-
-
-def test_salted_join_rejects_outer(spark, sf_dir):
-    o = load(spark, sf_dir, "orders")
-    with pytest.raises(ValueError, match="inner/left"):
-        salted_join(o, o, "o_orderkey", how="full")
 
 
 def test_dead_letter_quarantine(spark, tmp_path):
@@ -104,38 +79,3 @@ def test_orc_scan_matches_parquet(spark, sf_dir, tmp_path):
         .toString()
     )
     assert "PushedFilters: [" in plan and "n_nationkey" in plan
-
-
-def test_bucketed_join_elides_shuffle(spark, sf_dir):
-    """Two tables bucketed by the join key into the same bucket count join
-    WITHOUT a shuffle: the physical plan has no Exchange under the join,
-    while the plain parquet join shuffles both sides."""
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.bucketing import (
-        bucketed_join,
-        write_bucketed,
-    )
-
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    write_bucketed(o.withColumnRenamed("o_custkey", "custkey"), "t_orders_b", "custkey", 8, sort_by=["custkey"])
-    write_bucketed(c.withColumnRenamed("c_custkey", "custkey"), "t_customer_b", "custkey", 8, sort_by=["custkey"])
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "t_orders_b", "t_customer_b", "custkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan  # co-located: no shuffle at all
-
-        plain = o.withColumnRenamed("o_custkey", "custkey").join(
-            c.withColumnRenamed("c_custkey", "custkey"), "custkey"
-        )
-        plain_plan = plain._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plain_plan  # the baseline does shuffle
-
-        # and results are identical to the plain join
-        assert sorted(map(tuple, joined.collect())) == sorted(map(tuple, plain.collect()))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_customer_b")

@@ -12,7 +12,7 @@ import math
 import numpy as np
 import pytest
 
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.mixture import gaussian_mixture_1d, mixture_posteriors
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.mixture import gaussian_mixture_1d
 
 
 def numpy_em(xs, q1, q3, n_iter=15, tol=1e-9):
@@ -71,20 +71,6 @@ def test_em_matches_numpy_twin(spark, sf_dir):
     assert fit["mean"] == pytest.approx(list(mu), rel=1e-6)
     assert fit["weight"] == pytest.approx(list(w), rel=1e-6)
     assert fit["var"] == pytest.approx(list(var), rel=1e-6)
-
-
-def test_posteriors_separate_components(spark):
-    rng = np.random.RandomState(5)
-    xs = np.concatenate([rng.normal(-5, 1, 500), rng.normal(5, 1, 500)])
-    df = spark.createDataFrame([(float(v),) for v in xs], "x double")
-    fit = gaussian_mixture_1d(df, "x")
-    scored = mixture_posteriors(df, "x", fit)
-    import pyspark.sql.functions as F
-
-    hi = scored.filter(F.col("x") > 3).agg(F.min("p_component2")).collect()[0][0]
-    lo = scored.filter(F.col("x") < -3).agg(F.max("p_component2")).collect()[0][0]
-    assert hi > 0.99
-    assert lo < 0.01
 
 
 def test_em_early_stop_deterministic(spark):

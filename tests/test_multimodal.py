@@ -70,43 +70,6 @@ def test_frame_sampling(assets):
         assert r.n >= 1 and r.mx <= 300
 
 
-def test_resize_assets(spark, sf_dir):
-    """Resize rewrites dimensions (payload header + metadata) but preserves
-    content bytes; audio passes through; re-decoding sees the new dims."""
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.multimodal import (
-        assets_from_documents,
-        decode_assets,
-        resize_assets,
-    )
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
-
-    d = load(spark, sf_dir, "documents").limit(60)
-    assets = assets_from_documents(d)
-    resized = resize_assets(assets, 32, 24)
-    rows = resized.collect()
-    assert all(r.resize_error is None for r in rows)
-    by_modality = {}
-    for r in rows:
-        by_modality.setdefault(r.modality, []).append(r)
-    # image/video: meta updated to the target dims
-    for m in ("image", "video"):
-        assert all(r.meta.width == 32 and r.meta.height == 24 for r in by_modality[m])
-    # audio untouched (original meta widths vary)
-    assert any(r.meta.width != 32 for r in by_modality["audio"])
-
-    # re-decode: decoded dims equal the new header dims, content preserved
-    redecoded = (
-        decode_assets(resized.drop("resize_error"))
-        .filter("modality != 'audio'")
-        .collect()
-    )
-    assert all(r.decode_error is None for r in redecoded)
-    assert all(r.decoded_width == 32 and r.decoded_height == 24 for r in redecoded)
-    orig_means = {r.asset_id: r.mean_value
-                  for r in decode_assets(assets).filter("modality != 'audio'").collect()}
-    assert all(orig_means[r.asset_id] == r.mean_value for r in redecoded)
-
-
 # -- perceptual-hash near-dup (round 5) ---------------------------------------
 
 
@@ -348,20 +311,15 @@ def test_png_roundtrip_and_bmp_parity(spark):
 
 
 def test_png_decode_resize_through_spark_stages(spark):
-    """decode_assets / ahash_assets / resize_assets all serve PNG
-    payloads ungated (no PIL), with the dead-letter contract intact for
-    corrupt PNGs; resize keeps the PNG container and the nearest-
-    neighbor mapping matches the BMP path pixel for pixel."""
+    """decode_assets / ahash_assets both serve PNG payloads ungated
+    (no PIL), with the dead-letter contract intact for corrupt PNGs."""
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.multimodal import (
         ahash_assets,
         decode_assets,
-        resize_assets,
     )
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.multimodal.ops import (
         _bmp_encode,
-        _bmp_rgb_rows,
         _png_encode,
-        _png_rgb_rows,
     )
 
     rgb = [
@@ -399,14 +357,3 @@ def test_png_decode_resize_through_spark_stages(spark):
     assert ah[1]["ahash"] is not None
     assert ah[1]["ahash"] == ah[4]["ahash"] == ah[5]["ahash"]
     assert ah[2]["ahash"] is None and ah[3]["ahash"] is None
-
-    rez = {r["asset_id"]: r for r in
-           resize_assets(assets, 4, 3).collect()}
-    assert rez[1]["resize_error"] is None
-    out_png = bytes(rez[1]["payload"])
-    assert out_png.startswith(b"\x89PNG")
-    w, h, rows = _png_rgb_rows(out_png)
-    assert (w, h) == (4, 3)
-    bw, bh, brows = _bmp_rgb_rows(bytes(rez[4]["payload"]))
-    assert (bw, bh) == (4, 3) and rows == brows
-    assert rez[2]["resize_error"] is not None  # corrupt stays quarantined

@@ -217,41 +217,3 @@ def test_wav_stdlib_decode_ungated(spark):
     # audio decode surfaces (sample_rate, n_frames, mean |amplitude|)
     assert (r["decoded_width"], r["decoded_height"]) == (8000, len(samples))
     assert r["mean_value"] == exp_mean
-
-
-def test_bmp_stdlib_resize_ungated(spark):
-    """resize_assets performs a REAL nearest-neighbor resample of BMP
-    payloads in the stock image; the output re-decodes to the new
-    dimensions with hand-computable pixels."""
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.multimodal.ops import (
-        ASSET_SCHEMA,
-        decode_assets,
-        resize_assets,
-    )
-
-    # 4x2 image; nearest-neighbor 2x1 takes pixels (0,0) and (2,0) of the
-    # TOP row (y*2//1=0 -> top visual row)
-    px = [
-        [(10, 10, 10), (20, 20, 20), (30, 30, 30), (40, 40, 40)],
-        [(200, 200, 200), (210, 210, 210), (220, 220, 220), (230, 230, 230)],
-    ]
-    meta = {"width": 4, "height": 2, "sample_rate": 0, "n_frames": 1,
-            "format": "bmp"}
-    assets = spark.createDataFrame(
-        [(1, "image", _bmp_bytes(px), meta)], ASSET_SCHEMA
-    )
-    resized = resize_assets(assets, width=2, height=1)
-    r = resized.collect()[0]
-    assert r["resize_error"] is None
-    assert (r["meta"]["width"], r["meta"]["height"]) == (2, 1)
-    d = decode_assets(resized.drop("resize_error")).collect()[0]
-    if d["decode_error"] is None and d["decoded_width"] == 2:
-        # stdlib decoder path: dims from the re-encoded BMP
-        assert (d["decoded_width"], d["decoded_height"]) == (2, 1)
-        assert d["mean_value"] == (10 + 30) // 2
-    # raw pixel check through the decoder kernel, independent of PIL
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.multimodal.ops import _bmp_rgb_rows
-
-    w, h, rows = _bmp_rgb_rows(bytes(r["payload"]))
-    assert (w, h) == (2, 1)
-    assert rows == [[(10, 10, 10), (30, 30, 30)]]

@@ -10,11 +10,17 @@ it shows up as a bench regression.
 
 from __future__ import annotations
 
+import json
+import os
 import re
 
 import pytest
 
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans import registry
+
+_SWEEP_SUMMARY = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r10", "sweep_summary.json"
+)
 
 
 @pytest.fixture(scope="module")
@@ -204,6 +210,23 @@ def test_no_accidental_cartesian_products(surface):
             assert "BroadcastNestedLoopJoin" in p, name  # broadcast, not shuffled
 
 
+def test_committed_plan_census_has_no_accidental_cartesian_products():
+    """The default-profile twin of the sweep above, read from the
+    committed census (plans/r10/sweep_summary.json, written by
+    tools_r10/sweep_plans.py): one entry per registered query, no
+    CartesianProduct anywhere, and nested-loop joins exactly where
+    _INTENTIONAL_BNLJ allows them."""
+    with open(_SWEEP_SUMMARY) as f:
+        census = json.load(f)
+    assert set(census) == set(registry.queries())
+    assert not [name for name, ops in sorted(census.items()) if "cartesian" in ops]
+    bnlj = {name for name, ops in census.items() if "broadcast_nested_loop" in ops}
+    assert bnlj == _INTENTIONAL_BNLJ, (
+        f"unlisted: {sorted(bnlj - _INTENTIONAL_BNLJ)}, "
+        f"missing: {sorted(_INTENTIONAL_BNLJ - bnlj)}"
+    )
+
+
 def test_decontamination_broadcasts_benchmark_grams(plans):
     """q84's contamination probe must be a broadcast left-semi join on the
     benchmark gram set — a shuffled semi join there would re-shuffle the
@@ -342,14 +365,3 @@ def test_no_entity_grain_single_partition_windows(surface):
         "operators/ranks or audit the frame size into the allowlist"
     )
 
-
-@pytest.mark.slow
-def test_no_query_plan_degenerates_to_cartesian(surface):
-    """Whole-surface plan hygiene: no registered query may plan a
-    CartesianProduct (a shuffled cartesian is never acceptable; 1-row
-    broadcast totals plan as BroadcastNestedLoopJoin, which is fine and
-    separately whitelisted above)."""
-    offenders = [
-        name for name, (p, _nw) in sorted(surface.items()) if "CartesianProduct" in p
-    ]
-    assert not offenders, f"cartesian products in: {offenders}"

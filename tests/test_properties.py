@@ -149,21 +149,3 @@ def test_exact_quantiles_matches_sorted_interpolation(spark, xs, probs):
         lo, hi = int(h), min(int(h) + 1, n - 1)
         want = s[lo] + (s[hi] - s[lo]) * (h - lo)
         assert abs(g - want) < 1e-6 * max(1.0, abs(want)), (p, g, want)
-
-
-@given(
-    y=st.lists(st.floats(-100, 100, allow_nan=False), min_size=1, max_size=25),
-    w=st.lists(st.floats(0.1, 10, allow_nan=False), min_size=25, max_size=25),
-)
-@settings(max_examples=25, deadline=None)
-def test_pav_properties_random(y, w):
-    """PAV on arbitrary sequences: monotone, mean-preserving, bounded by
-    input range, idempotent."""
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.isotonic import pav_fit
-
-    w = w[: len(y)]
-    fit = pav_fit(y, w)
-    assert all(a <= b + 1e-9 for a, b in zip(fit, fit[1:]))
-    assert min(y) - 1e-9 <= min(fit) and max(fit) <= max(y) + 1e-9
-    assert abs(sum(f * wi for f, wi in zip(fit, w)) - sum(v * wi for v, wi in zip(y, w))) < 1e-6
-    assert all(abs(a - b) < 1e-9 for a, b in zip(pav_fit(fit, w), fit))

@@ -238,40 +238,6 @@ def test_minhash_signatures_are_mergeable(spark, sf_dir):
     assert merged == whole
 
 
-def test_source_signature_sink_replay_safe(spark, sf_dir, tmp_path):
-    """Streaming accumulation of per-source signatures: three
-    micro-batches (one replayed) min-merge to the whole-corpus
-    signature, and the overlap matrix from the accumulated store matches
-    the batch-computed one."""
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.dedup import (
-        read_source_signatures,
-        signature_overlap_matrix,
-        source_minhash_signatures,
-        source_signature_sink,
-    )
-
-    docs = load(spark, sf_dir, "documents")
-    path = str(tmp_path / "sigs")
-    sink = source_signature_sink(path)
-    for i in range(3):
-        sink(docs.filter(F.col("doc_id") % 3 == i), i)
-    sink(docs.filter(F.col("doc_id") % 3 == 1), 1)  # crash-replay
-    acc = read_source_signatures(spark, path)
-    whole = {
-        (r.source, r.p): r.mh for r in source_minhash_signatures(docs).collect()
-    }
-    assert {(r.source, r.p): r.mh for r in acc.collect()} == whole
-    m1 = {
-        (r.source_a, r.source_b): r.est_jaccard
-        for r in signature_overlap_matrix(acc).collect()
-    }
-    m2 = {
-        (r.source_a, r.source_b): r.est_jaccard
-        for r in signature_overlap_matrix(source_minhash_signatures(docs)).collect()
-    }
-    assert m1 == m2
-
-
 def test_minhash_estimate_tracks_exact_overlap(spark, sf_dir):
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.round25 import (
         q358_minhash_source_sketch,

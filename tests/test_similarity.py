@@ -98,44 +98,6 @@ def test_embedding_neardup_blocked(spark, emb):
     for (a, b), cos in got.items():
         assert cos >= 0.25
 
-def test_semantic_dedup_invariants(spark, emb):
-    """SemDeDup decisions partition the corpus: one row per id, kept +
-    dropped = total, the first-ranked point of every cluster survives,
-    and the decision is deterministic across runs."""
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.similarity import semantic_dedup
-
-    d1 = semantic_dedup(emb, "vec_id", "embedding", k=4, iters=2, threshold=0.3)
-    rows = d1.collect()
-    assert len(rows) == emb.count()
-    assert len({r.id for r in rows}) == len(rows)
-    by_cluster = {}
-    for r in rows:
-        by_cluster.setdefault(r.cluster, []).append(r)
-    for members in by_cluster.values():
-        first = min(members, key=lambda r: (r.centroid_cos, r.id))
-        assert first.kept, "first-ranked (outlier) point must survive"
-    rows2 = semantic_dedup(
-        emb, "vec_id", "embedding", k=4, iters=2, threshold=0.3
-    ).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, rows2))
-
-
-def test_semantic_dedup_drops_planted_twin(spark, emb):
-    """Append an exact copy of an existing vector under a new id: exactly
-    that redundancy must be pruned (one of the twins dropped)."""
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.similarity import semantic_dedup
-
-    twin_src = emb.filter(F.col("vec_id") == 3).select(
-        F.lit(10_000_000).alias("vec_id"), "embedding", "label"
-    )
-    corpus = emb.select("vec_id", "embedding", "label").unionAll(twin_src)
-    decisions = {r.id: r for r in semantic_dedup(
-        corpus, "vec_id", "embedding", k=4, iters=2, threshold=0.95
-    ).collect()}
-    a, b = decisions[3], decisions[10_000_000]
-    assert a.cluster == b.cluster  # identical vectors share a cluster
-    assert a.kept != b.kept, "exactly one of the identical twins survives"
-
 
 def test_matryoshka_full_head_equals_brute_force(spark, emb):
     """With head_dim == full dim and an unbounded shortlist, the cascade

@@ -52,40 +52,6 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert types <= {"click"}
 
 
-def test_compact_parquet_reduces_files_and_preserves_rows(spark, sf_dir, tmp_path):
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.write import compact_parquet
-
-    src = load(spark, sf_dir, "orders")
-    path = str(tmp_path / "frag")
-    src.repartition(40).write.parquet(path)  # fragment: 40 small files
-
-    before = src.orderBy("o_orderkey").collect()
-    stats = compact_parquet(spark, path, target_file_bytes=1 << 30)
-    assert stats["compacted"] and stats["files_before"] == 40
-    assert stats["files_after"] == 1  # everything fits one target-sized file
-
-    after_df = spark.read.parquet(path)
-    assert after_df.orderBy("o_orderkey").collect() == before
-    # temp/old dirs cleaned up
-    leftovers = [p.name for p in tmp_path.iterdir()]
-    assert leftovers == ["frag"]
-
-
-def test_compact_parquet_noop_when_already_compact(spark, sf_dir, tmp_path):
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.write import compact_parquet
-
-    path = str(tmp_path / "ok")
-    load(spark, sf_dir, "nation").coalesce(1).write.parquet(path)
-    stats = compact_parquet(spark, path, target_file_bytes=1 << 30)
-    assert not stats["compacted"]
-    assert stats["files_before"] == stats["files_after"] == 1
-    # idempotent maintenance: second run still a no-op after a real compact
-    frag = str(tmp_path / "frag2")
-    load(spark, sf_dir, "nation").repartition(8).write.parquet(frag)
-    assert compact_parquet(spark, frag, target_file_bytes=1 << 30)["compacted"]
-    assert not compact_parquet(spark, frag, target_file_bytes=1 << 30)["compacted"]
-
-
 class _RenameFailsFS:
     """A FileSystem stand-in over {directory: contents}, keyed by path
     string, whose ``fail_on``-th rename returns false, as Hadoop renames

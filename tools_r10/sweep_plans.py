@@ -17,9 +17,10 @@ PushedFilters), not that a scratch directory got a new name.
 
 The summary counts, per query: Exchange, BroadcastExchange,
 SortMergeJoin, ShuffledHashJoin, BroadcastHashJoin, BroadcastNestedLoop,
-CartesianProduct, BatchEvalPython, ArrowEvalPython, MapInArrow/Pandas,
-Window, Scan parquet. Diffs of these counts are the headline regression
-signal (e.g. "q210: 2 Exchange -> 3").
+CartesianProduct, BatchEvalPython* (UDFs and UDTFs), ArrowEvalPython,
+MapInArrow/Pandas, Window, Scan parquet. Diffs of these counts are the
+headline regression signal (e.g. "q210: 2 Exchange -> 3");
+tests/test_plans.py checks the committed summary in the default profile.
 """
 
 from __future__ import annotations
@@ -62,7 +63,7 @@ _OPS = [
     ("broadcast_hash_join", re.compile(r"\bBroadcastHashJoin\b")),
     ("broadcast_nested_loop", re.compile(r"\bBroadcastNestedLoopJoin\b")),
     ("cartesian", re.compile(r"\bCartesianProduct\b")),
-    ("batch_eval_python", re.compile(r"\bBatchEvalPython\b")),
+    ("batch_eval_python", re.compile(r"\bBatchEvalPython\w*")),
     ("arrow_eval_python", re.compile(r"\bArrowEvalPython\b")),
     ("map_in_arrow_pandas", re.compile(r"\b(MapInArrow|MapInPandas|FlatMapGroupsInPandas|PythonMapInArrow)\b")),
     ("window", re.compile(r"\bWindow\b")),
