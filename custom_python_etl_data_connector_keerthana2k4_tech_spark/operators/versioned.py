@@ -1,7 +1,7 @@
 """Versioned keyed table: snapshot-isolated upserts with time travel,
 rollback, and vacuum on plain parquet — the transactional half of Delta's
 MERGE reproduced with nothing but immutable data directories and one
-atomically-renamed pointer file.
+exclusively-created manifest file per version.
 
 Reference parity: the reference's Mongo sink mutates one collection in
 place, per document (/root/reference/etl_connector.py:167-191) — readers
@@ -11,8 +11,8 @@ fallback for NULL keys via operators/upsert.upsert_dataframe) while
 adding the properties a 100 TB pipeline actually needs:
 
 - **Snapshot isolation.** Each upsert writes a brand-new data directory
-  and publishes it by atomically renaming a pointer file; a reader that
-  resolved the pointer keeps reading a consistent, immutable snapshot no
+  and publishes it by creating the version's manifest; a reader that
+  resolved a version keeps reading a consistent, immutable snapshot no
   matter how many writes land afterwards. No reader ever sees a partial
   merge.
 - **Time travel.** Every version's manifest (version, parent, row count)
@@ -22,8 +22,7 @@ adding the properties a 100 TB pipeline actually needs:
   as latest by writing a NEW version whose data is k's — history stays
   append-only (audit-friendly), nothing is mutated.
 - **Vacuum.** ``vacuum_versioned(root, keep_last=n)`` deletes data dirs
-  beyond the retention window; manifests stay (lineage), pointers stay
-  valid.
+  beyond the retention window; manifests stay (lineage).
 
 - **DELETE.** ``versioned_delete(root, predicate)`` publishes a new
   version without the matching rows; the partitioned path rewrites ONLY
@@ -43,21 +42,21 @@ adding the properties a 100 TB pipeline actually needs:
   skipping. Stats rows are tiny (columns x partitions), carried in the
   same JSON commit record.
 - **Optimistic concurrency.** The manifest file is the commit record and
-  it is claimed with create-if-absent (``_create_exclusive``): two
-  writers that both read parent version n race to create
-  ``_versions/v{n+1}.json`` — exactly one wins; the loser's data
-  directory (written under a unique name, never shared) stays invisible
-  and the loser raises ``ConcurrentWriteError`` without corrupting
-  anything. History stays linear by construction. The ``_LATEST``
-  pointer is a cache of max(manifest versions); ``current_version``
-  self-heals past a writer that crashed between manifest commit and
-  pointer update. (On HDFS/local the exclusive create is the primitive;
-  an object-store deployment would swap in a conditional put — same
-  protocol, same commit record.)
+  its creation is the only commit step: ``_commit`` claims
+  ``_versions/v{n+1}.json`` with create-if-absent (``_create_exclusive``).
+  Two writers that both read parent version n race for that file —
+  exactly one wins; the loser's data directory (written under a unique
+  name, never shared) stays invisible and the loser raises
+  ``ConcurrentWriteError`` without corrupting anything. History stays
+  linear by construction, and the latest version is the newest manifest
+  in ``_versions/``. (On HDFS/local the exclusive create is the
+  primitive; an object-store deployment would swap in a conditional put
+  — same protocol, same commit record.)
 
+Upsert, delete and merge differ only in how they find the partitions to
+rewrite and in their row transform; ``_rewrite`` does the rest once.
 At 100 TB the merge itself is the same one-shuffle window-dedup plan as
-``upsert_parquet``; the versioning layer adds one directory rename and
-one small JSON per batch.
+``upsert_parquet``; the versioning layer adds one small JSON per batch.
 """
 
 from __future__ import annotations
@@ -73,7 +72,8 @@ from pyspark.sql import functions as F
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.upsert import upsert_dataframe
 
 _VERSIONS = "_versions"
-_LATEST = "_LATEST"
+_UNSET = "_unset"  # expected_parent not given: the manifest claim alone serializes
+_TARGET_FILE_BYTES = 128 << 20  # compaction's file size
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -101,21 +101,6 @@ def _read_small(spark: SparkSession, path: str) -> str | None:
         return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
     finally:
         stream.close()
-
-
-def _write_atomic(spark: SparkSession, path: str, content: str) -> None:
-    """Write via temp file + rename — atomic on local FS and HDFS."""
-    fs, jvm = _fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}.tmp.{uuid.uuid4().hex}")
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(content.encode("utf-8")))
-    finally:
-        stream.close()
-    if fs.exists(dst):
-        fs.delete(dst, False)
-    fs.rename(tmp, dst)
 
 
 # what a create reports when another writer holds the path: the file
@@ -176,8 +161,9 @@ def _create_exclusive(spark: SparkSession, path: str, content: str) -> bool:
     return True
 
 
-def _max_manifest_version(spark: SparkSession, root: str) -> int | None:
-    """Newest committed manifest by file name (no content reads)."""
+def current_version(spark: SparkSession, root: str) -> int | None:
+    """Latest committed version: the newest manifest in ``_versions/`` by
+    file name (manifest creation is the commit point; no content reads)."""
     fs, jvm = _fs(spark, root)
     vdir = jvm.org.apache.hadoop.fs.Path(f"{root}/{_VERSIONS}")
     if not fs.exists(vdir):
@@ -189,21 +175,6 @@ def _max_manifest_version(spark: SparkSession, root: str) -> int | None:
             v = int(name[1:-5])
             best = v if best is None or v > best else best
     return best
-
-
-def current_version(spark: SparkSession, root: str) -> int | None:
-    """Latest committed version: the manifest directory is authoritative
-    (manifest creation is the commit point); the ``_LATEST`` pointer is a
-    fast-path cache that may trail by one if a writer crashed between
-    commit and pointer update — take the max to self-heal."""
-    raw = _read_small(spark, f"{root}/{_LATEST}")
-    pointed = None if raw is None else int(raw.strip())
-    committed = _max_manifest_version(spark, root)
-    if pointed is None:
-        return committed
-    if committed is None:
-        return pointed
-    return max(pointed, committed)
 
 
 def versions(spark: SparkSession, root: str) -> list[dict]:
@@ -243,7 +214,9 @@ def _collect_stats(
     """Per-partition [min, max] zone maps for ``stats_cols`` (one
     map-side-combinable aggregate over the data being written — cost is a
     single extra pass over the REWRITTEN rows only, never the table).
-    Unpartitioned frames get a single entry under key ``""``."""
+    Partition keys are rendered as the manifest renders them
+    (``_partition_values``). Unpartitioned frames get a single entry
+    under key ``""``."""
     aggs = []
     for c in stats_cols:
         aggs.append(F.min(c).alias(f"__mn_{c}"))
@@ -252,11 +225,160 @@ def _collect_stats(
         row = df.agg(*aggs).collect()[0]
         return {"": {c: [_json_scalar(row[f"__mn_{c}"]), _json_scalar(row[f"__mx_{c}"])] for c in stats_cols}}
     out: dict[str, dict[str, list]] = {}
-    for row in df.groupBy(partition_by).agg(*aggs).collect():
-        out[str(row[partition_by])] = {
+    key = F.col(partition_by).cast("string").alias(partition_by)
+    for row in df.groupBy(key).agg(*aggs).collect():
+        out[row[partition_by]] = {
             c: [_json_scalar(row[f"__mn_{c}"]), _json_scalar(row[f"__mx_{c}"])]
             for c in stats_cols
         }
+    return out
+
+
+def _begin(
+    spark: SparkSession,
+    root: str,
+    expected_parent: "int | None | object" = _UNSET,
+    must_exist: bool = False,
+) -> tuple[dict, dict]:
+    """A committing verb's preamble: (the parent manifest, ``{}`` for a
+    new table; the new version's manifest head). The head's data
+    directory is unique per writer, so a writer that loses the claim
+    never touches the winner's files. ``expected_parent``, the version the
+    writer read its inputs from (``None``: an empty table), fails fast
+    once the table has moved past it."""
+    cur = current_version(spark, root)
+    if expected_parent != _UNSET and cur != expected_parent:
+        raise ConcurrentWriteError(
+            f"table at {root} is at version {cur}, writer expected "
+            f"{expected_parent}; re-read and retry"
+        )
+    if cur is None and must_exist:
+        raise FileNotFoundError(f"no published version under {root}")
+    new = 1 if cur is None else cur + 1
+    head = {"version": new, "parent": cur, "data": f"data/v{new:08d}-{uuid.uuid4().hex[:8]}"}
+    return ({} if cur is None else _manifest(spark, root, cur)), head
+
+
+def _commit(spark: SparkSession, root: str, manifest: dict) -> int:
+    """Publish ``manifest`` by creating its version's manifest file — the
+    commit point, and the only one. Losing the claim raises
+    ``ConcurrentWriteError``: nothing the loser wrote is referenced, and
+    vacuum sweeps its data directory."""
+    v = manifest["version"]
+    if not _create_exclusive(
+        spark, f"{root}/{_VERSIONS}/v{v:08d}.json", json.dumps(manifest, sort_keys=True)
+    ):
+        raise ConcurrentWriteError(
+            f"version {v} under {root} was committed by another writer; "
+            f"this write changed nothing visible — re-read and retry"
+        )
+    return v
+
+
+def _partition_values(df: DataFrame, col: str) -> list[str]:
+    """Sorted distinct values of ``col`` in ``df`` (one job), rendered as
+    Spark renders them in partition directory names and in the filter
+    ``_read_partitions`` applies — ``cast("string")``, so a boolean is
+    ``true``, not Python's ``True``. A NULL or empty value has no
+    directory of its own (Spark writes it to the default partition and
+    reads it back as NULL), so it is refused rather than lost."""
+    values = {r[0] for r in df.select(F.col(col).cast("string")).distinct().collect()}
+    if None in values or "" in values:
+        raise ValueError(
+            f"partition column {col!r} holds a NULL or empty value; "
+            f"a partition directory cannot carry it"
+        )
+    return sorted(values)
+
+
+def _path_utils(spark: SparkSession):
+    """Spark's escaping of partition values in directory names."""
+    return spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+
+
+def _data_files(spark: SparkSession, path: str) -> tuple[int, int]:
+    """(count, bytes) of the data files anywhere under ``path``; (0, 0)
+    when it does not exist."""
+    fs, jvm = _fs(spark, path)
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    if not fs.exists(p):
+        return 0, 0
+    it = fs.listFiles(p, True)
+    n, b = 0, 0
+    while it.hasNext():
+        status = it.next()
+        if not status.getPath().getName().startswith(("_", ".")):
+            n += 1
+            b += status.getLen()
+    return n, b
+
+
+def _written_partitions(spark: SparkSession, data_dir: str, col: str) -> list[str]:
+    """Values of the ``col=value`` directories a partitioned write left
+    under ``data_dir`` (no Spark job). A write that left none removes
+    ``data_dir``: a version that rewrote nothing owns no directory."""
+    fs, jvm = _fs(spark, data_dir)
+    path = jvm.org.apache.hadoop.fs.Path(data_dir)
+    prefix = f"{col}="
+    values = [
+        _path_utils(spark).unescapePathName(s.getPath().getName()[len(prefix):])
+        for s in fs.listStatus(path)
+        if s.isDirectory() and s.getPath().getName().startswith(prefix)
+    ]
+    if not values:
+        fs.delete(path, True)
+    return values
+
+
+def _rewrite(
+    spark: SparkSession,
+    root: str,
+    parent: dict,
+    data_rel: str,
+    col: str | None,
+    touched: "DataFrame | list[str] | None",
+    transform,
+    stats_cols: list[str] | None,
+) -> dict:
+    """Write a new version's rows into ``data_rel`` and return its
+    manifest's content fields — the one rewrite behind upsert, delete,
+    merge and partitioned compaction.
+
+    Unpartitioned (``col`` None): ``transform(table)`` (``None`` for a new
+    table) is written whole; returns ``n_rows`` and the zone maps.
+
+    Partitioned: ``touched`` names the partitions to rewrite — a frame
+    whose ``col`` holds them, or a list of values. The parent's rows in
+    them are read and ``transform(rows)`` (``None`` if the parent holds
+    none) is written with ``partitionBy(col)``. Every partition the write
+    leaves holding rows points at ``data_rel``, a touched partition left
+    empty drops out, and every untouched one is referenced from the
+    parent with its zone maps; only rewritten partitions get new ones."""
+    data_dir = f"{root}/{data_rel}"
+    out: dict = {"stats_cols": list(stats_cols)} if stats_cols else {}
+    if col is None:
+        rows = read_versioned(spark, root, parent["version"]) if parent else None
+        transform(rows).write.mode("overwrite").parquet(data_dir)
+        out["n_rows"] = spark.read.parquet(data_dir).count()
+        if stats_cols:
+            out["stats"] = _collect_stats(spark.read.parquet(data_dir), None, stats_cols)
+        return out
+    if isinstance(touched, DataFrame):
+        touched = _partition_values(touched, col)
+    prev = parent.get("partitions", {})
+    parts = {p: o for p, o in prev.items() if p not in touched}
+    stats = {p: s for p, s in parent.get("stats", {}).items() if p in parts}
+    if touched:
+        owned = [p for p in touched if p in prev]
+        rows = _read_partitions(spark, root, prev, only=owned, col=col) if owned else None
+        transform(rows).write.partitionBy(col).mode("overwrite").parquet(data_dir)
+        written = _written_partitions(spark, data_dir, col)
+        parts.update(dict.fromkeys(written, data_rel))
+        if stats_cols and written:
+            stats.update(_collect_stats(spark.read.parquet(data_dir), col, stats_cols))
+    out.update(partition_by=col, partitions=parts)
+    if stats_cols:
+        out["stats"] = stats
     return out
 
 
@@ -267,7 +389,7 @@ def versioned_upsert(
     key: str | list[str],
     order_by: list[str],
     partition_by: str | None = None,
-    expected_parent: "int | None | object" = "_unset",
+    expected_parent: "int | None | object" = _UNSET,
     stats_cols: list[str] | None = None,
 ) -> int:
     """Merge ``batch`` into the latest snapshot (last-write-wins on key)
@@ -278,9 +400,9 @@ def versioned_upsert(
     written completely, then the manifest is committed with
     create-if-absent — the serialization point: if another writer already
     published this version number, ``ConcurrentWriteError`` is raised and
-    nothing visible changed. Only after the commit does the pointer move.
-    A crash at any earlier point leaves the previous version live and the
-    orphan directory invisible (vacuum sweeps it).
+    nothing visible changed. A crash at any earlier point leaves the
+    previous version live and the orphan directory invisible (vacuum
+    sweeps it).
 
     ``expected_parent`` (optional CAS handle): the version this writer
     read its inputs from — publish fails fast with ConcurrentWriteError
@@ -294,101 +416,21 @@ def versioned_upsert(
     every untouched partition (Iceberg-style metadata reuse) — a daily
     batch against a years-deep table copies days, not years, and
     snapshot isolation still holds because referenced directories are
-    immutable. Partition values are tracked as strings in the manifest
-    (hive directory names), so the partition column should render
-    stably as a string (dates, ints, strings all do).
+    immutable. Partition values are tracked as Spark's string rendering
+    (the hive directory names); NULL and empty values are refused.
     """
-    cur = current_version(spark, root)
-    if expected_parent != "_unset" and cur != expected_parent:
-        raise ConcurrentWriteError(
-            f"table at {root} is at version {cur}, writer expected "
-            f"{expected_parent}; re-read and retry"
-        )
-    new_version = 1 if cur is None else cur + 1
-    data_rel = f"data/v{new_version:08d}-{uuid.uuid4().hex[:8]}"
-    data_dir = f"{root}/{data_rel}"
-
+    parent, head = _begin(spark, root, expected_parent)
+    if partition_by is not None and parent and "partitions" not in parent:
+        raise ValueError("cannot mix partitioned and unpartitioned versions")
     # stats_cols sticks: once a table records zone maps, later upserts
     # keep maintaining them without re-passing the list
-    if stats_cols is None and cur is not None:
-        stats_cols = _manifest(spark, root, cur).get("stats_cols")
-
-    if partition_by is None:
-        existing = read_versioned(spark, root, cur) if cur is not None else None
-        merged = upsert_dataframe(existing, batch, key, order_by)
-        merged.write.mode("overwrite").parquet(data_dir)
-        manifest = {
-            "version": new_version,
-            "parent": cur,
-            "data": data_rel,
-            "n_rows": spark.read.parquet(data_dir).count(),
-        }
-        if stats_cols:
-            manifest["stats_cols"] = list(stats_cols)
-            manifest["stats"] = _collect_stats(
-                spark.read.parquet(data_dir), None, stats_cols
-            )
-    else:
-        touched = sorted(
-            str(r[0])
-            for r in batch.select(partition_by).distinct().collect()
-        )
-        prev_parts: dict[str, str] = {}
-        if cur is not None:
-            pm = _manifest(spark, root, cur)
-            if "partitions" not in pm:
-                raise ValueError(
-                    "cannot mix partitioned and unpartitioned versions"
-                )
-            prev_parts = dict(pm["partitions"])
-        existing_touched = None
-        if prev_parts:
-            owned = [p for p in touched if p in prev_parts]
-            if owned:
-                existing_touched = _read_partitions(
-                    spark, root, prev_parts, only=owned, col=partition_by
-                )
-        merged = upsert_dataframe(existing_touched, batch, key, order_by)
-        merged.write.partitionBy(partition_by).mode("overwrite").parquet(
-            data_dir
-        )
-        parts = dict(prev_parts)
-        for p in touched:
-            parts[p] = data_rel
-        manifest = {
-            "version": new_version,
-            "parent": cur,
-            "data": data_rel,
-            "partition_by": partition_by,
-            "partitions": parts,
-        }
-        if stats_cols:
-            prev_stats: dict = {}
-            if cur is not None:
-                prev_stats = _manifest(spark, root, cur).get("stats", {})
-            stats = {
-                p: s for p, s in prev_stats.items() if p in parts
-            }
-            stats.update(
-                _collect_stats(
-                    spark.read.parquet(data_dir), partition_by, stats_cols
-                )
-            )
-            manifest["stats_cols"] = list(stats_cols)
-            manifest["stats"] = stats
-
-    if not _create_exclusive(
-        spark,
-        f"{root}/{_VERSIONS}/v{new_version:08d}.json",
-        json.dumps(manifest, sort_keys=True),
-    ):
-        raise ConcurrentWriteError(
-            f"version {new_version} under {root} was committed by another "
-            f"writer; this write is invisible (orphan {data_rel}) — "
-            f"re-read and retry"
-        )
-    _write_atomic(spark, f"{root}/{_LATEST}", str(new_version))
-    return new_version
+    if stats_cols is None:
+        stats_cols = parent.get("stats_cols")
+    content = _rewrite(
+        spark, root, parent, head["data"], partition_by, batch,
+        lambda rows: upsert_dataframe(rows, batch, key, order_by), stats_cols,
+    )
+    return _commit(spark, root, {**head, **content})
 
 
 def _read_partitions(
@@ -424,34 +466,16 @@ def _any_owner_dir(spark: SparkSession, root: str, m: dict) -> str:
     """Some existing partitioned data directory reachable from manifest
     ``m`` or its ancestors — used only to recover the SCHEMA of an empty
     version (a table whose rows were all deleted)."""
-    fs, jvm = _fs(spark, root)
     seen = m
     while True:
         candidates = sorted(set(seen.get("partitions", {}).values()))
         candidates.append(seen["data"])
         for rel in candidates:
-            if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{root}/{rel}")):
-                # the dir must contain at least one parquet file
-                n, _ = _partition_dir_has_files(spark, f"{root}/{rel}")
-                if n:
-                    return rel
+            if _data_files(spark, f"{root}/{rel}")[0]:
+                return rel
         if seen.get("parent") is None:
             raise FileNotFoundError(f"no data directories under {root}")
         seen = _manifest(spark, root, seen["parent"])
-
-
-def _partition_dir_has_files(spark, path: str) -> tuple[int, int]:
-    """(n_files, bytes) of parquet files anywhere under ``path``."""
-    fs, jvm = _fs(spark, path)
-    it = fs.listFiles(jvm.org.apache.hadoop.fs.Path(path), True)
-    n, b = 0, 0
-    while it.hasNext():
-        status = it.next()
-        name = status.getPath().getName()
-        if not name.startswith(("_", ".")):
-            n += 1
-            b += status.getLen()
-    return n, b
 
 
 def _zone_overlaps(stats: dict, prune: dict) -> bool:
@@ -531,12 +555,7 @@ def read_versioned(
     return df
 
 
-def versioned_delete(
-    spark: SparkSession,
-    root: str,
-    predicate,
-    expected_parent: "int | None | object" = "_unset",
-) -> int:
+def versioned_delete(spark: SparkSession, root: str, predicate) -> int:
     """DELETE: publish a new version without the rows matching
     ``predicate`` (a Column or SQL string). History is untouched — the
     deleted rows remain readable at older versions until vacuum.
@@ -549,89 +568,16 @@ def versioned_delete(
     day) rewrites a sliver of the table.
     """
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    cur = current_version(spark, root)
-    if expected_parent != "_unset" and cur != expected_parent:
-        raise ConcurrentWriteError(
-            f"table at {root} is at version {cur}, writer expected "
-            f"{expected_parent}; re-read and retry"
-        )
-    if cur is None:
-        raise FileNotFoundError(f"no published version under {root}")
-    m = _manifest(spark, root, cur)
-    new_version = cur + 1
-    data_rel = f"data/v{new_version:08d}-{uuid.uuid4().hex[:8]}"
-    data_dir = f"{root}/{data_rel}"
-    stats_cols = m.get("stats_cols")
-
-    if "partitions" not in m:
-        kept = read_versioned(spark, root, cur).filter(~pred)
-        kept.coalesce(max(1, min(kept.rdd.getNumPartitions(), 32))).write.mode(
-            "overwrite"
-        ).parquet(data_dir)
-        manifest = {
-            "version": new_version,
-            "parent": cur,
-            "data": data_rel,
-            "deleted_where": str(predicate),
-            "n_rows": spark.read.parquet(data_dir).count(),
-        }
-        if stats_cols:
-            manifest["stats_cols"] = stats_cols
-            manifest["stats"] = _collect_stats(
-                spark.read.parquet(data_dir), None, stats_cols
-            )
-    else:
-        col = m["partition_by"]
-        cur_df = read_versioned(spark, root, cur)
-        touched = sorted(
-            str(r[0])
-            for r in cur_df.filter(pred).select(col).distinct().collect()
-        )
-        parts = {p: o for p, o in m["partitions"].items() if p not in touched}
-        stats = {
-            p: s for p, s in m.get("stats", {}).items() if p not in touched
-        }
-        if touched:
-            kept = _read_partitions(
-                spark, root, m["partitions"], only=touched, col=col
-            ).filter(~pred)
-            survivors = sorted(
-                str(r[0]) for r in kept.select(col).distinct().collect()
-            )
-            if survivors:
-                kept.write.partitionBy(col).mode("overwrite").parquet(data_dir)
-                for p in survivors:
-                    parts[p] = data_rel
-                if stats_cols:
-                    stats.update(
-                        _collect_stats(
-                            spark.read.parquet(data_dir), col, stats_cols
-                        )
-                    )
-        manifest = {
-            "version": new_version,
-            "parent": cur,
-            "data": data_rel,
-            "deleted_where": str(predicate),
-            "partition_by": col,
-            "partitions": parts,
-        }
-        if stats_cols:
-            manifest["stats_cols"] = stats_cols
-            manifest["stats"] = stats
-
-    if not _create_exclusive(
-        spark,
-        f"{root}/{_VERSIONS}/v{new_version:08d}.json",
-        json.dumps(manifest, sort_keys=True),
-    ):
-        raise ConcurrentWriteError(
-            f"version {new_version} under {root} was committed by another "
-            f"writer; this delete is invisible (orphan {data_rel}) — "
-            f"re-read and retry"
-        )
-    _write_atomic(spark, f"{root}/{_LATEST}", str(new_version))
-    return new_version
+    parent, head = _begin(spark, root, must_exist=True)
+    col = parent.get("partition_by")
+    touched = None
+    if col is not None:
+        touched = read_versioned(spark, root, parent["version"]).filter(pred)
+    content = _rewrite(
+        spark, root, parent, head["data"], col, touched,
+        lambda rows: rows.filter(~pred), parent.get("stats_cols"),
+    )
+    return _commit(spark, root, {**head, **content, "deleted_where": str(predicate)})
 
 
 def merge_apply(
@@ -726,7 +672,7 @@ def versioned_merge(
     matched_clauses: list[tuple[str | None, str]],
     not_matched: str | None = "insert",
     not_matched_cond: str | None = None,
-    expected_parent: "int | None | object" = "_unset",
+    expected_parent: "int | None | object" = _UNSET,
 ) -> int:
     """Conditional-clause MERGE INTO the versioned table — Delta's
     ``WHEN MATCHED [AND cond] THEN UPDATE/DELETE`` +
@@ -743,133 +689,31 @@ def versioned_merge(
     zone-map stats are recomputed for rewritten partitions and carried
     for referenced ones — the exact rewrite discipline of
     versioned_delete. Commit/CAS/crash contracts are versioned_upsert's
-    (unique data dir, create-if-absent manifest, pointer moves last).
+    (unique data dir, create-if-absent manifest).
     """
     ks = [key] if isinstance(key, str) else list(key)
-    cur = current_version(spark, root)
-    if expected_parent != "_unset" and cur != expected_parent:
-        raise ConcurrentWriteError(
-            f"table at {root} is at version {cur}, writer expected "
-            f"{expected_parent}; re-read and retry"
-        )
-    new_version = 1 if cur is None else cur + 1
-    data_rel = f"data/v{new_version:08d}-{uuid.uuid4().hex[:8]}"
-    data_dir = f"{root}/{data_rel}"
-    m = _manifest(spark, root, cur) if cur is not None else {}
-    stats_cols = m.get("stats_cols")
-
-    if cur is None or "partitions" not in m:
-        existing = read_versioned(spark, root, cur) if cur is not None else None
-        merged = merge_apply(
-            existing, source, ks, matched_clauses, not_matched, not_matched_cond
-        )
-        merged.write.mode("overwrite").parquet(data_dir)
-        manifest = {
-            "version": new_version,
-            "parent": cur,
-            "data": data_rel,
-            "merge_on": ks,
-            "n_rows": spark.read.parquet(data_dir).count(),
-        }
-        if stats_cols:
-            manifest["stats_cols"] = list(stats_cols)
-            manifest["stats"] = _collect_stats(
-                spark.read.parquet(data_dir), None, stats_cols
-            )
-    else:
-        col = m["partition_by"]
-        cur_df = read_versioned(spark, root, cur)
+    parent, head = _begin(spark, root, expected_parent)
+    col = parent.get("partition_by")
+    touched = None
+    if col is not None:
         # the partitions the source's rows land in plus the ones holding
         # a matched key — two narrow distinct scans under ONE action (one
         # scheduling round trip, not two sequential collects)
-        touched = sorted(
-            {
-                str(r[0])
-                for r in source.select(col)
-                .unionByName(
-                    cur_df.join(
-                        source.select(*ks).distinct(), ks, "left_semi"
-                    ).select(col)
-                )
-                .distinct()
-                .collect()
-            }
+        matched = read_versioned(spark, root, parent["version"]).join(
+            source.select(*ks).distinct(), ks, "left_semi"
         )
-        prev_parts = dict(m["partitions"])
-        parts = {p: o for p, o in prev_parts.items() if p not in touched}
-        stats = {
-            p: s for p, s in m.get("stats", {}).items() if p not in touched
-        }
-        owned = [p for p in touched if p in prev_parts]
-        existing_touched = (
-            _read_partitions(spark, root, prev_parts, only=owned, col=col)
-            if owned
-            else None
-        )
-        merged = merge_apply(
-            existing_touched, source, ks, matched_clauses,
-            not_matched, not_matched_cond,
-        )
-        survivors = sorted(
-            str(r[0]) for r in merged.select(col).distinct().collect()
-        )
-        if survivors:
-            merged.write.partitionBy(col).mode("overwrite").parquet(data_dir)
-            for p in survivors:
-                parts[p] = data_rel
-            if stats_cols:
-                stats.update(
-                    _collect_stats(
-                        spark.read.parquet(data_dir), col, stats_cols
-                    )
-                )
-        manifest = {
-            "version": new_version,
-            "parent": cur,
-            "data": data_rel,
-            "merge_on": ks,
-            "partition_by": col,
-            "partitions": parts,
-        }
-        if stats_cols:
-            manifest["stats_cols"] = list(stats_cols)
-            manifest["stats"] = stats
-
-    if not _create_exclusive(
-        spark,
-        f"{root}/{_VERSIONS}/v{new_version:08d}.json",
-        json.dumps(manifest, sort_keys=True),
-    ):
-        raise ConcurrentWriteError(
-            f"version {new_version} under {root} was committed by another "
-            f"writer; this merge is invisible (orphan {data_rel}) — "
-            f"re-read and retry"
-        )
-    _write_atomic(spark, f"{root}/{_LATEST}", str(new_version))
-    return new_version
+        touched = source.select(col).unionByName(matched.select(col))
+    content = _rewrite(
+        spark, root, parent, head["data"], col, touched,
+        lambda rows: merge_apply(
+            rows, source, ks, matched_clauses, not_matched, not_matched_cond
+        ),
+        parent.get("stats_cols"),
+    )
+    return _commit(spark, root, {**head, **content, "merge_on": ks})
 
 
-def _partition_file_stats(spark, path: str) -> tuple[int, int]:
-    """(file_count, total_bytes) of data files directly under ``path``."""
-    fs, jvm = _fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    if not fs.exists(p):
-        return 0, 0
-    n, b = 0, 0
-    for status in fs.listStatus(p):
-        name = status.getPath().getName()
-        if status.isFile() and not name.startswith(("_", ".")):
-            n += 1
-            b += status.getLen()
-    return n, b
-
-
-def compact_versioned(
-    spark: SparkSession,
-    root: str,
-    target_file_bytes: int = 128 << 20,
-    expected_parent: "int | None | object" = "_unset",
-) -> int:
+def compact_versioned(spark: SparkSession, root: str) -> int:
     """OPTIMIZE: republish the latest content with bin-packed files and
     return the new version (content-identical — readers, time travel and
     CDC are unaffected; the fragmented version's files stay until
@@ -879,83 +723,39 @@ def compact_versioned(
 
     The partitioned path inspects each partition's CURRENT file layout
     and rewrites only partitions holding more files than
-    ``ceil(bytes / target_file_bytes)`` — the rest keep their owner
-    directories untouched. Zone-map stats carry forward verbatim
+    ``ceil(bytes / 128 MiB)`` — the rest keep their owner directories
+    untouched. Row counts and zone-map stats carry forward verbatim
     (content is identical by construction).
     """
-    cur = current_version(spark, root)
-    if expected_parent != "_unset" and cur != expected_parent:
-        raise ConcurrentWriteError(
-            f"table at {root} is at version {cur}, writer expected "
-            f"{expected_parent}; re-read and retry"
-        )
-    if cur is None:
-        raise FileNotFoundError(f"no published version under {root}")
-    m = _manifest(spark, root, cur)
-    new_version = cur + 1
-    data_rel = f"data/v{new_version:08d}-{uuid.uuid4().hex[:8]}"
-    data_dir = f"{root}/{data_rel}"
-
-    if "partitions" not in m:
+    parent, head = _begin(spark, root, must_exist=True)
+    carried = {k: parent[k] for k in ("n_rows", "stats_cols", "stats") if k in parent}
+    col = parent.get("partition_by")
+    if col is None:
         from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.write import write_sized_parquet
 
         write_sized_parquet(
-            read_versioned(spark, root, cur),
-            data_dir,
-            target_file_bytes=target_file_bytes,
+            read_versioned(spark, root, parent["version"]),
+            f"{root}/{head['data']}",
+            target_file_bytes=_TARGET_FILE_BYTES,
         )
-        manifest = {
-            k: m[k] for k in ("n_rows", "stats_cols", "stats") if k in m
-        }
-        manifest.update(
-            version=new_version, parent=cur, data=data_rel, compaction_of=cur
-        )
+        content = {}
     else:
-        col = m["partition_by"]
-        fragmented = []
-        for p, owner in sorted(m["partitions"].items()):
-            n_files, n_bytes = _partition_file_stats(
-                spark, f"{root}/{owner}/{col}={p}"
-            )
-            ideal = max(1, -(-n_bytes // target_file_bytes))
-            if n_files > ideal:
-                fragmented.append((p, ideal))
-        parts = dict(m["partitions"])
-        if fragmented:
-            values = [p for p, _ in fragmented]
-            df = _read_partitions(
-                spark, root, m["partitions"], only=values, col=col
-            )
-            # one shuffle keyed by partition value, sized per partition
-            df.repartition(
-                max(1, sum(i for _, i in fragmented)), F.col(col)
-            ).write.partitionBy(col).mode("overwrite").parquet(data_dir)
-            for p in values:
-                parts[p] = data_rel
-        manifest = {
-            k: m[k] for k in ("stats_cols", "stats") if k in m
-        }
-        manifest.update(
-            version=new_version,
-            parent=cur,
-            data=data_rel,
-            partition_by=col,
-            partitions=parts,
-            compaction_of=cur,
+        ideal = {}
+        for p, owner in sorted(parent["partitions"].items()):
+            path = f"{root}/{owner}/{col}={_path_utils(spark).escapePathName(p)}"
+            n_files, n_bytes = _data_files(spark, path)
+            want = max(1, -(-n_bytes // _TARGET_FILE_BYTES))
+            if n_files > want:
+                ideal[p] = want
+        # one shuffle keyed by partition value, sized per partition
+        content = _rewrite(
+            spark, root, parent, head["data"], col, sorted(ideal),
+            lambda rows: rows.repartition(sum(ideal.values()), F.col(col)),
+            None,
         )
-
-    if not _create_exclusive(
-        spark,
-        f"{root}/{_VERSIONS}/v{new_version:08d}.json",
-        json.dumps(manifest, sort_keys=True),
-    ):
-        raise ConcurrentWriteError(
-            f"version {new_version} under {root} was committed by another "
-            f"writer; this compaction is invisible (orphan {data_rel}) — "
-            f"re-read and retry"
-        )
-    _write_atomic(spark, f"{root}/{_LATEST}", str(new_version))
-    return new_version
+    return _commit(
+        spark, root, {**carried, **content, **head, "compaction_of": parent["version"]}
+    )
 
 
 def rollback(spark: SparkSession, root: str, version: int) -> int:
@@ -963,30 +763,21 @@ def rollback(spark: SparkSession, root: str, version: int) -> int:
     history: the bad versions stay for audit)."""
     m = _manifest(spark, root, version)  # validates existence
     cur = current_version(spark, root)
-    new_version = (cur or 0) + 1
-    manifest = {
-        "version": new_version,
-        "parent": cur,
-        "data": m["data"],  # shares the immutable data dir(s)
-        "rollback_of": version,
-    }
     # stats/stats_cols MUST carry over: versioned_upsert inherits the
     # zone-map config from the PARENT manifest, so dropping them here would
     # silently stop zone-map maintenance for every upsert after a rollback.
-    for field in ("n_rows", "partition_by", "partitions", "stats", "stats_cols"):
-        if field in m:
-            manifest[field] = m[field]
-    if not _create_exclusive(
-        spark,
-        f"{root}/{_VERSIONS}/v{new_version:08d}.json",
-        json.dumps(manifest, sort_keys=True),
-    ):
-        raise ConcurrentWriteError(
-            f"rollback lost the race for version {new_version} under "
-            f"{root}; re-read and retry"
-        )
-    _write_atomic(spark, f"{root}/{_LATEST}", str(new_version))
-    return new_version
+    kept = {
+        k: m[k]
+        for k in ("n_rows", "partition_by", "partitions", "stats", "stats_cols")
+        if k in m
+    }
+    return _commit(spark, root, {
+        **kept,
+        "version": (cur or 0) + 1,
+        "parent": cur,
+        "data": m["data"],  # shares the immutable data dir(s)
+        "rollback_of": version,
+    })
 
 
 def vacuum_versioned(

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.joins import asof_join
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.registry import query
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.relational import DAVG, DSUM, davg, dsum
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.relational import DAVG, DSUM, dsum
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import app_once
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
 

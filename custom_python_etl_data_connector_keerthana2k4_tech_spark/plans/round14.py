@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.functions.vectors import QUANT_SCALE, sql_quantize
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.functions.vectors import sql_quantize
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.registry import query
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.relational import DSUM, dsum
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load

@@ -18,7 +18,6 @@ from pyspark.sql.window import Window
 
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.functions.vectors import sql_quantize
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.registry import query
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.relational import dsum
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.registry import query
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.relational import DSUM, dsum

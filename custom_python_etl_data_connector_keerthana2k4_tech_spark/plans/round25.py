@@ -214,7 +214,6 @@ def q354_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SNM_TAU = 0.6
-_SNM_WINDOW = 2  # compare each doc to its 2 predecessors in sort order
 
 
 @query(

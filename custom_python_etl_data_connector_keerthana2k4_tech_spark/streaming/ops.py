@@ -45,6 +45,9 @@ from custom_python_etl_data_connector_keerthana2k4_tech_spark.sources.rest impor
     register_rest_source,
 )
 
+# versioned-table sink: commits retried after a lost manifest claim
+_COMMIT_RETRIES = 3
+
 
 def windowed_counts(
     events: DataFrame,
@@ -130,7 +133,6 @@ def foreach_batch_versioned_upsert(
     checkpoint: str,
     partition_by: str | None = None,
     stats_cols: list[str] | None = None,
-    max_commit_retries: int = 3,
 ) -> DataStreamWriter:
     """Streaming ingestion into a VERSIONED table: each micro-batch
     publishes one snapshot-isolated version (operators/versioned) —
@@ -141,7 +143,7 @@ def foreach_batch_versioned_upsert(
     Exactly-once here is belt-and-braces: the upsert itself is keyed
     last-write-wins (a replayed batch converges to identical table
     CONTENT, it just burns one extra version — vacuum reclaims it), and
-    the optimistic-concurrency commit retries ``max_commit_retries``
+    the optimistic-concurrency commit retries ``_COMMIT_RETRIES``
     times when a concurrent writer (another stream, a batch backfill, a
     compaction job) claims the version first; the loser's directory is
     invisible and swept. At 100 TB pass ``partition_by`` so each batch
@@ -153,7 +155,7 @@ def foreach_batch_versioned_upsert(
     )
 
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        for attempt in range(max_commit_retries + 1):
+        for attempt in range(_COMMIT_RETRIES + 1):
             try:
                 versioned_upsert(
                     batch_df.sparkSession,
@@ -166,7 +168,7 @@ def foreach_batch_versioned_upsert(
                 )
                 return
             except ConcurrentWriteError:
-                if attempt == max_commit_retries:
+                if attempt == _COMMIT_RETRIES:
                     raise
 
     return _foreach_batch(stream_df, _sink, checkpoint)

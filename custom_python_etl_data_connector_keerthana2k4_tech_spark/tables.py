@@ -22,11 +22,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any scale factor (region and
-# nation are fixed-size; customer/supplier/part grow with SF and are NOT here).
-BROADCASTABLE = frozenset({"region", "nation"})
-
-
 # Columns written as parquet TIMESTAMP(NANOS), which Spark cannot map to a
 # Catalyst type directly (PARQUET_TYPE_ILLEGAL). We read them as raw nano
 # longs (legacy conf) and convert to micros-precision timestamps — the same

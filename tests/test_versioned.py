@@ -337,10 +337,9 @@ def test_failed_write_removes_the_manifest_this_call_created(spark, monkeypatch)
 
 
 def test_manifest_claim_serializes_even_without_cas_handle(spark, tmp_path):
-    """A writer that crashed between manifest commit and pointer update
-    must not be overwritten: the manifest directory is authoritative, the
-    pointer self-heals, and the next writer builds on the committed
-    version."""
+    """A manifest another writer committed must not be overwritten: the
+    manifest directory is authoritative, and the next writer builds on
+    the committed version."""
     import json as _json
 
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.versioned import (
@@ -350,15 +349,14 @@ def test_manifest_claim_serializes_even_without_cas_handle(spark, tmp_path):
 
     root = str(tmp_path / "t")
     versioned_upsert(spark, _df(spark, [("a", "v1", 1)]), root, "k", ["ts"])
-    # simulate a writer that committed v2's manifest then crashed before
-    # moving the pointer (reuses v1's data dir so the state stays readable)
+    # simulate a writer that committed v2's manifest (reuses v1's data dir
+    # so the state stays readable)
     m1 = _json.loads(_read_small(spark, f"{root}/_versions/v00000001.json"))
     ghost = {"version": 2, "parent": 1, "data": m1["data"], "n_rows": m1["n_rows"]}
     assert _create_exclusive(
         spark, f"{root}/_versions/v00000002.json", _json.dumps(ghost)
     )
-    assert _read_small(spark, f"{root}/_LATEST").strip() == "1"  # stale pointer
-    assert current_version(spark, root) == 2  # self-healed
+    assert current_version(spark, root) == 2
     v3 = versioned_upsert(spark, _df(spark, [("b", "w1", 1)]), root, "k", ["ts"])
     assert v3 == 3
     assert [m["version"] for m in versions(spark, root)] == [1, 2, 3]
@@ -587,3 +585,104 @@ def test_zone_map_unpartitioned_whole_table_skip(spark, tmp_path):
     assert hit.count() == 2  # zone overlap: whole (single-zone) table kept
     miss = read_versioned(spark, root, prune={"ts": (30, 40)})
     assert miss.count() == 0
+
+
+def test_boolean_partitions_round_trip_and_null_partitions_are_refused(spark, tmp_path):
+    """Partition values are recorded as Spark renders them in directory
+    names (``true``, not Python's ``True``), so a boolean-partitioned table
+    reads back every row. A NULL partition value has no directory of its
+    own (Spark reads it back as NULL, which no recorded value matches), so
+    it is refused rather than lost."""
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.versioned import versioned_delete
+
+    ddl = "k string, v string, ts long, flag boolean"
+    root = str(tmp_path / "t")
+    versioned_upsert(
+        spark,
+        spark.createDataFrame([("a", "v1", 1, True), ("b", "w1", 1, False), ("c", "x1", 1, True)], ddl),
+        root, "k", ["ts"], partition_by="flag", stats_cols=["ts"],
+    )
+    assert _state(spark, root) == {"a": "v1", "b": "w1", "c": "x1"}
+    m = versions(spark, root)[-1]
+    assert sorted(m["partitions"]) == sorted(m["stats"]) == ["false", "true"]
+    versioned_upsert(
+        spark, spark.createDataFrame([("a", "v2", 2, True)], ddl), root, "k", ["ts"],
+        partition_by="flag",
+    )
+    versioned_delete(spark, root, "k = 'b'")
+    assert _state(spark, root) == {"a": "v2", "c": "x1"}
+    assert sorted(versions(spark, root)[-1]["partitions"]) == ["true"]
+
+    nulls = str(tmp_path / "n")
+    with pytest.raises(ValueError, match="'day'"):
+        versioned_upsert(
+            spark, _pdf(spark, [("a", "v1", 1, "d1"), ("b", "w1", 1, None)]), nulls,
+            "k", ["ts"], partition_by="day",
+        )
+    assert versions(spark, nulls) == []
+
+
+_LOST_CLAIM_CASES = [
+    (verb, partitioned)
+    for verb in ("upsert", "delete", "merge", "compact", "rollback")
+    for partitioned in (False, True)
+]
+
+
+@pytest.mark.parametrize("verb, partitioned", _LOST_CLAIM_CASES)
+def test_lost_claim_changes_nothing_visible(spark, tmp_path, monkeypatch, verb, partitioned):
+    """Every committing verb that loses the manifest claim raises
+    ConcurrentWriteError, adds no version and changes no read; only the
+    rival's commit is visible, and vacuum sweeps the loser's directory.
+    The race is staged by claiming the loser's version from inside the
+    claim itself."""
+    import json as _json
+    import os
+    import shutil
+
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators import versioned as v
+
+    root = str(tmp_path / "t")
+    part = {"partition_by": "day"} if partitioned else {}
+    rows = [("a", "v1", 1, "d1"), ("b", "w1", 1, "d2"), ("c", "x1", 1, "d2")]
+    v.versioned_upsert(spark, _pdf(spark, rows), root, "k", ["ts"], **part)
+    v.versioned_upsert(spark, _pdf(spark, [("c", "x2", 2, "d2")]), root, "k", ["ts"], **part)
+    if verb == "compact" and partitioned:
+        # fragment d2 in place so compaction has a partition to rewrite
+        d2 = f"{root}/{versions(spark, root)[-1]['partitions']['d2']}/day=d2"
+        spark.read.parquet(d2).repartition(2).write.mode("overwrite").parquet(d2 + ".tmp")
+        shutil.rmtree(d2)
+        os.rename(d2 + ".tmp", d2)
+    before = versions(spark, root)
+    state = _state(spark, root)
+    rival = dict(before[-1], version=3, parent=2)  # republishes v2's content
+
+    real = v._create_exclusive
+
+    def claimed_first(spark_, path, content):
+        assert real(spark_, path, _json.dumps(rival, sort_keys=True))
+        return real(spark_, path, content)
+
+    monkeypatch.setattr(v, "_create_exclusive", claimed_first)
+    run = {
+        "upsert": lambda: v.versioned_upsert(
+            spark, _pdf(spark, [("b", "w2", 2, "d2")]), root, "k", ["ts"], **part
+        ),
+        "delete": lambda: v.versioned_delete(spark, root, "k = 'b'"),
+        "merge": lambda: v.versioned_merge(
+            spark, _pdf(spark, [("b", "w2", 2, "d2")]), root, "k", [(None, "update")]
+        ),
+        "compact": lambda: v.compact_versioned(spark, root),
+        "rollback": lambda: v.rollback(spark, root, 1),
+    }[verb]
+    with pytest.raises(v.ConcurrentWriteError):
+        run()
+    monkeypatch.undo()
+    assert versions(spark, root) == before + [rival]
+    assert _state(spark, root) == state
+    referenced = {d for m in versions(spark, root) for d in [m["data"], *m.get("partitions", {}).values()]}
+    orphans = {f"data/{n}" for n in os.listdir(f"{root}/data")} - referenced
+    assert len(orphans) == (0 if verb == "rollback" else 1)
+    v.vacuum_versioned(spark, root, grace_seconds=0)
+    assert not any(os.path.exists(f"{root}/{o}") for o in orphans)
+    assert _state(spark, root) == state
