@@ -121,13 +121,15 @@ def _size_band_join(a: DataFrame, b: DataFrame, threshold: float) -> DataFrame:
     return a.join(b_exp, (a["sz_a"] == b_exp["cand_sz"]) & (a["fp_a"] < b_exp["fp_b"]))
 
 
-def _mask_reps(reps: DataFrame, n_chunks: int) -> DataFrame:
-    """(fp, sz, mask array<bigint>) — dictionary-encoded packed bitmap.
+def _mask_reps(reps: DataFrame, n_vocab: int) -> DataFrame:
+    """(fp, sz, mask array<bigint>) — dictionary-encoded packed bitmap of
+    ``ceil(n_vocab / 64)`` words.
 
     Bit positions come from a global shingle dictionary (row_number over the
     distinct vocabulary — small by precondition, so the single-partition
     window is fine). Intersections then cost O(n_chunks) bigint ops.
     """
+    n_chunks = max(1, (n_vocab + 63) // 64)
     vocab = (
         reps.select(F.explode("shingles").alias("w"))
         .distinct()
@@ -173,6 +175,29 @@ def _jaccard_filter(pairs: DataFrame, threshold: float) -> DataFrame:
         F.col("n_common").cast("double")
         / (F.col("sz_a") + F.col("sz_b") - F.col("n_common")).cast("double"),
     ).filter(F.col("jaccard") >= threshold)
+
+
+def _bitmap_verify(masked: DataFrame, pair, threshold: float) -> DataFrame:
+    """Exact packed-bitmap verification of rep pairs: ``pair(a, b)`` joins
+    the (fp_a, sz_a, mask_a) and (fp_b, sz_b, mask_b) sides of ``masked``
+    (a size-band join or a candidate join), and each pair's popcount
+    intersection feeds ``_jaccard_filter``."""
+    a = masked.select(
+        F.col("fp").alias("fp_a"), F.col("sz").alias("sz_a"), F.col("mask").alias("mask_a")
+    )
+    b = masked.select(
+        F.col("fp").alias("fp_b"), F.col("sz").alias("sz_b"), F.col("mask").alias("mask_b")
+    )
+    return _jaccard_filter(
+        pair(a, b).select(
+            "fp_a",
+            "fp_b",
+            _mask_intersection(F.col("mask_a"), F.col("mask_b")).alias("n_common"),
+            "sz_a",
+            "sz_b",
+        ),
+        threshold,
+    )
 
 
 def _verify_with_arrays(cand: DataFrame, reps: DataFrame, threshold: float) -> DataFrame:
@@ -290,23 +315,9 @@ def _rep_pairs(
     if strategy == "bitmap":
         if n_vocab is None:
             n_vocab, _ = _corpus_stats(reps)
-        n_chunks = max(1, (n_vocab + 63) // 64)
-        masked = _mask_reps(reps, n_chunks).persist()
-        a = masked.select(
-            F.col("fp").alias("fp_a"), F.col("sz").alias("sz_a"), F.col("mask").alias("mask_a")
-        )
-        b = masked.select(
-            F.col("fp").alias("fp_b"), F.col("sz").alias("sz_b"), F.col("mask").alias("mask_b")
-        )
-        verified = _jaccard_filter(
-            _size_band_join(a, b, threshold).select(
-                "fp_a",
-                "fp_b",
-                _mask_intersection(F.col("mask_a"), F.col("mask_b")).alias("n_common"),
-                "sz_a",
-                "sz_b",
-            ),
-            threshold,
+        masked = _mask_reps(reps, n_vocab).persist()
+        verified = _bitmap_verify(
+            masked, lambda a, b: _size_band_join(a, b, threshold), threshold
         )
     elif strategy == "prefix":
         cand = _prefix_candidates(reps, threshold)
@@ -465,24 +476,9 @@ def _verify_candidates(
     when the vocabulary is small, array intersection otherwise."""
     n_vocab, n_reps = _corpus_stats(reps)
     if n_vocab <= _BITMAP_MAX_VOCAB and n_reps <= _BITMAP_MAX_REPS:
-        n_chunks = max(1, (n_vocab + 63) // 64)
-        masked = _mask_reps(reps, n_chunks)
-        ma = masked.select(
-            F.col("fp").alias("fp_a"), F.col("sz").alias("sz_a"), F.col("mask").alias("mask_a")
-        )
-        mb = masked.select(
-            F.col("fp").alias("fp_b"), F.col("sz").alias("sz_b"), F.col("mask").alias("mask_b")
-        )
-        return _jaccard_filter(
-            cand.join(ma, "fp_a")
-            .join(mb, "fp_b")
-            .select(
-                "fp_a",
-                "fp_b",
-                _mask_intersection(F.col("mask_a"), F.col("mask_b")).alias("n_common"),
-                "sz_a",
-                "sz_b",
-            ),
+        return _bitmap_verify(
+            _mask_reps(reps, n_vocab),
+            lambda a, b: cand.join(a, "fp_a").join(b, "fp_b"),
             threshold,
         )
     return _verify_with_arrays(cand, reps, threshold)

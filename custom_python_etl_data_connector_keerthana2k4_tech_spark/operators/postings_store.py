@@ -259,7 +259,7 @@ class PostingsStore(GenStore):
 
         Plan: the only driver collect is the distinct BUCKET ids of the
         queries' terms (<= n_buckets ints at any Q — the pq_store
-        join-mode device), so the bucket predicate stays a literal
+        query device), so the bucket predicate stays a literal
         PartitionFilters entry; the postings are additionally semi-joined
         to the distinct term set (evaluated where the terms live, never
         collected). tf/df compute ONCE over the union of all query terms

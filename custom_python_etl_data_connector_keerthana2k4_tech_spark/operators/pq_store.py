@@ -36,18 +36,16 @@ surface at all (/root/reference/etl_connector.py, SURVEY §0).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.genstore import GenStore, Leg
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.kmeans import kmeans
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import (
-    _adc_tables,
     _bq,
-    _collect_queries,
-    _sql_long_array,
+    adc_join_topk,
+    encode_queries_join,
     pq_fit_codebook,
-    select_probes,
     with_code_cols,
 )
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.functions.vectors import quantize
@@ -191,13 +189,21 @@ class IVFPQStore(GenStore):
 
     def query(
         self, queries: DataFrame, nprobe: int = 2, topk: int = 10,
-        query_batch: int = 64, where: str | None = None,
-        query_mode: str = "literal",
+        where: str | None = None,
         attr_filters: DataFrame | None = None,
         attr_ranges: DataFrame | None = None,
         as_of_gen=None,
     ) -> DataFrame:
         """ADC top-k over the probed lists only.
+
+        The queries stay a DataFrame end to end (operators/pq
+        ``encode_queries_join`` + ``adc_join_topk``): probe selection and
+        ADC arrays compute distributed, and the only collect is the
+        distinct probed-list ids (at most ``n_lists`` ints), so the
+        ``cluster IN probes`` gate stays explicit PartitionFilters
+        directory pruning (asserted in tests); scoring reads codes only,
+        never vectors. Exact-rerank consumers join the survivor ids back
+        to the raw vector source (O(Q×topk) lookups).
 
         ``where`` takes a SQL predicate over the store's ``attr_cols``
         (e.g. ``"label = 3"``) for FILTERED search: candidates are
@@ -208,9 +214,9 @@ class IVFPQStore(GenStore):
         The predicate pushes down to the probed lists' parquet row
         groups alongside the PartitionFilters pruning.
 
-        ``attr_filters`` (join mode only) is the BATCH sibling of
-        ``where``: a (query_id, attr...) DataFrame giving each query its
-        OWN exact-match constraints as DATA — per-tenant / per-label
+        ``attr_filters`` is the BATCH sibling of ``where``: a
+        (query_id, attr...) DataFrame giving each query its OWN
+        exact-match constraints as DATA — per-tenant / per-label
         retrieval for a query TABLE. Every listed column must be one of
         the store's ``attr_cols``; a candidate pairs with a query only
         when all its constraint columns match (SQL equality — a NULL
@@ -218,181 +224,80 @@ class IVFPQStore(GenStore):
         ``query(where=...)`` (pinned in tests); the constraint join is an
         equi-join on (query_id, attrs) — never a crossJoin.
 
-        ``attr_ranges`` (join mode only, round 8) gives each query its
-        own NUMERIC BANDS: a (query_id, <attr>_lo, <attr>_hi) DataFrame
-        where each ``_lo``/``_hi`` column names a store attribute and
-        bounds it INCLUSIVELY (price ∈ [lo, hi], date ≥ cutoff — supply
-        only the ``_lo`` column for a one-sided bound). Bands ride the
-        cluster equi-join as join residuals — candidates outside a
-        query's band drop IN the join, before scoring, and candidate
-        volume stays bounded by the probed lists. A NULL bound matches
-        nothing (the attr_filters rule). Composable with
-        ``attr_filters``; row-identical per query to looping
+        ``attr_ranges`` gives each query its own NUMERIC BANDS: a
+        (query_id, <attr>_lo, <attr>_hi) DataFrame where each
+        ``_lo``/``_hi`` column names a store attribute and bounds it
+        INCLUSIVELY (price ∈ [lo, hi], date ≥ cutoff — supply only the
+        ``_lo`` column for a one-sided bound). Bands ride the cluster
+        equi-join as join residuals — candidates outside a query's band
+        drop IN the join, before scoring, and candidate volume stays
+        bounded by the probed lists. A NULL bound matches nothing (the
+        attr_filters rule). Composable with ``attr_filters``;
+        row-identical per query to looping
         ``query(where="attr BETWEEN lo AND hi")`` (pinned in tests).
 
         ``as_of_gen`` serves the query from a RETAINED generation
         (``reader(gen=...)``) — the reproducible-eval path over a
         mutating index; vacuumed generations raise.
 
-        Returns query_id, neighbor_id, cluster, rank, adc_dist. The
-        ``cluster IN probes`` predicate lands in PartitionFilters
-        (directory pruning — asserted in tests); scoring reads codes
-        only, never vectors. Queries shard into ``query_batch``-sized
-        union branches (the pq.py contract): plan width, stack arity,
-        and each branch's probed-directory set stay O(batch) no matter
-        how many queries arrive, and per-query independence makes the
-        union row-identical to the unsharded plan. Exact-rerank
-        consumers join the survivor ids back to the raw vector source
-        (O(Q×topk) lookups).
-
-        ``query_mode="join"`` keeps the queries a DATAFRAME end to end
-        (the operators/pq.encode_queries_join path): probe selection and
-        ADC tables compute distributed, driver state is O(n_lists) — the
-        only collect is the distinct probed-list ids, so the ``cluster
-        IN probes`` gate stays explicit PartitionFilters directory
-        pruning. Row-identical to literal mode (pinned in tests); use it
-        when the query set is itself a table (Q ~ 10^6).
+        Returns query_id, neighbor_id, cluster, rank, adc_dist.
         """
-        from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import (
-            _batches,
-            adc_join_topk,
-            encode_queries_join,
+        qenc = encode_queries_join(
+            queries, self.id_col, self.vec_col, self.codebook,
+            self.m, self.sub, self.centroids, nprobe,
         )
-
-        def read_pruned(probed: list[int]) -> DataFrame:
-            df = self.reader(gen=as_of_gen) if as_of_gen is not None else self.reader()
-            return df.filter(F.col("cluster").isin(probed))
-
-        if (
-            attr_filters is not None or attr_ranges is not None
-        ) and query_mode != "join":
-            raise ValueError(
-                "attr_filters/attr_ranges (per-query constraints as data) "
-                "require query_mode='join'; literal mode takes the shared "
-                "`where` predicate instead"
-            )
-        if query_mode == "join":
-            qenc = encode_queries_join(
-                queries, self.id_col, self.vec_col, self.codebook,
-                self.m, self.sub, self.centroids, nprobe,
-            )
-            # Bounded collect: <= n_lists ints — keeps directory pruning a
-            # literal PartitionFilters predicate (plan-asserted) instead of
-            # relying on runtime DPP. The queries scan runs twice (here and
-            # in the join); at any Q that is noise next to the corpus scan.
-            probed = sorted(
-                int(r["cluster"])
-                for r in qenc.select("cluster").distinct().collect()
-            )
-            coded = read_pruned(probed)
-            if where is not None:
-                coded = coded.filter(F.expr(where))
-            pair_filters = []
-            if attr_filters is not None:
-                fcols = [c for c in attr_filters.columns if c != "query_id"]
-                bad = [c for c in fcols if c not in self.attr_cols]
-                if bad or not fcols:
-                    raise ValueError(
-                        f"attr_filters columns {fcols} must be non-empty and "
-                        f"drawn from the store's attr_cols {self.attr_cols}"
-                    )
-                wants = attr_filters.select(
-                    "query_id",
-                    *[F.col(c).alias(f"__want_{c}") for c in fcols],
-                )
-                qenc = qenc.join(wants, "query_id")
-                pair_filters += [(c, f"__want_{c}") for c in fcols]
-            if attr_ranges is not None:
-                bcols = [c for c in attr_ranges.columns if c != "query_id"]
-                bad = [
-                    c
-                    for c in bcols
-                    if not (
-                        (c.endswith("_lo") or c.endswith("_hi"))
-                        and c[:-3] in self.attr_cols
-                    )
-                ]
-                if bad or not bcols:
-                    raise ValueError(
-                        f"attr_ranges columns {bcols} must be non-empty "
-                        "'<attr>_lo'/'<attr>_hi' names over the store's "
-                        f"attr_cols {self.attr_cols}"
-                    )
-                bands = attr_ranges.select(
-                    "query_id",
-                    *[F.col(c).alias(f"__band_{c}") for c in bcols],
-                )
-                qenc = qenc.join(bands, "query_id")
-                pair_filters += [
-                    (c[:-3], f"__band_{c}", ">=" if c.endswith("_lo") else "<=")
-                    for c in bcols
-                ]
-            return adc_join_topk(
-                coded.withColumnRenamed("vid", "neighbor_id"),
-                qenc, self.m, topk, pair_filters=pair_filters or None,
-            )
-        if query_mode != "literal":
-            raise ValueError(f"unknown query_mode {query_mode!r}")
-
-        qrows = _collect_queries(queries, self.id_col, self.vec_col)
-        adc_tables = _adc_tables(qrows, self.codebook, self.m, self.sub)
-        probes = select_probes(qrows, self.centroids, nprobe)
-
-        parts = [
-            self._query_batch(qb, tb, pb, topk, where, read_pruned)
-            for qb, tb, pb in zip(
-                _batches(qrows, query_batch),
-                _batches(adc_tables, query_batch),
-                _batches(probes, query_batch),
-            )
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _query_batch(
-        self, qrows, adc_tables, probes, topk: int, where: str | None,
-        read_pruned,
-    ) -> DataFrame:
-        """One query-batch branch: scan only the batch's probed lists."""
-        probed_all = sorted({c for ps in probes for c in ps})
-        coded = read_pruned(probed_all)
+        # Bounded collect: <= n_lists ints — keeps directory pruning a
+        # literal PartitionFilters predicate (plan-asserted) instead of
+        # relying on runtime DPP. The queries scan runs twice (here and
+        # in the join); at any Q that is noise next to the corpus scan.
+        probed = sorted(
+            int(r["cluster"])
+            for r in qenc.select("cluster").distinct().collect()
+        )
+        coded = self.reader(gen=as_of_gen).filter(F.col("cluster").isin(probed))
         if where is not None:
             coded = coded.filter(F.expr(where))
-        adc_exprs = [
-            f"CASE WHEN cluster IN ({','.join(str(int(c)) for c in probes[qi])})"
-            " THEN ("
-            + " + ".join(
-                f"element_at({_sql_long_array(adc_tables[qi][s])}, c{s} + 1)"
-                for s in range(self.m)
+        pair_filters = []
+        if attr_filters is not None:
+            fcols = [c for c in attr_filters.columns if c != "query_id"]
+            bad = [c for c in fcols if c not in self.attr_cols]
+            if bad or not fcols:
+                raise ValueError(
+                    f"attr_filters columns {fcols} must be non-empty and "
+                    f"drawn from the store's attr_cols {self.attr_cols}"
+                )
+            wants = attr_filters.select(
+                "query_id",
+                *[F.col(c).alias(f"__want_{c}") for c in fcols],
             )
-            + f") END AS adc{qi}"
-            for qi in range(len(qrows))
-        ]
-        stack_args = ", ".join(
-            f"CAST({int(qr['id'])} AS BIGINT), adc{qi}"
-            for qi, qr in enumerate(qrows)
-        )
-        stacked = coded.selectExpr("vid", "cluster", *adc_exprs).selectExpr(
-            "vid",
-            "cluster",
-            f"stack({len(qrows)}, {stack_args}) AS (query_id, adc_dist)",
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            "adc_dist", F.col("vid")
-        )
-        return (
-            stacked.filter(
-                F.col("adc_dist").isNotNull() & (F.col("vid") != F.col("query_id"))
+            qenc = qenc.join(wants, "query_id")
+            pair_filters += [(c, f"__want_{c}") for c in fcols]
+        if attr_ranges is not None:
+            bcols = [c for c in attr_ranges.columns if c != "query_id"]
+            bad = [
+                c
+                for c in bcols
+                if not (
+                    (c.endswith("_lo") or c.endswith("_hi"))
+                    and c[:-3] in self.attr_cols
+                )
+            ]
+            if bad or not bcols:
+                raise ValueError(
+                    f"attr_ranges columns {bcols} must be non-empty "
+                    "'<attr>_lo'/'<attr>_hi' names over the store's "
+                    f"attr_cols {self.attr_cols}"
+                )
+            bands = attr_ranges.select(
+                "query_id",
+                *[F.col(c).alias(f"__band_{c}") for c in bcols],
             )
-            .withColumn("rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= topk)
-            .select(
-                F.col("query_id").cast("long").alias("query_id"),
-                F.col("vid").cast("long").alias("neighbor_id"),
-                F.col("cluster").cast("int").alias("cluster"),
-                "rank",
-                F.col("adc_dist").cast("long").alias("adc_dist"),
-            )
+            qenc = qenc.join(bands, "query_id")
+            pair_filters += [
+                (c[:-3], f"__band_{c}", ">=" if c.endswith("_lo") else "<=")
+                for c in bcols
+            ]
+        return adc_join_topk(
+            coded.withColumnRenamed("vid", "neighbor_id"),
+            qenc, self.m, topk, pair_filters=pair_filters or None,
         )

@@ -278,8 +278,6 @@ def matryoshka_topk(
     head_dim: int = 16,
     shortlist: int = 50,
     topk: int = 10,
-    query_batch: int = 64,
-    query_mode: str = "literal",
     n_salts: int | None = None,
 ) -> DataFrame:
     """Matryoshka cascade search: rank the corpus by exact quantized L2
@@ -292,130 +290,66 @@ def matryoshka_topk(
     per candidate and the full vectors are touched for Q x shortlist rows
     only. Ties break on neighbor id at both stages; all arithmetic is
     exact BIGINT over quantized components, so the cascade's result is
-    bit-reproducible in DuckDB. Queries shard into ``query_batch``-sized
-    union branches (the pq.py contract). Returns: query_id, neighbor_id,
-    rank, head_dist, exact_dist.
+    bit-reproducible in DuckDB. Returns: query_id, neighbor_id, rank,
+    head_dist, exact_dist.
 
-    ``query_mode="join"`` keeps the queries a DATAFRAME end to end: the
-    head pass is the salted scoring join (pq._salted_query_pairs) over
-    HEAD SLICES ONLY (both sides carry head_dim longs, never the full
-    vector), the per-query shortlist is the two-stage top-k reusing the
-    join partitioning, and the full-dimension rerank joins the Q x
-    shortlist survivors back to the raw vectors — O(1) driver state at
-    any Q, row-identical to the literal path (pinned in tests)."""
+    The queries stay a DataFrame end to end: the head pass is the salted
+    scoring join (pq._salted_query_pairs) over HEAD SLICES ONLY (both
+    sides carry head_dim longs, never the full vector), the per-query
+    shortlist is the two-stage top-k reusing the join partitioning, and
+    the full-dimension rerank joins the Q x shortlist survivors back to
+    the raw vectors — O(1) driver state at any Q."""
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import (
-        _batches,
-        _collect_queries,
+        _default_n_salts,
         _salted_query_pairs,
-        _sql_exact_dist,
-        _sql_sq_l2,
+        _sql_l2_fold,
         _two_stage_topk,
     )
 
-    if query_mode == "join":
-        if n_salts is None:
-            from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import _default_n_salts
-
-            n_salts = _default_n_salts(df, id_col)
-        base = df.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.slice(quantize(vec_col), 1, head_dim).alias("hv"),
-        )
-        qframe = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.slice(quantize(vec_col), 1, head_dim).alias("__qh"),
-        )
-        pairs = _salted_query_pairs(base, qframe, n_salts).selectExpr(
+    if n_salts is None:
+        n_salts = _default_n_salts(df, id_col)
+    base = df.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.slice(quantize(vec_col), 1, head_dim).alias("hv"),
+    )
+    qframe = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.slice(quantize(vec_col), 1, head_dim).alias("__qh"),
+    )
+    pairs = _salted_query_pairs(base, qframe, n_salts).selectExpr(
+        "query_id",
+        "neighbor_id",
+        "__salt",
+        f"{_sql_l2_fold('hv', '__qh')} AS head_dist",
+    )
+    short = _two_stage_topk(
+        pairs, "head_dist", shortlist, rank_name="__hrank"
+    ).select("query_id", "neighbor_id", "head_dist")
+    nvec = df.select(
+        F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("__nqv")
+    )
+    qvec = queries.select(
+        F.col(id_col).alias("query_id"), quantize(vec_col).alias("__qqv")
+    )
+    audited = (
+        short.join(nvec, "neighbor_id")
+        .join(qvec, "query_id")
+        .selectExpr(
             "query_id",
             "neighbor_id",
-            "__salt",
-            "CAST(aggregate(zip_with(hv, __qh, (x, c) -> (x - c) * (x - c)),"
-            " 0L, (acc, v) -> acc + v) AS BIGINT) AS head_dist",
+            "head_dist",
+            f"{_sql_l2_fold('__nqv', '__qqv')} AS exact_dist",
         )
-        short = _two_stage_topk(
-            pairs, "head_dist", shortlist, rank_name="__hrank"
-        ).select("query_id", "neighbor_id", "head_dist")
-        nvec = df.select(
-            F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("__nqv")
-        )
-        qvec = queries.select(
-            F.col(id_col).alias("query_id"), quantize(vec_col).alias("__qqv")
-        )
-        audited = (
-            short.join(nvec, "neighbor_id")
-            .join(qvec, "query_id")
-            .selectExpr(
-                "query_id",
-                "neighbor_id",
-                "head_dist",
-                "CAST(aggregate(zip_with(__nqv, __qqv,"
-                " (x, c) -> (x - c) * (x - c)), 0L, (acc, v) -> acc + v)"
-                " AS BIGINT) AS exact_dist",
-            )
-        )
-        w_full = Window.partitionBy("query_id").orderBy(
-            "exact_dist", "neighbor_id"
-        )
-        return (
-            audited.withColumn("rank", F.row_number().over(w_full).cast("int"))
-            .filter(F.col("rank") <= topk)
-            .select(
-                F.col("query_id").cast("long").alias("query_id"),
-                F.col("neighbor_id").cast("long").alias("neighbor_id"),
-                "rank",
-                F.col("head_dist").cast("long").alias("head_dist"),
-                "exact_dist",
-            )
-        )
-    if query_mode != "literal":
-        raise ValueError(f"unknown query_mode {query_mode!r}")
-
-    qrows = _collect_queries(queries, id_col, vec_col)
-    base = df.select(
-        F.col(id_col).alias("neighbor_id"), quantize(vec_col).alias("qv")
     )
-    parts = []
-    for qb in _batches(qrows, query_batch):
-        head_exprs = [
-            f"{_sql_sq_l2(f'slice(qv, 1, {head_dim})', [int(x) for x in qr['qv'][:head_dim]])}"
-            f" AS h{qi}"
-            for qi, qr in enumerate(qb)
-        ]
-        stack_args = ", ".join(
-            f"CAST({int(qr['id'])} AS BIGINT), h{qi}"
-            for qi, qr in enumerate(qb)
+    w_full = Window.partitionBy("query_id").orderBy("exact_dist", "neighbor_id")
+    return (
+        audited.withColumn("rank", F.row_number().over(w_full).cast("int"))
+        .filter(F.col("rank") <= topk)
+        .select(
+            F.col("query_id").cast("long").alias("query_id"),
+            F.col("neighbor_id").cast("long").alias("neighbor_id"),
+            "rank",
+            F.col("head_dist").cast("long").alias("head_dist"),
+            "exact_dist",
         )
-        stacked = base.selectExpr("neighbor_id", "qv", *head_exprs).selectExpr(
-            "neighbor_id",
-            "qv",
-            f"stack({len(qb)}, {stack_args}) AS (query_id, head_dist)",
-        )
-        w_head = Window.partitionBy("query_id").orderBy(
-            "head_dist", "neighbor_id"
-        )
-        short = (
-            stacked.filter(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn("hrank", F.row_number().over(w_head))
-            .filter(F.col("hrank") <= shortlist)
-        )
-        w_full = Window.partitionBy("query_id").orderBy(
-            "exact_dist", "neighbor_id"
-        )
-        parts.append(
-            short.withColumn(
-                "exact_dist", F.expr(_sql_exact_dist(qb)).cast("long")
-            )
-            .withColumn("rank", F.row_number().over(w_full).cast("int"))
-            .filter(F.col("rank") <= topk)
-            .select(
-                F.col("query_id").cast("long").alias("query_id"),
-                F.col("neighbor_id").cast("long").alias("neighbor_id"),
-                "rank",
-                F.col("head_dist").cast("long").alias("head_dist"),
-                "exact_dist",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    )

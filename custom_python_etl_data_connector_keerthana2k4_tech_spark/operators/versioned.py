@@ -368,15 +368,27 @@ def _rewrite(
     prev = parent.get("partitions", {})
     parts = {p: o for p, o in prev.items() if p not in touched}
     stats = {p: s for p, s in parent.get("stats", {}).items() if p in parts}
+    ptype = parent.get("partition_type")
     if touched:
         owned = [p for p in touched if p in prev]
-        rows = _read_partitions(spark, root, prev, only=owned, col=col) if owned else None
-        transform(rows).write.partitionBy(col).mode("overwrite").parquet(data_dir)
+        rows = (
+            _read_partitions(spark, root, prev, only=owned, col=col, ptype=ptype)
+            if owned
+            else None
+        )
+        new = transform(rows)
+        if not parent:  # recorded on create; older manifests keep inference
+            ptype = new.schema[col].dataType.simpleString()
+        new.write.partitionBy(col).mode("overwrite").parquet(data_dir)
         written = _written_partitions(spark, data_dir, col)
         parts.update(dict.fromkeys(written, data_rel))
         if stats_cols and written:
-            stats.update(_collect_stats(spark.read.parquet(data_dir), col, stats_cols))
+            stats.update(
+                _collect_stats(_read_owner(spark, data_dir, col, ptype), col, stats_cols)
+            )
     out.update(partition_by=col, partitions=parts)
+    if ptype:
+        out["partition_type"] = ptype
     if stats_cols:
         out["stats"] = stats
     return out
@@ -433,12 +445,32 @@ def versioned_upsert(
     return _commit(spark, root, {**head, **content})
 
 
+def _read_owner(spark: SparkSession, path: str, col: str, ptype: str | None) -> DataFrame:
+    """Read one partitioned owner directory with ``col`` typed as it was
+    written (``ptype``, the manifest's ``partition_type``). Spark infers
+    partition types from directory names, so a string column holding
+    ``007`` would read back as the integer 7; when the inferred type
+    differs, the directory is re-read under the written type. Manifests
+    without ``partition_type`` keep the inferred type."""
+    df = spark.read.parquet(path)
+    if ptype is None or df.schema[col].dataType.simpleString() == ptype:
+        return df
+    from pyspark.sql.types import StructField, StructType, _parse_datatype_string
+
+    schema = StructType([
+        StructField(f.name, _parse_datatype_string(ptype), f.nullable) if f.name == col else f
+        for f in df.schema.fields
+    ])
+    return spark.read.schema(schema).parquet(path)
+
+
 def _read_partitions(
     spark: SparkSession,
     root: str,
     parts: dict[str, str],
     only: list[str] | None,
     col: str,
+    ptype: str | None,
 ) -> DataFrame:
     """Union of owner-directory reads, one scan per distinct owner version
     (bounded by retention depth, NOT by partition count); each read prunes
@@ -452,7 +484,7 @@ def _read_partitions(
             by_owner[owner].append(value)
     pieces = []
     for owner, values in sorted(by_owner.items()):
-        df = spark.read.parquet(f"{root}/{owner}")
+        df = _read_owner(spark, f"{root}/{owner}", col, ptype)
         pieces.append(df.filter(F.col(col).cast("string").isin(values)))
     if not pieces:
         raise FileNotFoundError(f"no partitions to read under {root}")
@@ -542,12 +574,15 @@ def read_versioned(
             # empty result — borrow schema from any owner dir in history
             # (partition col included via hive discovery)
             owner = _any_owner_dir(spark, root, m)
-            return spark.read.parquet(f"{root}/{owner}").filter(F.lit(False))
+            return _read_owner(
+                spark, f"{root}/{owner}", m["partition_by"], m.get("partition_type")
+            ).filter(F.lit(False))
         only = None
         if prune:
             only, _ = prune_report(spark, root, prune, v)
         return _read_partitions(
-            spark, root, m["partitions"], only=only, col=m["partition_by"]
+            spark, root, m["partitions"], only=only, col=m["partition_by"],
+            ptype=m.get("partition_type"),
         )
     df = spark.read.parquet(f"{root}/{m['data']}")
     if prune and "stats" in m and not _zone_overlaps(m["stats"].get("", {}), prune):
@@ -768,7 +803,7 @@ def rollback(spark: SparkSession, root: str, version: int) -> int:
     # silently stop zone-map maintenance for every upsert after a rollback.
     kept = {
         k: m[k]
-        for k in ("n_rows", "partition_by", "partitions", "stats", "stats_cols")
+        for k in ("n_rows", "partition_by", "partition_type", "partitions", "stats", "stats_cols")
         if k in m
     }
     return _commit(spark, root, {

@@ -31,7 +31,7 @@ def query(
     ``oracle`` may be a LAZY zero-arg callable resolved at
     ``oracle_sql()`` time — for oracles that share another query's SQL
     or build from CTE helpers that aren't final until every plans module
-    has registered (q393 reuses q380's full-replay SQL). Lazy oracles
+    has registered (q401 and q403 reuse q391's full-replay SQL). Lazy oracles
     keep registration free of import-order coupling: no module needs to
     mutate the registry post-hoc or re-enter ``_ensure_loaded`` while
     its own import is still in flight."""

@@ -133,9 +133,9 @@ def _pq_codebook(spark: SparkSession, sf_dir: str) -> list:
 )
 def q372_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ/ADC approximate top-k with exact audit distances. The Spark
-    plan is one narrow projection over the table (codes + ADC lookups
-    are literal-array expressions — no join, no explode) followed by a
-    per-query top-k; the DuckDB oracle re-derives the same codebook,
+    plan codes the table in one narrow projection, pairs it with the
+    query frame's ADC arrays by a salted equi-join and cuts a per-query
+    top-k; the DuckDB oracle re-derives the same codebook,
     codes, and ranks from the parquet, so both engines must agree on
     every approximate neighbor, not just the exact rerank."""
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import pq_topk
@@ -385,17 +385,17 @@ def q374_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full IVF-PQ vector-search recipe, bit-reproducible in DuckDB:
     the deterministic k-means coarse quantizer (q136's decimal-exact
     Lloyd loop) splits the corpus into inverted lists; each query probes
-    its 2 nearest lists (driver-side over the k x dim centroid matrix,
-    the same left-fold double chains as the distributed assignment);
+    its 2 nearest lists (a projection over the query frame, the same
+    left-fold double chains as the distributed assignment);
     probed candidates are scored by PQ asymmetric distance (q372's
     codes + ADC tables) with the exact distance attached for audit. The
     oracle replays everything — Lloyd rounds as materialized CTEs, probe
     ranks, codes, ADC sums — so both engines must agree on every
     approximate neighbor AND which list it came from. Plan shape: the
-    kmeans scans plus ONE narrow coded projection (no join, unprobed
-    rows gated to NULL pre-stack) and one per-query top-k; at 100 TB the
-    index is written partitionBy(cluster) and the probe gate, a literal
-    list, becomes directory pruning in the scan's PartitionFilters."""
+    kmeans scans plus ONE narrow coded projection, equi-joined on
+    ``cluster`` to the encoded queries' probe rows, and one per-query
+    top-k; at 100 TB the index is written partitionBy(cluster) and the
+    probe gate becomes directory pruning (q377)."""
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import ivfpq_topk
 
     e = load(spark, sf_dir, "embeddings")

@@ -130,10 +130,10 @@ def q380_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     RECALL NUMBER itself is oracle-paired: DuckDB replays the
     approximate leg (training, probes, codes, ADC) AND the exact leg and
     must agree on every per-query hit count. Plan shape: the exact leg
-    is one sharded literal-distance scan (never an N x N join — at 100 TB
-    the ground truth is computed for an audit SAMPLE of queries, which
-    is exactly this shape); the join of the two k-row-per-query frames
-    is metadata-sized."""
+    is one salted scoring join of the query frame against the corpus (at
+    100 TB the ground truth is computed for an audit SAMPLE of queries,
+    which is exactly this shape); the join of the two k-row-per-query
+    frames is metadata-sized."""
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import (
         exact_l2_topk,
         ivfpq_topk,
@@ -228,8 +228,8 @@ def q381_matryoshka_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     with it). Both stages are exact integer L2 over quantized components
     with id tiebreaks, so the DuckDB oracle replays the cascade — which
     candidates survive the head cut AND their final ranks — bit for bit.
-    Plan shape: one narrow scan per query batch for the head pass
-    (literal-fold distances over slice(qv, 1, head), JVM codegen), full
+    Plan shape: one salted scoring join over head slices only for the
+    head pass (exact folds over slice(qv, 1, head), JVM codegen), full
     vectors touched only for the Q x shortlist survivors."""
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.similarity import matryoshka_topk
 

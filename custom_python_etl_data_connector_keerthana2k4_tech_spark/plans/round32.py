@@ -1,16 +1,7 @@
-"""Round-32 additions: the distributed query side for vector search.
-
-q382 runs the SAME IVF-PQ search as q374 but with ``query_mode="join"``
-(operators/pq.encode_queries_join): the query set stays a DataFrame end
-to end — probe selection (left-fold double chains + stable struct sort),
-per-query ADC tables, candidate gating, and the exact audit all compute
-JVM-side with O(1) driver state. This is the 100 TB shape for query sets
-that are themselves tables (Q ~ 10^6; tests/test_pq_join.py drives
-Q = 100,000 from a table); the literal path remains the right tool for
-interactive / audit-sample query sets. Because the two modes are
-row-identical by construction (pinned in tests), q382 shares q374's
-full-replay DuckDB oracle — training, probes, codes, ADC sums, and the
-exact audit distances must all match bit for bit.
+"""Round-32 additions: perceptual-hash media near-dup (q383), the
+postings store's ranked BM25 (q384), hybrid and RRF retrieval over the
+stores (q385, q388), versioned MERGE (q387) and the IVF-PQ nprobe
+operating curve (q386).
 
 Reference parity: /root/reference/etl_connector.py has no vector surface
 (evidence of absence, SURVEY §0) — north-star extension territory.
@@ -23,45 +14,17 @@ from pyspark.sql import functions as F
 
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.registry import query
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.round29 import (
-    _IVF_ITERS,
-    _IVF_LISTS,
     _IVF_NPROBE,
     _PQ_DIM,
-    _PQ_K,
     _PQ_M,
     _PQ_NQ,
     _PQ_TOPK,
     _coarse_centroids,
-    _ivfpq_oracle,
     _pq_codebook,
     ivfpq_adc_ctes,
 )
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import scratch_dir
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
-
-
-@query("q382_ivfpq_join_query", oracle=_ivfpq_oracle())
-def q382_ivfpq_join_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q374's IVF-PQ search with the DISTRIBUTED query side: queries stay
-    a DataFrame (no driver collect, no literal plans) — encoded to ADC
-    tables and probe lists in one JVM projection, equi-joined to the
-    coded corpus on cluster, ranked per query, exact audit attached by
-    joining survivors back to the raw vectors. Driver state is the
-    trained parameters only, independent of Q. The oracle is q374's full
-    replay — both engines must agree on every approximate neighbor, its
-    source list, AND the exact audit distance."""
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import ivfpq_topk
-
-    e = load(spark, sf_dir, "embeddings")
-    queries_df = e.filter(F.col("vec_id") < _PQ_NQ)
-    return ivfpq_topk(
-        e, queries_df, "vec_id", "embedding",
-        n_lists=_IVF_LISTS, km_iters=_IVF_ITERS, nprobe=_IVF_NPROBE,
-        m=_PQ_M, k_centroids=_PQ_K, topk=_PQ_TOPK,
-        centroids=_coarse_centroids(spark, sf_dir),
-        codebook=_pq_codebook(spark, sf_dir),
-        query_mode="join",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -614,22 +577,23 @@ def q386_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     picking a probe budget: recall@k AND candidate cost (rows scored) at
     nprobe in {_NPROBES}, in one pass. q380 audits one budget; this
     sweeps the tradeoff. Plan economics: the coded corpus frame builds
-    ONCE (materialize_once) and every budget's ranking re-cuts it with a
-    different probe gate; the exact ground-truth leg computes ONCE and
-    joins against each budget's top-k (the probe sets are nested
-    prefixes, so nothing re-scores); candidate counts come from the
-    bounded list-size aggregate, never a rescan. The oracle replays the
-    whole family from the raw parquet — one adc frame carrying each
-    candidate's probe rank, re-cut per budget — so every point on the
-    curve (hit counts AND costs) is hash-gated."""
+    ONCE (materialize_once) and the queries encode ONCE at the largest
+    budget, each probe keeping its place in the query's probe order
+    (``probe_pos``); every budget's ranking re-cuts the same probe rows
+    with ``probe_pos < n`` (the probe sets are nested prefixes, so
+    nothing re-scores); the exact ground-truth leg computes ONCE and
+    joins against each budget's top-k; candidate counts come from the
+    same probe rows against the bounded list-size aggregate, never a
+    rescan. The oracle replays the whole family from the raw parquet —
+    one adc frame carrying each candidate's probe rank, re-cut per
+    budget — so every point on the curve (hit counts AND costs) is
+    hash-gated."""
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.functions.vectors import quantize
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.kmeans import assign
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import (
-        _adc_tables,
-        _collect_queries,
-        _rank_ivfpq_batch,
+        adc_join_topk,
+        encode_queries_join,
         exact_l2_topk,
-        select_probes,
         with_code_cols,
     )
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.extensions import materialize_once
@@ -649,11 +613,12 @@ def q386_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cluster",
             ),
             codebook, _PQ_M, sub,
-        )
+        ).select("neighbor_id", *[f"c{s}" for s in range(_PQ_M)], "cluster")
     )
-    qrows = _collect_queries(qdf, "vec_id", "embedding")
-    adc_tables = _adc_tables(qrows, codebook, _PQ_M, sub)
-    probes_full = select_probes(qrows, centroids, max(_NPROBES))
+    qenc = encode_queries_join(
+        qdf, "vec_id", "embedding", codebook, _PQ_M, sub, centroids,
+        max(_NPROBES), probe_pos="probe_pos",
+    )
     exact = materialize_once(
         exact_l2_topk(e, qdf, "vec_id", "embedding", topk=_PQ_TOPK).select(
             "query_id", "neighbor_id"
@@ -661,23 +626,20 @@ def q386_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     sizes = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("sz"))
-    probe_rows = [
-        (int(qr["id"]), int(n), int(c))
-        for qr, ps in zip(qrows, probes_full)
-        for n in _NPROBES
-        for c in ps[:n]
-    ]
-    pf = spark.createDataFrame(
-        probe_rows, "query_id long, nprobe int, cluster int"
-    )
+    pf = qenc.select(
+        F.col("query_id").cast("long").alias("query_id"),
+        F.explode(F.array(*[F.lit(int(n)) for n in _NPROBES])).alias("nprobe"),
+        "cluster",
+        "probe_pos",
+    ).filter(F.col("probe_pos") < F.col("nprobe")).drop("probe_pos")
     ncand = pf.join(sizes, "cluster").groupBy("query_id", "nprobe").agg(
         (F.sum("sz") - 1).cast("long").alias("n_candidates")
     )
 
     allhits = None
     for n in _NPROBES:
-        ranked = _rank_ivfpq_batch(
-            coded, qrows, adc_tables, [p[:n] for p in probes_full],
+        ranked = adc_join_topk(
+            coded, qenc.filter(F.col("probe_pos") < n).drop("probe_pos"),
             _PQ_M, _PQ_TOPK,
         ).select("query_id", "neighbor_id")
         hits = ranked.join(exact, ["query_id", "neighbor_id"]).groupBy(

@@ -10,12 +10,11 @@ union of query terms, shared across queries; the only driver collect is
 the <= n_buckets bucket ids, so PartitionFilters stays literal at any Q);
 q390 hybridizes per query (BM25 shortlist -> exact quantized-cosine
 rerank of each query's own shortlist against its own embedding); q391
-fuses per-query BM25 ranks with per-query IVF-PQ ANN ranks (query_mode=
-"join" — the round-32 distributed query side) via reciprocal-rank fusion.
-q392 exercises the store's mutation lifecycle (upsert/delete with
-crash-safe generation flips) under the oracle gate, q393 reruns q380's
-recall audit with BOTH legs distributed, and q394 answers a phrase
-TABLE in one anchor-alignment join. Every stage of all of them sits
+fuses per-query BM25 ranks with per-query IVF-PQ ANN ranks (the
+distributed query side) via reciprocal-rank fusion. q392 exercises the
+store's mutation lifecycle (upsert/delete with crash-safe generation
+flips) under the oracle gate, and q394 answers a phrase TABLE in one
+anchor-alignment join. Every stage of all of them sits
 under full-replay DuckDB oracles.
 
 Reference parity: /root/reference/etl_connector.py has no query surface
@@ -342,9 +341,8 @@ def q391_rrf_query_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     hybrid at batch scale, with BOTH legs distributed: the lexical leg is
     one batch pass through the bucket-pruned postings store
     (ranked_bm25_table, per-query window ranks), the vector leg is the
-    IVF-PQ search with the round-32 JOIN query side (queries stay a
-    DataFrame; probe selection, ADC arrays, and candidate gating all
-    JVM-side), and the fusion is one full-outer join on (query_id,
+    IVF-PQ search (queries stay a DataFrame; probe selection, ADC
+    arrays, and candidate gating all JVM-side), and the fusion is one full-outer join on (query_id,
     doc_id) with RRF (k={_QT_RRF_K}) — integer ranks only, zero score
     calibration. The oracle replays the whole IVF-PQ derivation, the
     whole BM25 derivation, and the fusion arithmetic per query."""
@@ -365,7 +363,6 @@ def q391_rrf_query_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             m=_PQ_M, k_centroids=_PQ_K, topk=_QT_SHORTLIST,
             centroids=_coarse_centroids(spark, sf_dir),
             codebook=_pq_codebook(spark, sf_dir),
-            query_mode="join",
         ).select(
             "query_id",
             F.col("neighbor_id").alias("doc_id"),
@@ -470,73 +467,6 @@ def q392_postings_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     store.upsert(ups)
     store.delete(docs.filter(F.col("doc_id") % 9 == 3).select("doc_id"))
     return store.ranked_bm25(list(_LC_TERMS), topk=_LC_TOPK)
-
-
-# ---------------------------------------------------------------------------
-# q393: q380's recall audit with BOTH legs distributed (query_mode="join")
-# ---------------------------------------------------------------------------
-
-
-def _q380_oracle() -> str:
-    """q393 shares q380's full-replay oracle verbatim (the q382/q374
-    sharing pattern): the join mode is row-identical to the literal
-    mode, so the same SQL gates it. Registered as a LAZY oracle
-    (registry.query accepts a callable) and resolved at oracle_sql()
-    time through registry.oracle_of — no import-time private-dict
-    mutation, no re-entrant _ensure_loaded while this module is still
-    mid-import (round-6 ADVICE)."""
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.registry import oracle_of
-
-    return oracle_of("q380_ann_recall")
-
-
-@query("q393_ann_recall_join", oracle=_q380_oracle)
-def q393_ann_recall_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q380's ANN recall audit with BOTH legs on the distributed query
-    side: the approximate leg is q382's join-mode IVF-PQ search, and the
-    exact ground-truth leg is ``exact_l2_topk(query_mode="join")`` — the
-    salted scoring join with O(1) driver state, so the audit runs at
-    query-TABLE scale (the regime where you measure recall over 10^5
-    held-out queries, not 3). Both modes are row-identical to their
-    literal siblings by construction (pinned in tests/test_pq_join.py),
-    so this query registers q380's oracle LAZILY (_q380_oracle above) —
-    training, probes, codes, ADC sums, the exact baseline, and the
-    per-query recall numbers all replay in DuckDB."""
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import (
-        exact_l2_topk,
-        ivfpq_topk,
-    )
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans.round29 import _PQ_NQ, _PQ_TOPK
-
-    e = load(spark, sf_dir, "embeddings")
-    qdf = e.filter(F.col("vec_id") < _PQ_NQ)
-    approx = ivfpq_topk(
-        e, qdf, "vec_id", "embedding",
-        n_lists=_IVF_LISTS, km_iters=_IVF_ITERS, nprobe=_IVF_NPROBE,
-        m=_PQ_M, k_centroids=_PQ_K, topk=_PQ_TOPK,
-        centroids=_coarse_centroids(spark, sf_dir),
-        codebook=_pq_codebook(spark, sf_dir),
-        query_mode="join",
-    ).select("query_id", "neighbor_id")
-    exact = exact_l2_topk(
-        e, qdf, "vec_id", "embedding", topk=_PQ_TOPK, query_mode="join"
-    ).select("query_id", "neighbor_id")
-    hits = approx.join(exact, ["query_id", "neighbor_id"]).groupBy(
-        "query_id"
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    return (
-        exact.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce(F.col("n_hits"), F.lit(0)).cast("long").alias("n_hits"),
-            (
-                F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
-                / F.lit(float(_PQ_TOPK))
-            ).alias("recall"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -81,8 +81,8 @@ def q395_batch_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching candidates drop IN the join, before scoring, never via a
     crossJoin), and each query's top-k is the best k among ITS matching
     candidates in ITS probed lists (post-filter IVF semantics, q379's
-    contract, per query). The query side is the round-32 distributed
-    JOIN mode — O(n_lists) driver state at any Q, PartitionFilters
+    contract, per query). The query side is a DataFrame — O(n_lists)
+    driver state at any Q, PartitionFilters
     pruning intact (plan-asserted in tests/test_pq_store.py). The oracle
     replays training, probes, codes, ADC sums, AND each query's own
     constraint. Row-identical to looping ``query(where=...)`` per query
@@ -105,7 +105,7 @@ def q395_batch_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return store.query(
         qdf, nprobe=_IVF_NPROBE, topk=_PQ_TOPK,
-        query_mode="join", attr_filters=wants,
+        attr_filters=wants,
     )
 
 
@@ -245,7 +245,7 @@ def q396_paired_mutation_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         lambda: vs.query(
             e.filter(F.col("vec_id") < _PQ_NQ),
-            nprobe=_IVF_NPROBE, topk=_QT_SHORTLIST, query_mode="join",
+            nprobe=_IVF_NPROBE, topk=_QT_SHORTLIST,
         ).select(
             "query_id",
             F.col("neighbor_id").alias("doc_id"),

@@ -143,7 +143,7 @@ def q400_batch_range_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     return store.query(
         qdf, nprobe=_IVF_NPROBE, topk=_PQ_TOPK,
-        query_mode="join", attr_ranges=bands,
+        attr_ranges=bands,
     )
 
 
@@ -157,7 +157,7 @@ def _q401_oracle() -> str:
     the oracle is EXACTLY q391's batch-RRF derivation over the original
     corpus — any mutation leaking into either store's retained
     generation (or the two legs pinning to different states) is a value
-    mismatch. Shared lazily via registry.oracle_of (the q393 device)."""
+    mismatch. Shared lazily via registry.oracle_of."""
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans import registry
 
     return registry.oracle_of("q391_rrf_query_table")
@@ -233,7 +233,7 @@ def q401_pinned_pair_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         lambda: vs.query(
             e.filter(F.col("vec_id") < _PQ_NQ),
-            nprobe=_IVF_NPROBE, topk=_QT_SHORTLIST, query_mode="join",
+            nprobe=_IVF_NPROBE, topk=_QT_SHORTLIST,
             as_of_gen=g0v,
         ).select(
             "query_id",

@@ -57,7 +57,7 @@ def _q403_oracle() -> str:
     RRF derivation — a micro-batch that half-landed (one store ahead of
     the other), double-committed (replay not deduped), or was dropped
     (lineage mix-up) is a value mismatch. Shared lazily via
-    registry.oracle_of (the q393/q401 device)."""
+    registry.oracle_of (the q401 device)."""
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.plans import registry
 
     return registry.oracle_of("q391_rrf_query_table")
@@ -82,7 +82,7 @@ def q403_paired_streaming_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch in either store is a value mismatch. Scale: the staged payload
     is one parquet round-trip of each micro-batch — never the corpus —
     and the serve is the q391 plan (equi-joins only; BM25 leg
-    bucket-pruned, ANN leg the distributed join mode)."""
+    bucket-pruned, ANN leg the cluster-joined IVF-PQ search)."""
     from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.paired import (
         paired_streaming_append,
     )
@@ -142,7 +142,7 @@ def q403_paired_streaming_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         lambda: vs.query(
             e.filter(F.col("vec_id") < _PQ_NQ),
-            nprobe=_IVF_NPROBE, topk=_QT_SHORTLIST, query_mode="join",
+            nprobe=_IVF_NPROBE, topk=_QT_SHORTLIST,
         ).select(
             "query_id",
             F.col("neighbor_id").alias("doc_id"),

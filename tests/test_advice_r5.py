@@ -1,8 +1,7 @@
 """Round-5 ADVICE regressions:
 
-1. every public vector-search entry point fails an EMPTY queries frame
-   with a descriptive ValueError, never an opaque IndexError from the
-   sharding code (ADVICE r4 #1);
+1. every public vector-search entry point answers an EMPTY queries
+   frame with an empty result, never an opaque error (ADVICE r4 #1);
 2. ``with_code_cols`` / store ``attr_cols`` survive reserved-word and
    special-character column names (selectExpr backtick quoting, #4);
 3. a crashed maintenance verb's orphaned generation / tmp dirs are swept
@@ -41,22 +40,28 @@ def _rows(df):
 
 
 @pytest.mark.slow
-def test_empty_queries_raise_descriptive_error(spark, sf_dir, tmp_path):
+def test_empty_queries_return_empty_results(spark, sf_dir, tmp_path):
+    """An empty query TABLE is a valid input: every entry point answers
+    it with an empty result of its usual columns, never an error."""
     e = load(spark, sf_dir, "embeddings")
     empty = e.filter(F.col("vec_id") < 0)
-    with pytest.raises(ValueError, match="empty query set"):
-        pq_topk(e, empty, "vec_id", "embedding")
-    with pytest.raises(ValueError, match="empty query set"):
-        exact_l2_topk(e, empty, "vec_id", "embedding")
-    with pytest.raises(ValueError, match="empty query set"):
-        ivfpq_topk(e, empty, "vec_id", "embedding", km_iters=1)
-    with pytest.raises(ValueError, match="empty query set"):
-        matryoshka_topk(e, empty, "vec_id", "embedding")
     store = IVFPQStore.build(
         spark, e, "vec_id", "embedding", str(tmp_path / "ix"), km_iters=1
     )
-    with pytest.raises(ValueError, match="empty query set"):
-        store.query(empty)
+    for df, cols in [
+        (pq_topk(e, empty, "vec_id", "embedding"),
+         ["query_id", "neighbor_id", "rank", "adc_dist", "exact_dist"]),
+        (exact_l2_topk(e, empty, "vec_id", "embedding"),
+         ["query_id", "neighbor_id", "rank", "exact_dist"]),
+        (ivfpq_topk(e, empty, "vec_id", "embedding", km_iters=1),
+         ["query_id", "neighbor_id", "cluster", "rank", "adc_dist", "exact_dist"]),
+        (matryoshka_topk(e, empty, "vec_id", "embedding"),
+         ["query_id", "neighbor_id", "rank", "head_dist", "exact_dist"]),
+        (store.query(empty),
+         ["query_id", "neighbor_id", "cluster", "rank", "adc_dist"]),
+    ]:
+        assert df.columns == cols
+        assert df.collect() == []
 
 
 # -- 2: reserved-word / special-char passthrough columns ---------------------

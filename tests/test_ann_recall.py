@@ -10,8 +10,8 @@ distance >> intra-group noise), so each query's true top-10 is exactly
 its mates. This is the regime a production near-dup / retrieval index
 runs in, and the regime where PQ is supposed to win: group mates
 quantize into the query's own code cells while everything else lands
-far away. Both legs run the distributed query side (query_mode="join")
-— the Q-scale deployment shape."""
+far away. Both legs keep the queries a DataFrame — the Q-scale
+deployment shape."""
 
 from __future__ import annotations
 
@@ -51,10 +51,10 @@ def _recall_at_10(spark, m, k_centroids):
     ann = ivfpq_topk(
         corpus, queries, "vec_id", "embedding",
         n_lists=16, km_iters=2, nprobe=2, m=m, k_centroids=k_centroids,
-        topk=MATES, query_mode="join",
+        topk=MATES,
     )
     truth = exact_l2_topk(
-        corpus, queries, "vec_id", "embedding", topk=MATES, query_mode="join"
+        corpus, queries, "vec_id", "embedding", topk=MATES
     )
     t = {(r["query_id"], r["neighbor_id"]) for r in truth.collect()}
     a = {(r["query_id"], r["neighbor_id"]) for r in ann.collect()}
@@ -71,7 +71,7 @@ def test_truth_is_the_planted_mates(spark):
     corpus = _planted(spark)
     queries = corpus.filter(F.col("vec_id") < 5)
     truth = exact_l2_topk(
-        corpus, queries, "vec_id", "embedding", topk=MATES, query_mode="join"
+        corpus, queries, "vec_id", "embedding", topk=MATES
     )
     for r in truth.collect():
         assert r["neighbor_id"] % GROUPS == r["query_id"] % GROUPS

@@ -132,13 +132,13 @@ _INTENTIONAL_BNLJ = {
     "q388_rrf_store_hybrid",  # one-row corpus-stats broadcast (BM25 leg, q384's shape)
     "q389_bm25_query_table",  # one-row corpus-stats broadcast (doclen sidecar aggregate, q384's shape at batch Q)
     "q390_hybrid_query_table",  # one-row corpus-stats broadcast (batch BM25 leg; rerank legs are equi-joins)
-    "q391_rrf_query_table",  # one-row corpus-stats broadcast (batch BM25 leg; ANN leg is the q382 join plan)
+    "q391_rrf_query_table",  # one-row corpus-stats broadcast (batch BM25 leg; ANN leg is the q374 plan)
     "q392_postings_lifecycle",  # one-row corpus-stats broadcast (ranked_bm25 over the mutated store, q384's shape)
-    "q396_paired_mutation_rrf",  # one-row corpus-stats broadcast (batch BM25 leg over the mutated pair; ANN leg is the q382 join plan)
+    "q396_paired_mutation_rrf",  # one-row corpus-stats broadcast (batch BM25 leg over the mutated pair; ANN leg is the q374 plan)
     "q397_time_travel_bm25",  # one-row corpus-stats broadcast (ranked_bm25 pinned to the retained generation, q384's shape)
     "q399_batch_time_travel_bm25",  # one-row corpus-stats broadcast (batch BM25 pinned to the retained generation — q389's shape at a pinned gen)
-    "q401_pinned_pair_rrf",  # one-row corpus-stats broadcast (pinned batch BM25 leg — q391's shape at a pinned pair; ANN leg is the q382 join plan)
-    "q403_paired_streaming_rrf",  # one-row corpus-stats broadcast (batch BM25 leg over the streamed pair — q391's serve shape; ANN leg is the q382 join plan)
+    "q401_pinned_pair_rrf",  # one-row corpus-stats broadcast (pinned batch BM25 leg — q391's shape at a pinned pair; ANN leg is the q374 plan)
+    "q403_paired_streaming_rrf",  # one-row corpus-stats broadcast (batch BM25 leg over the streamed pair — q391's serve shape; ANN leg is the q374 plan)
     "q175_cusum_drift",  # one-row baseline-mean broadcast
     "q179_kl_drift",  # one-row distribution-totals broadcast
     "q182_negative_sampling",  # one-row max-key broadcast

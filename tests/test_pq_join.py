@@ -1,30 +1,30 @@
-"""Distributed (join-based) query side for vector search
-(operators/pq.encode_queries_join / adc_join_topk, ``query_mode="join"``):
+"""The vector query side (operators/pq.encode_queries_join /
+adc_join_topk and the salted scoring join): queries stay a DataFrame in
+every entry point.
 
-- join mode is ROW-IDENTICAL to the literal (driver-collected) path, for
-  ivfpq_topk and for the persistent store (including filtered search);
-- NumPy-vectorized probe selection is bit-identical to the pure-Python
-  left-fold chain it replaces;
-- plan shape: the store's join mode keeps ``cluster IN probes`` in
-  PartitionFilters (directory pruning), and the candidate join is an
-  equi-join (no cartesian);
+- ``exact_l2_topk`` equals a NumPy brute force over the quantized ints
+  at Q = 250 (the ground truth every recall audit trusts);
+- plan shape: the scoring join is an equi-join (no cartesian, no nested
+  loop);
+- a query table whose ids are not corpus ids ranks its own twin vectors
+  (no accidental self-exclusion);
 - scale smoke: Q = 100,000 queries FROM A TABLE against a synthetic
-  corpus — the workload the literal path cannot serve (it would collect
-  Q x dim to the driver) — checked by tile-identity against the literal
-  path on one tile.
+  corpus, checked by tile identity.
+
+The row-level results of ``pq_topk`` (q372), ``ivfpq_topk`` (q374),
+``IVFPQStore.query`` with and without ``where`` (q377, q379) and
+``matryoshka_topk`` (q381) are pinned by their DuckDB oracles in
+tests/test_oracle.py.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import (
-    _collect_queries,
-    _select_probes_python,
-    ivfpq_topk,
-    select_probes,
-)
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.functions.vectors import quantize
+from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import exact_l2_topk, ivfpq_topk
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq_store import IVFPQStore
 from custom_python_etl_data_connector_keerthana2k4_tech_spark.tables import load
 
@@ -33,58 +33,44 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_ivfpq_join_mode_identical_to_literal(spark, sf_dir):
+def test_exact_l2_topk_matches_numpy_brute_force(spark, sf_dir):
+    """Q = 250 queries against the whole corpus: every query's top-k
+    (ids, ranks and distances) equals an int64 NumPy brute force over
+    the same quantized vectors, self excluded, ties on neighbor id."""
+    topk = 5
+    e = load(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") < 250)
+    got = _rows(exact_l2_topk(e, q, "vec_id", "embedding", topk=topk))
+
+    rows = e.select("vec_id", quantize("embedding").alias("qv")).collect()
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    vecs = np.array([r["qv"] for r in rows], dtype=np.int64)
+    want = []
+    for qi in np.flatnonzero(ids < 250):
+        d = ((vecs - vecs[qi]) ** 2).sum(axis=1)
+        keep = ids != ids[qi]
+        order = np.lexsort((ids[keep], d[keep]))[:topk]
+        want += [
+            (int(ids[qi]), int(ids[keep][j]), rank, int(d[keep][j]))
+            for rank, j in enumerate(order, start=1)
+        ]
+    assert len(want) == 250 * topk
+    assert got == sorted(want)
+
+
+def test_exact_l2_topk_plans_a_shuffle_hash_equi_join(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 20)
-    lit = ivfpq_topk(e, q, "vec_id", "embedding", nprobe=2, topk=5)
-    jn = ivfpq_topk(e, q, "vec_id", "embedding", nprobe=2, topk=5,
-                    query_mode="join")
-    assert _rows(lit) == _rows(jn)
-    # the join plan is pure equi-joins: no cartesian anywhere
-    plan = jn._jdf.queryExecution().executedPlan().toString()
+    plan = (
+        exact_l2_topk(e, q, "vec_id", "embedding", topk=5)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
     assert "CartesianProduct" not in plan
-
-
-def test_store_join_mode_identical_incl_filtered(spark, sf_dir, tmp_path):
-    e = load(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 20)
-    st = IVFPQStore.build(
-        spark, e, "vec_id", "embedding", str(tmp_path / "ix"),
-        km_iters=2, attr_cols=["label"],
-    )
-    assert _rows(st.query(q, nprobe=2, topk=5)) == _rows(
-        st.query(q, nprobe=2, topk=5, query_mode="join")
-    )
-    assert _rows(st.query(q, nprobe=3, topk=5, where="label = 3")) == _rows(
-        st.query(q, nprobe=3, topk=5, where="label = 3", query_mode="join")
-    )
-    # directory pruning survives join mode: probes land in PartitionFilters
-    jn = st.query(q, nprobe=2, topk=5, query_mode="join")
-    plan = jn._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    scan = plan[plan.index("PartitionFilters"):]
-    assert "cluster" in scan[:300]
-    assert "CartesianProduct" not in plan
-
-
-def test_select_probes_numpy_bitwise_equals_python(spark, sf_dir):
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.kmeans import kmeans
-
-    e = load(spark, sf_dir, "embeddings")
-    qrows = _collect_queries(e, "vec_id", "embedding")
-    _, cents = kmeans(e, "embedding", "vec_id", k=8, iters=2)
-    for nprobe in (1, 2, 5, 8):
-        assert select_probes(qrows, cents, nprobe) == _select_probes_python(
-            qrows, cents, nprobe
-        )
-
-
-def test_unknown_query_mode_rejected(spark, sf_dir, tmp_path):
-    e = load(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 2)
-    with pytest.raises(ValueError, match="query_mode"):
-        ivfpq_topk(e, q, "vec_id", "embedding", km_iters=1,
-                   query_mode="nope")
+    assert "BroadcastNestedLoopJoin" not in plan
+    # the salted scoring join is a SHUFFLE-HASH equi-join, so the partial
+    # top-k window sorts in place on the join partitioning — only the
+    # Q x n_salts x topk survivors shuffle for the final cut
+    assert "ShuffledHashJoin" in plan
 
 
 # -- scale smoke: Q = 100k queries from a table ------------------------------
@@ -107,13 +93,12 @@ def _synth(spark, n, id_offset=0, id_start=0):
 
 
 @pytest.mark.slow
-def test_join_mode_serves_100k_query_table(spark):
-    """The driver-bound killer: 100k queries arrive as a TABLE. Join mode
-    never collects them; correctness is pinned by TILE IDENTITY — every
-    tile is a copy of the same 500 base vectors under fresh ids, and
-    ranking depends only on the vector (ties break on neighbor_id), so
-    each tile's result must equal the literal path's result on the base
-    tile, modulo the id shift."""
+def test_serves_100k_query_table(spark):
+    """100k queries arrive as a TABLE and are never collected.
+    Correctness is pinned by TILE IDENTITY — every tile is a copy of the
+    same 500 base vectors under fresh ids, and ranking depends only on
+    the vector (ties break on neighbor_id), so each tile's result must
+    equal the base tile's result, modulo the id shift."""
     corpus = _synth(spark, 2000)
     base = _synth(spark, _BASE, id_offset=777, id_start=1_000_000)
     tiled = base.select(
@@ -132,9 +117,7 @@ def test_join_mode_serves_100k_query_table(spark):
             (r["neighbor_id"], r["rank"], r["adc_dist"], r["exact_dist"])
         )
 
-    got = ivfpq_topk(
-        corpus, tiled, "vec_id", "embedding", query_mode="join", **common
-    )
+    got = ivfpq_topk(corpus, tiled, "vec_id", "embedding", **common)
     agg = got.groupBy().agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("query_id").alias("nq"),
@@ -142,7 +125,7 @@ def test_join_mode_serves_100k_query_table(spark):
     assert agg["n"] == _TILES * sum(len(v) for v in ref_rows.values())
     assert agg["nq"] == _TILES * len(ref_rows)
 
-    # spot tiles: mapped back to base ids, rows match the literal path
+    # spot tiles: mapped back to base ids, rows match the base tile
     for t in (0, 57, _TILES - 1):
         lo, hi = 1_000_000 + t * 1000, 1_000_000 + t * 1000 + _BASE
         tile = {}
@@ -158,97 +141,43 @@ def test_join_mode_serves_100k_query_table(spark):
 
 
 def test_store_join_mode_foreign_query_table(spark, sf_dir, tmp_path):
-    """Join mode with a query TABLE whose ids are not corpus ids (the
-    production shape: queries come from somewhere else): no accidental
-    self-exclusion, every query ranked, row-identical to the literal
-    path on the same frame."""
+    """A query TABLE whose ids are not corpus ids (the production shape:
+    queries come from somewhere else): every query is ranked, and each
+    foreign query's neighbors are its corpus twin's neighbors with the
+    twin itself allowed back in — nothing else is excluded."""
     e = load(spark, sf_dir, "embeddings")
     st = IVFPQStore.build(
         spark, e, "vec_id", "embedding", str(tmp_path / "ix"), km_iters=1
     )
-    foreign = e.filter(F.col("vec_id") < 25).select(
+    twins = e.filter(F.col("vec_id") < 25)
+    foreign = twins.select(
         (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
     )
-    lit = st.query(foreign, nprobe=2, topk=5)
-    jn = st.query(foreign, nprobe=2, topk=5, query_mode="join")
-    a, b = _rows(lit), _rows(jn)
-    assert a == b
-    assert len({r[0] for r in a}) == 25  # every foreign query served
 
+    def ranked(df, shift):
+        out = {}
+        for r in sorted(df.collect(), key=lambda r: r["rank"]):
+            out.setdefault(r["query_id"] - shift, []).append(r["neighbor_id"])
+        return out
 
-# -- round 6: join mode for the remaining vector entry points ------------------
-
-
-def test_exact_l2_join_mode_identical_to_literal(spark, sf_dir):
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import exact_l2_topk
-
-    e = load(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 20)
-    lit = exact_l2_topk(e, q, "vec_id", "embedding", topk=5)
-    jn = exact_l2_topk(e, q, "vec_id", "embedding", topk=5, query_mode="join")
-    assert _rows(lit) == _rows(jn)
-    plan = jn._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    # the salted scoring join is a SHUFFLE-HASH equi-join, so the partial
-    # top-k window sorts in place on the join partitioning — only the
-    # Q x n_salts x topk survivors shuffle for the final cut
-    assert "ShuffledHashJoin" in plan
-
-
-def test_pq_join_mode_identical_to_literal(spark, sf_dir):
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import pq_topk
-
-    e = load(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 20)
-    lit = pq_topk(e, q, "vec_id", "embedding", topk=5)
-    jn = pq_topk(e, q, "vec_id", "embedding", topk=5, query_mode="join")
-    assert _rows(lit) == _rows(jn)
-    plan = jn._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_matryoshka_join_mode_identical_to_literal(spark, sf_dir):
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.similarity import matryoshka_topk
-
-    e = load(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 20)
-    lit = matryoshka_topk(e, q, "vec_id", "embedding",
-                          head_dim=16, shortlist=25, topk=5)
-    jn = matryoshka_topk(e, q, "vec_id", "embedding",
-                         head_dim=16, shortlist=25, topk=5, query_mode="join")
-    assert _rows(lit) == _rows(jn)
-    plan = jn._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_join_mode_rejected_for_unknown_everywhere(spark, sf_dir):
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import exact_l2_topk, pq_topk
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.similarity import matryoshka_topk
-
-    e = load(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 3)
-    for fn in (exact_l2_topk, pq_topk):
-        with pytest.raises(ValueError, match="query_mode"):
-            fn(e, q, "vec_id", "embedding", query_mode="nope")
-    with pytest.raises(ValueError, match="query_mode"):
-        matryoshka_topk(e, q, "vec_id", "embedding", query_mode="nope")
+    own = ranked(st.query(twins, nprobe=2, topk=5), 0)
+    alien = ranked(st.query(foreign, nprobe=2, topk=5), 1_000_000)
+    assert sorted(alien) == sorted(own) == list(range(25))  # every query served
+    for qid, nbrs in alien.items():
+        assert len(nbrs) == 5
+        others = [n for n in nbrs if n != qid]
+        assert len(others) >= 4
+        assert others == own[qid][: len(others)]
 
 
 def test_recall_audit_runs_with_both_legs_distributed(spark, sf_dir):
-    """q380's shape at Q scale: ANN leg (ivfpq join mode) audited against
-    the exact leg (exact_l2 join mode) — recall computed entirely from
-    DataFrames, no driver-side query state in either leg."""
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq import exact_l2_topk, ivfpq_topk
-
+    """q380's shape at Q scale: the ANN leg audited against the exact
+    leg — recall computed entirely from DataFrames, no driver-side query
+    state in either leg."""
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 50)
-    truth = exact_l2_topk(e, q, "vec_id", "embedding", topk=5,
-                          query_mode="join")
-    ann = ivfpq_topk(e, q, "vec_id", "embedding", nprobe=2, topk=5,
-                     query_mode="join")
+    truth = exact_l2_topk(e, q, "vec_id", "embedding", topk=5)
+    ann = ivfpq_topk(e, q, "vec_id", "embedding", nprobe=2, topk=5)
     hits = truth.join(
         ann.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"],
         "left_semi",

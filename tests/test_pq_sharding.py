@@ -1,7 +1,5 @@
-"""Query-batch sharding in the PQ/IVF-PQ operators (operators/pq.py,
-operators/pq_store.py): plan shapes stay O(query_batch) wide no matter
-how many queries arrive, and the union of per-batch branches is
-row-identical to the unsharded plan (per-query top-ks are independent).
+"""Pre-trained parameters in the PQ/IVF-PQ operators (operators/pq.py):
+passing the centroids/codebook a corpus trains is value-invisible.
 """
 
 from __future__ import annotations
@@ -20,58 +18,6 @@ def _rows(df):
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
     return load(spark, sf_dir, "embeddings")
-
-
-def test_sharded_equals_unsharded_small_q(emb):
-    qs = emb.filter(F.col("vec_id") < 5)
-    whole = pq_topk(emb, qs, "vec_id", "embedding", topk=5, query_batch=10_000)
-    sharded = pq_topk(emb, qs, "vec_id", "embedding", topk=5, query_batch=2)
-    assert _rows(whole) == _rows(sharded)
-
-
-def test_ivfpq_sharded_equals_unsharded_small_q(emb):
-    qs = emb.filter(F.col("vec_id") < 5)
-    whole = ivfpq_topk(emb, qs, "vec_id", "embedding", topk=5, query_batch=10_000)
-    sharded = ivfpq_topk(emb, qs, "vec_id", "embedding", topk=5, query_batch=2)
-    assert _rows(whole) == _rows(sharded)
-
-
-@pytest.mark.slow
-def test_huge_query_set_bounded_plan(emb):
-    """Q=500 (the whole corpus as queries) through the default batch of
-    64: 8 bounded union branches, no O(Q)-wide projection or stack
-    anywhere. Correctness: each query's top-k must equal what a
-    small-Q run over just that query produces (same frozen codebook —
-    it is a function of the corpus alone)."""
-    topk = 3
-    out = pq_topk(emb, emb, "vec_id", "embedding", topk=topk, query_batch=64)
-
-    # every query answered, exactly topk ranks each
-    per_q = out.groupBy("query_id").count().collect()
-    assert len(per_q) == 500
-    assert all(r["count"] == topk for r in per_q)
-
-    # the plan is a union of ceil(500/64)=8 branches, each with a stack
-    # of arity <= 64 — never one 500-wide stack
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    n_stacks = plan.count("stack(")
-    assert n_stacks >= 8, plan[:2000]
-    import re
-
-    arities = [int(m) for m in re.findall(r"stack\((\d+),", plan)]
-    assert arities and max(arities) <= 64, arities
-
-    # spot-check 3 query ids against an independent small-Q run
-    probe_ids = [0, 123, 499]
-    small = pq_topk(
-        emb,
-        emb.filter(F.col("vec_id").isin(probe_ids)),
-        "vec_id",
-        "embedding",
-        topk=topk,
-        query_batch=64,
-    )
-    assert _rows(small) == _rows(out.filter(F.col("query_id").isin(probe_ids)))
 
 
 def test_pretrained_params_equal_self_trained(emb):
@@ -95,17 +41,3 @@ def test_pretrained_params_equal_self_trained(emb):
     assert _rows(pq_topk(emb, qs, "vec_id", "embedding", topk=5)) == _rows(
         pq_topk(emb, qs, "vec_id", "embedding", topk=5, codebook=cb)
     )
-
-
-def test_store_query_sharded_equals_unsharded(spark, emb, tmp_path):
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.operators.pq_store import IVFPQStore
-
-    store = IVFPQStore.build(
-        spark, emb, "vec_id", "embedding", str(tmp_path / "idx")
-    )
-    qs = emb.filter(F.col("vec_id") < 150)
-    whole = store.query(qs, nprobe=2, topk=3, query_batch=10_000)
-    sharded = store.query(qs, nprobe=2, topk=3, query_batch=64)
-    assert _rows(whole) == _rows(sharded)
-    per_q = sharded.groupBy("query_id").count().collect()
-    assert len(per_q) == 150

@@ -31,7 +31,6 @@ PKG = ROOT / "custom_python_etl_data_connector_keerthana2k4_tech_spark"
 KEEP = {
     "operators.upsert.upsert_mongo": "the reference's sink: replace_one by key (etl_connector.py:167-191)",
     "operators.upsert.upsert_delta": "the reference's keyed upsert as one Delta MERGE (etl_connector.py:167-191)",
-    "operators.pq._select_probes_python": "pure-Python reference that tests/test_pq_join.py compares select_probes against",
     "multimodal.ops._png_encode": "builds PNG inputs for the live decoders' tests",
     "multimodal.ops._bmp_encode": "builds BMP inputs for the live decoders' tests",
     "multimodal.ops._gif_encode": "builds GIF inputs for the live decoders' tests",

@@ -97,14 +97,14 @@ def test_attr_ranges_equal_per_query_where_loops(spark, sf_dir, tmp_path):
         ((F.col("vec_id") % 2) + 1).cast("int").alias("label_hi"),
     )
     got = _rows(
-        store.query(qdf, nprobe=2, topk=10, query_mode="join", attr_ranges=bands)
+        store.query(qdf, nprobe=2, topk=10, attr_ranges=bands)
     )
     want = []
     for qid in range(3):
         lo, hi = qid % 2, qid % 2 + 1
         one = store.query(
             e.filter(F.col("vec_id") == qid),
-            nprobe=2, topk=10, query_mode="join",
+            nprobe=2, topk=10,
             where=f"label BETWEEN {lo} AND {hi}",
         )
         want.extend(tuple(r) for r in one.collect())
@@ -121,13 +121,13 @@ def test_attr_ranges_one_sided_and_composed_with_filters(spark, sf_dir, tmp_path
         (F.col("vec_id") % 3).cast("int").alias("label_lo"),
     )
     got = _rows(
-        store.query(qdf, nprobe=2, topk=10, query_mode="join", attr_ranges=bands)
+        store.query(qdf, nprobe=2, topk=10, attr_ranges=bands)
     )
     want = []
     for qid in range(2):
         one = store.query(
             e.filter(F.col("vec_id") == qid),
-            nprobe=2, topk=10, query_mode="join",
+            nprobe=2, topk=10,
             where=f"label >= {qid % 3}",
         )
         want.extend(tuple(r) for r in one.collect())
@@ -139,7 +139,7 @@ def test_attr_ranges_one_sided_and_composed_with_filters(spark, sf_dir, tmp_path
     )
     got2 = _rows(
         store.query(
-            qdf, nprobe=2, topk=10, query_mode="join",
+            qdf, nprobe=2, topk=10,
             attr_filters=wants_eq, attr_ranges=bands,
         )
     )
@@ -147,7 +147,7 @@ def test_attr_ranges_one_sided_and_composed_with_filters(spark, sf_dir, tmp_path
     for qid in range(2):
         one = store.query(
             e.filter(F.col("vec_id") == qid),
-            nprobe=2, topk=10, query_mode="join",
+            nprobe=2, topk=10,
             where=f"label = {qid % 4} AND label >= {qid % 3}",
         )
         want2.extend(tuple(r) for r in one.collect())
@@ -161,8 +161,6 @@ def test_attr_ranges_validation(spark, sf_dir, tmp_path):
         F.col("vec_id").alias("query_id"), F.lit(0).alias("price_lo")
     )
     with pytest.raises(ValueError, match="attr_ranges"):
-        store.query(qdf, query_mode="join", attr_ranges=bad)
-    with pytest.raises(ValueError, match="require query_mode"):
         store.query(qdf, attr_ranges=bad)
 
 
@@ -176,7 +174,7 @@ def test_attr_ranges_keeps_partition_pruning(spark, sf_dir, tmp_path):
         F.lit(0).cast("int").alias("label_lo"),
         F.lit(9).cast("int").alias("label_hi"),
     )
-    df = store.query(qdf, nprobe=2, topk=5, query_mode="join", attr_ranges=bands)
+    df = store.query(qdf, nprobe=2, topk=5, attr_ranges=bands)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan

@@ -352,10 +352,6 @@ def test_pq_pinned_query_serves_pre_mutation_state(spark, sf_dir, tmp_path):
     assert _rows(store.reader()) != pre
     assert _rows(store.reader(gen=g0)) == pre
     assert _rows(store.query(qdf, nprobe=8, topk=5, as_of_gen=g0)) == pre_q
-    # join mode honors the pin too
-    assert _rows(
-        store.query(qdf, nprobe=8, topk=5, as_of_gen=g0, query_mode="join")
-    ) == pre_q
     store.vacuum()
     with pytest.raises(LookupError):
         store.query(qdf, nprobe=8, topk=5, as_of_gen=g0)
@@ -496,7 +492,7 @@ def test_batch_attr_filtered_query_equals_filtered_loops(
     spark, sf_dir, tmp_path
 ):
     """q395's contract: per-query attribute constraints as DATA
-    (attr_filters, join mode) must be row-identical to looping
+    (attr_filters) must be row-identical to looping
     query(where=...) with each query's own predicate — and the
     constraint must really bind (different constraints change results)."""
     e = load(spark, sf_dir, "embeddings")
@@ -511,7 +507,7 @@ def test_batch_attr_filtered_query_equals_filtered_loops(
         (F.col("vec_id") % 3).cast("int").alias("label"),
     )
     batch = store.query(
-        qdf, nprobe=4, topk=5, query_mode="join", attr_filters=wants
+        qdf, nprobe=4, topk=5, attr_filters=wants
     )
     loops = []
     for qid in qids:
@@ -531,14 +527,12 @@ def test_batch_attr_filtered_query_equals_filtered_loops(
     for r in batch.collect():
         assert lab[r["neighbor_id"]] == r["query_id"] % 3
     # constraints as data really vary per query: a shared constraint differs
-    shared = store.query(qdf, nprobe=4, topk=5, query_mode="join", where="label = 0")
+    shared = store.query(qdf, nprobe=4, topk=5, where="label = 0")
     assert _rows(batch) != _rows(shared)
     # misuse fails loudly
     with pytest.raises(ValueError):
-        store.query(qdf, nprobe=4, topk=5, attr_filters=wants)  # literal mode
-    with pytest.raises(ValueError):
         store.query(
-            qdf, nprobe=4, topk=5, query_mode="join",
+            qdf, nprobe=4, topk=5,
             attr_filters=wants.withColumnRenamed("label", "nope"),
         )
 
@@ -562,7 +556,7 @@ def test_batch_attr_filters_multi_column(spark, sf_dir, tmp_path):
         (F.col("vec_id") % 2).cast("int").alias("parity"),
     )
     batch = store.query(
-        qdf, nprobe=4, topk=5, query_mode="join", attr_filters=wants
+        qdf, nprobe=4, topk=5, attr_filters=wants
     )
     loops = []
     for qid in qids:

@@ -686,3 +686,29 @@ def test_lost_claim_changes_nothing_visible(spark, tmp_path, monkeypatch, verb, 
     v.vacuum_versioned(spark, root, grace_seconds=0)
     assert not any(os.path.exists(f"{root}/{o}") for o in orphans)
     assert _state(spark, root) == state
+
+
+def test_numeric_looking_string_partitions_keep_their_rows(spark, tmp_path):
+    """A string partition column whose values look numeric (``007``,
+    ``010``) reads back as strings: Spark would infer the directory
+    ``shard=007`` as the integer 7, which no recorded value matches, so
+    reads returned nothing and an upsert dropped the partition's rows."""
+    ddl = "k string, v string, ts long, shard string"
+    root = str(tmp_path / "t")
+    versioned_upsert(
+        spark,
+        spark.createDataFrame(
+            [("a", "v1", 1, "007"), ("b", "w1", 1, "010"), ("c", "x1", 1, "007")], ddl
+        ),
+        root, "k", ["ts"], partition_by="shard", stats_cols=["ts"],
+    )
+    assert _state(spark, root) == {"a": "v1", "b": "w1", "c": "x1"}
+    assert versions(spark, root)[-1]["partition_type"] == "string"
+    versioned_upsert(
+        spark, spark.createDataFrame([("d", "y1", 2, "007")], ddl), root, "k", ["ts"],
+        partition_by="shard",
+    )
+    assert _state(spark, root) == {"a": "v1", "b": "w1", "c": "x1", "d": "y1"}
+    m = versions(spark, root)[-1]
+    assert sorted(m["partitions"]) == sorted(m["stats"]) == ["007", "010"]
+    assert read_versioned(spark, root).schema["shard"].dataType.simpleString() == "string"

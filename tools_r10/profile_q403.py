@@ -112,7 +112,7 @@ def main() -> None:
         mark("bm.serve")
         ann = vs.query(
             e.filter(F.col("vec_id") < _PQ_NQ),
-            nprobe=_IVF_NPROBE, topk=_QT_SHORTLIST, query_mode="join",
+            nprobe=_IVF_NPROBE, topk=_QT_SHORTLIST,
         )
         ann.write.format("noop").mode("overwrite").save()
         mark("ann.serve")
