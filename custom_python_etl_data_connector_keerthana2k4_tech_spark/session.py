@@ -111,39 +111,63 @@ def ship_package(spark: SparkSession) -> None:
     app_once(spark, "ship_package", ship)
 
 
+def session_conf(master: str, shuffle_partitions: int | None = None) -> dict[str, str]:
+    """The settings ``get_spark`` starts a session with on ``master``.
+
+    On a ``local[...]`` master, Python workers run :mod:`worker_daemon` from
+    the driver's own package copy and talk to the JVM over Unix sockets
+    (no loopback-TCP delayed-ACK stall). Executors on other masters cannot
+    see the driver's path, so they keep Spark's defaults."""
+    conf = {
+        "spark.master": master,
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or _DEFAULT_SHUFFLE_PARTITIONS),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    }
+    if master != "local" and not master.startswith("local["):
+        return conf
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    # `python -m` puts the JVM's cwd first on the daemon's sys.path, so a
+    # different copy of the package there would shadow this one.
+    shadow = os.path.join(os.getcwd(), os.path.basename(pkg_dir))
+    if not os.path.exists(shadow) or os.path.samefile(shadow, pkg_dir):
+        conf["spark.python.daemon.module"] = f"{__package__}.worker_daemon"
+        conf["spark.executorEnv.PYTHONPATH"] = os.path.dirname(pkg_dir)
+    # Spark names a socket "<dir>/.<uuid4>.sock"; AF_UNIX paths end at 107 bytes.
+    sock_dir = tempfile.gettempdir()
+    if len(os.fsencode(sock_dir)) <= 64:
+        conf["spark.python.unix.domain.socket.enabled"] = "true"
+        conf["spark.python.unix.domain.socket.dir"] = sock_dir
+    return conf
+
+
 def get_spark(
     app_name: str = "custom_python_etl_data_connector_keerthana2k4_tech_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
     On a cluster, ``master`` comes from spark-submit; locally defaults to
     ``local[$SPARK_GRAFT_CPUS]``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or _DEFAULT_SHUFFLE_PARTITIONS),
-        )
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-    )
     active = SparkSession.getActiveSession()
     if active is not None:
         return active
     if master is None:
-        master = f"local[{cpus}]"
-    builder = builder.master(master)
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    builder = SparkSession.builder.appName(app_name)
+    for key, value in session_conf(master, shuffle_partitions).items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Stopping removes the context's Unix socket files; one still running
+    # when the driver exits would leave them in the temp dir.
+    atexit.register(spark.sparkContext.stop)
     return spark

@@ -403,16 +403,23 @@ class RestDataSource(DataSource):
 
 
 def register_rest_source(spark: SparkSession) -> None:
-    """Register the format (ships the package to Python workers first).
+    """Register the format once per application (ships the package to
+    Python workers first).
 
     The module also pickles by value: the streaming source runner does not
     see ``ship_package``'s zip, and this module's top-level imports are
     stdlib and pyspark only, so its by-value pickle is self-contained."""
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import ship_package
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import (
+        app_once,
+        ship_package,
+    )
 
-    ship_package(spark)
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    spark.dataSource.register(RestDataSource)
+    def register() -> None:
+        ship_package(spark)
+        cloudpickle.register_pickle_by_value(sys.modules[__name__])
+        spark.dataSource.register(RestDataSource)
+
+    app_once(spark, "rest_source", register)
 
 
 def project_raw(items: DataFrame, schema: T.StructType) -> DataFrame:

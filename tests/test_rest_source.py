@@ -202,6 +202,25 @@ def test_reader_survives_transient_failures(spark, stub_server):
     assert len(state.requests) == 3  # 2 failures + 1 success
 
 
+def test_source_registers_once_per_application(spark, stub_server, monkeypatch):
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    base, state = stub_server
+    state.pages = {1: {"results": RAW_PULSES[0:2]}}
+    calls = []
+    real = DataSourceRegistration.register
+
+    def counted(self, source):
+        calls.append(source)
+        real(self, source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counted)
+    for _ in range(3):
+        df = pulses_df(spark, base, RAW_PULSE_SCHEMA, per_page="5", max_pages="1", **FAST)
+        assert df.count() == 2
+    assert len(calls) <= 1  # 0 when an earlier test already registered it
+
+
 def test_reader_fails_terminally_on_4xx(spark, stub_server):
     base, state = stub_server
     state.fail_first = [(403, {})]

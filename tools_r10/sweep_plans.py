@@ -11,9 +11,10 @@ Usage:
 
 Normalization strips everything that legitimately varies run to run —
 expression ids (#123), plan ids, subquery ids, temp directory paths,
-createDataFrame RDD ids, AQE result-id counters — so a non-empty diff
-means the PLAN changed (new Exchange, join strategy flip, lost
-PushedFilters), not that a scratch directory got a new name.
+createDataFrame RDD ids, AQE result-id counters, the session-wide
+numbering of lambda variables — so a non-empty diff means the PLAN
+changed (new Exchange, join strategy flip, lost PushedFilters), not that
+a scratch directory got a new name or other queries were built first.
 
 The summary counts, per query: Exchange, BroadcastExchange,
 SortMergeJoin, ShuffledHashJoin, BroadcastHashJoin, BroadcastNestedLoop,
@@ -71,10 +72,18 @@ _OPS = [
 ]
 
 
+_LAMBDA_VAR = re.compile(r"\blambda ([A-Za-z]\w*?)_(\d+)\b")
+
+
 def normalize(text: str) -> str:
     for rx, sub in _NORM:
         text = rx.sub(sub, text)
-    return text
+    # Spark numbers lambda variables per session (x_340 after 339 others),
+    # so renumber them by first appearance in this plan.
+    seen: dict[str, int] = {}
+    return _LAMBDA_VAR.sub(
+        lambda m: f"lambda {m[1]}_{seen.setdefault(m[0], len(seen) + 1)}", text
+    )
 
 
 def census(text: str) -> dict[str, int]:
