@@ -6,7 +6,7 @@ The reference (/root/reference/etl_connector.py, 243 lines) is a single-file
 Extract -> Transform -> Validate -> Load connector; SURVEY.md maps each of its
 13 operators (R1-R13) to the Spark-first implementations in this package:
 
-- ``sources.rest``     : R1-R5 paginated REST reader (Python Data Source API)
+- ``sources.rest``     : R1-R5 paginated REST reader (batch scan + streaming Data Source)
 - ``pipeline``         : R6 transform, R7 validate, R12-R13 config/orchestration
 - ``operators.upsert`` : R8-R10 keyed idempotent upsert sink
 - ``plans.relational`` : the declared relational query surface (SURVEY §2.3)

@@ -92,7 +92,7 @@ def transform_pulses(
         F.lit(cfg.connector_name).alias("connector_name"),  # :139
         F.lit(cfg.source).alias("source"),  # :140
         F.lit(cfg.base_url).alias("source_base_url"),  # :141
-        _empty_to_null(F.lit(cfg.city)).alias("source_city"),  # :142 (""->NULL)
+        F.lit(cfg.city or None).cast("string").alias("source_city"),  # :142 (""->NULL)
         F.col("raw"),  # :143 payload preserved whole
         raw_col("pulse_info.name").alias("pulse_name"),  # :150
         F.coalesce(

@@ -775,7 +775,7 @@ def _q52_stub_base() -> str:
 def q52_rest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference pipeline over the wire (R1->R7 composed): a
     self-contained local HTTP stub serves the OTX-shaped fixture pages;
-    the paginated_rest Data Source reads them (auth header, pagination,
+    the paginated REST scan reads them (auth header, pagination,
     short-page stop), and the transform/validate chain produces the
     §1.2 document shape. Deterministic rows (pinned run timestamp), no
     external network, and — because the stub outlives the frame — a fully

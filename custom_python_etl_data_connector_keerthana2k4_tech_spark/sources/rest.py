@@ -1,11 +1,11 @@
-"""Paginated authenticated REST source as a Spark Python Data Source
-(SURVEY §2.1 R1-R5; §7 M3).
+"""Paginated authenticated REST source: a batch scan (``pulses_df``) and a
+Spark Python streaming Data Source (SURVEY §2.1 R1-R5; §7 M3).
 
 Reference behaviors reproduced (citations into /root/reference/etl_connector.py):
 
 - R1 paginated scan: ``GET {base_url}/pulses/subscribed?limit&page`` yielding
   one record per item (:88-127) -> ``RestReader.read`` over page-range
-  partitions.
+  partitions, one ``mapInArrow`` task per partition (``pulses_df``).
 - R2 authenticated session: ``X-OTX-API-KEY`` + ``User-Agent`` headers on
   every request (:49-50) -> ``RestClient.request``, which every reader and
   the sink (sources/rest_sink.py) call.
@@ -16,8 +16,9 @@ Reference behaviors reproduced (citations into /root/reference/etl_connector.py)
 - R4 response normalization: ``results`` -> ``pulses`` -> body; dict ->
   first list value; bail on non-list (:100-117) -> ``normalize_payload``.
 - R5 pagination termination: empty page, short page, ``max_pages`` cap
-  (:96,103-105,123-126) -> partition planning caps pages; each partition
-  stops early at an empty/short page within its range.
+  (:96,103-105,123-126) -> ``RestReader.partitions`` (planned on the driver)
+  caps pages; each partition stops early at an empty/short page within its
+  range.
 
 Scale design: ``partitions()`` enumerates page ranges so a cluster reads
 pages in parallel, but the default ``pages_per_partition`` is coarse and a
@@ -45,12 +46,7 @@ from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 
 class RestSourceError(RuntimeError):
@@ -185,7 +181,7 @@ def normalize_payload(body: bytes | str | dict) -> list:
     return items if isinstance(items, list) else []
 
 
-class _PageRange(InputPartition):
+class _PageRange:
     def __init__(self, start_page: int, end_page: int):
         self.start_page = start_page  # inclusive, 1-based
         self.end_page = end_page  # inclusive
@@ -202,7 +198,11 @@ REST_SCHEMA = T.StructType(
 )
 
 
-class RestReader(DataSourceReader):
+class RestReader:
+    """The page-number walker: option parsing, partition planning and the
+    page chain walk behind the batch scan (``pulses_df``) and the
+    streaming readers."""
+
     _index = "page"  # the offset field that numbers a page of the chain
 
     def __init__(self, options: dict):
@@ -210,9 +210,11 @@ class RestReader(DataSourceReader):
         self.endpoint = options.get("endpoint", "/pulses/subscribed")
         self.per_page = int(options.get("per_page", 50))
         self.max_pages = int(options.get("max_pages", 100))
+        if self.max_pages < 1:
+            raise RestSourceError(f"max_pages must be at least 1, got {self.max_pages}")
         self.pages_per_partition = int(options.get("pages_per_partition", 10))
 
-    def partitions(self) -> Sequence[InputPartition]:
+    def partitions(self) -> Sequence[_PageRange]:
         """Page ranges (R5 planning): [1..max_pages] in coarse chunks."""
         step = max(1, self.pages_per_partition)
         return [
@@ -268,11 +270,8 @@ class RestReader(DataSourceReader):
         return iter(rows)
 
 
-class _CursorChain(InputPartition):
+class _CursorChain:
     """The whole cursor chain — one partition by protocol (below)."""
-
-    def __init__(self):
-        super().__init__(0)
 
 
 class CursorRestReader(RestReader):
@@ -298,7 +297,7 @@ class CursorRestReader(RestReader):
         self.cursor_param = options.get("cursor_param", "cursor")
         self.start_cursor = options.get("start_cursor", "")
 
-    def partitions(self) -> Sequence[InputPartition]:
+    def partitions(self) -> Sequence[_CursorChain]:
         return [_CursorChain()]
 
     def _first(self) -> dict:
@@ -374,13 +373,13 @@ class CursorRestStreamReader(RestSimpleStreamReader):
 
 
 class RestDataSource(DataSource):
-    """``spark.read.format("paginated_rest")`` — see module docstring.
+    """``spark.readStream.format("paginated_rest")`` — see module docstring.
+    Batch reads go through :func:`pulses_df`.
 
     Options: base_url (required), endpoint, api_key, user_agent, per_page,
-    max_pages, pages_per_partition, timeout_s, max_retries,
-    backoff_initial_s, backoff_multiplier, min_interval_s; streaming adds
-    pages_per_batch (micro-batch page budget). ``pagination=cursor``
-    switches both batch and streaming to next-token chains (options
+    pages_per_batch (micro-batch page budget), timeout_s, max_retries,
+    backoff_initial_s, backoff_multiplier, min_interval_s.
+    ``pagination=cursor`` switches to next-token chains (options
     cursor_param, next_field, start_cursor).
     """
 
@@ -391,11 +390,6 @@ class RestDataSource(DataSource):
     def schema(self) -> T.StructType:
         return REST_SCHEMA
 
-    def reader(self, schema: T.StructType) -> DataSourceReader:
-        if self.options.get("pagination", "page") == "cursor":
-            return CursorRestReader(self.options)
-        return RestReader(self.options)
-
     def simpleStreamReader(self, schema: T.StructType) -> SimpleDataSourceStreamReader:
         if self.options.get("pagination", "page") == "cursor":
             return CursorRestStreamReader(self.options)
@@ -403,8 +397,8 @@ class RestDataSource(DataSource):
 
 
 def register_rest_source(spark: SparkSession) -> None:
-    """Register the format once per application (ships the package to
-    Python workers first).
+    """Register the streaming format once per application (ships the
+    package to Python workers first).
 
     The module also pickles by value: the streaming source runner does not
     see ``ship_package``'s zip, and this module's top-level imports are
@@ -446,9 +440,39 @@ def pulses_df(
     api_key: str = "",
     **options,
 ) -> DataFrame:
-    """Read the REST source as a ``raw`` struct column (:func:`project_raw`)."""
-    register_rest_source(spark)
-    reader = spark.read.format("paginated_rest").options(
-        base_url=base_url, api_key=api_key, **options
-    )
-    return project_raw(reader.load(), schema)
+    """Read the REST source as a ``raw`` struct column (:func:`project_raw`).
+
+    Options: endpoint, user_agent, per_page, max_pages, pages_per_partition,
+    timeout_s, max_retries, backoff_initial_s, backoff_multiplier,
+    min_interval_s; ``pagination=cursor`` walks a next-token chain
+    (cursor_param, next_field, start_cursor) in one partition.
+
+    The scan is planned here, on the driver, and task ``i`` of a range with
+    one row per task reads partition ``i``, so partition ids follow page
+    order (``run_batch``'s source-position tie-break relies on that). The
+    tasks are plain ``mapInArrow`` tasks; a Data Source read would also
+    start Spark's Python planner twice per batch."""
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import ship_package
+
+    ship_package(spark)
+    opts = {"base_url": base_url, "api_key": api_key, **options}
+    cursor = opts.get("pagination", "page") == "cursor"
+    reader = (CursorRestReader if cursor else RestReader)(opts)
+    parts = reader.partitions()
+
+    def read(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                rows = list(reader.read(parts[i]))
+                if rows:
+                    page, position, item = zip(*rows)
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(page, pa.int32()), pa.array(position, pa.int32()),
+                         pa.array(item, pa.string())],
+                        names=REST_SCHEMA.names,
+                    )
+
+    items = spark.range(0, len(parts), 1, len(parts)).mapInArrow(read, REST_SCHEMA)
+    return project_raw(items, schema)

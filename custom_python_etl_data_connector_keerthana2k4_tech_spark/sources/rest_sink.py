@@ -32,10 +32,12 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import sys
 import time
 import uuid
 from collections.abc import Iterator
 
+from pyspark import cloudpickle
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
 
@@ -180,7 +182,21 @@ class RestUpsertDataSource(DataSource):
 
 
 def register_rest_sink(spark) -> None:
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import ship_package
+    """Register the format once per application (ships the package to
+    Python workers first).
 
-    ship_package(spark)
-    spark.dataSource.register(RestUpsertDataSource)
+    Like the REST source (``register_rest_source``), this module and the
+    REST source module it imports pickle by value, so a Python worker
+    without ``ship_package``'s zip can load the sink."""
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.session import (
+        app_once,
+        ship_package,
+    )
+
+    def register() -> None:
+        ship_package(spark)
+        for module in (RestClient.__module__, __name__):
+            cloudpickle.register_pickle_by_value(sys.modules[module])
+        spark.dataSource.register(RestUpsertDataSource)
+
+    app_once(spark, "rest_sink", register)

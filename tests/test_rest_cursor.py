@@ -129,17 +129,12 @@ def test_cursor_batch_via_spark_format(spark, cursor_server):
     base, state = cursor_server
     state.chain[""] = {"results": [_item(0), _item(1), _item(2)], "next": "t1"}
     state.chain["t1"] = {"results": [_item(3), _item(4)], "next": None}
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.sources.rest import register_rest_source
+    from pyspark.sql import types as T
 
-    register_rest_source(spark)
-    df = (
-        spark.read.format("paginated_rest")
-        .option("base_url", base)
-        .option("endpoint", "/feed")
-        .option("pagination", "cursor")
-        .option("per_page", "3")
-        .load()
-    )
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.sources.rest import pulses_df
+
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    df = pulses_df(spark, base, schema, endpoint="/feed", pagination="cursor", per_page="3")
     rows = df.collect()
     assert len(rows) == 5
-    assert sorted(json.loads(r.item)["id"] for r in rows) == [0, 1, 2, 3, 4]
+    assert sorted(r.raw.id for r in rows) == [0, 1, 2, 3, 4]

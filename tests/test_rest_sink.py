@@ -198,3 +198,51 @@ def test_idempotency_key_stable_across_retries(spark, sink_server):
     assert all(k for k in state.idem_keys)  # present on every attempt
     assert state.idem_keys[0] == state.idem_keys[1]  # retry reuses the key
     assert state.idem_keys[2] != state.idem_keys[0]  # next batch differs
+
+
+def test_sink_registers_once_per_application(spark, monkeypatch):
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    calls = []
+    real = DataSourceRegistration.register
+
+    def counted(self, source):
+        calls.append(source)
+        real(self, source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counted)
+    for _ in range(3):
+        register_rest_sink(spark)
+    assert len(calls) <= 1  # 0 when an earlier test already registered it
+
+
+def test_registered_sink_unpickles_without_the_package(spark, tmp_path):
+    """After registration the sink pickles by value, together with the
+    REST source module whose client and retry loop it uses, so a plain
+    interpreter without the package on its path can load it."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.sources.rest_sink import (
+        RestUpsertDataSource,
+    )
+
+    register_rest_sink(spark)
+    blob = cloudpickle.dumps(RestUpsertDataSource)
+    pkg = RestUpsertDataSource.__module__.split(".")[0]
+    script = (
+        "import importlib.util, pickle, sys\n"
+        f"assert importlib.util.find_spec({pkg!r}) is None\n"
+        "cls = pickle.loads(sys.stdin.buffer.read())\n"
+        "print(cls.name())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], input=blob, cwd=tmp_path, env=env,
+        capture_output=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr.decode()
+    assert out.stdout.decode().strip() == "rest_upsert"

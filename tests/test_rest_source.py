@@ -7,6 +7,7 @@ sequences, and terminal 4xx — exercising the reference's safe_get semantics
 from __future__ import annotations
 
 import json
+import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -19,6 +20,7 @@ from custom_python_etl_data_connector_keerthana2k4_tech_spark.sources.rest impor
     RestSourceError,
     normalize_payload,
     pulses_df,
+    register_rest_source,
     safe_get,
 )
 
@@ -176,17 +178,9 @@ def test_reader_page_range_partitions(spark, stub_server):
     base, state = stub_server
     # every page full -> reads exactly max_pages, split across partitions
     state.pages = {p: {"results": RAW_PULSES[0:2]} for p in range(1, 7)}
-    from custom_python_etl_data_connector_keerthana2k4_tech_spark.sources.rest import register_rest_source
-
-    register_rest_source(spark)
-    df = (
-        spark.read.format("paginated_rest")
-        .option("base_url", base)
-        .option("per_page", "2")
-        .option("max_pages", "6")
-        .option("pages_per_partition", "2")
-        .option("backoff_initial_s", "0.01")
-        .load()
+    df = pulses_df(
+        spark, base, RAW_PULSE_SCHEMA, per_page="2", max_pages="6",
+        pages_per_partition="2", backoff_initial_s="0.01",
     )
     assert df.rdd.getNumPartitions() == 3  # ceil(6/2) page-range partitions
     assert df.count() == 12
@@ -202,11 +196,9 @@ def test_reader_survives_transient_failures(spark, stub_server):
     assert len(state.requests) == 3  # 2 failures + 1 success
 
 
-def test_source_registers_once_per_application(spark, stub_server, monkeypatch):
+def test_source_registers_once_per_application(spark, monkeypatch):
     from pyspark.sql.datasource import DataSourceRegistration
 
-    base, state = stub_server
-    state.pages = {1: {"results": RAW_PULSES[0:2]}}
     calls = []
     real = DataSourceRegistration.register
 
@@ -216,9 +208,29 @@ def test_source_registers_once_per_application(spark, stub_server, monkeypatch):
 
     monkeypatch.setattr(DataSourceRegistration, "register", counted)
     for _ in range(3):
-        df = pulses_df(spark, base, RAW_PULSE_SCHEMA, per_page="5", max_pages="1", **FAST)
-        assert df.count() == 2
+        register_rest_source(spark)
     assert len(calls) <= 1  # 0 when an earlier test already registered it
+
+
+def test_batch_scan_is_map_in_arrow_over_range(spark, stub_server):
+    """The batch scan is planned on the driver: one ``MapInArrow`` over a
+    ``Range``, no Data Source ``BatchScan`` (whose planning runs in extra
+    Python processes on every read)."""
+    base, state = stub_server
+    state.pages = {1: {"results": RAW_PULSES[0:2]}}
+    df = pulses_df(spark, base, RAW_PULSE_SCHEMA, per_page="5", max_pages="3",
+                   pages_per_partition="1", **FAST)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan" not in plan
+    assert plan.count("MapInArrow") == 1
+    assert re.search(r"MapInArrow [^\n]*\n\s*\+- (\*\(\d+\) )?Range \(0, 3, step=1, splits=3\)", plan), plan
+
+
+def test_max_pages_below_one_fails_on_the_driver(spark, stub_server):
+    base, _ = stub_server
+    for bad in ("0", "-1"):
+        with pytest.raises(RestSourceError, match="max_pages"):
+            pulses_df(spark, base, RAW_PULSE_SCHEMA, max_pages=bad, **FAST)
 
 
 def test_reader_fails_terminally_on_4xx(spark, stub_server):
@@ -307,6 +319,38 @@ def test_run_batch_fetches_each_page_once(spark, stub_server, tmp_path):
     assert metrics["records_seen"] == 8
     fetches = collections.Counter(r["page"] for r in state.requests)
     assert fetches == {1: 1, 2: 1, 3: 1}
+
+
+def test_run_batch_keeps_the_later_page_on_a_tie(spark, stub_server, tmp_path):
+    """Source order survives the scan: with two pages per partition, page 1
+    and page 3 fall in partitions 0 and 1, and the same key with the same
+    ``modified`` on both resolves to the page-3 record (the later one in
+    the feed, as the reference's record loop would leave it)."""
+    import datetime as dt
+
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.config import PipelineConfig
+    from custom_python_etl_data_connector_keerthana2k4_tech_spark.pipeline import run_batch
+
+    base, state = stub_server
+
+    def pulse(i: str, name: str) -> dict:
+        return {"id": i, "pulse_info": {"id": i, "name": name, "modified": "2024-05-01"}}
+
+    state.pages = {
+        1: {"results": [pulse("dup", "first"), pulse("a", "a")]},
+        2: {"results": [pulse("b", "b"), pulse("c", "c")]},
+        3: {"results": [pulse("d", "d"), pulse("dup", "last")]},
+        4: {"results": [pulse("e", "e")]},  # short page: the feed ends
+    }
+    raw_df = pulses_df(spark, base, RAW_PULSE_SCHEMA, per_page="2", max_pages="4",
+                       pages_per_partition="2", **FAST)
+    cfg = PipelineConfig(api_key="k", base_url=base, connector_name="t", city="")
+    target = str(tmp_path / "pulses")
+    metrics = run_batch(spark, raw_df, cfg, target,
+                        run_ts=dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc))
+    assert metrics["records_seen"] == 7
+    out = {r["pulse_id"]: r["pulse_name"] for r in spark.read.parquet(target).collect()}
+    assert out == {"dup": "last", "a": "a", "b": "b", "c": "c", "d": "d", "e": "e"}
 
 
 def test_registered_source_unpickles_without_the_package(spark, tmp_path):
